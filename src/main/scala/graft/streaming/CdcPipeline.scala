@@ -764,9 +764,17 @@ object CdcPipeline {
         import scala.concurrent.ExecutionContext.Implicits.global
         scala.concurrent.Future(hook(pairs))
       }
-      BucketStore.writeAndSwap(spark, merged, stateDir, touched, effB,
-        beforeSwap = () => hookDone.foreach(f => scala.concurrent.Await
-          .result(f, scala.concurrent.duration.Duration.Inf)))
+      val inf = scala.concurrent.duration.Duration.Inf
+      try BucketStore.writeAndSwap(spark, merged, stateDir, touched, effB,
+        beforeSwap = () => hookDone.foreach(scala.concurrent.Await.result(_, inf)))
+      catch { case t: Throwable =>
+        // no hook outlives the apply that started it: a staged write
+        // that throws never reaches the barrier, and the hook's durable
+        // write must not keep running against `folded` (unpersisted
+        // below) or race a retry's own hook on the same dir
+        hookDone.foreach(scala.concurrent.Await.ready(_, inf))
+        throw t
+      }
     } finally { folded.unpersist(); () }
   }
 

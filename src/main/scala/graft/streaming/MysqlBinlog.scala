@@ -1385,40 +1385,35 @@ object MysqlBinlog {
   def imageJson(tm: TableMap, img: RowImage): String = {
     val names = tm.colNames.getOrElse(
       Array.tabulate(tm.colTypes.length)(i => s"col_$i"))
-    val fields = img.values.iterator.zipWithIndex.collect {
-      case (Some(v), i) =>
-        val rendered = v match {
-          case null => "null"
-          case l: java.lang.Long => l.toString
+    val sb = new java.lang.StringBuilder(64).append('{')
+    img.values.indices.foreach { i =>
+      img.values(i).foreach { v =>
+        if (sb.length > 1) sb.append(',')
+        MysqlJsonBinary.quoteTo(sb, names(i)).append(':')
+        v match {
+          case null => sb.append("null")
+          case l: java.lang.Long => sb.append(l.longValue)
           case d: java.lang.Double =>
-            if (d.isNaN || d.isInfinite) "\"" + d.toString + "\"" else d.toString
+            if (d.isNaN || d.isInfinite) sb.append('"').append(d.toString).append('"')
+            else sb.append(d.toString)
           case f: java.lang.Float =>
-            if (f.isNaN || f.isInfinite) "\"" + f.toString + "\"" else f.toString
+            if (f.isNaN || f.isInfinite) sb.append('"').append(f.toString).append('"')
+            else sb.append(f.toString)
           case b: Array[Byte] =>
-            "\"" + java.util.Base64.getEncoder.encodeToString(b) + "\""
+            sb.append('"').append(java.util.Base64.getEncoder.encodeToString(b))
+              .append('"')
           case bd: java.math.BigDecimal =>
             // QUOTED, not a bare JSON number: toPlainString carries the
             // column's exact declared scale (trailing zeros — the
             // rendering the reference battles for, sync.py:77-83), and
             // a string survives any downstream JSON reparse that would
             // canonicalize 12.50 into 12.5
-            "\"" + bd.toPlainString + "\""
-          case s: String => jsonStr(s)
-          case other => jsonStr(other.toString)
+            sb.append('"').append(bd.toPlainString).append('"')
+          case s: String => MysqlJsonBinary.quoteTo(sb, s)
+          case other => MysqlJsonBinary.quoteTo(sb, other.toString)
         }
-        jsonStr(names(i)) + ":" + rendered
+      }
     }
-    fields.mkString("{", ",", "}")
+    sb.append('}').toString
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"
-      case ch => ch.toString
-    } + "\""
 }

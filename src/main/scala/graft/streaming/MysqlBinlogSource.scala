@@ -32,7 +32,11 @@ import scala.jdk.CollectionConverters._
   *     describes, re-reads nothing (each trigger costs O(newly appended
   *     bytes)), and FOLLOWS ROTATION: when a file is drained and closed
   *     by a ROTATE event, the tail moves to the successor file exactly
-  *     as a replication client does.
+  *     as a replication client does. An admitted range of 8 MiB or
+  *     more is scanned as up to `defaultParallelism` contiguous input
+  *     partitions of at least 4 MiB each, cut at transaction fences
+  *     ([[MysqlBinlogSource.planRanges]]); a smaller range is one
+  *     partition.
   *
   * Output schema = the engine's ChangeEvent shape plus `src`: op,
   * table, key, ts, seq, payload. In batch mode `src` is the file's
@@ -391,6 +395,73 @@ object MysqlBinlogSource {
     } finally ch.close()
   }
 
+  /** Smallest sub-range [[planRanges]] cuts: a range under twice this
+    * stays one partition, so small, latency-bound triggers keep a
+    * single task and pay no split scan.
+    */
+  private val MinSplitBytes = 4L << 20
+
+  /** Cut one admitted micro-batch range into
+    * `n = max(1, min(parts, ⌊bytes / minBytes⌋))` contiguous
+    * sub-ranges in log order, one input partition each. Each interior
+    * cut is the first transaction fence at or past an equal-bytes
+    * target, found by the header-only [[advance]] scan (txnAtomic
+    * fences even for an event-granular stream), so every sub-range
+    * starts where a trigger could: outside any transaction, ahead of
+    * its own TABLE_MAPs, decoding standalone with the FDE from
+    * [[MysqlBinlog.readFde]]. `seq` derives from byte positions, so the
+    * rows and their order are exactly those of the whole range. A
+    * target inside a transaction that runs past the next target (or
+    * the range end) yields fewer, larger sub-ranges — never a torn one.
+    * `parts` and `minBytes` are parameters for tests; the stream passes
+    * `defaultParallelism` and [[MinSplitBytes]].
+    */
+  private[streaming] def planRanges(r: MysqlBinlogRange, parts: Int,
+                                    minBytes: Long = MinSplitBytes)
+      : Array[MysqlBinlogRange] = {
+    val bytes = r.endByte - r.startByte
+    val n = math.max(1L, math.min(parts.toLong, bytes / minBytes)).toInt
+    val bounds = Array.newBuilder[Long] += r.startByte
+    var prev = r.startByte
+    var i = 1
+    while (i < n && prev < r.endByte) {
+      val target = r.startByte + bytes * i / n
+      if (prev < target) {
+        val cut = advance(r.file, prev, Long.MaxValue, target - prev,
+          txnAtomic = true).safe
+        prev = if (cut > prev && cut < r.endByte) { bounds += cut; cut }
+               else r.endByte
+      }
+      i += 1
+    }
+    (bounds += r.endByte).result().sliding(2)
+      .map(b => r.copy(startByte = b(0), endByte = b(1))).toArray
+  }
+
+  /** Decode one micro-batch range standalone: an O(1) head read for the
+    * FDE (checksum algorithm), then one seek — a range never re-reads
+    * history before its start byte.
+    */
+  private[streaming] def rangeEvents(r: MysqlBinlogRange): Iterator[ChangeEvent] = {
+    val fde = MysqlBinlog.readFde(r.file)
+    val bytes = new Array[Byte]((r.endByte - r.startByte).toInt)
+    val ch = java.nio.channels.FileChannel.open(
+      Paths.get(r.file), java.nio.file.StandardOpenOption.READ)
+    try {
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      var off = r.startByte
+      while (bb.hasRemaining) {
+        val n = ch.read(bb, off)
+        if (n < 0) throw new java.io.EOFException(
+          s"binlog $r truncated below committed offset")
+        off += n
+      }
+    } finally ch.close()
+    MysqlBinlog.changeEventsIterator(
+      MysqlBinlog.eventIterator(bytes, base = r.startByte, fde = Some(fde)),
+      r.epoch << 44)
+  }
+
   /** Does the QUERY event at `start` carry the statement `BEGIN` (a
     * transaction opener) rather than a DDL / COMMIT (closers)? One
     * bounded pread of the event prefix; checksum-agnostic — only the
@@ -675,19 +746,18 @@ class MysqlBinlogMicroBatchStream(path: String, maxEventsPerTrigger: Long,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[MysqlBinlogOffset]
     val e = end.asInstanceOf[MysqlBinlogOffset]
-    if (s.file == e.file) {
-      if (e.bytes <= s.bytes) Array.empty
-      else Array(MysqlBinlogRange(s.file, s.bytes, e.bytes, s.effectiveEpoch))
-    } else {
-      // rotation boundary: the range is the remaining tail of the
-      // closed predecessor (its size is stable — the server moved on);
-      // the successor's bytes start accruing next trigger from e.bytes=4.
-      // The epoch is the PREDECESSOR's (these rows physically live in
-      // s.file); e.epoch = s.epoch + 1 applies from the next range on.
-      val tail = Files.size(Paths.get(s.file))
-      if (tail <= s.bytes) Array.empty
-      else Array(MysqlBinlogRange(s.file, s.bytes, tail, s.effectiveEpoch))
-    }
+    // rotation boundary: the range is the remaining tail of the closed
+    // predecessor (its size is stable — the server moved on); the
+    // successor's bytes start accruing next trigger from e.bytes=4.
+    // The epoch is the PREDECESSOR's (these rows physically live in
+    // s.file); e.epoch = s.epoch + 1 applies from the next range on.
+    val endByte =
+      if (s.file == e.file) e.bytes else Files.size(Paths.get(s.file))
+    if (endByte <= s.bytes) Array.empty
+    else MysqlBinlogSource.planRanges(
+      MysqlBinlogRange(s.file, s.bytes, endByte, s.effectiveEpoch),
+      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+      .toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -695,27 +765,8 @@ class MysqlBinlogMicroBatchStream(path: String, maxEventsPerTrigger: Long,
     val chainId = path
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-        val r = p.asInstanceOf[MysqlBinlogRange]
-        // O(1) head read for the checksum algorithm, then one seek —
-        // the range never re-reads history before startByte
-        val fde = MysqlBinlog.readFde(r.file)
-        val bytes = new Array[Byte]((r.endByte - r.startByte).toInt)
-        val ch = java.nio.channels.FileChannel.open(
-          Paths.get(r.file), java.nio.file.StandardOpenOption.READ)
-        try {
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-          var off = r.startByte
-          while (bb.hasRemaining) {
-            val n = ch.read(bb, off)
-            if (n < 0) throw new java.io.EOFException(
-              s"binlog $r truncated below committed offset")
-            off += n
-          }
-        } finally ch.close()
-        val events = MysqlBinlog.changeEventsIterator(
-          MysqlBinlog.eventIterator(bytes, base = r.startByte,
-            fde = Some(fde)),
-          r.epoch << 44)
+        val events =
+          MysqlBinlogSource.rangeEvents(p.asInstanceOf[MysqlBinlogRange])
         // src is the CHAIN identity — the configured head path, stable
         // across rotation and unique across servers (a per-file
         // basename would flip at every rotation and collide between

@@ -72,30 +72,68 @@ object MysqlJsonBinary {
     extends RuntimeException(msg)
 
   // -- canonical text rendering ----------------------------------------
-  def render(v: JVal): String = v match {
-    case JNull => "null"
-    case JBool(b) => if (b) "true" else "false"
-    case JInt(n) => n.toString
-    case JUInt(n) => java.lang.Long.toUnsignedString(n)
+  def render(v: JVal): String = renderTo(new java.lang.StringBuilder, v).toString
+
+  private def renderTo(sb: java.lang.StringBuilder,
+                       v: JVal): java.lang.StringBuilder = v match {
+    case JNull => sb.append("null")
+    case JBool(b) => sb.append(if (b) "true" else "false")
+    case JInt(n) => sb.append(n)
+    case JUInt(n) => sb.append(java.lang.Long.toUnsignedString(n))
     case JDouble(d) =>
-      if (d.isNaN || d.isInfinite) "\"" + d.toString + "\"" else d.toString
-    case JStr(s) => quote(s)
-    case JArr(items) => items.map(render).mkString("[", ",", "]")
+      if (d.isNaN || d.isInfinite) sb.append('"').append(d).append('"')
+      else sb.append(d)
+    case JStr(s) => quoteTo(sb, s)
+    case JArr(items) =>
+      sb.append('[')
+      items.indices.foreach { i =>
+        if (i > 0) sb.append(',')
+        renderTo(sb, items(i))
+      }
+      sb.append(']')
     case JObj(fields) =>
-      fields.map { case (k, x) => quote(k) + ":" + render(x) }
-        .mkString("{", ",", "}")
+      sb.append('{')
+      fields.indices.foreach { i =>
+        if (i > 0) sb.append(',')
+        renderTo(quoteTo(sb, fields(i)._1).append(':'), fields(i)._2)
+      }
+      sb.append('}')
   }
 
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"
-      case ch => ch.toString
-    } + "\""
+  private val HexDigits = "0123456789abcdef"
+
+  /** Append `s` as a quoted JSON string — the ONE escaper of the binlog
+    * decode path (binary-JSON rendering here, row images in
+    * [[MysqlBinlog.imageJson]]): the short escapes `\"` `\\` `\n`
+    * `\r` `\t`, lowercase `\u00xx` for every other char below 0x20,
+    * every other char (U+2028, surrogates) verbatim. Runs of verbatim
+    * chars are copied in bulk.
+    */
+  private[streaming] def quoteTo(sb: java.lang.StringBuilder,
+                                 s: String): java.lang.StringBuilder = {
+    sb.append('"')
+    var from = 0
+    var i = 0
+    while (i < s.length) {
+      val ch = s.charAt(i)
+      if (ch < ' ' || ch == '"' || ch == '\\') {
+        sb.append(s, from, i)
+        ch match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _ =>
+            sb.append("\\u00").append(HexDigits.charAt(ch >> 4))
+              .append(HexDigits.charAt(ch & 0xf))
+        }
+        from = i + 1
+      }
+      i += 1
+    }
+    sb.append(s, from, s.length).append('"')
+  }
 
   // -- JSON text parser (recursive descent, no dependencies) -----------
   /** Parse JSON text into the value tree. Numbers without `.`/`e` that

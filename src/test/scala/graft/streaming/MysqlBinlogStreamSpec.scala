@@ -693,4 +693,69 @@ class MysqlBinlogStreamSpec extends SparkSpec {
       assert(deleted == Set(2L))
     } finally { q.stop(); w.close() }
   }
+
+  test("an 8 MiB backlog scans as several fence-cut partitions into " +
+      "CdcPipeline state equal to the truth") {
+    // the drain-sized range is split (defaultParallelism = 4 here) and
+    // every sub-range decodes standalone; the apply sees the same rows
+    val base = Files.createTempDirectory("graft_binlog_split_").toString
+    val log = s"$base/server_0.binlog"
+    val stateDir = s"$base/state"
+    val tw = TableDef(12L, "graft", "w",
+      Seq(Col.bigint("k"), Col.varchar("v", 2048)))
+    val w = new Writer(log, serverId = 1L)
+    w.setClock(1700000000L); w.begin()
+    val truth = scala.collection.mutable.Map.empty[Long, String]
+    val rng = new scala.util.Random(5L)
+    def v(k: Long) = s"$k-" + rng.alphanumeric.take(1000).mkString
+    def row(k: Long, s: String) = Array[AnyRef](java.lang.Long.valueOf(k), s)
+    var xid = 0L
+    var k = 0L
+    while (w.position < (9L << 20)) {
+      xid += 1
+      w.tableMap(tw)
+      if (xid % 5 == 0 && truth.nonEmpty) {
+        // a later transaction updates one key and deletes another
+        val up = 1L + rng.nextInt(k.toInt)
+        val del = 1L + rng.nextInt(k.toInt)
+        val nv = v(up)
+        w.updateRows(tw, Seq((row(up, "x"), row(up, nv))))
+        truth(up) = nv
+        if (del != up) {
+          w.tableMap(tw)
+          w.deleteRows(tw, Seq(row(del, null)), presentCols = Some(Set(0)))
+          truth -= del
+        }
+      } else {
+        val ins = (1 to 8).map { _ => k += 1; k -> v(k) }
+        w.writeRows(tw, ins.map { case (kk, s) => row(kk, s) })
+        truth ++= ins
+      }
+      w.xid(xid)
+    }
+    w.flush()
+    val partitions = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val q = spark.readStream
+      .format(classOf[MysqlBinlogSourceProvider].getName)
+      .option("path", log)
+      .load()
+      .writeStream
+      .option("checkpointLocation", s"$base/ckpt")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        partitions += batch.rdd.getNumPartitions
+        CdcPipeline.applyBatch(spark, batch, stateDir)
+        ()
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(partitions.nonEmpty && partitions.head > 1,
+        s"the first micro-batch must scan several partitions, got $partitions")
+      val state = CdcPipeline.currentState(spark, stateDir)
+        .select("key", "payload").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(state == truth.map { case (kk, s) =>
+        kk -> s"""{"k":$kk,"v":"$s"}""" }.toMap)
+    } finally { q.stop(); w.close() }
+  }
 }

@@ -922,6 +922,49 @@ class StreamingSpec extends SparkSpec {
       "a hook failure must leave every live bucket untouched")
   }
 
+  test("a failed staged write waits for its net-pairs hook before the " +
+      "apply throws") {
+    // the hook starts before the staged write; when that write refuses
+    // (a state recorded under a newer layout), the barrier is never
+    // reached — the apply must still await the hook, so no hook write
+    // outlives the apply that started it
+    val binDir = MysqlBinlogFixture.encodeEventsPartialMinimal(spark, sf)
+    val raw = spark.read
+      .format(classOf[MysqlBinlogSourceProvider].getName)
+      .option("path", binDir).load()
+      .filter(col("table") === "events")
+      .select("src", "key", "seq", "payload")
+    val mid = raw.agg(max("seq")).head().getLong(0) / 2
+    val dir = java.nio.file.Files
+      .createTempDirectory("deferred_hook_outlive_").toString
+    val state = s"$dir/state"
+    CdcPipeline.applyDeferredJsonBucketed(raw.filter(col("seq") <= mid),
+      "props", state, numBuckets = 4)
+    // forged through the Hadoop FS so its checksum sidecar follows
+    val fs = BucketStore.fs(spark, state)
+    val meta = new org.apache.hadoop.fs.Path(state, BucketStore.MetaName)
+    val in = fs.open(meta)
+    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+               finally in.close()
+    val forged = body.replace(
+      s""""layout":${BucketStore.LayoutVersion}""", """"layout":99""")
+    assert(forged != body)
+    val out = fs.create(meta, true)
+    try out.write(forged.getBytes("UTF-8")) finally out.close()
+    val landed = java.nio.file.Paths.get(dir, "late_pairs", "_SUCCESS")
+    val e = intercept[java.io.IOException] {
+      CdcPipeline.applyDeferredJsonBucketed(raw.filter(col("seq") > mid),
+        "props", state,
+        onNetPairs = Some { pairs =>
+          Thread.sleep(1500)
+          pairs.write.parquet(s"$dir/late_pairs")
+        })
+    }
+    assert(e.getMessage.contains("newer than this engine"), e.getMessage)
+    assert(java.nio.file.Files.exists(landed),
+      "the hook's write must have landed by the time the apply throws")
+  }
+
   test("CM sketch compaction preserves cell sums exactly and heals crashes") {
     implicit val ctx = spark.sqlContext
     val docs = graft.model.Tables.documents(spark, sf)
