@@ -144,10 +144,13 @@ object Queries {
       // LANDING stays synchronous inside the hook (the at-most-once
       // contract: pairs must land before the doc swap can eat a
       // replay's events); only the gated applies are deferred.
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
-      var profChain: Future[Unit] = Future.unit
-      var qualChain: Future[Unit] = Future.unit
+      import java.util.concurrent.atomic.AtomicReference
+      // extended from the hook's thread, awaited from this one — held
+      // in AtomicReferences so each extension is safely published
+      val profChain = new AtomicReference[Future[Unit]](Future.unit)
+      val qualChain = new AtomicReference[Future[Unit]](Future.unit)
       (1 to 3).foreach { b =>
         CdcPipeline.applyDeferredJsonBucketed(
           changes.filter(col("b") === b), "props", s"$root/docs",
@@ -163,14 +166,14 @@ object Queries {
             pairs.coalesce(4).write.mode("overwrite")
               .parquet(s"$root/pairs/b=$b")
             val landed = s.read.parquet(s"$root/pairs/b=$b")
-            profChain = profChain.map(_ =>
+            profChain.set(profChain.get.map(_ =>
               CdcProfileDocBridge.applyDocPairsOnce(landed,
                 s"$root/landp", s"$root/prof", docProfileSpec, b.toLong,
-                numBuckets = 4))
-            qualChain = qualChain.map(_ =>
+                numBuckets = 4)))
+            qualChain.set(qualChain.get.map(_ =>
               CdcQualityDocBridge.applyDocPairsOnce(landed,
                 s"$root/landq", s"$root/qual", docQualitySpec, b.toLong,
-                numBuckets = 4))
+                numBuckets = 4)))
           })
       }
       val dim = Tables.events(s, d).select(col("event_id")).distinct()
@@ -182,10 +185,9 @@ object Queries {
       // the dim-side apply extends the QUALITY monitor's serial chain
       // (same state dir, same writer) — ride the same future so it
       // overlaps the profile chain's tail instead of waiting on it
-      val qualDone = qualChain.map(_ =>
+      val qualDone = qualChain.get.map(_ =>
         CdcQualityKeyed.applyBatch(dim, s"$root/qual", docQualitySpec))
-      Await.result(profChain, scala.concurrent.duration.Duration.Inf)
-      Await.result(qualDone, scala.concurrent.duration.Duration.Inf)
+      Overlap.awaitAll(profChain.get, qualDone)
       root
     })
 
@@ -282,6 +284,7 @@ object Queries {
           "key", payloadOnly, chunkWidth = 1024L).persist()
       // plan + APPLY the clean-key repair once — the repaired sink the
       // row's convergence reconciliation reads
+      Overlap.awaitAll(fMonitor, fDiffs)
       val violating = Await.result(fMonitor, Duration.Inf)
       val diffs = Await.result(fDiffs, Duration.Inf)
       val truthT = s.read.parquet(s"$root/truth")
@@ -4192,7 +4195,7 @@ object Queries {
         // reading the one landed change table — build them concurrently
         // (guide §2.6, the quality-keyed u/r stance)
         locally {
-          import scala.concurrent.{Await, Future}
+          import scala.concurrent.Future
           import scala.concurrent.ExecutionContext.Implicits.global
           val fSink = Future {
             CdcPipeline.applyBatch(s,
@@ -4202,9 +4205,7 @@ object Queries {
           val fTruth = Future {
             CdcPipeline.applyBatch(s, raw, truthDir, numBuckets = 8)
           }
-          Await.result(fSink.zip(fTruth),
-            scala.concurrent.duration.Duration.Inf)
-          ()
+          Overlap.awaitAll(fSink, fTruth)
         }
         val payloadOnly =
           (df: org.apache.spark.sql.DataFrame) => Seq(df.col("payload"))
@@ -4585,10 +4586,9 @@ object Queries {
             .withColumn("batch_id", lit(-1L))
             .write.partitionBy("batch_id").parquet(qDir)
         }
-        Await.result(fSeedState, Duration.Inf)
-        Await.result(fSeedQual, Duration.Inf)
-        snapC.unpersist()
-        val nSuffix = Await.result(fCount, Duration.Inf)
+        try Overlap.awaitAll(fSeedState, fSeedQual, fCount)
+        finally { snapC.unpersist(); () }
+        val nSuffix = Await.result(fCount, Duration.Inf) // already done
         val q = graft.streaming.MysqlBinlogSource.unionTails(s, heads, Map(
             "startGtid" -> executed,
             "maxEventsPerTrigger" ->
@@ -4612,9 +4612,7 @@ object Queries {
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id").parquet(qDir)
             }
-            Await.result(fState, Duration.Inf)
-            Await.result(fQual, Duration.Inf)
-            ()
+            Overlap.awaitAll(fState, fQual)
           }
           .start()
         try q.processAllAvailable() finally q.stop()

@@ -443,6 +443,25 @@ private[streaming] object BucketStore {
     fs(spark, stateDir).exists(new org.apache.hadoop.fs.Path(stateDir)) &&
       !isEmptied(spark, stateDir)
 
+  /** Read a state dir with its KNOWN data schema: no parquet footer
+    * inference job per read. `bucket` stays out of `dataSchema` so
+    * partition discovery types it (int) exactly as an inferred read
+    * does — a user-typed int `bucket` would turn a transient
+    * `bucket=N__old` dir into a partition cast failure under ANSI.
+    */
+  def readRows(spark: SparkSession, stateDir: String,
+               dataSchema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(dataSchema).parquet(stateDir)
+
+  /** Cluster rows by `bucket` into one partition per touched bucket —
+    * the staged write's own layout. A merge that shuffles through this
+    * ONCE, before its per-key work, needs no exchange of its own (every
+    * key it collapses lives in one bucket), and [[writeAndSwap]]'s
+    * identical repartition is planned away as already satisfied.
+    */
+  def clusterByBucket(rows: DataFrame, touched: Array[Int]): DataFrame =
+    rows.repartition(math.max(touched.length, 1), col("bucket"))
+
   /** Stage `rows` (already carrying a `bucket` column) and swap each
     * touched bucket into place: live → `__old`, staged → live, drop
     * `__old` — healed by [[recover]]. A touched bucket with NO staged
@@ -473,8 +492,7 @@ private[streaming] object BucketStore {
     val f = fs(spark, stateDir)
     val staging = new Path(stateDir + "_staging")
     f.delete(staging, true)
-    val clustered =
-      rows.repartition(math.max(touched.length, 1), col("bucket"))
+    val clustered = clusterByBucket(rows, touched)
     (if (sortCols.isEmpty) clustered
      else clustered.sortWithinPartitions(
        (col("bucket") +: sortCols.map(col)): _*))

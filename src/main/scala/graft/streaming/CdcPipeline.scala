@@ -47,8 +47,14 @@ object CdcPipeline {
     * resurrect a deleted row, breaking commutativity. Read live rows
     * through [[currentState]].
     */
-  def latestState(changes: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("table"), col("key"))
+  def latestState(changes: DataFrame): DataFrame =
+    latestBy(changes, col("table"), col("key"))
+
+  /** [[latestState]]'s collapse over an explicit key (which must
+    * determine (table, key) groups exactly).
+    */
+  private def latestBy(changes: DataFrame, keys: Column*): DataFrame = {
+    val w = Window.partitionBy(keys: _*)
       .orderBy(col("ts").desc, col("seq").desc)
     changes
       .withColumn("rn", row_number().over(w))
@@ -68,8 +74,8 @@ object CdcPipeline {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         changeEventSchema)
     else
-      spark.read.parquet(stateDir).filter(col("op") =!= ChangeEvent.Delete)
-        .drop("bucket")
+      BucketStore.readRows(spark, stateDir, changeEventSchema)
+        .filter(col("op") =!= ChangeEvent.Delete).drop("bucket")
   }
 
   /** An existing state dir whose every bucket was legitimately pruned
@@ -128,11 +134,6 @@ object CdcPipeline {
   def applyBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                  numBuckets: Int = DefaultStateBuckets): Unit = {
     recoverBuckets(spark, stateDir)
-    // all state I/O below rides the Hadoop FS API — java.io.File on an
-    // HDFS/object-store stateDir would report "no state" and every
-    // batch would silently re-merge against nothing (the JoinIvm r10
-    // defect, fixed fleet-wide)
-    val fs = hadoopFs(spark, stateDir)
     // an existing state's recorded count + refinement map WIN over the
     // parameter — the parameter is creation-only ([[DefaultStateBuckets]])
     val (effBuckets, levels) =
@@ -143,16 +144,21 @@ object CdcPipeline {
     val touched = bucketed.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted                 // ≤ numBuckets values
     if (touched.isEmpty) return
-    val existing: DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(stateDir)) &&
-          !isEmptiedState(spark, stateDir))
-        spark.read.parquet(stateDir)
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-      else bucketed.limit(0)
-    val merged = latestState(
-      existing.select((cols :+ "bucket").map(col): _*)
-        .unionByName(bucketed.select((cols :+ "bucket").map(col): _*)))
-      .select((cols :+ "bucket").map(col): _*)
+    // hasRows rides the Hadoop FS API — java.io.File on an
+    // HDFS/object-store stateDir would report "no state" and every
+    // batch would silently re-merge against nothing (the JoinIvm r10
+    // defect, fixed fleet-wide)
+    val rows =
+      if (!BucketStore.hasRows(spark, stateDir)) bucketed
+      else BucketStore.readRows(spark, stateDir, changeEventSchema)
+        .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+        .unionByName(bucketed)
+    // ONE shuffle, on the bucket: `bucket` is a function of (table, key)
+    // under the recorded meta, so the (bucket, table, key) collapse is
+    // latestState's, its window needs no exchange, and the staged
+    // write's repartition(bucket) is planned away as satisfied
+    val merged = latestBy(BucketStore.clusterByBucket(rows, touched),
+      col("bucket"), col("table"), col("key"))
     writeBucketsAndSwap(spark, merged, stateDir, touched, effBuckets)
   }
 

@@ -476,8 +476,8 @@ object CdcProfile {
         .collect().map(_.getInt(0)).sorted          // ≤ numBuckets values
       if (touched.isEmpty) return
       // persist the merged rows: the keyed half and the summary
-      // recompute both read them, and without the cache the full-outer
-      // merge runs twice inside the one staged write
+      // recompute both read them, and without the cache the merge's
+      // shuffle re-runs once per union branch of the one staged write
       val newS = mergeTouched(spark, stateDir, ev, touched).persist()
       try {
         val out = keyedRows(newS).unionByName(summaryRows(newS, spec))
@@ -487,61 +487,59 @@ object CdcProfile {
     } finally { ev.unpersist(); () }
   }
 
+  /** Data schema of a value state's rows (the [[keyedRows]] /
+    * [[summaryRows]] union, both layouts) — `bucket` rides as the
+    * partition column ([[BucketStore.readRows]]).
+    */
+  private[streaming] val StateSchema: StructType = StructType.fromDDL(
+    "part STRING, c STRING, v STRING, n BIGINT, last_seq BIGINT, " +
+      "rows BIGINT, nulls BIGINT, ndv BIGINT, mn STRING, mx STRING")
+
   /** The netted-merge core shared by the hash-bucketed apply above and
     * the range-bucketed one ([[CdcProfileRanged]]): given the batch's
     * tagged weighted deltas `ev` (bucket, c, v, seq, w) and the touched
     * bucket set, advance the per-(column, value) counts of exactly
     * those buckets — per-key seq gates make a redelivered event
-    * contribute nothing, untouched keys of touched buckets carry over
-    * through the full-outer merge.
+    * contribute nothing, untouched keys of touched buckets carry over.
+    *
+    * The batch's events and the prior keyed rows ride ONE union and ONE
+    * shuffle, on the bucket ([[BucketStore.clusterByBucket]]): the tag
+    * is a function of (c, v) under the recorded meta, so every
+    * per-(bucket, c, v) step below is partition-local — the seq gate
+    * (the prior's last_seq, a window max over the key) and one
+    * aggregation netting the prior count with the fresh weights. The
+    * staged write and the [[summaryRows]] recompute reuse that
+    * partitioning, so no (c, v) exchange is ever planned. No per-key
+    * event list is materialized: a hot value's events stay a running
+    * sum (skew-safe).
     */
   private[streaming] def mergeTouched(spark: SparkSession, stateDir: String,
                                       ev: DataFrame,
                                       touched: Array[Int]): DataFrame = {
-    val prior =
-      if (BucketStore.hasRows(spark, stateDir))
-        spark.read.parquet(stateDir)              // pruned to touched
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-      else
-        spark.range(0).select(lit("s").as("part"),
-          lit(0).cast("int").as("bucket"), lit("").as("c"),
-          lit(null).cast("string").as("v"), lit(0L).as("n"),
-          lit(0L).as("last_seq"), lit(0L).as("rows"), lit(0L).as("nulls"),
-          lit(0L).as("ndv"), lit(null).cast("string").as("mn"),
-          lit(null).cast("string").as("mx"))
-    val priorS = prior.filter(col("part") === "s")
-      .select(col("bucket"), col("c"), col("v"), col("n"),
-        col("last_seq"))
-    // ONE null-safe full-outer join of the batch's EVENTS against the
-    // prior keyed rows, then ONE aggregation on the join keys — the
-    // per-(column, value) seq gate (replayed events contribute nothing)
-    // rides as a conditional sum, so the gate costs no join of its own.
-    // Previously this was a gate join + a (bucket, c, v) re-aggregation
-    // + a second full-outer join against the SAME prior rows — two
-    // extra exchanges and a second shuffle of the prior per apply; the
-    // fused form shuffles each side once, and the aggregation reuses
-    // the join's (c, v) partitioning (no third exchange). No
-    // per-key event list is ever materialized, so a hot value's events
-    // stay a running sum exactly as before (skew-safe).
-    val e = ev.as("e"); val p = priorS.as("p")
-    val joined = e.join(p,
-      col("e.c") <=> col("p.c") && col("e.v") <=> col("p.v"),
-      "full_outer")
+    import org.apache.spark.sql.expressions.Window
+    val nullL = lit(null).cast("bigint")
+    val events = ev.select(col("bucket"), col("c"), col("v"), col("seq"),
+      col("w"), nullL.as("n"), nullL.as("last_seq"))
+    val rows =
+      if (!BucketStore.hasRows(spark, stateDir)) events
+      else events.unionByName(
+        BucketStore.readRows(spark, stateDir, StateSchema)
+          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*) &&
+            col("part") === "s")
+          .select(col("bucket"), col("c"), col("v"), nullL.as("seq"),
+            nullL.as("w"), col("n"), col("last_seq")))
+    val key = Seq(col("bucket"), col("c"), col("v"))
     val freshW = when(
-      col("e.seq") > coalesce(col("p.last_seq"), lit(Long.MinValue)),
-      col("e.w"))
-    joined
-      .groupBy(coalesce(col("e.c"), col("p.c")).as("c"),
-        coalesce(col("e.v"), col("p.v")).as("v"))
+      col("seq") > coalesce(col("gate"), lit(Long.MinValue)), col("w"))
+    BucketStore.clusterByBucket(rows, touched)
+      .withColumn("gate",
+        max(col("last_seq")).over(Window.partitionBy(key: _*)))
+      .groupBy(key: _*)
       .agg(
-        coalesce(first(col("p.bucket"), ignoreNulls = true),
-          first(col("e.bucket"), ignoreNulls = true)).as("bucket"),
-        (coalesce(first(col("p.n"), ignoreNulls = true), lit(0L)) +
+        (coalesce(sum(col("n")), lit(0L)) +
           coalesce(sum(freshW), lit(0L))).as("n"),
-        greatest(first(col("p.last_seq"), ignoreNulls = true),
-          max(when(freshW.isNotNull, col("e.seq")))).as("last_seq"))
-      .select(col("bucket"), col("c"), col("v"), col("n"),
-        col("last_seq"))
+        greatest(max(col("last_seq")),
+          max(when(freshW.isNotNull, col("seq")))).as("last_seq"))
   }
 
   /** Drop gate tombstones (zero-count values) whose last event is older

@@ -29,7 +29,7 @@ import CdcProfile.ProfileSpec
   *
   * Everything else is deliberately SHARED with the hash layout: the
   * weighted-delta algebra, per-(column, value) seq gates, the netted
-  * full-outer merge ([[CdcProfile.mergeTouched]]), the per-bucket
+  * one-shuffle merge ([[CdcProfile.mergeTouched]]), the per-bucket
   * summary recompute ([[CdcProfile.summaryRows]]), and the
   * [[BucketStore]] staged-swap/recover crash machinery. What differs
   * is only the bucket ASSIGNMENT (recorded value boundaries, not a
@@ -253,7 +253,8 @@ object CdcProfileRanged {
   // on any spec with MORE THAN TWO profiled columns (latent until the
   // r16 three-column date+ts+float spec hit it). An unmatched when is
   // null and falls through — identical semantics, any column count.
-  private def bucketOf(meta: RangesMeta, spec: ProfileSpec): Column =
+  private[streaming] def bucketOf(meta: RangesMeta,
+                                  spec: ProfileSpec): Column =
     coalesce(spec.cols.map(cn => when(col("c") === cn,
         colTag(meta.col(cn), spec.schema(cn).dataType)(col("v")))): _*)
       .cast("int")
@@ -350,7 +351,7 @@ object CdcProfileRanged {
         .collect().map(_.getInt(0)).sorted          // ≤ allocated buckets
       if (touched.isEmpty) return
       // persisted for the same reason as the hash apply: two consumers
-      // of one full-outer merge inside one staged write
+      // of one merge inside one staged write
       val newS = CdcProfile.mergeTouched(spark, stateDir, ev, touched)
         .persist()
       try {

@@ -383,9 +383,10 @@ object CdcQualityKeyed {
       // writer locks, both reading the one persisted delta) — run them
       // concurrently so each side's scheduling/commit tail back-fills
       // the other's idle executors (guide §2.6); Spark's scheduler
-      // handles multi-threaded job submission natively, and Await
-      // rethrows either side's failure
-      import scala.concurrent.{Await, Future}
+      // handles multi-threaded job submission natively. Both sides are
+      // awaited before either side's failure is rethrown, so no write
+      // outlives the apply (or the delta unpersist below)
+      import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
       val fu =
         if (touchedU.isEmpty) Future.unit
@@ -393,8 +394,7 @@ object CdcQualityKeyed {
       val fr =
         if (touchedR.isEmpty) Future.unit
         else Future(applyRef(delta, rDir(stateDir), rB, touchedR))
-      Await.result(fu.zip(fr), scala.concurrent.duration.Duration.Inf)
-      ()
+      graft.Overlap.awaitAll(fu, fr)
     } finally { delta.unpersist(); () }
   }
 
