@@ -7,12 +7,16 @@ import scala.concurrent.duration.Duration
 object Overlap {
 
   /** Wait for EVERY sibling, then rethrow the first failure (in argument
-    * order). `Await.result` on each in turn — or on a `zip` — fails
-    * fast and abandons the slower siblings, whose Spark jobs and writes
-    * then outlive the caller that started them (and race its cleanup).
+    * order), else return the results in argument order. `Await.result`
+    * on each in turn — or on a `zip` or `Future.sequence` — fails fast
+    * and abandons the slower siblings, whose Spark jobs and writes then
+    * outlive the caller that started them (and race its cleanup).
     */
-  def awaitAll(siblings: Future[Any]*): Unit = {
+  def results[T](siblings: Seq[Future[T]]): Seq[T] = {
     siblings.foreach(Await.ready(_, Duration.Inf))
-    siblings.foreach(_.value.get.get)
+    siblings.map(_.value.get.get)
   }
+
+  /** [[results]] for siblings of mixed types, their values dropped. */
+  def awaitAll(siblings: Future[Any]*): Unit = { results(siblings); () }
 }

@@ -166,7 +166,15 @@ private[streaming] object BucketStore {
     * primitives acquires once and the inner calls ride along.
     */
   def withWriterLock[T](spark: SparkSession, stateDir: String)
-                       (body: => T): T = {
+                       (body: => T): T =
+    lockedOr[T](spark, stateDir,
+      msg => throw new java.io.IOException(msg))(body)
+
+  /** [[withWriterLock]], except that when another writer holds the lock
+    * it returns `ifHeld(message)` instead of running `body`.
+    */
+  private def lockedOr[T](spark: SparkSession, stateDir: String,
+                          ifHeld: String => T)(body: => T): T = {
     import org.apache.hadoop.fs.Path
     val held = heldLocks.get()
     val ttlMs = lockTtlMs(spark)
@@ -240,7 +248,7 @@ private[streaming] object BucketStore {
     // is live by construction (no heal path applies)
     val prevHolder = jvmHolders.putIfAbsent(stateDir, owner)
     if (prevHolder != null)
-      throw new java.io.IOException(
+      return ifHeld(
         s"another writer holds $lock (owner: $prevHolder, this JVM) — " +
           "concurrent writers on one state dir corrupt it; quiesce the " +
           "other writer thread")
@@ -273,13 +281,15 @@ private[streaming] object BucketStore {
         // winner deleted the stale file, so create-exclusive decides
         acquired = tryAcquire()
       }
-      if (!acquired)
-        throw new java.io.IOException(
-          s"another writer holds $lock (owner: ${readOwner()}) — " +
-            "concurrent writers on one state dir corrupt it; quiesce " +
-            "the other writer, or delete the lock if its owner crashed " +
-            s"less than ${ttlMs / 1000}s ago and is known dead")
     } catch { case t: Throwable => unregister(); throw t }
+    if (!acquired) {
+      unregister()
+      return ifHeld(
+        s"another writer holds $lock (owner: ${readOwner()}) — " +
+          "concurrent writers on one state dir corrupt it; quiesce " +
+          "the other writer, or delete the lock if its owner crashed " +
+          s"less than ${ttlMs / 1000}s ago and is known dead")
+    }
     held(stateDir) = System.currentTimeMillis()
     try body
     finally {
@@ -535,24 +545,60 @@ private[streaming] object BucketStore {
     * means the crash hit before commit — drop the staging (and any
     * staged meta), the parent is intact. Idempotent; runs before every
     * apply and read.
+    *
+    * A LIVE writer's swap, rebucket or split looks exactly like a
+    * crashed one, so the heal runs only under the writer lock: the
+    * layout is first checked without a lock (a clean state takes none,
+    * so reads and applies pay nothing), a writer already holding the
+    * lock heals in its own span, and while ANOTHER writer holds it the
+    * heal is skipped — that writer's commit finishes the layout, or the
+    * next recover after its crash heals it.
     */
-  def recover(spark: SparkSession, stateDir: String): Unit = {
+  def recover(spark: SparkSession, stateDir: String): Unit =
+    if (needsRecovery(spark, stateDir))
+      lockedOr(spark, stateDir, _ => ())(heal(spark, stateDir))
+
+  /** Whether [[heal]] has anything to do: a TTL-aged lock-claim
+    * leftover, a whole-dir `__old` or `__rebucket` sibling, or a
+    * `bucket=N__old`, `.splitting_*` or `.split_*` entry in the dir.
+    */
+  private def needsRecovery(spark: SparkSession, stateDir: String): Boolean = {
     import org.apache.hadoop.fs.Path
     val f = fs(spark, stateDir)
     val dir = new Path(stateDir)
-    // reap TTL-aged claim leftovers: a crash between a release's
-    // claim-rename and its delete orphans a `__writer.lock.rel_*`
-    // file, and a crash inside the stale-heal claim orphans the
-    // symmetric `__writer.lock.reaped_*`. Age-gated so a LIVE
-    // release/heal mid-flight (ms-scale) is never raced; an aged one
-    // can belong to no live span.
+    agedClaims(spark, stateDir).nonEmpty ||
+      f.exists(new Path(stateDir + "__old")) ||
+      f.exists(new Path(stateDir + "__rebucket")) ||
+      (f.exists(dir) && f.listStatus(dir).exists { st =>
+        val n = st.getPath.getName
+        (st.isDirectory && n.endsWith("__old")) || n.startsWith(".split")
+      })
+  }
+
+  /** TTL-aged lock-claim leftovers: a crash between a release's
+    * claim-rename and its delete orphans a `__writer.lock.rel_*` file,
+    * and a crash inside the stale-heal claim orphans the symmetric
+    * `__writer.lock.reaped_*`. Age-gated so a LIVE release/heal
+    * mid-flight (ms-scale) is never raced; an aged one can belong to no
+    * live span.
+    */
+  private def agedClaims(spark: SparkSession, stateDir: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val ttlMs = lockTtlMs(spark)
-    Seq("rel", "reaped").foreach { kind =>
-      try f.globStatus(new Path(s"${stateDir}__writer.lock.${kind}_*"))
-        .filter(st => System.currentTimeMillis() -
-          st.getModificationTime > ttlMs)
-        .foreach(st => f.delete(st.getPath, false))
-      catch { case _: Throwable => () }
+    try Option(fs(spark, stateDir).globStatus(new org.apache.hadoop.fs.Path(
+        s"${stateDir}__writer.lock.{rel,reaped}_*"))).toSeq.flatten
+      .filter(st => System.currentTimeMillis() -
+        st.getModificationTime > ttlMs)
+    catch { case _: Throwable => Seq.empty }
+  }
+
+  /** The heal itself — see [[recover]]; runs under the writer lock. */
+  private def heal(spark: SparkSession, stateDir: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val f = fs(spark, stateDir)
+    val dir = new Path(stateDir)
+    agedClaims(spark, stateDir).foreach { st =>
+      try f.delete(st.getPath, false) catch { case _: Throwable => false }
     }
     val dirOld = new Path(stateDir + "__old")
     if (f.exists(dirOld)) {

@@ -41,9 +41,12 @@ object ChunkPlanner {
     */
   case object Paginated extends ScanStrategy
 
-  /** No usable PK but too many rows for one task: `numSplits` disjoint
-    * mod-hash partitions over any stable numeric column (`MOD(ABS(col),
-    * n) = i`). The reference pages a PK-less table single-threaded
+  /** No usable PK but too many rows for one task: a parallel copy
+    * split by range on an integer column (the JDBC copy prefers the
+    * leading key column, so its index serves each range; the first
+    * range also takes NULLs and both end ranges are open). `numSplits`
+    * is the batch-sized count; the JDBC copy caps it by cores. The
+    * reference pages a PK-less table single-threaded
     * (pagination.py:134-142); at 100 TB one task per big table is the
     * difference between a copy finishing and not.
     */

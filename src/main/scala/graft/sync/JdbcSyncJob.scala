@@ -117,6 +117,30 @@ object JdbcSyncJob {
     java.sql.Types.TINYINT, java.sql.Types.SMALLINT,
     java.sql.Types.INTEGER, java.sql.Types.BIGINT)
 
+  /** The table's primary-key columns in key order, and its
+    * integer-typed columns in ordinal order, from one metadata pass.
+    */
+  private def keyAndIntegerColumns(ep: Endpoint, table: String,
+                                   schema: Option[String])
+      : (Seq[String], Seq[String]) = {
+    val conn = DriverManager.getConnection(ep.url, ep.props)
+    try {
+      val md = conn.getMetaData
+      val rk = md.getPrimaryKeys(null, schema.orNull, table)
+      val key = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      while (rk.next())
+        key += rk.getInt("KEY_SEQ") -> rk.getString("COLUMN_NAME")
+      // the table name is a LIKE pattern here ('_' matches any char)
+      val rc = md.getColumns(null, schema.orNull, table, "%")
+      val ints = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      while (rc.next())
+        if (rc.getString("TABLE_NAME") == table &&
+          IntegerJdbcTypes(rc.getInt("DATA_TYPE")))
+          ints += rc.getInt("ORDINAL_POSITION") -> rc.getString("COLUMN_NAME")
+      (key.sortBy(_._1).map(_._2).toSeq, ints.sortBy(_._1).map(_._2).toSeq)
+    } finally conn.close()
+  }
+
   /** S4 PK introspection from JDBC metadata — the engine's analog of the
     * reference's `SHOW COLUMNS ... Extra='auto_increment'` probe
     * (pagination.py:52-62): the table's single-column INTEGER primary
@@ -124,42 +148,21 @@ object JdbcSyncJob {
     * (they can't drive range chunking).
     */
   def introspectPk(ep: Endpoint, table: String,
-                   schema: Option[String] = None): Option[String] = {
-    val conn = DriverManager.getConnection(ep.url, ep.props)
-    try {
-      val md = conn.getMetaData
-      val rs = md.getPrimaryKeys(null, schema.orNull, table)
-      val pkCols = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (rs.next()) pkCols += rs.getString("COLUMN_NAME")
-      pkCols.toList match {
-        case pk :: Nil =>
-          val cols = md.getColumns(null, schema.orNull, table, pk)
-          if (cols.next() && IntegerJdbcTypes(cols.getInt("DATA_TYPE")))
-            Some(pk)
-          else None
-        case _ => None
-      }
-    } finally conn.close()
-  }
+                   schema: Option[String] = None): Option[String] =
+    keyAndIntegerColumns(ep, table, schema) match {
+      case (Seq(pk), ints) if ints.contains(pk) => Some(pk)
+      case _ => None
+    }
 
-  /** First integer-typed column of a table — the synthetic split key for
-    * PK-less parallel copies (mod-hash predicates need exact integer
-    * arithmetic; DOUBLE/DECIMAL-with-scale columns don't qualify).
+  /** The range-split column of a parallel copy of a table without a
+    * single integer PK: the leading primary-key column when it is an
+    * integer (its index then serves every range predicate), else the
+    * first integer-typed column. None: the table has no integer column.
     */
-  def firstIntegerColumn(ep: Endpoint, table: String,
-                         schema: Option[String] = None): Option[String] = {
-    val conn = DriverManager.getConnection(ep.url, ep.props)
-    try {
-      val rs = conn.getMetaData.getColumns(null, schema.orNull, table, "%")
-      var best: Option[(Int, String)] = None
-      while (rs.next()) {
-        val ordinal = rs.getInt("ORDINAL_POSITION")
-        if (IntegerJdbcTypes(rs.getInt("DATA_TYPE")) &&
-          best.forall(_._1 > ordinal))
-          best = Some(ordinal -> rs.getString("COLUMN_NAME"))
-      }
-      best.map(_._2)
-    } finally conn.close()
+  def splitColumn(ep: Endpoint, table: String,
+                  schema: Option[String] = None): Option[String] = {
+    val (key, ints) = keyAndIntegerColumns(ep, table, schema)
+    key.headOption.filter(ints.contains).orElse(ints.headOption)
   }
 
   /** A1 bounds + real count as ONE driver-side aggregate query on the
@@ -193,12 +196,49 @@ object JdbcSyncJob {
       } finally conn.close()
   }
 
+  /** `MIN`/`MAX` of a split column, NULLs ignored, `(0, 0)` when it
+    * holds none — two index-end probes, no count and no row transfer.
+    */
+  private def columnBounds(ep: Endpoint, table: String,
+                           c: String): (Long, Long) = {
+    val conn = DriverManager.getConnection(ep.url, ep.props)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        s"SELECT COALESCE(MIN($c), 0), COALESCE(MAX($c), 0) FROM $table")
+      rs.next()
+      (rs.getLong(1), rs.getLong(2))
+    } finally conn.close()
+  }
+
+  /** A range-partitioned copy read of `[lo, hi]` on `c`, and its
+    * partition count: one per `batchSize` of the table's `rows`, capped
+    * by `maxPartitions` and by the cores Spark runs tasks on (more tasks
+    * than cores only add connections, commits and, for a split without
+    * an index, source scans; `batchSize` stays the insert batch inside
+    * each task), then by the span as Spark caps it (one partition when
+    * `lo == hi`, at most `hi - lo` otherwise). Spark's first range also
+    * takes NULLs and both end ranges are open, so every row lands
+    * exactly once whatever the bounds.
+    */
+  private def rangeRead(spark: SparkSession, src: Endpoint, table: String,
+                        c: String, lo: Long, hi: Long, rows: Long,
+                        cfg: SyncJob.SyncConfig): (DataFrame, Int) = {
+    val n = math.min(
+      ChunkPlanner.numPartitions(rows, cfg.batchSize, cfg.maxPartitions),
+      spark.sparkContext.defaultParallelism)
+    val span = hi - lo // negative on overflow: a span wider than any n
+    val parts = if (span < 0) n else math.max(1L, math.min(n.toLong, span)).toInt
+    (JdbcSource.rangePartitionedRead(spark, src.url, table, c, lo, hi, parts,
+      src.props), parts)
+  }
+
   /** Copy one table src→dst with the planned strategy, bounds already
     * probed (under the snapshot fence when [[run]] drives this). Tables
-    * without a usable PK but above the small-table threshold get a
-    * parallel synthetic split on any integer column; truly unsplittable
-    * tables fall back to one partition. Empty tables still create the
-    * destination table.
+    * without a usable PK but above the small-table threshold split by
+    * range on [[splitColumn]], its bounds probed here, after the fence;
+    * tables without an integer column fall back to one partition. Each
+    * copy task writes in one transaction ([[Sinks.jdbc]]). Empty tables
+    * still create the destination table.
     */
   def copyTable(spark: SparkSession, src: Endpoint, dst: Endpoint,
                 table: String, pk: Option[String], bounds: (Long, Long, Long),
@@ -213,22 +253,16 @@ object JdbcSyncJob {
         (JdbcSource.read(spark, src.url, table, src.props).limit(0), 1)
       case ChunkPlanner.SingleRow | ChunkPlanner.Paginated =>
         (JdbcSource.read(spark, src.url, table, src.props), 1)
-      case ChunkPlanner.SyntheticSplit(n) =>
-        firstIntegerColumn(src, table, schema) match {
+      case ChunkPlanner.SyntheticSplit(_) =>
+        splitColumn(src, table, schema) match {
           case Some(c) =>
-            // disjoint + exhaustive predicates: every row satisfies
-            // exactly one (NULLs land in split 0)
-            val preds = (0 until n).map(i =>
-              if (i == 0) s"MOD(ABS($c), $n) = 0 OR $c IS NULL"
-              else s"MOD(ABS($c), $n) = $i").toArray
-            (spark.read.jdbc(src.url, table, preds, src.props), n)
+            val (cLo, cHi) = columnBounds(src, table, c)
+            rangeRead(spark, src, table, c, cLo, cHi, cnt, cfg)
           case None =>
             (JdbcSource.read(spark, src.url, table, src.props), 1)
         }
       case ChunkPlanner.RangeChunks(_) =>
-        val n = ChunkPlanner.numPartitions(cnt, cfg.batchSize, cfg.maxPartitions)
-        (JdbcSource.rangePartitionedRead(spark, src.url, table, pk.get, lo, hi,
-          n, src.props), n)
+        rangeRead(spark, src, table, pk.get, lo, hi, cnt, cfg)
     }
     // write even when empty so the destination table exists
     Sinks.jdbc(df, dst.url, table, dst.props, batchSize = cfg.batchSize.toInt,
@@ -276,19 +310,26 @@ object JdbcSyncJob {
       } finally fence.release()
     // table-level fan-out (the reference's outer ThreadPoolExecutor with
     // --max_workers, sync.py:192-199): small-table jobs overlap while a
-    // big table's partitioned copy saturates the executors. Failures
-    // PROPAGATE (the reference logs and swallows, SURVEY §3.4-3).
+    // big table's partitioned copy saturates the executors. Copies are
+    // SUBMITTED largest first (stable on the probed count), so the
+    // longest copy starts on the first worker instead of queueing behind
+    // small ones; reports keep catalog order. Failures PROPAGATE (the
+    // reference logs and swallows, SURVEY §3.4-3), once every sibling
+    // copy has stopped writing.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(cfg.maxWorkers, math.max(1, planned.size))))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val reports =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(planned.map { case (t, pk, b) =>
-          scala.concurrent.Future(copyTable(spark, src, dst, t, pk, b, cfg, schema))
-        }),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+      try {
+        val submitted = planned.indices.sortBy(i => -planned(i)._3._3)
+          .map { i =>
+            val (t, pk, b) = planned(i)
+            i -> scala.concurrent.Future(
+              copyTable(spark, src, dst, t, pk, b, cfg, schema))
+          }
+        graft.Overlap.results(submitted.sortBy(_._1).map(_._2))
+      } finally pool.shutdown()
     SyncJob.writeCheckpoint(checkpointDir, reports)
     reports.toDF().orderBy("table")
   }
@@ -330,12 +371,11 @@ object JdbcSyncJob {
             // would regress the checkpoint to 0)
             SyncJob.TableReport(t, 0L, lastMax, lastMax, "Resume", 0)
           else {
-            val n = ChunkPlanner.numPartitions(cnt, cfg.batchSize, cfg.maxPartitions)
             // the explicit filter does the row selection (pushed down);
             // the read bounds only shape the partitions
-            val df = JdbcSource.rangePartitionedRead(spark, src.url, t, k,
-              lo, hi, n, src.props).filter(col(k) > lastMax)
-            Sinks.jdbc(df, dst.url, t, dst.props, batchSize = cfg.batchSize.toInt)
+            val (delta, n) = rangeRead(spark, src, t, k, lo, hi, cnt, cfg)
+            Sinks.jdbc(delta.filter(col(k) > lastMax), dst.url, t, dst.props,
+              batchSize = cfg.batchSize.toInt)
             SyncJob.TableReport(t, cnt, lo, hi, "Resume", n)
           }
         case (pk, _) =>

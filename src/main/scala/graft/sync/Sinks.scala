@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * connection (mysql_to_clickhouse_sync.py:52-91) and swallows insert
   * errors (sync.py:87-89). Spark's JDBC writer replaces all of it:
   * PreparedStatement batching (no SQL-injection surface — SURVEY §3.4-4),
-  * one connection per partition task, failures propagate as task
-  * failures.
+  * one connection and (where the target has transactions) one commit
+  * per partition task, failures propagate as task failures.
   */
 object Sinks {
 
@@ -53,13 +53,17 @@ object Sinks {
         p.putAll(props); p
       } else props
     val sized = numPartitions.fold(df)(n => df.coalesce(n))
-    val base = sized.write
+    val write = sized.write
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
       // on overwrite, TRUNCATE the existing table instead of dropping it
       // (preserves target DDL — the reference never issues DDL either)
       .option("truncate", overwrite.toString)
       .option("batchsize", batchSize)
-      .option("isolationLevel", "NONE") // ClickHouse has no transactions
+    // ClickHouse has no transactions. Every other target keeps Spark's
+    // default isolation: autocommit off and ONE commit per partition
+    // task, so a failed task leaves none of its rows (Spark falls back
+    // to autocommit itself when the driver reports no transactions).
+    val base = if (ch) write.option("isolationLevel", "NONE") else write
     createTableOptions.fold(base)(o =>
         base.option("createTableOptions", o))
       .jdbc(url, table, effProps)

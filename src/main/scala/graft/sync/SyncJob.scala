@@ -32,6 +32,10 @@ import scala.util.matching.Regex
 object SyncJob {
 
   /** CLI surface of the reference (sync.py:224-240, README.md:3-47).
+    * `batchSize` is the JDBC insert batch (`--batch_size`, sync.py:236)
+    * and the rows per chunk a copy plans; the JDBC copy then runs
+    * `min(chunks, maxPartitions, defaultParallelism)` tasks, so a task
+    * writes many batches, not one chunk each.
     * `maxWorkers` is the outer table-level concurrency (`--max_workers`,
     * default 10, sync.py:237) — here driver-side Futures each submitting
     * an independent Spark job, so small-table jobs overlap while a big
@@ -179,17 +183,16 @@ object SyncJob {
       discoverTables(srcDir, spark.sparkContext.hadoopConfiguration),
       cfg.includeTables, cfg.excludeTables)
     // table-level fan-out (reference's outer ThreadPoolExecutor,
-    // sync.py:192-199) — unlike the reference, failures PROPAGATE
+    // sync.py:192-199) — unlike the reference, failures PROPAGATE, once
+    // every sibling copy has stopped writing
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(cfg.maxWorkers, math.max(1, tables.size))))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
-      val futures = tables.map(t => scala.concurrent.Future(
-        syncTable(spark, srcDir, destDir, t, pkFor(t), cfg)))
-      val reports = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration.Inf)
+      val reports = graft.Overlap.results(tables.map(t =>
+        scala.concurrent.Future(
+          syncTable(spark, srcDir, destDir, t, pkFor(t), cfg))))
       writeCheckpoint(destDir, reports)
       reports.toDF().orderBy("table")
     } finally pool.shutdown()

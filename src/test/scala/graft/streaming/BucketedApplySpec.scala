@@ -401,4 +401,37 @@ class BucketedApplySpec extends SparkSpec {
     assert(CdcPipeline.currentState(spark, dir).columns.toSeq ==
       CdcPipeline.changeEventSchema.fieldNames.toSeq)
   }
+
+  test("a read leaves a mid-swap layout to the writer holding the lock, " +
+      "and heals it once the lock is free") {
+    import java.nio.file.{Files, Paths}
+    val dir = tmp("bucketed_heal_lock_")
+    CdcPipeline.applyBatch(spark, rowBatches(23L)(0).toDF(), dir,
+      numBuckets = 4)
+    def state() = sorted(CdcPipeline.currentState(spark, dir))
+    val before = state()
+    val live = Files.list(Paths.get(dir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("bucket="))
+      .minBy(_.toString)
+    val old = Paths.get(live.toString + "__old")
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val writer = new Thread(() =>
+      BucketStore.withWriterLock(spark, dir) {
+        held.countDown(); release.await()
+      })
+    writer.start()
+    held.await()
+    try {
+      // the holder is between its two renames: live set aside, nothing
+      // published yet
+      Files.move(live, old)
+      assert(state() == before)
+      assert(Files.exists(old) && !Files.exists(live),
+        "a reader touched a layout another writer owns")
+    } finally { release.countDown(); writer.join() }
+    assert(state() == before)
+    assert(Files.exists(live) && !Files.exists(old))
+  }
 }
