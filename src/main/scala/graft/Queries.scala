@@ -492,7 +492,7 @@ object Queries {
 
   // ---- st_cdc_quality_keyed: spec + synthesized two-table stream ----
 
-  private[graft] lazy val qualityKeyedSpec
+  private lazy val qualityKeyedSpec
       : graft.streaming.CdcQualityKeyed.KeyedSpec = {
     import org.apache.spark.sql.types._
     import graft.streaming.CdcQuality.QCheck
@@ -532,11 +532,8 @@ object Queries {
       qualityKeyedRawStream(s, d), qualityKeyedSpec)
   }
 
-  /** The RAW change rows behind [[qualityKeyedChanges]] — also the
-    * input of `tools.MonitorProbe`, which feeds the bucketed streaming
-    * apply (that path takes raw rows, not the landed weighted form).
-    */
-  private[graft] def qualityKeyedRawStream(s: SparkSession, d: String)
+  /** The RAW change rows behind [[qualityKeyedChanges]]. */
+  private def qualityKeyedRawStream(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val li = Tables.lineitem(s, d).select(
       col("l_orderkey"),

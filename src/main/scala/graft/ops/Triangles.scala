@@ -26,11 +26,8 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** Orient `edges` (symmetric, distinct, src≠dst) by (degree, id).
-    * Package-visible so `tools.TriangleStress` can census wedge
-    * volume per orientation.
-    */
-  private[graft] def orient(edges: DataFrame): DataFrame = {
+  /** Orient `edges` (symmetric, distinct, src≠dst) by (degree, id). */
+  private def orient(edges: DataFrame): DataFrame = {
     val deg = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("deg"))
     edges
@@ -41,15 +38,6 @@ object Triangles {
       .select(col("src").as("lo"), col("dst").as("hi"))
   }
 
-  /** The naive id orientation — the Σdeg² baseline the scaladoc
-    * argues against. Package-visible ONLY for `tools.TriangleStress`,
-    * which measures the two orientations against each other on a
-    * celebrity-skewed graph; never used by the registered query.
-    */
-  private[graft] def orientById(edges: DataFrame): DataFrame =
-    edges.filter(col("src") < col("dst"))
-      .select(col("src").as("lo"), col("dst").as("hi"))
-
   /** All triangles via the edge-iterator form: each oriented edge
     * (u,v) closes one triangle per vertex of N⁺(u) ∩ N⁺(v), so the
     * plan is ONE adjacency aggregation + two edge⋈adjacency equi-joins
@@ -58,17 +46,15 @@ object Triangles {
     * rows, measured 14 s vs 2.0-2.3 s warm at sf0.1 on the 1.2M-edge
     * co-purchase graph; the intersection does the same Σ(d_u + d_v)
     * work as CPU inside the join project, which is where it belongs;
-    * docs/SCALE.md has the skew-cliff table from tools.TriangleStress
-    * — under this form the naive orientation's failure mode is a deg²
+    * docs/SCALE.md has the skew-cliff table — under this form the naive orientation's failure mode is a deg²
     * adjacency-replication OOM, not slow wedges). Each
     * triangle (x<y<z in the orientation order) is found exactly once,
     * at its (x,y) edge. Per-vertex counts explode each triangle's 3
     * corners and aggregate: the top `k` vertices by triangle
     * membership, ties broken by id. Output: (id BIGINT, n_tri BIGINT).
     */
-  def topVerticesByTriangles(edges: DataFrame, k: Int,
-      degreeOrdered: Boolean = true): DataFrame = {
-    val corners = triangles(edges, degreeOrdered)
+  def topVerticesByTriangles(edges: DataFrame, k: Int): DataFrame = {
+    val corners = triangles(edges)
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
     corners.groupBy("id").agg(count(lit(1)).as("n_tri"))
       .orderBy(col("n_tri").desc, col("id"))
@@ -80,9 +66,8 @@ object Triangles {
     * the enumeration both [[topVerticesByTriangles]] and the DOULION
     * sampled estimator consume.
     */
-  def triangles(edges: DataFrame, degreeOrdered: Boolean = true)
-      : DataFrame = {
-    val e = if (degreeOrdered) orient(edges) else orientById(edges)
+  def triangles(edges: DataFrame): DataFrame = {
+    val e = orient(edges)
     val adj = e.groupBy(col("lo").as("n"))
       .agg(collect_list(col("hi")).as("nbrs"))
     e.join(adj.select(col("n").as("lo"), col("nbrs").as("un")), "lo")

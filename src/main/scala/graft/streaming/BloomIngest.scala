@@ -15,12 +15,9 @@ import graft.sim.PortableHash.{P, permA, permB}
   * Mergeability is even simpler than the CM sketch's: the bloom of a
   * concatenated corpus is the bitwise OR of the per-part blooms, i.e.
   * the DISTINCT union of their set-bit tables. So the state is one
-  * `(bit)` partial — at most [[M]] rows — per micro-batch in its own
-  * `batch_id=N` partition (overwrite → replay-idempotent), the live
-  * bloom is a DISTINCT over ≤ |bits|×|batches| rows, and duplicated
-  * bits across partials are HARMLESS (unlike CM cell counts, which
-  * would double-count) — so compaction needs no exact-recovery dance,
-  * just the staged swap. At 100 TB only the per-batch shingle explode
+  * `(bit)` [[PartialState]] partial — at most [[M]] rows — per
+  * micro-batch, and the live bloom is a DISTINCT over ≤
+  * |bits|×|batches| rows. At 100 TB only the per-batch shingle explode
   * sees data volume, and it aggregates onto ≤ M keys map-side.
   *
   * Hashing is the portable md5_48 + permutation family over the
@@ -51,12 +48,13 @@ object BloomIngest {
       }: _*)).as("bit"))
       .distinct()
 
+  /** DISTINCT union of partials. */
+  private def merge(partials: DataFrame): DataFrame =
+    partials.select("bit").distinct()
+
   /** The current bloom: DISTINCT over every batch partial. */
-  def bloom(spark: SparkSession, stateDir: String): DataFrame = {
-    recoverState(spark, stateDir)
-    spark.read.parquet(stateDir)
-      .select("bit").distinct().orderBy("bit")
-  }
+  def bloom(spark: SparkSession, stateDir: String): DataFrame =
+    merge(PartialState.read(spark, stateDir)).orderBy("bit")
 
   /** Probe `docs` against the current bloom: per doc, its distinct
     * shingle count and how many of those shingles the bloom flags as
@@ -90,90 +88,14 @@ object BloomIngest {
   def batchTwin(docs: DataFrame, textCol: String = "text"): DataFrame =
     bitRows(docs, textCol).orderBy("bit")
 
-  /** Start the ingest: one partial bloom per micro-batch, landed in the
-    * batch's own `batch_id=N` partition (overwrite → replay-idempotent).
-    */
+  /** Start the ingest: one partial bloom per micro-batch. */
   def start(docs: DataFrame, stateDir: String, checkpointDir: String,
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bitRows(batch, textCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
-      }
-      .start()
+    PartialState.stream(docs, stateDir, checkpointDir)(bitRows(_, textCol))
 
-  private val BatchDirRe = "^batch_id=(\\d+)$".r
-  private val OldDirRe = "^batch_id=(\\d+)__old$".r
-
-  /** Compact the bloom state: DISTINCT every batch partial EXCEPT the
-    * newest into one partial at the second-newest id and drop the rest
-    * (keeping the newest intact keeps an at-least-once replay of it
-    * safe, as at [[NearDupIngest.compactState]]). Bits duplicated
-    * between the merged dir and a not-yet-deleted older dir are
-    * harmless — the read is a DISTINCT — so the swap needs only the
-    * staged-rename order, not the CM sketch's exactly-once recovery.
-    * Call between runs (stream stopped).
+  /** Bound the partial count: DISTINCT all but the newest partial
+    * ([[PartialState.compact]]). Call between runs (stream stopped).
     */
-  def compactState(spark: SparkSession, stateDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    recoverState(spark, stateDir)
-    def rename(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactState: rename $src -> $dst failed")
-    val ids = fs.listStatus(root).map(_.getPath.getName).collect {
-      case BatchDirRe(id) => id.toLong
-    }.sorted
-    if (ids.length < 3) return
-    val newest = ids.last
-    val target = ids(ids.length - 2)
-    val merged = spark.read.parquet(stateDir)
-      .filter(col("batch_id") =!= newest)
-      .select("bit").distinct()
-    val staging = new Path(root, "_compact_tmp")
-    fs.delete(staging, true)
-    merged.write.mode("overwrite").parquet(staging.toString)
-    val live = new Path(root, s"batch_id=$target")
-    val old = new Path(root, s"batch_id=${target}__old")
-    rename(live, old)
-    rename(staging, live)
-    fs.delete(old, true)
-    ids.filter(id => id != target && id != newest)
-      .foreach(id => fs.delete(new Path(root, s"batch_id=$id"), true))
-  }
-
-  /** Heal an interrupted [[compactState]] swap (same contract as
-    * [[NearDupIngest.recoverState]]): a `__old` dir with no live
-    * sibling is renamed back; with a live sibling it is superseded and
-    * dropped; a leftover `_compact_tmp` is re-derivable and discarded.
-    */
-  def recoverState(spark: SparkSession, stateDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val names = fs.listStatus(root).map(_.getPath.getName)
-    val staging = new Path(root, "_compact_tmp")
-    names.collectFirst { case OldDirRe(t) => t.toLong } match {
-      case Some(target) =>
-        val live = new Path(root, s"batch_id=$target")
-        val old = new Path(root, s"batch_id=${target}__old")
-        if (!fs.exists(live)) {
-          if (!fs.rename(old, live))
-            throw new java.io.IOException(
-              s"recoverState: rename $old -> $live failed")
-        } else fs.delete(old, true)
-        fs.delete(staging, true)
-      case None =>
-        fs.delete(staging, true)
-    }
-  }
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    PartialState.compact(spark, stateDir, merge)
 }

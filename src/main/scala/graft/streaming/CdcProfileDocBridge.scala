@@ -24,12 +24,11 @@ import CdcProfile.ProfileSpec
   * state is bucket-swapped, not batch-partitioned:
   *
   *   1. LAND the batch's weighted deltas at most once per batch id
-  *      (dot-staged + one rename — the [[ReconcileIngest
-  *      .applyDocPairsOnce]] discipline): the pairs are emitted
-  *      BEFORE the doc store's bucket swaps, so a replay after a
-  *      mid-swap crash — whose recomputed pairs are a gate-eaten
-  *      SUBSET — must not shrink what gets applied. The landed file
-  *      is the durable full-batch record.
+  *      ([[PartialState.landOnce]], as the reconcile summary does):
+  *      the pairs are emitted BEFORE the doc store's bucket swaps, so
+  *      a replay after a mid-swap crash — whose recomputed pairs are
+  *      a gate-eaten SUBSET — must not shrink what gets applied. The
+  *      landed file is the durable full-batch record.
   *   2. APPLY from the LANDED file with `seq = batchId` on every
   *      delta: the profile state's per-(column, value) seq gates then
   *      make the apply idempotent bucket by bucket — a crash between
@@ -61,32 +60,13 @@ object CdcProfileDocBridge {
       col("before").as("payload_before"),
       col("src"), lit(batchId).as("seq"))
 
-  private def landedDir(landDir: String, batchId: Long) =
-    s"$landDir/batch_id=$batchId"
-
   /** Phase 1: land the batch's weighted deltas AT MOST ONCE per batch
-    * id (staged + one rename — a crash during the write leaves only
-    * the invisible dot-staging; a committed dir is complete). An
-    * all-empty delta still lands an empty marker dir so a gate-eaten
-    * replay cannot land a subset later.
+    * id ([[PartialState.landOnce]]).
     */
   private[streaming] def landOnce(pairs: DataFrame, landDir: String,
-                       spec: ProfileSpec, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = pairs.sparkSession
-    val target = new Path(landedDir(landDir, batchId))
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) return
-    val staging = new Path(s"$landDir/.staging_$batchId")
-    fs.delete(staging, true)
-    CdcProfile.weightedDeltas(pairsToChanges(pairs, spec.table, batchId),
-        spec)
-      .write.mode("overwrite").parquet(staging.toString)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(
-        s"cannot commit profile deltas at $target")
-    ()
-  }
+                       spec: ProfileSpec, batchId: Long): Unit =
+    PartialState.landOnce(CdcProfile.weightedDeltas(
+      pairsToChanges(pairs, spec.table, batchId), spec), landDir, batchId)
 
   /** One micro-batch's net doc pairs through both phases: land once,
     * then apply the LANDED deltas to the range-bucketed profile state
@@ -100,7 +80,7 @@ object CdcProfileDocBridge {
     landOnce(pairs, landDir, spec, batchId)
     val landed = spark.read
       .schema("src string, seq long, c string, v string, w long")
-      .parquet(landedDir(landDir, batchId))
+      .parquet(PartialState.batchDir(landDir, batchId))
     CdcProfileRanged.applyDeltas(landed, stateDir, spec, numBuckets)
   }
 

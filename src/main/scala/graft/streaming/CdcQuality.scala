@@ -20,9 +20,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * decimal machinery needed); a check whose predicate is NULL on a
   * row (SQL three-valued logic) contributes 0, same as `validate`'s
   * conditional-sum semantics. State shape follows [[IvmIngest]]:
-  * per-batch partials of ≤ |checks| rows land in replay-idempotent
-  * `batch_id=N` partitions; the live report merges
-  * |checks|×|batches| rows — never data volume.
+  * per-batch [[PartialState]] partials of ≤ |checks| rows; the live
+  * report merges |checks|×|batches| rows — never data volume.
   */
 object CdcQuality {
 
@@ -71,51 +70,38 @@ object CdcQuality {
       .select(col("p.check_name"), col("p.dvi"))
   }
 
+  /** Per-check sums of indicator deltas or of partials. */
+  private def merge(rows: DataFrame): DataFrame =
+    rows.groupBy("check_name").agg(sum(col("dvi")).as("dvi"))
+
   /** Per-batch partial: ≤ |checks| rows regardless of batch size. */
   def partial(changes: DataFrame, checks: Seq[QCheck],
       schema: org.apache.spark.sql.types.StructType = IvmIngest.payloadSchema)
       : DataFrame =
-    indicatorDeltas(changes, checks, schema)
-      .groupBy("check_name").agg(sum(col("dvi")).as("dvi"))
+    merge(indicatorDeltas(changes, checks, schema))
 
   /** Start the monitor over a stream of change rows. */
   def start(changes: DataFrame, checks: Seq[QCheck], stateDir: String,
       checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        partial(batch, checks)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
-      }
-      .start()
+    PartialState.stream(changes, stateDir, checkpointDir)(partial(_, checks))
 
   /** The live quality report at the current stream position. TOTAL
     * from batch zero: the report is seeded with the check list and the
-    * state partials left-join onto it, so before the first non-empty
-    * batch lands (no state dir yet) every check reads `violations = 0`,
-    * and a check absent from every partial still surfaces — a
-    * dashboard that silently drops rows is how a failing check goes
-    * unread.
+    * state partials left-join onto it, so before the first batch lands
+    * (no state dir yet) every check reads `violations = 0`, and a check
+    * absent from every partial still surfaces — a dashboard that
+    * silently drops rows is how a failing check goes unread.
     */
   def view(spark: SparkSession, stateDir: String,
            checks: Seq[QCheck]): DataFrame = {
     require(checks.nonEmpty, "quality view of zero checks")
     import spark.implicits._
     val seed = checks.map(_.name).toDF("check_name")
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partials =
-      if (fs.exists(p))
-        spark.read.parquet(stateDir)
-          .groupBy("check_name").agg(sum(col("dvi")).as("v"))
-      else seed.select(col("check_name"), lit(0L).as("v")).limit(0)
+    val partials = merge(PartialState.read(spark, stateDir,
+      Some(org.apache.spark.sql.types.StructType.fromDDL(
+        "check_name string, dvi long"))))
     report(seed.join(partials, Seq("check_name"), "left")
-      .select(col("check_name"), coalesce(col("v"), lit(0L)).as("violations")))
+      .select(col("check_name"), coalesce(col("dvi"), lit(0L)).as("violations")))
   }
 
   /** One-pass batch twin over the full change set — what the stream's

@@ -25,33 +25,11 @@ import CdcQualityKeyed.KeyedSpec
   *
   * Exactly-once is [[CdcProfileDocBridge]]'s two-phase contract
   * verbatim: LAND the weighted deltas at most once per batch id
-  * (staged + one rename, before-the-swap pairs), then APPLY from the
-  * landed file with `seq = batchId` so the per-key gates converge
+  * ([[PartialState.landOnce]], before-the-swap pairs), then APPLY from
+  * the landed file with `seq = batchId` so the per-key gates converge
   * every crash point.
   */
 object CdcQualityDocBridge {
-
-  private def landedDir(landDir: String, batchId: Long) =
-    s"$landDir/batch_id=$batchId"
-
-  private def landOnce(pairs: DataFrame, landDir: String,
-                       spec: KeyedSpec, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = pairs.sparkSession
-    val target = new Path(landedDir(landDir, batchId))
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) return
-    val staging = new Path(s"$landDir/.staging_$batchId")
-    fs.delete(staging, true)
-    CdcQualityKeyed.weightedDeltas(
-        CdcProfileDocBridge.pairsToChanges(pairs, spec.factTable, batchId),
-        spec)
-      .write.mode("overwrite").parquet(staging.toString)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(
-        s"cannot commit quality deltas at $target")
-    ()
-  }
 
   /** One micro-batch's net doc pairs through both phases into the
     * keyed monitor state. Safe to call again from any crash point; a
@@ -64,9 +42,11 @@ object CdcQualityDocBridge {
                         stateDir: String, spec: KeyedSpec,
                         batchId: Long, numBuckets: Int = 16): Unit = {
     val spark = pairs.sparkSession
-    landOnce(pairs, landDir, spec, batchId)
+    PartialState.landOnce(CdcQualityKeyed.weightedDeltas(
+        CdcProfileDocBridge.pairsToChanges(pairs, spec.factTable, batchId),
+        spec), landDir, batchId)
     CdcQualityKeyed.applyDeltas(
-      spark.read.parquet(landedDir(landDir, batchId)),
+      spark.read.parquet(PartialState.batchDir(landDir, batchId)),
       stateDir, spec, numBuckets)
   }
 

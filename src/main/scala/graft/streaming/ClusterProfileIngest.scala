@@ -22,10 +22,8 @@ import graft.sim.KMeansExact
   * Mergeability: assignment under fixed centroids is per-row, so the
   * (cluster, d) sums/counts of a concatenated corpus are the cell-wise
   * sums of per-batch partials — the CM-sketch property with k×dim
-  * cells. State is one ≤ k×dim-row partial per micro-batch in its own
-  * `batch_id=N` overwrite partition (replay-idempotent); sums are
-  * duplicate-SENSITIVE, so compaction delegates to [[BatchState]]'s
-  * exactly-once staged swap. At 100 TB only the per-batch assignment
+  * cells. State is one ≤ k×dim-row [[PartialState]] partial per
+  * micro-batch. At 100 TB only the per-batch assignment
   * pass sees data volume — map-only, centroid literals in the plan —
   * and it aggregates onto k×dim keys map-side.
   */
@@ -44,14 +42,14 @@ object ClusterProfileIngest {
         col("d").cast("long").as("d"))
       .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
 
-  /** The accumulated profile: cell-wise sums over every batch partial. */
-  def profile(spark: SparkSession, stateDir: String): DataFrame = {
-    recoverState(spark, stateDir)
-    spark.read.parquet(stateDir)
-      .groupBy("cluster", "d")
+  /** Cell-wise sums of partials. */
+  private def merge(partials: DataFrame): DataFrame =
+    partials.groupBy("cluster", "d")
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-      .orderBy("cluster", "d")
-  }
+
+  /** The accumulated profile: cell-wise sums over every batch partial. */
+  def profile(spark: SparkSession, stateDir: String): DataFrame =
+    merge(PartialState.read(spark, stateDir)).orderBy("cluster", "d")
 
   /** One exact Lloyd recenter off the streamed profile: next centroid
     * = `s div n` per (cluster, d), toward-zero; clusters that saw no
@@ -77,35 +75,15 @@ object ClusterProfileIngest {
                 k: Int = K): DataFrame =
     profileRows(vectors, cents, k).orderBy("cluster", "d")
 
-  /** Start the ingest: one partial profile per micro-batch, landed in
-    * the batch's own `batch_id=N` partition (overwrite →
-    * replay-idempotent).
-    */
+  /** Start the ingest: one partial profile per micro-batch. */
   def start(vectors: DataFrame, stateDir: String, checkpointDir: String,
             cents: Array[Long], k: Int = K): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profileRows(batch, cents, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
-      }
-      .start()
+    PartialState.stream(vectors, stateDir, checkpointDir)(
+      profileRows(_, cents, k))
 
-  /** Sum-merged state: exactly-once staged compaction via
-    * [[BatchState]] (duplicated profile rows would double-count).
-    * Call between runs (stream stopped).
+  /** Bound the partial count: sum all but the newest partial
+    * ([[PartialState.compact]]). Call between runs (stream stopped).
     */
   def compactState(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compact(spark, stateDir,
-      _.groupBy("cluster", "d")
-        .agg(sum(col("s")).as("s"), sum(col("n")).as("n")))
-
-  /** Finish an interrupted [[compactState]] ([[BatchState.recover]]). */
-  def recoverState(spark: SparkSession, stateDir: String): Unit =
-    BatchState.recover(spark, stateDir)
+    PartialState.compact(spark, stateDir, merge)
 }

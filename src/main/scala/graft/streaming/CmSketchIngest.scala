@@ -13,10 +13,9 @@ import graft.sim.PortableHash.{P, permA, permB}
   * The property that makes this a STREAMING structure is mergeability:
   * cell-wise sums of per-batch partial sketches equal the sketch of the
   * concatenated corpus, exactly. So the state is one (j, b, cnt) partial
-  * — at most d×w = 256 rows — per micro-batch, written to its own
-  * `batch_id=N` partition with overwrite (an at-least-once replay of
-  * batch N rebuilds exactly its own directory — idempotent), and the
-  * live sketch is a sum over |cells|×|batches| rows, NEVER corpus-scale.
+  * — at most d×w = 256 rows — per micro-batch in [[PartialState]], and
+  * the live sketch is a sum over |cells|×|batches| rows, NEVER
+  * corpus-scale.
   * At 100 TB the per-batch aggregation is the only stage that sees data
   * volume, and it map-side combines onto 256 keys.
   *
@@ -49,32 +48,19 @@ object CmSketchIngest {
       .groupBy("j", "b").agg(count(lit(1)).as("cnt"))
   }
 
-  /** The current sketch: cell-wise sum of every batch partial. Heals an
-    * interrupted compaction first — a mid-swap `__old` directory would
-    * otherwise be read alongside its replacement and double-count.
-    */
-  def sketch(spark: SparkSession, stateDir: String): DataFrame = {
-    recoverState(spark, stateDir)
-    spark.read.parquet(stateDir)
-      .groupBy("j", "b").agg(sum(col("cnt")).as("cnt"))
-      .orderBy("j", "b")
-  }
+  /** Cell-wise sum of partials. */
+  private def merge(partials: DataFrame): DataFrame =
+    partials.groupBy("j", "b").agg(sum(col("cnt")).as("cnt"))
 
-  /** Compact the sketch state: sum every batch partial EXCEPT the newest
-    * into one partial at the second-newest id and drop the rest — a
-    * long-running ingest otherwise accumulates one directory per
-    * micro-batch and every read pays an ever-growing listing. Duplicated
-    * sketch rows are NOT harmless (summed cells double-count), so the
-    * swap runs [[BatchState]]'s exactly-once staged protocol. Call
-    * between runs (stream stopped).
+  /** The current sketch: cell-wise sum of every batch partial. */
+  def sketch(spark: SparkSession, stateDir: String): DataFrame =
+    merge(PartialState.read(spark, stateDir)).orderBy("j", "b")
+
+  /** Bound the partial count: sum all but the newest partial
+    * ([[PartialState.compact]]). Call between runs (stream stopped).
     */
   def compactState(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compact(spark, stateDir,
-      _.groupBy("j", "b").agg(sum(col("cnt")).as("cnt")))
-
-  /** Finish an interrupted [[compactState]] ([[BatchState.recover]]). */
-  def recoverState(spark: SparkSession, stateDir: String): Unit =
-    BatchState.recover(spark, stateDir)
+    PartialState.compact(spark, stateDir, merge)
 
   /** Batch twin of the final streamed state: the sketch of the whole
     * corpus in one pass (registered as `st_cm_sketch` with a DuckDB
@@ -83,21 +69,8 @@ object CmSketchIngest {
   def batchTwin(docs: DataFrame, textCol: String = "text"): DataFrame =
     cellCounts(docs, textCol).orderBy("j", "b")
 
-  /** Start the ingest: one partial sketch per micro-batch, landed in the
-    * batch's own `batch_id=N` partition (overwrite → replay-idempotent).
-    */
+  /** Start the ingest: one partial sketch per micro-batch. */
   def start(docs: DataFrame, stateDir: String, checkpointDir: String,
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cellCounts(batch, textCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
-      }
-      .start()
+    PartialState.stream(docs, stateDir, checkpointDir)(cellCounts(_, textCol))
 }

@@ -15,10 +15,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   *
   * State shape follows [[CmSketchIngest]]/[[KsDriftIngest]]: the delta
   * aggregate is MERGEABLE (sums of signed counts and signed exact
-  * decimals), so each micro-batch lands one partial of ≤ |groups| rows
-  * in its own `batch_id=N` partition (dynamic overwrite → an
-  * at-least-once replay of batch N rebuilds exactly its own directory),
-  * and the live view is a groupBy over |groups|×|batches| partial rows.
+  * decimals), so each micro-batch lands one [[PartialState]] partial
+  * of ≤ |groups| rows, and the live view is a groupBy over
+  * |groups|×|batches| partial rows.
   * Retractions ride DECIMAL(28,6), so a row added in batch 3 and
   * retracted in batch 9 cancels BIT-EXACTLY regardless of merge order —
   * the property double sums cannot promise and IVM cannot live without.
@@ -57,47 +56,36 @@ object IvmIngest {
       .select(col("d.et").as("event_type"), col("d.dc"), col("d.dv"))
   }
 
+  /** Per-group sums of delta rows or of partials — the one merge. */
+  private def merge(rows: DataFrame): DataFrame =
+    rows.groupBy("event_type")
+      .agg(sum(col("dc")).as("dc"), sum(col("dv")).as("dv"))
+
   /** Per-batch partial: the delta aggregate, ≤ |groups| rows no matter
     * how large the batch (map-side combined onto the group grid).
     */
-  def partial(changes: DataFrame): DataFrame =
-    deltas(changes).groupBy("event_type")
-      .agg(sum(col("dc")).as("dc"), sum(col("dv")).as("dv"))
+  def partial(changes: DataFrame): DataFrame = merge(deltas(changes))
 
   /** Start the ingest over a stream of change rows. */
   def start(changes: DataFrame, stateDir: String,
             checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        partial(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
-      }
-      .start()
+    PartialState.stream(changes, stateDir, checkpointDir)(partial)
 
   /** The maintained view at the current stream position: merge all
     * batch partials, drop groups whose rows have all been retracted.
     * |groups|×|batches| input rows — never the data volume.
     */
   def view(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
-      .groupBy("event_type")
-      .agg(sum(col("dc")).as("n_rows"),
-        sum(col("dv")).cast("double").as("sum_value"))
-      .filter(col("n_rows") > 0)
+    report(merge(PartialState.read(spark, stateDir)))
 
   /** One-pass batch twin over the full change set — what the stream's
     * merged state must equal exactly (pinned in StreamingSpec and
     * oracled as `st_cdc_ivm`).
     */
-  def batchTwin(changes: DataFrame): DataFrame =
-    deltas(changes).groupBy("event_type")
-      .agg(sum(col("dc")).as("n_rows"),
-        sum(col("dv")).cast("double").as("sum_value"))
+  def batchTwin(changes: DataFrame): DataFrame = report(partial(changes))
+
+  private def report(merged: DataFrame): DataFrame =
+    merged.select(col("event_type"), col("dc").as("n_rows"),
+        col("dv").cast("double").as("sum_value"))
       .filter(col("n_rows") > 0)
 }

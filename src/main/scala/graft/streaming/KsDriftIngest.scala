@@ -14,10 +14,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the binned histogram under it IS: cell-wise sums of per-batch
   * `(source, bkt, c)` partials equal the histogram of the concatenated
   * stream exactly. So — exactly like [[CmSketchIngest]] — the state is
-  * one partial per micro-batch (≤ |sources|×|bins| rows each, never
-  * corpus-scale), written to its own `batch_id=N` partition with
-  * dynamic overwrite so an at-least-once replay of batch N rebuilds
-  * exactly its own directory, and the drift read is a groupBy over
+  * one [[PartialState]] partial per micro-batch (≤ |sources|×|bins|
+  * rows each, never corpus-scale), and the drift read is a groupBy over
   * |cells|×|batches| rows. At 100 TB only the per-batch aggregation
   * sees data volume, and it map-side combines onto the cell grid.
   *
@@ -44,28 +42,16 @@ object KsDriftIngest {
         col(valueCol).cast("long").as("bkt"))
       .agg(count(lit(1)).as("c"))
 
-  /** Start the ingest: one histogram partial per micro-batch, landed in
-    * the batch's own `batch_id=N` partition (overwrite → replay-safe).
-    */
+  /** Start the ingest: one histogram partial per micro-batch. */
   def start(docs: DataFrame, stateDir: String, checkpointDir: String,
             sourceCol: String = "source",
             valueCol: String = "n_chars"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cellCounts(batch, sourceCol, valueCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
-      }
-      .start()
+    PartialState.stream(docs, stateDir, checkpointDir)(
+      cellCounts(_, sourceCol, valueCol))
 
   /** The live merged histogram: cell-wise sum of every batch partial. */
   def histogram(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    PartialState.read(spark, stateDir)
       .groupBy("source", "bkt").agg(sum(col("c")).as("c"))
 
   /** Pairwise two-sample KS over a `(source, bkt, c)` histogram — the

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.Kernels
 import graft.sim.DedupOps
@@ -25,9 +26,9 @@ import graft.sim.DedupOps
   * table (`batch_id=N/bucket=B/`). A micro-batch prunes its state read
   * to the buckets its own band keys hash into — apply cost follows the
   * batch's key spread, not corpus size — and candidate joins are band
-  * equi-joins, never all-pairs. Per-batch rewrites land in the batch's
-  * own partition with overwrite, so foreachBatch replays (at-least-once)
-  * are idempotent.
+  * equi-joins, never all-pairs. Both the state and the verdicts land
+  * through [[PartialState.land]], so foreachBatch replays
+  * (at-least-once) are idempotent.
   */
 object NearDupIngest {
 
@@ -105,92 +106,18 @@ object NearDupIngest {
       .orderBy("doc_id")
   }
 
-  private val BatchDirRe = "^batch_id=(\\d+)$".r
-
-  /** Compact the ingest state: merge every batch partition EXCEPT the
-    * newest into the second-newest and drop the rest — a long-running
-    * ingest otherwise accumulates one directory per micro-batch and
-    * every state read pays an ever-growing file listing.
-    *
-    * Why the second-newest: the ONLY batch the engine can replay after
-    * a crash is the newest one on disk (batch N starts only after N−1's
-    * checkpoint committed), and a replayed batch N both filters
-    * `batch_id < N` and overwrites its own directory. Folding anything
-    * into `batch_id=N` would (a) hide the merged rows from N's replay
-    * and (b) let the replay's overwrite destroy them. Dirs < N are
-    * committed, so merging into N−1 is always replay-safe.
-    *
-    * Call between runs (stream stopped): a reader racing the rename
-    * pair could transiently see neither dir. A CRASH at any point is
-    * recoverable: the swap order is staging-write → rename aside
-    * (`__old`) → rename staging in → delete `__old` → delete older
-    * dirs, every rename checked (Hadoop signals failure by returning
-    * false — an unchecked rename here would delete the only copy);
-    * [[recoverState]] — run at the start of every compact AND before
-    * every micro-batch state read — heals the mid-swap window, and the
-    * later windows only leave rows duplicated between the merged dir
-    * and not-yet-deleted older dirs, which candidate-pair dedup and
-    * min-verdicts make harmless.
+  /** Bound the partial count: fold all but the newest partial into one
+    * ([[PartialState.compact]]), keeping the `bucket=B` sub-dirs. Call
+    * between runs (stream stopped).
     */
   def compactState(spark: org.apache.spark.sql.SparkSession,
-                   stateDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    recoverState(spark, stateDir)
-    def rename(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactState: rename $src -> $dst failed")
-    val ids = fs.listStatus(root).map(_.getPath.getName).collect {
-      case BatchDirRe(id) => id.toLong
-    }.sorted
-    if (ids.length < 3) return
-    val target = ids(ids.length - 2)
-    val newest = ids.last
-    val merged = spark.read.parquet(stateDir)
-      .filter(col("batch_id") =!= newest)
-      .select("doc_id", "sig", "band", "bh", "bucket")
-    val staging = new Path(root, "_compact_tmp")
-    fs.delete(staging, true)
-    merged.write.mode("overwrite").partitionBy("bucket")
-      .parquet(staging.toString)
-    val live = new Path(root, s"batch_id=$target")
-    val old = new Path(root, s"batch_id=${target}__old")
-    rename(live, old)
-    rename(staging, live)
-    fs.delete(old, true)
-    ids.filter(id => id != target && id != newest)
-      .foreach(id => fs.delete(new Path(root, s"batch_id=$id"), true))
-  }
+                   stateDir: String): Unit =
+    PartialState.compact(spark, stateDir, _.drop("batch_id"), Seq("bucket"))
 
-  /** Heal an interrupted [[compactState]] swap: a `__old` directory with
-    * no live sibling is renamed back (the staging rename never
-    * happened); with a live sibling it is a superseded copy and is
-    * dropped. A leftover `_compact_tmp` is discarded either way (it is
-    * re-derivable). Runs before every micro-batch state read — a plain
-    * stream restart after a mid-swap crash must not silently lose the
-    * set-aside batch (and an unhealed `__old` dir would poison
-    * partition inference for `batch_id`).
-    */
+  /** Finish an interrupted [[compactState]] ([[PartialState.recover]]). */
   def recoverState(spark: org.apache.spark.sql.SparkSession,
-                   stateDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.endsWith("__old")).foreach { old =>
-        val live = new Path(root, old.getName.stripSuffix("__old"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(old, live))
-            throw new java.io.IOException(
-              s"recoverState: rename $old -> $live failed")
-        } else { fs.delete(old, true); () }
-      }
-    fs.delete(new Path(root, "_compact_tmp"), true)
-    ()
-  }
+                   stateDir: String): Unit =
+    PartialState.recover(spark, stateDir)
 
   /** Start the streaming ingest: verdicts land in `outDir/batch_id=N/`,
     * signature state in `stateDir/batch_id=N/bucket=B/`.
@@ -210,40 +137,21 @@ object NearDupIngest {
           // partitions this batch can possibly collide with
           val buckets = newBands.select("bucket").distinct()
             .collect().map(_.getInt(0)).toSeq
-          // heal any interrupted compaction swap BEFORE reading state — a
-          // plain restart after a mid-swap crash must see the set-aside
-          // batch (and its `__old` dir would poison partition inference)
-          recoverState(spark, stateDir)
-          // FS-agnostic existence probe — stateDir is an HDFS/object-store
-          // path on a cluster, where java.io.File would silently say "no
-          // state" and every doc would read as novel
-          val statePath = new org.apache.hadoop.fs.Path(stateDir)
-          val stateExists = statePath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(statePath)
-          val crossPairs =
-            if (stateExists) {
-              // batch_id < batchId excludes THIS batch's own rows on a
-              // replay; the bucket filter prunes directories, so the
-              // state scan is proportional to the batch's key spread
-              val prior = spark.read.parquet(stateDir)
-                .filter(col("batch_id") < batchId &&
-                  col("bucket").isin(buckets: _*))
-                .select("doc_id", "sig", "band", "bh")
-              estPairs(prior, newBands)
-            } else spark.emptyDataFrame
-              .withColumn("a_id", lit(0L)).withColumn("b_id", lit(0L))
-              .withColumn("est", lit(0.0))
-              .select("a_id", "b_id", "est")
+          // batch_id < batchId excludes THIS batch's own rows on a
+          // replay; the bucket filter prunes directories, so the state
+          // scan is proportional to the batch's key spread. The known
+          // schema reads a missing state dir, or one of empty partials
+          // only, as no rows.
+          val prior = PartialState.read(spark, stateDir,
+              Some(newBands.schema.add("batch_id", LongType)))
+            .filter(col("batch_id") < batchId && col("bucket").isin(buckets: _*))
+            .select("doc_id", "sig", "band", "bh")
           val localPairs = estPairs(newBands, newBands, ordered = true)
           val out = verdicts(
             batch.select(col(idCol).as("doc_id")).distinct(),
-            crossPairs.unionByName(localPairs), threshold)
-          // overwrite-into-own-partition makes at-least-once replays
-          // idempotent for BOTH sinks (same pattern as the CDC apply)
-          out.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          newBands.write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$stateDir/batch_id=$batchId")
+            estPairs(prior, newBands).unionByName(localPairs), threshold)
+          PartialState.land(out, outDir, batchId)
+          PartialState.land(newBands, stateDir, batchId, Seq("bucket"))
         } finally { newBands.unpersist(); () }
       }
       .start()

@@ -30,13 +30,12 @@ import graft.ops.Reconcile
   * ([[applyDeferredJsonWithSummary]]): the keyed doc store
   * reconstructs the befores and its net pairs feed the same summary.
   *
-  * State shape: per-batch partial summaries under `batch_id=N`
-  * partitions (the [[CdcQuality]] layout) — a replayed micro-batch
-  * dynamically overwrites ITS OWN partition, so at-least-once delivery
-  * cannot double-xor (no keyed gates needed: idempotence here is
-  * per-batch, not per-key, because the state is chunk-count-sized, not
-  * key-sized). [[BatchState.compact]] bounds the partial count; the
-  * xor/sum merge is exactly its sum-shaped contract.
+  * State shape: per-batch [[PartialState]] partial summaries (the
+  * [[CdcQuality]] layout) — a replayed micro-batch overwrites ITS OWN
+  * partial, so at-least-once delivery cannot double-xor (no keyed gates
+  * needed: idempotence here is per-batch, not per-key, because the
+  * state is chunk-count-sized, not key-sized). [[compact]] bounds the
+  * partial count.
   */
 object ReconcileIngest {
 
@@ -85,41 +84,18 @@ object ReconcileIngest {
     */
   def start(changes: DataFrame, stateDir: String, checkpointDir: String,
             spec: SummarySpec, compactEvery: Int = 32): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, stateDir, spec, batchId)
+    PartialState.stream(changes, stateDir, checkpointDir,
+      after = (spark, batchId) =>
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compact(batch.sparkSession, stateDir)
-      }
-      .start()
+          compact(spark, stateDir))(summaryDelta(_, spec))
 
-  /** One micro-batch's partial landed under its `batch_id` partition —
-    * the [[CdcQuality.start]] body, factored so batch replays (and the
-    * registered replay twin) drive the identical code.
+  /** One micro-batch's partial landed with [[PartialState.land]] — the
+    * [[start]] body, callable so batch replays (and the registered
+    * replay twin) drive the identical code.
     */
   def applyBatch(batch: DataFrame, stateDir: String, spec: SummarySpec,
                  batchId: Long): Unit =
-    writeDelta(summaryDelta(batch, spec), stateDir, batchId)
-
-  /** Land one batch's delta under its `batch_id` partition. An
-    * all-empty delta writes nothing: an empty partitioned write would
-    * still create a file-less dir that breaks the view's schema
-    * inference, and a replay of an empty batch is empty again, so
-    * skipping stays idempotent.
-    */
-  private def writeDelta(d: DataFrame, stateDir: String,
-                         batchId: Long): Unit = {
-    val delta = d.persist()
-    try {
-      if (!delta.isEmpty)
-        delta.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-    } finally { delta.unpersist(); () }
-  }
+    PartialState.land(summaryDelta(batch, spec), stateDir, batchId)
 
   // ---- the image-recovery bridge: summaries under PARTIAL-image wire
   // modes ----
@@ -132,7 +108,7 @@ object ReconcileIngest {
   // telescopes away, and the net pair is exactly what the xor algebra
   // consumes. Exactly-once across the two states is the ordering
   // contract: the doc apply emits pairs BEFORE its bucket swaps, and
-  // [[applyDocPairsOnce]] skips a batch id whose partition already
+  // [[PartialState.landOnce]] skips a batch id whose partial already
   // committed — a replay after a mid-swap crash (where the seq gates
   // have eaten the swapped keys' events, so recomputed pairs would be
   // a SUBSET) therefore cannot shrink the landed delta.
@@ -166,54 +142,13 @@ object ReconcileIngest {
       .agg(sum(col("w")).as("d_rows"), bit_xor(col("h")).as("d_digest"))
       .filter(col("d_rows") =!= 0L || col("d_digest") =!= 0L)
 
-  /** Land a doc-pair delta AT MOST ONCE per batch id: a committed
-    * `batch_id=N` partition means the full delta landed, so a replay —
-    * whose recomputed pairs may be a gate-eaten subset — must not
-    * overwrite it (see the bridge contract above).
-    *
-    * The COMMIT here cannot be the bare existence of `batch_id=N` the
-    * parquet job itself creates (judge r13 ADVICE): a crash during that
-    * job's dynamic-partition file moves can leave a PARTIAL partition,
-    * and the replay would then skip it, permanently landing a torn
-    * delta. So the delta stages under a dot-prefixed sibling (invisible
-    * to Spark readers) and becomes `batch_id=N` in ONE rename — the
-    * partition either exists complete or not at all. The staged files
-    * carry no `batch_id` column, exactly like a `partitionBy` write, so
-    * partition discovery reads the renamed dir identically.
-    *
-    * An all-zero-net delta writes nothing, and a gate-eaten REPLAY of it
-    * stays empty because each pair nets independently (before = after
-    * cancels per pair); a cross-key digest cancellation flipping that is
-    * the stated ~2^-64 xor-collision trade, not a crash-window hole.
-    */
-  def applyDocPairsOnce(pairs: DataFrame, stateDir: String, batchId: Long,
-                        chunkWidth: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = pairs.sparkSession
-    val part = new Path(s"$stateDir/batch_id=$batchId")
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(part)) return
-    val staging = new Path(s"$stateDir/.batch_staging_$batchId")
-    fs.delete(staging, true)
-    val delta = docPairsDelta(pairs, chunkWidth).persist()
-    try {
-      if (delta.isEmpty) return
-      delta.write.mode("overwrite").parquet(staging.toString)
-      // the parquet job's own _SUCCESS/_committed markers stay inside
-      // the staged dir; the rename below IS the commit point
-      if (!fs.rename(staging, part))
-        throw new java.io.IOException(
-          s"cannot commit doc-pair delta at $part")
-    } finally { delta.unpersist(); () }
-  }
-
   /** One micro-batch through the doc store AND the maintained summary:
-    * the deferred-JSON bucketed apply with its net-pair hook wired to
-    * [[applyDocPairsOnce]]. After this, [[view]] of `summaryDir`
-    * equals [[Reconcile.chunkSummary]] of the doc store's live
-    * documents over `(src, key, doc)` (spec-pinned) — reconciliation
-    * against a source snapshot with zero doc-store I/O, even though
-    * the wire never carried a full before image.
+    * the deferred-JSON bucketed apply with its net-pair hook landing
+    * their delta with [[PartialState.landOnce]]. After this, [[view]]
+    * of `summaryDir` equals [[Reconcile.chunkSummary]] of the doc
+    * store's live documents over `(src, key, doc)` (spec-pinned) —
+    * reconciliation against a source snapshot with zero doc-store I/O,
+    * even though the wire never carried a full before image.
     */
   def applyDeferredJsonWithSummary(batch: DataFrame, jsonField: String,
                                    docStateDir: String, summaryDir: String,
@@ -221,37 +156,32 @@ object ReconcileIngest {
                                    numBuckets: Int = 64): Unit =
     CdcPipeline.applyDeferredJsonBucketed(batch, jsonField, docStateDir,
       numBuckets,
-      onNetPairs =
-        Some(applyDocPairsOnce(_, summaryDir, batchId, chunkWidth)))
+      onNetPairs = Some(pairs => PartialState.landOnce(
+        docPairsDelta(pairs, chunkWidth), summaryDir, batchId)))
 
-  /** Merge all but the newest batch partial ([[BatchState.compact]]'s
-    * sum-shaped contract): the partial count stays bounded no matter
-    * how long the stream runs.
+  /** Per-chunk count sum and digest xor of partials. */
+  private def merge(partials: DataFrame): DataFrame =
+    partials.groupBy("chunk")
+      .agg(sum(col("d_rows")).as("d_rows"),
+        bit_xor(col("d_digest")).as("d_digest"))
+
+  /** Bound the partial count: merge all but the newest partial
+    * ([[PartialState.compact]]), however long the stream runs.
     */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compact(spark, stateDir, merged => merged
-      .groupBy("chunk")
-      .agg(sum(col("d_rows")).as("d_rows"),
-        bit_xor(col("d_digest")).as("d_digest")))
+    PartialState.compact(spark, stateDir, merge)
 
   /** The maintained live-table summary at the current stream position —
     * `(chunk, n_rows, digest)`, [[Reconcile.chunkSummary]]'s exact
     * shape. Chunks netting to zero rows drop out (their digest is
     * necessarily 0 too: every added hash was retracted).
     */
-  def view(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      return spark.range(0).select(col("id").as("chunk"),
-        col("id").as("n_rows"), col("id").as("digest"))
-    BatchState.recover(spark, stateDir)
-    spark.read.parquet(stateDir)
-      .groupBy("chunk")
-      .agg(sum(col("d_rows")).as("n_rows"),
-        bit_xor(col("d_digest")).as("digest"))
+  def view(spark: SparkSession, stateDir: String): DataFrame =
+    merge(PartialState.read(spark, stateDir, Some(StructType.fromDDL(
+        "chunk long, d_rows long, d_digest long"))))
+      .select(col("chunk"), col("d_rows").as("n_rows"),
+        col("d_digest").as("digest"))
       .filter(col("n_rows") =!= 0L || col("digest") =!= 0L)
-  }
 
   /** Chunks where a SOURCE summary disagrees with the maintained sink
     * summary — the chunks worth re-reading on the source side, computed

@@ -70,13 +70,14 @@ class ReconcileIngestSpec extends SparkSpec {
     assert(!got.exists(_._1 == 2L))
   }
 
-  test("an all-empty batch writes nothing; view stays readable") {
+  test("an all-empty batch lands an empty partial; view stays readable") {
     val dir = java.nio.file.Files
       .createTempDirectory("recingest_empty_").toString + "/state"
     // a batch carrying only another table's rows is empty for this spec
     val other = Seq(KeyedChangeRow("elsewhere", "insert",
       f(1, "a", 1.0), null, "s", 1))
     ReconcileIngest.applyBatch(other.toDF(), dir, spec, 0L)
+    assert(new java.io.File(s"$dir/batch_id=0").isDirectory)
     assert(viewOf(dir).isEmpty)
     ReconcileIngest.applyBatch(history.take(4).toDF(), dir, spec, 1L)
     assert(viewOf(dir).nonEmpty)
@@ -155,7 +156,7 @@ class ReconcileIngestSpec extends SparkSpec {
       (chunks.size - 1).toLong, chunkWidth = 4L)
     assert(maintained() == want)
     // replay under a NEW id: the gates eat every event, the recomputed
-    // pairs are empty, nothing lands
+    // pairs are empty, an empty partial lands
     ReconcileIngest.applyDeferredJsonWithSummary(
       chunks.last.toIndexedSeq.toDF(), "props", docs, sums, 99L,
       chunkWidth = 4L)

@@ -1008,6 +1008,46 @@ class StreamingSpec extends SparkSpec {
     assert(cells() == twin)
   }
 
+  /** Copy the partials `ids` of `state` into `to`, for staging a crash
+    * layout after a compaction has consumed them.
+    */
+  private def keepPartials(state: String, to: String, ids: Long*): String = {
+    ids.foreach(id => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$state/batch_id=$id"),
+      new java.io.File(s"$to/batch_id=$id")))
+    to
+  }
+
+  /** Rebuild the layout a compaction leaves when it crashes right after
+    * its marker rename: the merged copy still in staging, the original
+    * target as `__old`, the older partials not yet deleted.
+    */
+  private def stageMarkerCrash(state: String, pre: String, target: Long,
+                               older: Seq[Long]): Unit = {
+    import org.apache.commons.io.FileUtils.copyDirectory
+    assert(new java.io.File(s"$state/batch_id=$target")
+      .renameTo(new java.io.File(s"$state/_compact_tmp")))
+    copyDirectory(new java.io.File(s"$pre/batch_id=$target"),
+      new java.io.File(s"$state/batch_id=${target}__old"))
+    older.foreach(id => copyDirectory(new java.io.File(s"$pre/batch_id=$id"),
+      new java.io.File(s"$state/batch_id=$id")))
+  }
+
+  /** A marker with neither the live target nor staging is a layout no
+    * compaction crash leaves (the older partials are already gone), so
+    * healing must refuse it loudly instead of renaming the marker back.
+    */
+  private def assertMarkerWithoutCopiesRefused(state: String, target: Long)(
+      heal: => Any): Unit = {
+    val live = new java.io.File(s"$state/batch_id=$target")
+    val marker = new java.io.File(s"$state/batch_id=${target}__old")
+    assert(live.renameTo(marker))
+    val e = intercept[java.io.IOException](heal)
+    assert(e.getMessage.contains("neither a live nor a staged copy"),
+      e.getMessage)
+    assert(marker.renameTo(live))
+  }
+
   test("streaming bloom state merges to the one-pass corpus bloom; probe has no false negatives") {
     implicit val ctx = spark.sqlContext
     val docs = graft.model.Tables.documents(spark, sf)
@@ -1041,17 +1081,20 @@ class StreamingSpec extends SparkSpec {
           s"doc ${r.get(0)}: ${r.getLong(2)} of ${r.getLong(1)} shingles " +
             "flagged — a bloom may never miss a true member")
       }
-      // compaction: dup-harmless distinct state, staged swap, heal
+      // compaction: the one exactly-once staged swap, then heal
+      val pre = keepPartials(state, s"$dir/pre", 0, 1)
       BloomIngest.compactState(spark, state)
       val dirs = new java.io.File(state).listFiles()
         .map(_.getName).filter(_.startsWith("batch_id=")).sorted
       assert(dirs.sameElements(Array("batch_id=1", "batch_id=2")),
         s"got ${dirs.mkString(",")}")
       assert(bits() == twin, "compaction must not change the bit set")
-      // interrupted swap: live renamed aside, staging never landed
-      assert(new java.io.File(s"$state/batch_id=1")
-        .renameTo(new java.io.File(s"$state/batch_id=1__old")))
-      assert(bits() == twin, "recovery must restore the live dir")
+      // crash after the marker, before the older dirs were deleted
+      stageMarkerCrash(state, pre, target = 1, older = Seq(0))
+      assert(bits() == twin, "recovery must install the staged merge")
+      assert(new java.io.File(state).list().sorted
+        .sameElements(Array("batch_id=1", "batch_id=2")))
+      assertMarkerWithoutCopiesRefused(state, 1)(bits())
     } finally q.stop()
   }
 
@@ -1077,6 +1120,7 @@ class StreamingSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("batch_id=")).sorted
     val before = stateKeys()
     assert(batchDirs().length == 3)
+    val pre = keepPartials(state, s"$dir/pre", 0, 1)
     NearDupIngest.compactState(spark, state)
     // batches 0..1 merge into batch_id=1 (second-newest); the newest
     // dir stays untouched because only IT can be replayed (and a replay
@@ -1084,13 +1128,14 @@ class StreamingSpec extends SparkSpec {
     assert(batchDirs().sameElements(Array("batch_id=1", "batch_id=2")),
       s"got ${batchDirs().mkString(",")}")
     assert(stateKeys() == before, "compaction must not change state content")
-    // interrupted swap: merged dir renamed aside, staging never landed
-    assert(new java.io.File(s"$state/batch_id=1")
-      .renameTo(new java.io.File(s"$state/batch_id=1__old")))
+    // crash after the marker, before the older dirs were deleted
+    stageMarkerCrash(state, pre, target = 1, older = Seq(0))
     NearDupIngest.recoverState(spark, state)
     assert(batchDirs().sameElements(Array("batch_id=1", "batch_id=2")),
-      "recovery must restore the live dir")
+      "recovery must install the staged merge")
     assert(stateKeys() == before)
+    assertMarkerWithoutCopiesRefused(state, 1)(
+      NearDupIngest.recoverState(spark, state))
     // the stream picks up after compaction: fourth chunk still matches
     // the batch twin over the whole corpus
     run(chunks.drop(3).map(_.toIndexedSeq))
