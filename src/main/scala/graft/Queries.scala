@@ -145,7 +145,7 @@ object Queries {
       // contract: pairs must land before the doc swap can eat a
       // replay's events); only the gated applies are deferred.
       import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
+      implicit val ec: scala.concurrent.ExecutionContext = graft.Overlap.pool
       import java.util.concurrent.atomic.AtomicReference
       // extended from the hook's thread, awaited from this one — held
       // in AtomicReferences so each extension is safely published
@@ -225,7 +225,7 @@ object Queries {
       // start the detect reconciliation the moment both files exist so
       // it back-fills the monitor chain's tail.
       import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
+      implicit val ec: scala.concurrent.ExecutionContext = graft.Overlap.pool
       import scala.concurrent.duration.Duration
       val fTruth = Future { truth.write.parquet(s"$root/truth") }
       val kept = o.filter(col("o_orderkey") % 13 =!= 0)
@@ -4193,7 +4193,7 @@ object Queries {
         // (guide §2.6, the quality-keyed u/r stance)
         locally {
           import scala.concurrent.Future
-          import scala.concurrent.ExecutionContext.Implicits.global
+          implicit val ec: scala.concurrent.ExecutionContext = graft.Overlap.pool
           val fSink = Future {
             CdcPipeline.applyBatch(s,
               raw.filter(pmod(col("seq"), lit(13)) =!= 0),
@@ -4557,7 +4557,7 @@ object Queries {
         val qDir = s"$scratch/qstate"
         import graft.streaming.{CdcPipeline, CdcQuality}
         import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
+        implicit val ec: scala.concurrent.ExecutionContext = graft.Overlap.pool
         import scala.concurrent.duration.Duration
         // the pacing count is an independent decode pass — overlap it
         // with the snapshot seeding below (guide §2.6)

@@ -62,31 +62,18 @@ object CdcPipeline {
       .drop("rn")
   }
 
-  /** The live rows of an applied state table (tombstones filtered). A
-    * state every bucket of which was pruned away (recorded meta, zero
-    * bucket dirs) reads as empty; a dir that never held state still
+  /** The live rows of an applied state table (tombstones filtered),
+    * read at its newest committed version. A state every bucket of which
+    * was pruned away reads as empty; a dir that never held state still
     * FAILS loudly — silence there would mask a wrong path.
     */
-  def currentState(spark: SparkSession, stateDir: String): DataFrame = {
-    recoverBuckets(spark, stateDir)
-    if (isEmptiedState(spark, stateDir))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        changeEventSchema)
-    else
-      BucketStore.readRows(spark, stateDir, changeEventSchema)
-        .filter(col("op") =!= ChangeEvent.Delete).drop("bucket")
-  }
-
-  /** An existing state dir whose every bucket was legitimately pruned
-    * away: recorded bucket meta present, zero `bucket=` dirs.
-    */
-  private def isEmptiedState(spark: SparkSession, stateDir: String): Boolean =
-    BucketStore.isEmptied(spark, stateDir)
+  def currentState(spark: SparkSession, stateDir: String): DataFrame =
+    BucketStore.readCurrent(spark, stateDir, changeEventSchema)
+      .filter(col("op") =!= ChangeEvent.Delete).drop("bucket")
 
   /** Number of hash buckets a NEW state table is partitioned into. The
     * count is part of the state dir's on-disk contract, so it is
-    * RECORDED in the dir (`_graft_buckets.json`) when the state is
+    * RECORDED in the state's manifest when the state is
     * created and read back on every later apply — a caller-supplied
     * count only ever applies to creation. Without the recorded count, a
     * writer started with a different `numBuckets` would hash a key into
@@ -120,114 +107,78 @@ object CdcPipeline {
     * idempotent AND commutative across micro-batches — replaying or
     * reordering batches converges.
     *
-    * Partition pruning serves the read side (only touched `bucket=`
-    * directories are scanned); the write side stages the merged buckets
-    * in a sibling directory and then swaps each touched bucket with a
-    * rename pair, healed by [[recoverBuckets]] — a crash at ANY point
-    * leaves every bucket's data on disk (staged, live, or `__old`), so
-    * replaying the micro-batch from the streaming checkpoint converges
-    * with no loss. At 100 TB the same layout maps onto a key-partitioned
-    * MERGE into a format with row-level upsert (ClickHouse
-    * ReplacingMergeTree itself, or an Iceberg/Delta table); the collapse
-    * logic the engine owns is identical.
+    * The read side scans only the touched buckets of the version the
+    * bucket tags were derived from; the write side lands the merged
+    * buckets in a fresh version dir and commits them with one manifest
+    * create ([[BucketStore.writeBuckets]]) — a crash at ANY point leaves
+    * the previous version intact, so replaying the micro-batch from the
+    * streaming checkpoint converges with no loss, and a DDL that
+    * committed in between makes this apply refuse instead of landing
+    * rows under the retired contract. At 100 TB the same layout maps
+    * onto a key-partitioned MERGE into a format with row-level upsert
+    * (ClickHouse ReplacingMergeTree itself, or an Iceberg/Delta table);
+    * the collapse logic the engine owns is identical.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                  numBuckets: Int = DefaultStateBuckets): Unit = {
-    recoverBuckets(spark, stateDir)
     // an existing state's recorded count + refinement map WIN over the
     // parameter — the parameter is creation-only ([[DefaultStateBuckets]])
-    val (effBuckets, levels) =
-      readMeta(spark, stateDir).getOrElse((numBuckets, Map.empty[Int, Int]))
+    val base = BucketStore.current(spark, stateDir)
+    val (effBuckets, levels) = BucketStore.contractOr(base, numBuckets)
     val cols = Seq("op", "table", "key", "ts", "seq", "payload")
     val bucketed = withBucket(batch.select(cols.map(col): _*),
       effBuckets, levels)
     val touched = bucketed.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted                 // ≤ numBuckets values
     if (touched.isEmpty) return
-    // hasRows rides the Hadoop FS API — java.io.File on an
-    // HDFS/object-store stateDir would report "no state" and every
-    // batch would silently re-merge against nothing (the JoinIvm r10
-    // defect, fixed fleet-wide)
     val rows =
-      if (!BucketStore.hasRows(spark, stateDir)) bucketed
-      else BucketStore.readRows(spark, stateDir, changeEventSchema)
-        .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-        .unionByName(bucketed)
+      if (!BucketStore.hasRows(base)) bucketed
+      else BucketStore.read(spark, stateDir, base.get, changeEventSchema,
+        Some(touched.toSeq)).unionByName(bucketed)
     // ONE shuffle, on the bucket: `bucket` is a function of (table, key)
     // under the recorded meta, so the (bucket, table, key) collapse is
     // latestState's, its window needs no exchange, and the staged
     // write's repartition(bucket) is planned away as satisfied
     val merged = latestBy(BucketStore.clusterByBucket(rows, touched),
       col("bucket"), col("table"), col("key"))
-    writeBucketsAndSwap(spark, merged, stateDir, touched, effBuckets)
+    BucketStore.writeBuckets(spark, merged, stateDir, base, touched,
+      effBuckets)
+    ()
   }
-
-  /** Stage `rows` (already bucketed) and swap each touched bucket into
-    * place — [[BucketStore.writeAndSwap]] (shared staged-swap + heal).
-    */
-  private def writeBucketsAndSwap(spark: SparkSession, rows: DataFrame,
-                                  stateDir: String, touched: Array[Int],
-                                  numBuckets: Int): Unit =
-    BucketStore.writeAndSwap(spark, rows, stateDir, touched, numBuckets)
-
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    BucketStore.fs(spark, dir)
 
   /** The recorded bucket count of a state dir (None for a dir that does
     * not exist yet, or a pre-contract legacy dir — both adopt the
-    * caller's count on the next apply). Underscore-prefixed, so Spark's
-    * parquet reader ignores it like `_SUCCESS`.
+    * caller's count on the next apply).
     */
   def readBucketCount(spark: SparkSession, stateDir: String): Option[Int] =
     readMeta(spark, stateDir).map(_._1)
 
   /** The recorded bucket contract: base count B plus the linear-hash
     * refinement map (bucket tag → level, entries only for levels ≥ 1 —
-    * an unsplit state records none and reads back exactly the legacy
-    * `{"buckets":B}` form).
+    * an unsplit state records none).
     */
   def readMeta(spark: SparkSession, stateDir: String)
       : Option[(Int, Map[Int, Int])] =
     BucketStore.readMeta(spark, stateDir)
 
-  private val BucketMetaName = BucketStore.MetaName
-
-  /** Record the bucket count once, at state creation (atomic tmp+rename;
-    * no-op when already recorded — the caller has already resolved
-    * against the recorded value).
-    */
-  private def writeBucketCount(spark: SparkSession, stateDir: String,
-                               n: Int): Unit =
-    BucketStore.writeBucketCount(spark, stateDir, n)
-
   /** Change the bucket count of an existing state table — the growth
     * path when the keyspace outgrows its creation-time count (more
     * buckets = finer apply granularity and smaller per-bucket rewrites).
-    * One full-state map-only rewrite into a staging dir with the new
-    * bucketing (tombstones INCLUDED — they are load-bearing for
-    * commutativity), then an atomic whole-dir swap (live → `__old`,
-    * staged → live, drop `__old`) healed by [[recoverBuckets]]: a crash
-    * at any point leaves a complete copy on disk. Concurrent writers
-    * must be quiesced — same discipline as any repartitioning DDL.
+    * One full-state map-only rewrite with the new bucketing (tombstones
+    * INCLUDED — they are load-bearing for commutativity), committed as
+    * one version: a crash at any point leaves the previous version
+    * intact, and a concurrent writer's commit makes one of the two
+    * refuse.
     */
   def rebucket(spark: SparkSession, stateDir: String, newBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
-    recoverBuckets(spark, stateDir)
-    val fs = hadoopFs(spark, stateDir)
-    if (!fs.exists(new Path(stateDir)))
-      throw new java.io.IOException(s"no state at $stateDir to rebucket")
-    if (isEmptiedState(spark, stateDir)) {
-      // nothing to rewrite — just re-record the count for future applies
-      fs.delete(new Path(stateDir, BucketMetaName), false)
-      writeBucketCount(spark, stateDir, newBuckets)
-      return
-    }
+    val base = BucketStore.current(spark, stateDir).getOrElse(
+      throw new java.io.IOException(s"no state at $stateDir to rebucket"))
     val cols = Seq("op", "table", "key", "ts", "seq", "payload")
     BucketStore.publishRebucket(spark,
-      withBucket(spark.read.parquet(stateDir).select(cols.map(col): _*),
-        newBuckets),
-      stateDir, newBuckets)
+      withBucket(BucketStore.read(spark, stateDir, base, changeEventSchema)
+        .select(cols.map(col): _*), newBuckets),
+      stateDir, Some(base), newBuckets)
   }
 
   /** The mechanical split advisory — [[stateStats]] wired to
@@ -281,30 +232,17 @@ object CdcPipeline {
     adviseSplitByBytes(spark, stateDir, policy.factor, policy.minBytes)
       .headOption.map { tag => splitBucket(spark, stateDir, tag); tag }
 
-  /** Derived refinement level of a bucket TAG under base count B. */
-  private def levelOfTag(tag: Int, b: Int): Int =
-    BucketStore.levelOfTag(tag, b)
-
   /** Split ONE bucket in place — the online growth path [[rebucket]] is
     * too blunt for (judge r11 item 5): when [[stateStats]] shows one
     * bucket outgrowing its peers, rewrite ONLY that bucket's rows into
     * two refinement-level-(ℓ+1) children (`hash mod B·2^(ℓ+1)` splits
     * the parent's keyspace exactly in half), recorded in the meta's
     * `levels` map — linear hashing's split, with the recorded-contract
-    * discipline. Cost: one bucket read + two bucket writes + O(1)
-    * renames; the rest of the state is neither read nor written.
-    *
-    * Crash safety (heal-on-entry like every state op here): children
-    * stage under dot-prefixed names Spark readers never list; the
-    * COMMIT POINT is the single rename of the live parent dir to the
-    * `.splitting_<parent>_<lo>_<hi>` marker — before it, recovery rolls
-    * the staging back; after it, recovery completes the child renames,
-    * republishes the staged meta, and only then drops the marker (which
-    * still holds the parent's data until both children are live).
-    * Readers between commit and completion see the state through
-    * [[recoverBuckets]], which every read/apply entry point runs first.
-    * Concurrent WRITERS must be quiesced — the same single-writer
-    * discipline as [[rebucket]] and any repartitioning DDL.
+    * discipline. Cost: one bucket read + two bucket writes + one
+    * manifest; the rest of the state is neither read nor written. The
+    * children and the new levels commit as one version, so an apply
+    * that derived its tags from the parent's version refuses instead of
+    * landing rows in the retired parent.
     */
   def splitBucket(spark: SparkSession, stateDir: String, tag: Int): Unit =
     BucketStore.splitBucket(spark, stateDir, tag, (rows, childTagOf, _, _) => {
@@ -313,14 +251,6 @@ object CdcPipeline {
         .withColumn("bucket",
           childTagOf(xxhash64(col("table"), col("key"))))
     })
-
-  /** Complete a committed split from its marker dir name —
-    * [[BucketStore.finishSplit]] (idempotent replay from any
-    * interruption point).
-    */
-  private def finishSplit(fs: org.apache.hadoop.fs.FileSystem,
-                          stateDir: String, markerName: String): Unit =
-    BucketStore.finishSplit(fs, stateDir, markerName)
 
   /** Drop tombstones older than `watermark` — the retention half of the
     * ReplacingMergeTree contract. Tombstones are load-bearing for
@@ -334,27 +264,9 @@ object CdcPipeline {
     * interrupting and rerunning converges, same as apply.
     */
   def pruneTombstones(spark: SparkSession, stateDir: String,
-                      watermark: java.sql.Timestamp): Unit = {
-    recoverBuckets(spark, stateDir)
-    val fs = hadoopFs(spark, stateDir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(stateDir)) ||
-        isEmptiedState(spark, stateDir)) return
-    val numBuckets = readBucketCount(spark, stateDir).getOrElse(
-      throw new java.io.IOException(
-        s"no recorded bucket count at $stateDir — prune refuses to " +
-          "guess; apply one batch first or record _graft_buckets.json"))
-    val state = spark.read.parquet(stateDir)
-    val prunable = col("op") === ChangeEvent.Delete && col("ts") < lit(watermark)
-    val touched = state.filter(prunable).select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    val kept = state
-      .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-      .filter(!prunable)
-      .select(Seq("op", "table", "key", "ts", "seq", "payload", "bucket")
-        .map(col): _*)
-    writeBucketsAndSwap(spark, kept, stateDir, touched, numBuckets)
-  }
+                      watermark: java.sql.Timestamp): Unit =
+    BucketStore.pruneRows(spark, stateDir,
+      col("op") === ChangeEvent.Delete && col("ts") < lit(watermark))
 
   /** Per-bucket operational stats of a state table — the advisory input
     * to [[rebucket]] (bucket count outgrown?) and [[pruneTombstones]]
@@ -362,19 +274,14 @@ object CdcPipeline {
     * metadata listing + one aggregate over the state; no state rewrite.
     */
   def stateStats(spark: SparkSession, stateDir: String): DataFrame = {
-    recoverBuckets(spark, stateDir)
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    if (isEmptiedState(spark, stateDir))
+    val base = BucketStore.current(spark, stateDir)
+    if (!BucketStore.hasRows(base))
       return Seq.empty[(Int, Long, Long, Long)]
         .toDF("bucket", "live_rows", "tombstones", "bytes")
-    val fs = hadoopFs(spark, stateDir)
-    val bytes = fs.listStatus(new Path(stateDir)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-      .map(st => st.getPath.getName.stripPrefix("bucket=").toInt ->
-        fs.getContentSummary(st.getPath).getLength)
-    val bytesDf = bytes.toDF("bucket", "bytes")
-    spark.read.parquet(stateDir)
+    val bytesDf = BucketStore.bucketBytes(spark, stateDir)
+      .toDF("bucket", "bytes")
+    BucketStore.read(spark, stateDir, base.get, changeEventSchema)
       .groupBy(col("bucket"))
       .agg(
         sum(when(col("op") =!= ChangeEvent.Delete, 1L).otherwise(0L))
@@ -385,14 +292,6 @@ object CdcPipeline {
       .na.fill(0L, Seq("live_rows", "tombstones"))
       .orderBy("bucket")
   }
-
-  /** Heal every interrupted state-op crash window —
-    * [[BucketStore.recover]] (bucket swaps, whole-dir rebucket swaps,
-    * committed/uncommitted splits). Idempotent; runs before every apply
-    * and read.
-    */
-  private def recoverBuckets(spark: SparkSession, stateDir: String): Unit =
-    BucketStore.recover(spark, stateDir)
 
   /** Launch the continuous apply: change files → micro-batch upsert into
     * the parquet state table, offsets tracked in `checkpointDir` (the
@@ -689,7 +588,7 @@ object CdcPipeline {
     * per (src, key): `op=insert, table=src, key, ts=epoch,
     * seq=last_applied_seq, payload=doc` — so only the buckets the
     * batch's keys hash into are read and rewritten, with the recorded
-    * bucket-count contract, crash-healed swaps, rebucket and stats for
+    * bucket-count contract, versioned commits, rebucket and stats for
     * free. Redelivery is idempotent WITHOUT round versioning: the
     * per-key `seq` gate skips events at or below the stored
     * last-applied seq, a replayed batch folds to the identical row at
@@ -704,9 +603,8 @@ object CdcPipeline {
                                 onNetPairs: Option[DataFrame => Unit] = None)
       : Unit = {
     val spark = batch.sparkSession
-    recoverBuckets(spark, stateDir)
-    val (effB, levels) =
-      readMeta(spark, stateDir).getOrElse((numBuckets, Map.empty[Int, Int]))
+    val base = BucketStore.current(spark, stateDir)
+    val (effB, levels) = BucketStore.contractOr(base, numBuckets)
     // persist the folded batch WITH its bucket tags: its lineage (JSON
     // extract + per-key sort_array collect) would otherwise re-run for
     // every downstream job of this apply — the touched-buckets probe
@@ -720,9 +618,9 @@ object CdcPipeline {
       if (touched.isEmpty) return
       val cols = Seq("op", "table", "key", "ts", "seq", "payload")
       val stateRows =
-        if (BucketStore.hasRows(spark, stateDir))
-          spark.read.parquet(stateDir) // partition-pruned to touched buckets
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+        if (BucketStore.hasRows(base))
+          BucketStore.read(spark, stateDir, base.get, changeEventSchema,
+            Some(touched.toSeq))
         else folded.select(lit("").as("op"), col("src").as("table"),
           col("key"), lit(new java.sql.Timestamp(0L)).as("ts"),
           lit(0L).as("seq"), lit(null).cast("string").as("payload"),
@@ -753,26 +651,26 @@ object CdcPipeline {
         .select((cols :+ "bucket").map(col): _*)
       // net per-key (before, after) document pairs for downstream
       // monitors ([[graft.streaming.ReconcileIngest]]'s image-recovery
-      // bridge): the contract is pairs-DURABLE-before-any-bucket-SWAP —
-      // a replay after a mid-swap crash sees the seq gates eat the
-      // swapped keys' events, so pairs recomputed then would be a
-      // subset; the consumer pairs this ordering with an at-most-once
-      // write per batch id. The hook's work is INDEPENDENT of the
-      // staged bucket write (separate dirs, both read the persisted
-      // fold), so it runs on its own driver thread concurrent with the
-      // staging job, and the pre-swap barrier awaits it before the
-      // first rename — same crash window, one apply-tail less
+      // bridge): the contract is pairs-DURABLE-before-the-COMMIT — a
+      // replay after the commit sees the seq gates eat the applied
+      // keys' events, so pairs recomputed then would be a subset; the
+      // consumer pairs this ordering with an at-most-once write per
+      // batch id. The hook's work is INDEPENDENT of the bucket write
+      // (separate dirs, both read the persisted fold), so it runs on the
+      // overlap pool concurrent with the write job, and the pre-commit
+      // barrier awaits it before the manifest create — same crash
+      // window, one apply-tail less
       val hookDone = onNetPairs.map { hook =>
         val pairs = joined
           .filter(col("evs").isNotNull && size(fresh) > 0)
           .select(col("src"), col("key"), col("doc0").as("before"),
             docFold(fresh, col("doc0")).as("after"))
-        import scala.concurrent.ExecutionContext.Implicits.global
-        scala.concurrent.Future(hook(pairs))
+        graft.Overlap(hook(pairs))
       }
       val inf = scala.concurrent.duration.Duration.Inf
-      try BucketStore.writeAndSwap(spark, merged, stateDir, touched, effB,
-        beforeSwap = () => hookDone.foreach(scala.concurrent.Await.result(_, inf)))
+      try BucketStore.writeBuckets(spark, merged, stateDir, base, touched,
+        effB, beforeCommit =
+          () => hookDone.foreach(scala.concurrent.Await.result(_, inf)))
       catch { case t: Throwable =>
         // no hook outlives the apply that started it: a staged write
         // that throws never reaches the barrier, and the hook's durable

@@ -464,9 +464,8 @@ object CdcProfile {
   def applyBatch(batch: DataFrame, stateDir: String, spec: ProfileSpec,
                  numBuckets: Int = DefaultStateBuckets): Unit = {
     val spark = batch.sparkSession
-    BucketStore.recover(spark, stateDir)
-    val (effB, levels) = BucketStore.readMeta(spark, stateDir)
-      .getOrElse((numBuckets, Map.empty[Int, Int]))
+    val base = BucketStore.current(spark, stateDir)
+    val (effB, levels) = BucketStore.contractOr(base, numBuckets)
     val ev = weightedDeltas(batch, spec)
       .withColumn("bucket",
         BucketStore.bucketTag(xxhash64(col("c"), col("v")), effB, levels))
@@ -478,10 +477,10 @@ object CdcProfile {
       // persist the merged rows: the keyed half and the summary
       // recompute both read them, and without the cache the merge's
       // shuffle re-runs once per union branch of the one staged write
-      val newS = mergeTouched(spark, stateDir, ev, touched).persist()
+      val newS = mergeTouched(spark, stateDir, base, ev, touched).persist()
       try {
         val out = keyedRows(newS).unionByName(summaryRows(newS, spec))
-        BucketStore.writeAndSwap(spark, out, stateDir, touched, effB,
+        BucketStore.writeBuckets(spark, out, stateDir, base, touched, effB,
           Seq("part"))
       } finally { newS.unpersist(); () }
     } finally { ev.unpersist(); () }
@@ -489,7 +488,7 @@ object CdcProfile {
 
   /** Data schema of a value state's rows (the [[keyedRows]] /
     * [[summaryRows]] union, both layouts) — `bucket` rides as the
-    * partition column ([[BucketStore.readRows]]).
+    * partition column ([[BucketStore.read]]).
     */
   private[streaming] val StateSchema: StructType = StructType.fromDDL(
     "part STRING, c STRING, v STRING, n BIGINT, last_seq BIGINT, " +
@@ -514,6 +513,7 @@ object CdcProfile {
     * sum (skew-safe).
     */
   private[streaming] def mergeTouched(spark: SparkSession, stateDir: String,
+                                      base: Option[BucketStore.Manifest],
                                       ev: DataFrame,
                                       touched: Array[Int]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -521,11 +521,11 @@ object CdcProfile {
     val events = ev.select(col("bucket"), col("c"), col("v"), col("seq"),
       col("w"), nullL.as("n"), nullL.as("last_seq"))
     val rows =
-      if (!BucketStore.hasRows(spark, stateDir)) events
+      if (!BucketStore.hasRows(base)) events
       else events.unionByName(
-        BucketStore.readRows(spark, stateDir, StateSchema)
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*) &&
-            col("part") === "s")
+        BucketStore.read(spark, stateDir, base.get, StateSchema,
+            Some(touched.toSeq))
+          .filter(col("part") === "s")
           .select(col("bucket"), col("c"), col("v"), nullL.as("seq"),
             nullL.as("w"), col("n"), col("last_seq")))
     val key = Seq(col("bucket"), col("c"), col("v"))
@@ -555,8 +555,8 @@ object CdcProfile {
         col("last_seq") < seqWatermark, Seq("part"))
 
   /** Split ONE outgrown bucket of the value state in place — the
-    * O(1-bucket) hot-spot path ([[BucketStore.splitBucket]] staged
-    * split): every summary here is a state function, so each child's
+    * O(1-bucket) hot-spot path ([[BucketStore.splitBucket]]): every
+    * summary here is a state function, so each child's
     * per-column rows recompute from its half of the parent's keyed
     * rows.
     */
@@ -571,8 +571,8 @@ object CdcProfile {
       })
 
   /** Change the bucket count of an existing profile state — lifecycle
-    * parity with [[CdcPipeline.rebucket]] (single-writer, `__rebucket`
-    * swap healed by [[BucketStore.recover]]). Every per-bucket summary
+    * parity with [[CdcPipeline.rebucket]] (one committed version).
+    * Every per-bucket summary
     * here is a state function of the netted rows, so the rewrite
     * recomputes all of them under the new tags; seq gates ride along
     * in the keyed rows.
@@ -580,16 +580,32 @@ object CdcProfile {
   def rebucket(spark: SparkSession, stateDir: String, newBuckets: Int,
                spec: ProfileSpec): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
-    BucketStore.recover(spark, stateDir)
-    if (!BucketStore.hasRows(spark, stateDir)) return // nothing landed yet
-    val s = spark.read.parquet(stateDir).filter(col("part") === "s")
+    val base = BucketStore.current(spark, stateDir)
+    if (!BucketStore.hasRows(base)) return // nothing landed yet
+    val s = read(spark, stateDir, base.get).filter(col("part") === "s")
       .select(col("c"), col("v"), col("n"), col("last_seq"))
       .withColumn("bucket",
         BucketStore.bucketTag(xxhash64(col("c"), col("v")), newBuckets,
           Map.empty))
     val out = keyedRows(s).unionByName(summaryRows(s, spec))
-    BucketStore.publishRebucket(spark, out, stateDir, newBuckets)
+    BucketStore.publishRebucket(spark, out, stateDir, base, newBuckets)
   }
+
+  /** A value state's rows at `m` (recorded schema; [[StateSchema]] for
+    * a legacy state).
+    */
+  private[streaming] def read(spark: SparkSession, stateDir: String,
+                              m: BucketStore.Manifest): DataFrame =
+    BucketStore.read(spark, stateDir, m, StateSchema)
+
+  /** The live keyed (c, v, n) rows of a value state, empty when none. */
+  private def keyedState(spark: SparkSession, stateDir: String): DataFrame =
+    BucketStore.current(spark, stateDir).filter(_.hasRows) match {
+      case None => spark.range(0).select(lit("").as("c"),
+        lit(null).cast("string").as("v"), lit(0L).as("n"))
+      case Some(m) => read(spark, stateDir, m).filter(col("part") === "s")
+        .select(col("c"), col("v"), col("n"))
+    }
 
   /** Continuous form over a stream of change rows — same optional
     * between-trigger auto-split as the row-apply loops.
@@ -621,14 +637,15 @@ object CdcProfile {
     if (minMax) spec.cols.foreach(cn =>
       requireOrdered(spec.schema(cn).dataType, cn, "a min/max profile"))
     val seed = spec.cols.toDF("col_name")
+    val m = BucketStore.current(spark, stateDir)
     val counts =
-      if (!BucketStore.hasRows(spark, stateDir))
+      if (!BucketStore.hasRows(m))
         seed.select(col("col_name"), lit(0L).as("n_rows"),
           lit(0L).as("n_nulls"), lit(0L).as("n_distinct"),
           lit(null).cast("double").as("min_val"),
           lit(null).cast("double").as("max_val"))
       else {
-        val t = spark.read.parquet(stateDir).filter(col("part") === "t")
+        val t = read(spark, stateDir, m.get).filter(col("part") === "t")
         // ONE groupBy("c") over the O(buckets × columns) summary rows
         // (was: one aggregation job per column — same consolidation as
         // [[summaryRows]]); per-column typed min/max ride conditional
@@ -709,18 +726,18 @@ object CdcProfile {
                     k: Int): DataFrame = {
     val empty = spark.range(0).select(lit("").as("c"),
       lit(null).cast("string").as("v"), lit(0L).as("n"))
+    val m = BucketStore.current(spark, stateDir)
     def part(p: String) =
-      spark.read.parquet(stateDir).filter(col("part") === p)
+      read(spark, stateDir, m.get).filter(col("part") === p)
         .select(col("c"), col("v"), col("n"))
     val state =
-      if (!BucketStore.hasRows(spark, stateDir)) empty
+      if (!BucketStore.hasRows(m)) empty
       else if (k <= TopKSummaryK) {
-        val stamped = BucketStore.readLayout(spark, stateDir)
-          .exists(_ >= BucketStore.LayoutCandidates)
+        val stamped = m.get.layout.exists(_ >= BucketStore.LayoutCandidates)
         if (stamped) part("k")
         else {
           // pre-version fallback: the per-bucket candidate probe
-          val probe = spark.read.parquet(stateDir)
+          val probe = read(spark, stateDir, m.get)
             .filter(col("part").isin("t", "k") && col("c") === column)
             .select(col("part"), col("bucket"), col("ndv"))
             .collect()
@@ -778,13 +795,7 @@ object CdcProfile {
     */
   def histogramView(spark: SparkSession, stateDir: String,
                     spec: ProfileSpec, bins: Int): DataFrame = {
-    val state =
-      if (!BucketStore.hasRows(spark, stateDir))
-        spark.range(0).select(lit("").as("c"),
-          lit(null).cast("string").as("v"), lit(0L).as("n"))
-      else
-        spark.read.parquet(stateDir).filter(col("part") === "s")
-          .select(col("c"), col("v"), col("n"))
+    val state = keyedState(spark, stateDir)
     histogramOf(state, spec, bins).orderBy("col_name", "bin")
   }
 
@@ -798,13 +809,7 @@ object CdcProfile {
     */
   def quantileView(spark: SparkSession, stateDir: String,
                    spec: ProfileSpec, qs: Seq[Double]): DataFrame = {
-    val state =
-      if (!BucketStore.hasRows(spark, stateDir))
-        spark.range(0).select(lit("").as("c"),
-          lit(null).cast("string").as("v"), lit(0L).as("n"))
-      else
-        spark.read.parquet(stateDir).filter(col("part") === "s")
-          .select(col("c"), col("v"), col("n"))
+    val state = keyedState(spark, stateDir)
     quantilesOf(state, spec, qs).orderBy("col_name")
   }
 }

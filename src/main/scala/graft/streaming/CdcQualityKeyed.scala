@@ -320,10 +320,9 @@ object CdcQualityKeyed {
     * buckets): the uniqueness state (`<stateDir>/u`, bucketed on the
     * unique key) and the referential state (`<stateDir>/r`, bucketed on
     * the join key) each read and rewrite only the buckets the batch's
-    * keys hash into. Crash-converged per bucket: the staged swap is
-    * atomic per bucket and healed on entry, and the seq gate makes the
-    * replay of an interrupted batch re-apply exactly the buckets that
-    * missed their swap.
+    * keys hash into. Crash-converged per side: each side commits one
+    * version of its own state, and the seq gate makes the replay of an
+    * interrupted batch a no-op on a side whose commit already landed.
     *
     * Round shape (the r13 item-7 shave, the doc-store precedent): ONE
     * probe job collects both sides' touched buckets, and each side is
@@ -359,12 +358,10 @@ object CdcQualityKeyed {
   def applyDeltas(deltas: DataFrame, stateDir: String, spec: KeyedSpec,
                   numBuckets: Int = DefaultStateBuckets): Unit = {
     val spark = deltas.sparkSession
-    BucketStore.recover(spark, uDir(stateDir))
-    BucketStore.recover(spark, rDir(stateDir))
-    val (uB, uL) = BucketStore.readMeta(spark, uDir(stateDir))
-      .getOrElse((numBuckets, Map.empty[Int, Int]))
-    val (rB, rL) = BucketStore.readMeta(spark, rDir(stateDir))
-      .getOrElse((numBuckets, Map.empty[Int, Int]))
+    val uBase = BucketStore.current(spark, uDir(stateDir))
+    val rBase = BucketStore.current(spark, rDir(stateDir))
+    val (uB, uL) = BucketStore.contractOr(uBase, numBuckets)
+    val (rB, rL) = BucketStore.contractOr(rBase, numBuckets)
     // the probe and both merges share one evaluation of the deltas
     val delta = deltas
       .withColumn("bu", when(col("tab") === "f",
@@ -380,20 +377,21 @@ object CdcQualityKeyed {
       val touchedU = probe.getSeq[Int](0).sorted.toArray
       val touchedR = probe.getSeq[Int](1).sorted.toArray
       // the two sides are INDEPENDENT stores (separate dirs, separate
-      // writer locks, both reading the one persisted delta) — run them
+      // version logs, both reading the one persisted delta) — run them
       // concurrently so each side's scheduling/commit tail back-fills
       // the other's idle executors (guide §2.6); Spark's scheduler
       // handles multi-threaded job submission natively. Both sides are
       // awaited before either side's failure is rethrown, so no write
       // outlives the apply (or the delta unpersist below)
       import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
+      implicit val ec: scala.concurrent.ExecutionContext = graft.Overlap.pool
       val fu =
         if (touchedU.isEmpty) Future.unit
-        else Future(applyUnique(delta, uDir(stateDir), spec, uB, touchedU))
+        else Future(applyUnique(delta, uDir(stateDir), uBase, spec, uB,
+          touchedU))
       val fr =
         if (touchedR.isEmpty) Future.unit
-        else Future(applyRef(delta, rDir(stateDir), rB, touchedR))
+        else Future(applyRef(delta, rDir(stateDir), rBase, rB, touchedR))
       graft.Overlap.awaitAll(fu, fr)
     } finally { delta.unpersist(); () }
   }
@@ -403,7 +401,8 @@ object CdcQualityKeyed {
     * plus the cumulative row-local check sums (they ride the u state
     * because fact events hash here exactly once).
     */
-  private def applyUnique(delta: DataFrame, dir: String, spec: KeyedSpec,
+  private def applyUnique(delta: DataFrame, dir: String,
+                          base: Option[BucketStore.Manifest], spec: KeyedSpec,
                           effB: Int, touched: Array[Int]): Unit = {
     val spark = delta.sparkSession
     val iCols = spec.rowChecks.indices.map(i => s"i$i")
@@ -412,9 +411,8 @@ object CdcQualityKeyed {
         col("w")) ++ iCols.map(col)): _*)
     val kuT = ev.schema("ku").dataType
     val prior =
-      if (BucketStore.hasRows(spark, dir))
-        spark.read.parquet(dir)                     // pruned to touched
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+      if (BucketStore.hasRows(base))
+        BucketStore.read(spark, dir, base.get, only = Some(touched.toSeq))
       else
         spark.range(0).select(lit("s").as("part"),
           lit(0).cast("int").as("bucket"), lit(null).cast(kuT).as("ku"),
@@ -470,7 +468,7 @@ object CdcQualityKeyed {
       .unionByName(newT.select(lit("t").as("part"), col("bucket"),
         lit(null).cast(kuT).as("ku"), lit(null).cast("bigint").as("n"),
         lit(null).cast("bigint").as("last_seq"), col("uv"), col("tot")))
-    try BucketStore.writeAndSwap(spark, out, dir, touched, effB,
+    try BucketStore.writeBuckets(spark, out, dir, base, touched, effB,
       Seq("part"))
     finally { merged.unpersist(); () }
   }
@@ -481,15 +479,15 @@ object CdcQualityKeyed {
     * new events. Per-bucket summary = Σ fn·[dn = 0].
     */
   private def applyRef(delta: DataFrame, dir: String,
+                       base: Option[BucketStore.Manifest],
                        effB: Int, touched: Array[Int]): Unit = {
     val spark = delta.sparkSession
     val ev = delta.select(col("br").as("bucket"), col("kr"), col("tab"),
       col("seq"), col("w"))
     val krT = ev.schema("kr").dataType
     val prior =
-      if (BucketStore.hasRows(spark, dir))
-        spark.read.parquet(dir)
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+      if (BucketStore.hasRows(base))
+        BucketStore.read(spark, dir, base.get, only = Some(touched.toSeq))
       else
         spark.range(0).select(lit("s").as("part"),
           lit(0).cast("int").as("bucket"), lit(null).cast(krT).as("kr"),
@@ -529,7 +527,7 @@ object CdcQualityKeyed {
         lit(null).cast("bigint").as("seq_f"),
         lit(null).cast("bigint").as("seq_d"),
         coalesce(col("rv"), lit(0L)).as("rv")))
-    try BucketStore.writeAndSwap(spark, out, dir, touched, effB,
+    try BucketStore.writeBuckets(spark, out, dir, base, touched, effB,
       Seq("part"))
     finally { newS.unpersist(); () }
   }
@@ -561,7 +559,7 @@ object CdcQualityKeyed {
   /** Split ONE outgrown bucket of the uniqueness state in place — the
     * O(1-bucket) hot-spot path at lifecycle parity with
     * [[CdcPipeline.splitBucket]] (the [[BucketStore.splitBucket]]
-    * staged split; single-writer between triggers). Child summary rows
+    * one-commit split). Child summary rows
     * recompute from each child's keyed rows (state functions); the
     * parent's cumulative row-check totals are bucket-parked history
     * summands and move wholly to the LO child — the view only ever
@@ -623,8 +621,7 @@ object CdcQualityKeyed {
   /** Change the bucket count of an existing monitor state — the growth
     * path when the keyspace outgrows its creation-time count, at
     * lifecycle parity with the row apply's [[CdcPipeline.rebucket]]
-    * (same single-writer discipline, same `__rebucket`/`__old` swap
-    * healed by [[BucketStore.recover]]). Keyed rows re-tag under the
+    * (one committed version per side). Keyed rows re-tag under the
     * new count with their seq gates intact; per-bucket violation
     * SUBTOTALS are recomputed from the re-tagged rows (they are state
     * functions); the cumulative row-local check totals are HISTORY
@@ -640,9 +637,9 @@ object CdcQualityKeyed {
 
   private def rebucketUnique(spark: SparkSession, dir: String,
                              newBuckets: Int, spec: KeyedSpec): Unit = {
-    BucketStore.recover(spark, dir)
-    if (!BucketStore.hasRows(spark, dir)) return // nothing landed yet
-    val all = spark.read.parquet(dir)
+    val base = BucketStore.current(spark, dir)
+    if (!BucketStore.hasRows(base)) return // nothing landed yet
+    val all = BucketStore.read(spark, dir, base.get)
     val s = all.filter(col("part") === "s")
       .select(col("ku"), col("n"), col("last_seq"))
       .withColumn("bucket",
@@ -673,14 +670,14 @@ object CdcQualityKeyed {
         col("n"), col("last_seq"), lit(null).cast("bigint").as("uv"),
         lit(null).cast("array<bigint>").as("tot"))
       .unionByName(tRows)
-    BucketStore.publishRebucket(spark, out, dir, newBuckets)
+    BucketStore.publishRebucket(spark, out, dir, base, newBuckets)
   }
 
   private def rebucketRef(spark: SparkSession, dir: String,
                           newBuckets: Int): Unit = {
-    BucketStore.recover(spark, dir)
-    if (!BucketStore.hasRows(spark, dir)) return
-    val s = spark.read.parquet(dir).filter(col("part") === "s")
+    val base = BucketStore.current(spark, dir)
+    if (!BucketStore.hasRows(base)) return
+    val s = BucketStore.read(spark, dir, base.get).filter(col("part") === "s")
       .select(col("kr"), col("fn"), col("dn"), col("seq_f"), col("seq_d"))
       .withColumn("bucket",
         BucketStore.bucketTag(xxhash64(col("kr")), newBuckets, Map.empty))
@@ -695,7 +692,7 @@ object CdcQualityKeyed {
         lit(null).cast("bigint").as("dn"),
         lit(null).cast("bigint").as("seq_f"),
         lit(null).cast("bigint").as("seq_d"), col("rv")))
-    BucketStore.publishRebucket(spark, out, dir, newBuckets)
+    BucketStore.publishRebucket(spark, out, dir, base, newBuckets)
   }
 
   /** Continuous form over a stream of change rows — same optional
@@ -732,18 +729,18 @@ object CdcQualityKeyed {
     import spark.implicits._
     var uv = 0L
     var rowTot = Map.empty[Int, Long]
-    if (BucketStore.hasRows(spark, uDir(stateDir))) {
-      val t = spark.read.parquet(uDir(stateDir)).filter(col("part") === "t")
+    BucketStore.current(spark, uDir(stateDir)).filter(_.hasRows).foreach { m =>
+      val t = BucketStore.read(spark, uDir(stateDir), m).filter(col("part") === "t")
       uv = t.agg(coalesce(sum(col("uv")), lit(0L))).head.getLong(0)
       if (spec.rowChecks.nonEmpty)
         rowTot = t.select(posexplode(col("tot")).as(Seq("pos", "v")))
           .groupBy("pos").agg(sum(col("v")).as("v"))
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     }
-    val rv =
-      if (!BucketStore.hasRows(spark, rDir(stateDir))) 0L
-      else spark.read.parquet(rDir(stateDir)).filter(col("part") === "t")
-        .agg(coalesce(sum(col("rv")), lit(0L))).head.getLong(0)
+    val rv = BucketStore.current(spark, rDir(stateDir)).filter(_.hasRows)
+      .fold(0L)(m => BucketStore.read(spark, rDir(stateDir), m)
+        .filter(col("part") === "t")
+        .agg(coalesce(sum(col("rv")), lit(0L))).head.getLong(0))
     val rows = (spec.rowChecks.zipWithIndex.map { case (k, i) =>
         k.name -> rowTot.getOrElse(i, 0L) }
       :+ (spec.uniqueName -> uv) :+ (spec.refName -> rv))
@@ -766,18 +763,13 @@ object CdcQualityKeyed {
     */
   def violatingKeys(spark: SparkSession, stateDir: String): DataFrame = {
     val dir = uDir(stateDir)
-    BucketStore.recover(spark, dir)
-    if (!BucketStore.hasRows(spark, dir))
-      return spark.range(0).select(col("id").as("ku"))
-    val hot = spark.read.parquet(dir)
+    val m = BucketStore.current(spark, dir).filter(_.hasRows)
+      .getOrElse(return spark.range(0).select(col("id").as("ku")))
+    val hot = BucketStore.read(spark, dir, m)
       .filter(col("part") === "t" && col("uv") > 0L)
       .select("bucket").collect().map(_.getInt(0)).sorted
-    if (hot.isEmpty)
-      spark.read.parquet(dir).filter(col("part") === "s")
-        .select("ku").limit(0)
-    else
-      spark.read.parquet(hot.map(b => s"$dir/bucket=$b"): _*)
-        .filter(col("part") === "s" && col("n") > 1L)
-        .select("ku")
+    BucketStore.read(spark, dir, m, only = Some(hot.toSeq))
+      .filter(col("part") === "s" && col("n") > 1L)
+      .select("ku")
   }
 }

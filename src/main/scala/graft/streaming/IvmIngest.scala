@@ -71,6 +71,12 @@ object IvmIngest {
             checkpointDir: String): StreamingQuery =
     PartialState.stream(changes, stateDir, checkpointDir)(partial)
 
+  /** Bound the partial count: sum all but the newest partial
+    * ([[PartialState.compact]]). Call between runs (stream stopped).
+    */
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    PartialState.compact(spark, stateDir, merge)
+
   /** The maintained view at the current stream position: merge all
     * batch partials, drop groups whose rows have all been retracted.
     * |groups|×|batches| input rows — never the data volume.

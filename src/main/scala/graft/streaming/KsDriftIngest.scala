@@ -49,10 +49,19 @@ object KsDriftIngest {
     PartialState.stream(docs, stateDir, checkpointDir)(
       cellCounts(_, sourceCol, valueCol))
 
+  /** Cell-wise sum of histogram partials. */
+  private def merge(partials: DataFrame): DataFrame =
+    partials.groupBy("source", "bkt").agg(sum(col("c")).as("c"))
+
   /** The live merged histogram: cell-wise sum of every batch partial. */
   def histogram(spark: SparkSession, stateDir: String): DataFrame =
-    PartialState.read(spark, stateDir)
-      .groupBy("source", "bkt").agg(sum(col("c")).as("c"))
+    merge(PartialState.read(spark, stateDir))
+
+  /** Bound the partial count: sum all but the newest partial
+    * ([[PartialState.compact]]). Call between runs (stream stopped).
+    */
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    PartialState.compact(spark, stateDir, merge)
 
   /** Pairwise two-sample KS over a `(source, bkt, c)` histogram — the
     * drift read, computable at any micro-batch boundary from state

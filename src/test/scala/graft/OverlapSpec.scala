@@ -24,4 +24,22 @@ class OverlapSpec extends AnyFunSuite {
     assert(e.getMessage == "first")
     Overlap.awaitAll(Future.unit, Future(1))
   }
+
+  test("overlaps nested on the bounded pool finish without deadlock") {
+    // more outer tasks than the pool has threads, each joining its own
+    // inner overlaps: with a queue, the inner tasks would wait behind
+    // outer tasks that wait for them
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val outer = (1 to 2 * Overlap.MaxThreads).map { i =>
+      Overlap {
+        names.add(Thread.currentThread().getName)
+        Overlap.results((1 to 3).map(j => Overlap { Thread.sleep(20); i * j })).sum
+      }
+    }
+    val done = Future(Overlap.results(outer))
+    val sums = scala.concurrent.Await.result(done,
+      scala.concurrent.duration.Duration(60, "s"))
+    assert(sums == (1 to 2 * Overlap.MaxThreads).map(_ * 6))
+    assert(names.toArray.exists(_.toString.startsWith("graft-overlap-")))
+  }
 }

@@ -62,7 +62,7 @@ class BucketedApplySpec extends SparkSpec {
     val tagged = batch.withColumn("bucket", BucketStore.bucketTag(
       xxhash64(col("table"), col("key")), b, levels))
     sorted(CdcPipeline.latestState(
-      spark.read.parquet(dir).select(rowCols: _*)
+      BucketStore.readCurrent(spark, dir).select(rowCols: _*)
         .unionByName(tagged.select(rowCols: _*))).select(rowCols: _*))
   }
 
@@ -79,7 +79,7 @@ class BucketedApplySpec extends SparkSpec {
       (batches.tail :+ batches(1)).foreach { b =>
         val want = refRowApply(dir, b.toDF())
         CdcPipeline.applyBatch(spark, b.toDF(), dir)
-        assert(sorted(spark.read.parquet(dir).select(rowCols: _*)) == want,
+        assert(sorted(BucketStore.readCurrent(spark, dir).select(rowCols: _*)) == want,
           s"seed $seed")
       }
     }
@@ -139,11 +139,11 @@ class BucketedApplySpec extends SparkSpec {
   private def refMergeTouched(dir: String, ev: DataFrame,
                               touched: Array[Int]): DataFrame = {
     val priorS =
-      if (!BucketStore.hasRows(spark, dir))
+      if (!BucketStore.hasRows(BucketStore.current(spark, dir)))
         spark.range(0).select(lit(0).as("bucket"), lit("").as("c"),
           lit(null).cast("string").as("v"), lit(0L).as("n"),
           lit(0L).as("last_seq"))
-      else spark.read.parquet(dir)
+      else BucketStore.readCurrent(spark, dir)
         .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
         .filter(col("part") === "s")
         .select(col("bucket"), col("c"), col("v"), col("n"), col("last_seq"))
@@ -178,7 +178,8 @@ class BucketedApplySpec extends SparkSpec {
       .select(col("bucket"), col("c"), col("v"), col("seq"), col("w"))
     val touched = ev.select("bucket").distinct().collect()
       .map(_.getInt(0)).sorted
-    val got = sorted(CdcProfile.mergeTouched(spark, dir, ev, touched))
+    val got = sorted(CdcProfile.mergeTouched(spark, dir,
+      BucketStore.current(spark, dir), ev, touched))
     assert(got == sorted(refMergeTouched(dir, ev, touched)))
     apply(batch)
     got.length
@@ -206,11 +207,11 @@ class BucketedApplySpec extends SparkSpec {
       step(batches(1)) // redelivered: the gate drops every event
       step(batches(3))
       // the tombstone: "z" nets to zero and stays as a gate row
-      val z = spark.read.parquet(dir)
+      val z = BucketStore.readCurrent(spark, dir)
         .filter(col("part") === "s" && col("c") === "cat" && col("v") === "z")
         .select("n").as[Long].collect()
       assert(z.toSeq == Seq(0L), seed)
-      assert(spark.read.parquet(dir).filter(col("part") === "s" &&
+      assert(BucketStore.readCurrent(spark, dir).filter(col("part") === "s" &&
         col("c") === "amt" && col("v") === "-0.0").isEmpty)
     }
   }
@@ -226,7 +227,7 @@ class BucketedApplySpec extends SparkSpec {
     def step(b: DataFrame) = checkMerge(dir, b, rangedSpec, () => rangedTag())(
       CdcProfileRanged.applyBatch(_, dir, rangedSpec))
     step(batches(1))
-    val hot = spark.read.parquet(dir)
+    val hot = BucketStore.readCurrent(spark, dir)
       .filter(col("part") === "s" && col("c") === "amt" &&
         col("v").isNotNull && col("n") > 0L)
       .groupBy("bucket").agg(countDistinct("v").as("d"))
@@ -368,70 +369,60 @@ class BucketedApplySpec extends SparkSpec {
       s"profile apply jobs (in SQL execution?): $apply")
   }
 
-  test("a leftover bucket=N__old still reads, and bucket stays an int " +
-      "partition column") {
-    import java.nio.file.{Files, Paths}
-    val dir = tmp("bucketed_old_")
+  test("a clean legacy state reads with an int bucket column, then " +
+      "upgrades to version 1 on its first apply") {
+    val dir = tmp("bucketed_legacy_")
     val batches = rowBatches(19L)
-    CdcPipeline.applyBatch(spark, batches(0).toDF(), dir, numBuckets = 4)
+    val seed = CdcPipeline.latestState(batches(0).toDF())
+    LegacyLayout.rowState(spark, dir, seed, 4)
     def state() = sorted(CdcPipeline.currentState(spark, dir))
     val before = state()
-    def entries = Files.list(Paths.get(dir)).toArray
-      .map(_.asInstanceOf[java.nio.file.Path]).toSeq
-    val live = entries.filter(_.getFileName.toString.startsWith("bucket="))
-      .sortBy(_.toString)
-    // crash between a swap's two renames (live set aside, nothing
-    // published) on one bucket; a set-aside copy beside its live dir
-    // (crash before the final drop) on another
-    Files.move(live(0), Paths.get(live(0).toString + "__old"))
-    org.apache.commons.io.FileUtils.copyDirectory(live(1).toFile,
-      new java.io.File(live(1).toString + "__old"))
-    // unhealed (a reader racing a writer's swap), the known-schema read
-    // still plans and runs: discovery types the mixed `bucket` values
-    assert(BucketStore.readRows(spark, dir, CdcPipeline.changeEventSchema)
-      .count() > 0)
-    assert(state() == before)
-    assert(!entries.exists(_.toString.endsWith("__old")))
-    assert(BucketStore.readRows(spark, dir, CdcPipeline.changeEventSchema)
+    assert(before.nonEmpty)
+    assert(BucketStore.current(spark, dir).get.version == 0)
+    assert(BucketStore.readCurrent(spark, dir, CdcPipeline.changeEventSchema)
       .schema("bucket").dataType == IntegerType)
-    // and an apply over the healed dir still converges
+    // the first apply upgrades: version 1 references the untouched legacy
+    // dirs in place and retires the meta file
     val want = refRowApply(dir, batches(1).toDF())
     CdcPipeline.applyBatch(spark, batches(1).toDF(), dir)
-    assert(sorted(spark.read.parquet(dir).select(rowCols: _*)) == want)
+    val m = BucketStore.current(spark, dir).get
+    assert(m.version == 1 && m.buckets == 4, m)
+    assert(sorted(BucketStore.readCurrent(spark, dir).select(rowCols: _*)) == want)
+    assert(!new java.io.File(dir, BucketStore.MetaName).exists())
+    val names = new java.io.File(dir).list().toSet
+    assert(m.live.values.map(_.takeWhile(_ != '/')).forall(names), names)
+    assert(names.filter(_.startsWith("bucket=")).forall(n =>
+      m.live.values.exists(_ == n)), s"a superseded legacy dir survived: $names")
     assert(CdcPipeline.currentState(spark, dir).columns.toSeq ==
       CdcPipeline.changeEventSchema.fieldNames.toSeq)
   }
 
-  test("a read leaves a mid-swap layout to the writer holding the lock, " +
-      "and heals it once the lock is free") {
+  test("an in-flight write is invisible to readers and survives GC; a " +
+      "lost writer's dir is collected") {
     import java.nio.file.{Files, Paths}
-    val dir = tmp("bucketed_heal_lock_")
-    CdcPipeline.applyBatch(spark, rowBatches(23L)(0).toDF(), dir,
-      numBuckets = 4)
+    val dir = tmp("bucketed_gc_")
+    val batches = rowBatches(23L)
+    CdcPipeline.applyBatch(spark, batches(0).toDF(), dir, numBuckets = 4)
     def state() = sorted(CdcPipeline.currentState(spark, dir))
     val before = state()
-    val live = Files.list(Paths.get(dir)).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.getFileName.toString.startsWith("bucket="))
-      .minBy(_.toString)
-    val old = Paths.get(live.toString + "__old")
-    val held = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val writer = new Thread(() =>
-      BucketStore.withWriterLock(spark, dir) {
-        held.countDown(); release.await()
-      })
-    writer.start()
-    held.await()
-    try {
-      // the holder is between its two renames: live set aside, nothing
-      // published yet
-      Files.move(live, old)
-      assert(state() == before)
-      assert(Files.exists(old) && !Files.exists(live),
-        "a reader touched a layout another writer owns")
-    } finally { release.countDown(); writer.join() }
-    assert(state() == before)
-    assert(Files.exists(live) && !Files.exists(old))
+    val (b, src) = LegacyLayout.liveDirs(spark, dir).head
+    def stage(name: String) = {
+      val to = Paths.get(dir, name, s"bucket=$b")
+      org.apache.commons.io.FileUtils.copyDirectory(src, to.toFile)
+      to.getParent
+    }
+    // a writer still writing version 3 (above what the next apply
+    // commits, 2), and one that lost version 1 (at or below the newest)
+    val inFlight = stage("_v3_aaaaaaaaaaaa")
+    val lost = stage("_v1_bbbbbbbbbbbb")
+    assert(state() == before, "a reader saw an uncommitted version dir")
+    CdcPipeline.applyBatch(spark, batches(1).toDF(), dir)
+    assert(!Files.exists(lost), "a lost writer's dir was not collected")
+    assert(BucketStore.current(spark, dir).get.version == 2)
+    assert(Files.exists(inFlight), "GC removed a dir tagged above the newest")
+    // once version 3 is committed by someone else, that writer has lost
+    // its create, so its dir is garbage
+    CdcPipeline.applyBatch(spark, batches(2).toDF(), dir)
+    assert(!Files.exists(inFlight))
   }
 }

@@ -71,7 +71,7 @@ class CdcProfileRangedSpec extends SparkSpec {
   }
 
   private def keyedState(dir: String): DataFrame =
-    spark.read.parquet(dir).filter(col("part") === "s")
+    BucketStore.readCurrent(spark, dir).filter(col("part") === "s")
       .select(col("c"), col("v"), col("n"))
 
   private def quantRows(df: DataFrame): Seq[(String, Double, Double, Double)] =
@@ -154,14 +154,13 @@ class CdcProfileRangedSpec extends SparkSpec {
     // targets, so the histogram is re-checked only on the quantile
     // assertion's buckets' complement that ISN'T straddling either —
     // quantiles are the O(one bucket) claim under test here
-    val allLive = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    val allLive = LegacyLayout.liveDirs(spark, dir).toSeq.sortBy(_._1).map(_._2)
       .map(_.getName.stripPrefix("bucket=").toInt).toSet
     val corrupt = allLive -- targetIds -- meta.allNullIds
     assert(corrupt.nonEmpty, s"fixture too small: live=$allLive " +
       s"targets=$targetIds")
     corrupt.foreach { b =>
-      val p = s"$dir/bucket=$b"
+      val p = LegacyLayout.liveDirs(spark, dir)(b).getPath
       // perturb through each column's declared type so the rendering
       // stays castable — the control read must fail by VALUE, not by a
       // cast error
@@ -234,11 +233,10 @@ class CdcProfileRangedSpec extends SparkSpec {
     val amt1 = meta1.col("amt")
     assert(amt1.orderedIds.size == meta0.col("amt").orderedIds.size + 1)
     assert(amt1.orderedIds.contains(meta0.nextId))
-    // no crash leftovers; recover is a no-op
+    // no staging leftovers: one version dir per commit, nothing else
     val names = new java.io.File(dir).listFiles().map(_.getName)
-    assert(!names.exists(n => n.startsWith(".split") ||
-      n.endsWith(".next")), names.mkString(","))
-    BucketStore.recover(spark, dir)
+    assert(names.forall(n => n == BucketStore.LogName || n.startsWith("_v")),
+      names.mkString(","))
     val gotP = CdcProfileRanged.profileView(spark, dir, spec, qs)
       .collect().map(_.toSeq).toSeq
     val gotH = CdcProfileRanged.histogramView(spark, dir, spec, 5)
@@ -493,7 +491,7 @@ class CdcProfileRangedSpec extends SparkSpec {
     // would regenerate keyed rows but no cnt summaries — must refuse
     val meta = CdcProfileRanged.readRanges(spark, dir).get
     val cntBucket = meta.col("cnt").orderedIds.find { id =>
-      new java.io.File(s"$dir/bucket=$id").exists()
+      LegacyLayout.liveDirs(spark, s"$dir").contains(id)
     }.get
     val e2 = intercept[IllegalArgumentException] {
       CdcProfileRanged.splitBucket(spark, dir, cntBucket, subset)
@@ -727,23 +725,18 @@ class CdcProfileRangedSpec extends SparkSpec {
     CdcProfileRanged.applyBatch(rows(0, 30).toDF(), dir, dSpec,
       numBuckets = 4)
     // forge the r15 form: strip the img field from the contract
-    val fs = BucketStore.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, BucketStore.RangesName)
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val stripped = body.replaceAll(""""img":\d+,""", "")
-    assert(stripped != body, s"no img stamp in $body")
-    val out = fs.create(p, true)
-    try out.write(stripped.getBytes("UTF-8")) finally out.close()
+    LegacyLayout.editManifest(spark, dir) { body =>
+      val stripped = body.replaceAll(""""img":\d+,""", "")
+      assert(stripped != body, s"no img stamp in $body")
+      stripped
+    }
     assert(CdcProfileRanged.readRanges(spark, dir).get.img == 1)
     val e1 = intercept[java.io.IOException] {
       CdcProfileRanged.applyBatch(rows(100, 5).toDF(), dir, dSpec)
     }
     assert(e1.getMessage.contains("value-image v1"), e1.getMessage)
     val victim = CdcProfileRanged.readRanges(spark, dir).get.col("d")
-      .orderedIds.find(id => new java.io.File(s"$dir/bucket=$id")
-        .exists()).get
+      .orderedIds.find(id => LegacyLayout.liveDirs(spark, s"$dir").contains(id)).get
     val e2 = intercept[java.io.IOException] {
       CdcProfileRanged.splitBucket(spark, dir, victim, dSpec)
     }
@@ -767,14 +760,12 @@ class CdcProfileRangedSpec extends SparkSpec {
     // engine may have changed any column type's image, so the
     // DateType-scoped v1 check cannot vouch for it (the
     // refuseNewerLayout symmetry; post-review fix)
-    val body2in = fs.open(p)
-    val body2 = try scala.io.Source.fromInputStream(body2in, "UTF-8")
-      .mkString finally body2in.close()
-    val forged = body2.replace(
-      s""""img":${CdcProfileRanged.ImgVersion}""", """"img":99""")
-    assert(forged != body2)
-    val out2 = fs.create(p, true)
-    try out2.write(forged.getBytes("UTF-8")) finally out2.close()
+    LegacyLayout.editManifest(spark, dir) { body2 =>
+      val forged = body2.replace(
+        s""""img":${CdcProfileRanged.ImgVersion}""", """"img":99""")
+      assert(forged != body2)
+      forged
+    }
     val e3 = intercept[java.io.IOException] {
       CdcProfileRanged.applyBatch(rows(200, 5).toDF(), dir, dSpec)
     }
@@ -902,8 +893,8 @@ class CdcProfileRangedSpec extends SparkSpec {
     // sees.
     val meta = CdcProfileRanged.readRanges(spark, dir).get
     val victim = meta.col("cnt").orderedIds.find(id =>
-      new java.io.File(s"$dir/bucket=$id").exists()).get
-    val bdir = s"$dir/bucket=$victim"
+      LegacyLayout.liveDirs(spark, s"$dir").contains(id)).get
+    val bdir = LegacyLayout.liveDirs(spark, dir)(victim).getPath
     val inflated = spark.read.parquet(bdir)
       .withColumn("rows", when(col("part") === "t",
         col("rows") * 10000L).otherwise(col("rows")))

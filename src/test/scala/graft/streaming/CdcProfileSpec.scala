@@ -84,7 +84,8 @@ class CdcProfileSpec extends SparkSpec {
     // the streaming state is the BucketStore layout: recorded bucket
     // contract, no round dirs
     val names = new java.io.File(s"$dir/state").listFiles().map(_.getName)
-    assert(names.contains("_graft_buckets.json"), names.mkString(","))
+    assert(names.contains(BucketStore.LogName), names.mkString(","))
+    assert(BucketStore.readMeta(spark, s"$dir/state").isDefined)
     assert(!names.exists(_.startsWith("round_")), names.mkString(","))
   }
 
@@ -167,17 +168,12 @@ class CdcProfileSpec extends SparkSpec {
     * `layout` generation; states written before it carry none): rewrite
     * the meta without the field, leaving everything else intact.
     */
-  private def stripLayoutStamp(dir: String): Unit = {
-    val fs = BucketStore.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, BucketStore.MetaName)
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val stripped = body.replaceAll(""","layout":\d+""", "")
-    assert(stripped != body, s"no layout stamp to strip in $body")
-    val out = fs.create(p, true)
-    try out.write(stripped.getBytes("UTF-8")) finally out.close()
-  }
+  private def stripLayoutStamp(dir: String): Unit =
+    LegacyLayout.editManifest(spark, dir) { body =>
+      val stripped = body.replaceAll(""","layout":\d+""", "")
+      assert(stripped != body, s"no layout stamp to strip in $body")
+      stripped
+    }
 
   test("top-k view reads the per-bucket candidate rows, not the keyed " +
       "state") {
@@ -192,8 +188,7 @@ class CdcProfileSpec extends SparkSpec {
       .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
     assert(want == Seq(("a", 2L), ("b", 1L)))
     val fs = BucketStore.fs(spark, dir)
-    new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    LegacyLayout.liveDirs(spark, dir).toSeq.sortBy(_._1).map(_._2)
       .foreach { b =>
         val p = b.getPath
         val rows = spark.read.parquet(p)
@@ -232,15 +227,14 @@ class CdcProfileSpec extends SparkSpec {
       .toString + "/state"
     CdcProfile.applyBatch(changes.toDF(), dir, spec, numBuckets = 8)
     // creation stamped the current layout generation
-    assert(BucketStore.readLayout(spark, dir)
+    assert(BucketStore.current(spark, dir).flatMap(_.layout)
       .contains(BucketStore.LayoutVersion))
     stripLayoutStamp(dir)
     val want = CdcProfile.topValuesView(spark, dir, "cat", 3)
       .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
     assert(want == Seq(("a", 2L), ("b", 1L)))
     val fs = BucketStore.fs(spark, dir)
-    new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    LegacyLayout.liveDirs(spark, dir).toSeq.sortBy(_._1).map(_._2)
       .foreach { b =>
         val p = b.getPath
         val rows = spark.read.parquet(p)
@@ -279,8 +273,7 @@ class CdcProfileSpec extends SparkSpec {
     assert(want == Seq(("a", 2L), ("b", 1L)))
     val fs = BucketStore.fs(spark, dir)
     // the victim: a bucket holding live cat values AND candidate rows
-    val victim = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    val victim = LegacyLayout.liveDirs(spark, dir).toSeq.sortBy(_._1).map(_._2)
       .find { b =>
         spark.read.parquet(b.getPath)
           .filter(col("part") === "k" && col("c") === "cat")
@@ -320,16 +313,12 @@ class CdcProfileSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("cdcproflay_")
       .toString + "/state"
     CdcProfile.applyBatch(changes.toDF(), dir, spec, numBuckets = 8)
-    val fs = BucketStore.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, BucketStore.MetaName)
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val forged = body.replace(
-      s""""layout":${BucketStore.LayoutVersion}""", """"layout":99""")
-    assert(forged != body)
-    val out = fs.create(p, true)
-    try out.write(forged.getBytes("UTF-8")) finally out.close()
+    LegacyLayout.editManifest(spark, dir) { body =>
+      val forged = body.replace(
+        s""""layout":${BucketStore.LayoutVersion}""", """"layout":99""")
+      assert(forged != body)
+      forged
+    }
     val e = intercept[java.io.IOException] {
       CdcProfile.applyBatch(changes.toDF(), dir, spec)
     }
@@ -425,7 +414,7 @@ class CdcProfileSpec extends SparkSpec {
     // only as seq gates
     CdcProfile.applyBatch(changes.toDF(), dir, spec, numBuckets = 8)
     val before = asMap(CdcProfile.view(spark, dir, spec))
-    def zeroRows(): Long = spark.read.parquet(dir)
+    def zeroRows(): Long = BucketStore.readCurrent(spark, dir)
       .filter(col("part") === "s" && col("n") === 0L).count()
     assert(zeroRows() >= 2L) // cat='c' and amt=9.0
     CdcProfile.pruneGateTombstones(spark, dir, seqWatermark = 100)

@@ -104,8 +104,9 @@ class CdcQualityKeyedSpec extends SparkSpec {
     Seq("u", "r").foreach { side =>
       val names = new java.io.File(s"$dir/state/$side").listFiles()
         .map(_.getName)
-      assert(names.contains("_graft_buckets.json"), names.mkString(","))
-      assert(names.exists(_.startsWith("bucket=")), names.mkString(","))
+      assert(names.contains(BucketStore.LogName), names.mkString(","))
+      assert(BucketStore.current(spark, s"$dir/state/$side")
+        .exists(_.live.nonEmpty), names.mkString(","))
       assert(!names.exists(_.startsWith("round_")), names.mkString(","))
     }
   }
@@ -125,7 +126,7 @@ class CdcQualityKeyedSpec extends SparkSpec {
     CdcQualityKeyed.applyBatch(churn.toDF(), dir, spec)
     val before = asReport(CdcQualityKeyed.view(spark, dir, spec))
     def zeros(side: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(s"$dir/$side")
+      BucketStore.readCurrent(spark, s"$dir/$side")
         .filter(col("part") === "s" && pred).count()
     assert(zeros("u", col("n") === 0L) >= 1L)
     assert(zeros("r", col("fn") === 0L && col("dn") === 0L) >= 1L)
@@ -296,16 +297,15 @@ class CdcQualityKeyedSpec extends SparkSpec {
     assert(viol() == Seq(100L, 200L))
     // hot buckets = the ones whose summary uv > 0; corrupt the REST
     val uDir = s"$dir/u"
-    val hot = spark.read.parquet(uDir)
+    val hot = BucketStore.readCurrent(spark, uDir)
       .filter(col("part") === "t" && col("uv") > 0L)
       .select("bucket").collect().map(_.getInt(0)).toSet
     val fs = BucketStore.fs(spark, uDir)
-    val clean = new java.io.File(uDir).listFiles()
-      .filter(fd => fd.isDirectory && fd.getName.startsWith("bucket="))
+    val clean = LegacyLayout.liveDirs(spark, uDir).toSeq.sortBy(_._1).map(_._2)
       .map(_.getName.stripPrefix("bucket=").toInt).toSet -- hot
     assert(clean.nonEmpty, s"fixture too small: hot=$hot")
     clean.foreach { b =>
-      val p = s"$uDir/bucket=$b"
+      val p = LegacyLayout.liveDirs(spark, uDir)(b).getPath
       val rows = spark.read.parquet(p)
         .withColumn("n", when(col("part") === "s", col("n") + 5)
           .otherwise(col("n")))
@@ -322,7 +322,7 @@ class CdcQualityKeyedSpec extends SparkSpec {
     assert(viol() == Seq(100L, 200L),
       "the drill read clean buckets' keyed rows")
     // control: a full keyed read WOULD see the corruption
-    val full = spark.read.parquet(uDir)
+    val full = BucketStore.readCurrent(spark, uDir)
       .filter(col("part") === "s" && col("n") > 1L).count()
     assert(full > 2L,
       "perturbation was not observable — the pin proves nothing")

@@ -2,20 +2,30 @@ package graft.streaming
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** Test-only local file system under the `fault:` scheme (register it
-  * as `fs.fault.impl`). Once [[FaultFS.arm]]ed on a dir, it counts the
-  * renames, deletes and mkdirs of that dir's direct children and throws
-  * [[FaultFS.Crash]] in place of the k-th — a crash just before that
-  * op. Sweeping k = 1, 2, … until a run completes visits every crash
-  * point of a protocol that mutates a state dir's entries.
+  * as `fs.fault.impl`). Once [[FaultFS.arm]]ed on some dirs, it counts
+  * the creates, renames, deletes and mkdirs of those dirs' direct
+  * children and throws [[FaultFS.Crash]] in place of the k-th — a crash
+  * just before that op. Sweeping k = 1, 2, … until a run completes
+  * visits every crash point of a protocol that mutates the dirs'
+  * entries. Deeper paths (Spark's `_temporary` committer ops inside a
+  * data dir) are not counted: a crash there leaves an unreferenced data
+  * dir, the same case as a crash before the commit.
   */
 class FaultFS extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = FaultFS.Uri
 }) {
   override def getScheme: String = FaultFS.Uri.getScheme
+  override def create(p: Path, perm: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    FaultFS.tick(p)
+    super.create(p, perm, overwrite, bufferSize, replication, blockSize, progress)
+  }
   override def rename(src: Path, dst: Path): Boolean = {
     FaultFS.tick(src); super.rename(src, dst)
   }
@@ -33,20 +43,23 @@ object FaultFS {
   final class Crash(op: Int, p: Path)
       extends java.io.IOException(s"injected crash at op $op on $p")
 
-  private var root: Option[String] = None
+  private var roots = Set.empty[String]
   private var k = 0
   private var seen = 0
 
-  /** Throw at the `k`-th mutating op on a direct child of `dir`. */
-  def arm(dir: String, k: Int): Unit = synchronized {
-    root = Some(new Path(dir).toUri.getPath); this.k = k; seen = 0
+  /** Throw at the `k`-th mutating op on a direct child of any of `dirs`. */
+  def arm(dirs: Seq[String], k: Int): Unit = synchronized {
+    roots = dirs.map(new Path(_).toUri.getPath).toSet; this.k = k; seen = 0
   }
 
+  /** [[arm]] on one dir. */
+  def arm(dir: String, k: Int): Unit = arm(Seq(dir), k)
+
   /** Stop injecting; returns how many ops were counted. */
-  def disarm(): Int = synchronized { root = None; seen }
+  def disarm(): Int = synchronized { roots = Set.empty; seen }
 
   private def tick(p: Path): Unit = synchronized {
-    if (root.exists(r => Option(p.getParent).exists(_.toUri.getPath == r))) {
+    if (Option(p.getParent).exists(d => roots(d.toUri.getPath))) {
       seen += 1
       if (seen == k) throw new Crash(seen, p)
     }

@@ -183,4 +183,42 @@ class PartialStateSpec extends SparkSpec {
     assert(entries(s"$clean/batch_id=2").forall(n =>
       n.startsWith("bucket=") || n.startsWith("_")))
   }
+
+  /** Land `partials` as batches 0..n-1, compact, and check that at most
+    * two batch dirs remain and `view` did not move.
+    */
+  private def compactsToTwo(partials: Seq[DataFrame], compact: String => Unit,
+                            view: String => Seq[String]): Unit = {
+    val dir = Files.createTempDirectory("ps_compact_").resolve("state").toString
+    partials.zipWithIndex.foreach { case (p, i) =>
+      PartialState.land(p, dir, i.toLong)
+    }
+    val before = view(dir)
+    assert(entries(dir).count(_.startsWith("batch_id=")) == partials.length)
+    compact(dir)
+    val left = entries(dir).filter(_.startsWith("batch_id="))
+    assert(left.length <= 2, left)
+    assert(view(dir) == before, "compaction moved the view")
+  }
+
+  test("KS drift compaction keeps two batch dirs and the drift read") {
+    val partials = (0 until 6).map(i => KsDriftIngest.cellCounts(
+      Seq(("a", 10L + i), ("a", 12L), ("b", 11L + 2 * i), ("b", 12L))
+        .toDF("source", "n_chars")))
+    compactsToTwo(partials, KsDriftIngest.compactState(spark, _),
+      dir => KsDriftIngest.drift(spark, dir).collect().map(_.toSeq.mkString("|")).toSeq)
+  }
+
+  test("IVM compaction keeps two batch dirs and the maintained view") {
+    def img(et: String, v: Double) =
+      s"""{"user_id":1,"event_id":1,"ts":0,"event_type":"$et","value":$v}"""
+    val partials = (0 until 6).map(i => IvmIngest.partial(Seq(
+        ("insert", img("click", 1.5 + i), null),
+        ("update", img("view", 2.25), img("click", 1.5 + i)),
+        ("delete", null, img("view", 0.5 * i)))
+      .toDF("op", "payload", "payload_before")))
+    compactsToTwo(partials, IvmIngest.compactState(spark, _),
+      dir => IvmIngest.view(spark, dir).orderBy("event_type").collect()
+        .map(_.toSeq.mkString("|")).toSeq)
+  }
 }

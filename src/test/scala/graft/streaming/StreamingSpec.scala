@@ -940,17 +940,12 @@ class StreamingSpec extends SparkSpec {
     val state = s"$dir/state"
     CdcPipeline.applyDeferredJsonBucketed(raw.filter(col("seq") <= mid),
       "props", state, numBuckets = 4)
-    // forged through the Hadoop FS so its checksum sidecar follows
-    val fs = BucketStore.fs(spark, state)
-    val meta = new org.apache.hadoop.fs.Path(state, BucketStore.MetaName)
-    val in = fs.open(meta)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val forged = body.replace(
-      s""""layout":${BucketStore.LayoutVersion}""", """"layout":99""")
-    assert(forged != body)
-    val out = fs.create(meta, true)
-    try out.write(forged.getBytes("UTF-8")) finally out.close()
+    LegacyLayout.editManifest(spark, state) { body =>
+      val forged = body.replace(
+        s""""layout":${BucketStore.LayoutVersion}""", """"layout":99""")
+      assert(forged != body)
+      forged
+    }
     val landed = java.nio.file.Paths.get(dir, "late_pairs", "_SUCCESS")
     val e = intercept[java.io.IOException] {
       CdcPipeline.applyDeferredJsonBucketed(raw.filter(col("seq") > mid),
@@ -1165,7 +1160,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(state == Map(1L -> """{"v":10}""", 3L -> """{"v":3}"""))
     // the tombstone for key 2 persists (commutativity across batches)
-    assert(spark.read.parquet(stateDir)
+    assert(BucketStore.readCurrent(spark, stateDir)
       .filter(col("op") === "delete" && col("key") === 2L).count() == 1L)
     // idempotent replay: re-applying batch2 changes nothing
     CdcPipeline.applyBatch(spark, changes2, stateDir)
@@ -1246,28 +1241,35 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("interrupted bucket swap is healed: __old restores when live is missing") {
+  test("legacy bucket=N__old leftovers are refused, naming the leftover") {
+    // an engine before the version log swapped buckets live → __old →
+    // staged; its crash windows left `bucket=N__old` dirs that it healed
+    // on the next read. This engine does not heal them: such a state
+    // refuses loudly instead of guessing which copy is live
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_rec_").toString + "/state"
     val seed = (0 until 100).map(i =>
       ChangeEvent("insert", "t", i.toLong, ts(1), i.toLong, s"""{"v":$i}"""))
-    CdcPipeline.applyBatch(spark, seed.toDF(), stateDir)
+    LegacyLayout.rowState(spark, stateDir, seed.toDF(), 8)
+    assert(CdcPipeline.currentState(spark, stateDir).count() == 100L)
     val buckets = new java.io.File(stateDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(buckets.length > 1)
-    // crash between the two renames: live was set aside, staged never
-    // published
+    // crash between the two renames: live set aside, nothing published
     val victim = buckets.head
     val old = new java.io.File(victim.getPath + "__old")
     assert(victim.renameTo(old))
+    val e1 = intercept[java.io.IOException](
+      CdcPipeline.currentState(spark, stateDir).count())
+    assert(e1.getMessage.contains(old.getName), e1.getMessage)
+    val e2 = intercept[java.io.IOException](CdcPipeline.applyBatch(spark,
+      seed.take(1).toDF(), stateDir))
+    assert(e2.getMessage.contains(old.getName), e2.getMessage)
+    // the operator restores the bucket: the state reads and upgrades
+    assert(old.renameTo(victim))
+    CdcPipeline.applyBatch(spark, seed.take(1).toDF(), stateDir)
+    assert(BucketStore.current(spark, stateDir).get.version == 1)
     assert(CdcPipeline.currentState(spark, stateDir).count() == 100L)
-    assert(victim.exists() && !old.exists())
-    // crash after publish: leftover __old beside a live dir is dropped
-    val survivor = buckets.last
-    val stale = new java.io.File(survivor.getPath + "__old")
-    java.nio.file.Files.createDirectories(stale.toPath)
-    assert(CdcPipeline.currentState(spark, stateDir).count() == 100L)
-    assert(survivor.exists() && !stale.exists())
   }
 
   test("file-fed CDC stream applies change files through checkpointed micro-batches") {
@@ -1600,8 +1602,7 @@ class StreamingSpec extends SparkSpec {
       ChangeEvent("insert", "t", i.toLong, ts(1), i.toLong, s"""{"v":$i}"""))
     CdcPipeline.applyBatch(spark, seed.toDF().repartition(32), stateDir,
       numBuckets = 32)
-    val buckets = new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    val buckets = LegacyLayout.liveDirs(spark, stateDir).toSeq.sortBy(_._1).map(_._2)
     assert(buckets.length == 32)
     buckets.foreach { b =>
       val parts = b.listFiles().count(_.getName.endsWith(".parquet"))
@@ -1629,20 +1630,19 @@ class StreamingSpec extends SparkSpec {
     assert(st.count() == 49L)
     assert(st.filter(col("key") === 7L).select("payload").head().getString(0)
       == """{"v":"new"}""")
-    // the crash-heal path must walk the same FS: set a bucket aside as
-    // __old (crash between the two renames) and read again
+    // the commit's garbage collection walks the same FS: a lost
+    // writer's version dir is collected by the next commit
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val buckets = fs.listStatus(new Path(stateDir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    assert(buckets.nonEmpty)
-    val victim = buckets.head.getPath
-    val old = new Path(victim.getParent, victim.getName + "__old")
-    assert(fs.rename(victim, old))
+    val lost = new Path(stateDir, "_v1_0123456789ab")
+    assert(fs.mkdirs(new Path(lost, "bucket=0")))
+    CdcPipeline.applyBatch(spark, Seq(
+      ChangeEvent("update", "t", 8L, ts(3), 102L, """{"v":"n8"}""")).toDF(),
+      stateDir)
+    assert(!fs.exists(lost), "GC must collect a lost writer's dir through the Hadoop FS")
+    assert(fs.exists(new Path(stateDir, s"${BucketStore.LogName}/3.json")))
     assert(CdcPipeline.currentState(spark, stateDir).count() == 49L)
-    assert(fs.exists(victim) && !fs.exists(old),
-      "heal must restore the set-aside bucket through the Hadoop FS")
   }
 
   test("stream enrichment probes state existence through the Hadoop FS (file:-scheme)") {
@@ -1693,17 +1693,20 @@ class StreamingSpec extends SparkSpec {
       .filter(col("key") === 42L).select("payload").collect()
     assert(live.map(_.getString(0)).toSeq == Seq("""{"v":"new"}"""),
       s"exactly one live version expected, got ${live.length}")
-    val bucketDirs = new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    val bucketDirs = LegacyLayout.liveDirs(spark, stateDir).toSeq.sortBy(_._1).map(_._2)
     assert(bucketDirs.length <= 8,
       s"a 16-bucket write leaked past the recorded count: ${bucketDirs.length}")
-    // legacy dir (meta deleted): the next apply adopts the caller's
-    // count and records it
-    assert(new java.io.File(s"$stateDir/_graft_buckets.json").delete())
+    // pre-contract legacy dir (no meta): the next apply adopts the
+    // caller's count and records it
+    val legacy = stateDir + "_legacy"
+    LegacyLayout.write(spark, legacy, seed.toDF().withColumn("bucket",
+      pmod(xxhash64(col("table"), col("key")), lit(8)).cast("int")), None)
+    assert(CdcPipeline.readBucketCount(spark, legacy).isEmpty)
     CdcPipeline.applyBatch(spark, Seq(
       ChangeEvent("update", "t", 42L, ts(3), 1001L, """{"v":"n2"}""")).toDF(),
-      stateDir, numBuckets = 8)
-    assert(CdcPipeline.readBucketCount(spark, stateDir).contains(8))
+      legacy, numBuckets = 8)
+    assert(CdcPipeline.readBucketCount(spark, legacy).contains(8))
+    assert(CdcPipeline.currentState(spark, legacy).count() == 100L)
   }
 
   test("rebucket rewrites state to a new count atomically, tombstones included") {
@@ -1733,14 +1736,15 @@ class StreamingSpec extends SparkSpec {
       ChangeEvent("update", "t", 7L, ts(3), 600L, """{"v":"u"}""")).toDF(),
       stateDir)
     assert(snapshot()(7L) == """{"v":"u"}""")
-    // crash heal one level up: live set aside as __old with no live dir
-    // (the between-renames crash of the whole-dir swap)
+    // an older engine's whole-dir swap leftover (live set aside as
+    // __old with no live dir) is refused, not healed
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new Path(stateDir), new Path(stateDir + "__old")))
-    assert(CdcPipeline.currentState(spark, stateDir).count() == 199L)
-    assert(fs.exists(new Path(stateDir)) && !fs.exists(new Path(stateDir + "__old")))
+    val e = intercept[java.io.IOException](
+      CdcPipeline.currentState(spark, stateDir).count())
+    assert(e.getMessage.contains("state__old"), e.getMessage)
   }
 
   test("split-bucket refines ONE bucket in place; applies stay correct across it") {
@@ -1767,7 +1771,7 @@ class StreamingSpec extends SparkSpec {
     assert(levels1 == Map(hot + 8 -> 1, hot + 16 -> 1),
       s"children of $hot must be recorded at level 1, got $levels1")
     assert(snapshot() == before, "split must preserve live state exactly")
-    assert(!new java.io.File(s"$base/state/bucket=$hot").exists(),
+    assert(!LegacyLayout.liveDirs(spark, s"$base/state").contains(hot),
       "the split parent dir must be gone")
     // a later apply touching a key of the SPLIT bucket must land in the
     // refined child — the meta-miss failure mode leaves two live versions
@@ -1798,29 +1802,26 @@ class StreamingSpec extends SparkSpec {
     }
     // split a CHILD: second-level refinement composes
     val child = Seq(hot + 8, hot + 16)
-      .find(c => new java.io.File(s"$base/state/bucket=$c").exists()).get
+      .find(c => LegacyLayout.liveDirs(spark, s"$base/state").contains(c)).get
     CdcPipeline.splitBucket(spark, stateDir, child)
     val (_, levels2) = CdcPipeline.readMeta(spark, stateDir).get
     assert(levels2.values.max == 2 && !levels2.contains(child))
     val after2 = snapshot()
     assert(after2 == before + (kStar -> """{"v":"u"}"""),
       "second split must preserve live state")
-    // pre-commit crash rollback: orphan staging + staged meta are swept
+    // a writer that crashed before its commit left only an unreferenced
+    // version dir: readers never see it and the next commit collects it
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/.split_999"))
-    val junkMeta = new org.apache.hadoop.fs.Path(
-      s"$stateDir/_graft_buckets.json.next")
-    val o = fs.create(junkMeta, true)
-    try o.write("""{"buckets":8}""".getBytes("UTF-8")) finally o.close()
-    assert(snapshot() == after2, "recovery must roll back an uncommitted split")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/.split_999")))
-    assert(!fs.exists(junkMeta))
+    val orphan = new org.apache.hadoop.fs.Path(stateDir, "_v1_abcdefabcdef")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(orphan, "bucket=999"))
+    assert(snapshot() == after2, "an uncommitted split must stay invisible")
     // rebucket after splits resets the refinement map
     CdcPipeline.rebucket(spark, stateDir, 16)
     val (b3, levels3) = CdcPipeline.readMeta(spark, stateDir).get
     assert(b3 == 16 && levels3.isEmpty)
     assert(snapshot() == after2)
+    assert(!fs.exists(orphan))
     // the ADVISORY drives the split mechanically: make one bucket hot
     // (inserts of fresh keys chosen to hash into it), adviseSplit must
     // name exactly that bucket, and splitting it must preserve state
@@ -1883,7 +1884,7 @@ class StreamingSpec extends SparkSpec {
       val (_, levels2) = CdcPipeline.readMeta(spark, stateDir).get
       assert(levels2 == levels1, s"no second split expected, got $levels2")
     } finally q.stop()
-    assert(!new java.io.File(s"$stateDir/bucket=$hot").exists(),
+    assert(!LegacyLayout.liveDirs(spark, s"$stateDir").contains(hot),
       "the split parent dir must be gone")
     val state = CdcPipeline.currentState(spark, stateDir)
     assert(state.count() == 600L + 1200L + 400L)
@@ -1893,60 +1894,42 @@ class StreamingSpec extends SparkSpec {
       "exactly one live version of a refined key expected")
   }
 
-  test("a COMMITTED split interrupted before completion heals forward on read") {
-    // simulate the crash window between the commit rename and the child
-    // publications: stage the children + staged meta by hand, rename the
-    // live parent to the marker — exactly splitBucket's state right
-    // after its commit point — then read; recovery must publish the
-    // children, swap the meta in, drop the marker, and lose nothing
+  test("legacy split leftovers (.splitting_ marker, .split_ staging) are refused") {
+    // an engine before the version log committed a split by renaming
+    // the parent to a `.splitting_<p>_<lo>_<hi>` marker and finished it
+    // on the next read; with that heal gone, both a committed marker and
+    // uncommitted `.split_` staging refuse, naming the entry
     val base = java.nio.file.Files
       .createTempDirectory("graft_cdc_splitheal_").toString
     val stateDir = s"file:$base/state"
     val seed = (0 until 200).map(i =>
       ChangeEvent("insert", "t", i.toLong, ts(1), i.toLong, s"""{"v":$i}"""))
-    CdcPipeline.applyBatch(spark, seed.toDF(), stateDir, numBuckets = 8)
-    val before = CdcPipeline.currentState(spark, stateDir)
-      .select("key", "payload").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    LegacyLayout.rowState(spark, s"$base/state", seed.toDF(), 8)
     val parent = 5
     val loTag = parent + 8; val hiTag = parent + 16
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stage refined children (what splitBucket writes before commit)
-    val cols = Seq("op", "table", "key", "ts", "seq", "payload")
-    spark.read.parquet(stateDir).filter(col("bucket") === parent)
-      .select(cols.map(col): _*)
-      .withColumn("bucket",
-        (pmod(xxhash64(col("table"), col("key")), lit(16L)) + lit(8L))
-          .cast("int"))
-      .repartition(2, col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$stateDir/.split_$parent")
-    val next = new Path(s"$stateDir/_graft_buckets.json.next")
-    val o = fs.create(next, true)
-    try o.write(
-      s"""{"buckets":8,"levels":{"$loTag":1,"$hiTag":1}}""".getBytes("UTF-8"))
-    finally o.close()
-    // COMMIT, then "crash": the parent dir becomes the marker
-    assert(fs.rename(new Path(s"$stateDir/bucket=$parent"),
-      new Path(s"$stateDir/.splitting_${parent}_${loTag}_$hiTag")))
-    // any entry point heals forward
-    val after = CdcPipeline.currentState(spark, stateDir)
-      .select("key", "payload").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(after == before, "forward heal must lose no rows")
+    val marker = new Path(s"$stateDir/.splitting_${parent}_${loTag}_$hiTag")
+    assert(fs.rename(new Path(s"$stateDir/bucket=$parent"), marker))
+    val e1 = intercept[java.io.IOException](
+      CdcPipeline.currentState(spark, stateDir).count())
+    assert(e1.getMessage.contains(marker.getName), e1.getMessage)
+    assert(intercept[java.io.IOException](
+      CdcPipeline.splitBucket(spark, stateDir, 3)).getMessage
+      .contains(marker.getName))
+    assert(fs.rename(marker, new Path(s"$stateDir/bucket=$parent")))
+    val staging = new Path(s"$stateDir/.split_$parent")
+    assert(fs.mkdirs(staging))
+    val e2 = intercept[java.io.IOException](
+      CdcPipeline.currentState(spark, stateDir).count())
+    assert(e2.getMessage.contains(staging.getName), e2.getMessage)
+    fs.delete(staging, true)
+    // cleaned up by hand, the legacy state splits under the version log
+    CdcPipeline.splitBucket(spark, stateDir, parent)
     val (b, levels) = CdcPipeline.readMeta(spark, stateDir).get
     assert(b == 8 && levels == Map(loTag -> 1, hiTag -> 1))
-    assert(!fs.exists(new Path(s"$stateDir/.splitting_${parent}_${loTag}_$hiTag")))
-    assert(!fs.exists(new Path(s"$stateDir/.split_$parent")))
-    assert(!fs.exists(next))
-    // and applies under the healed refinement still converge
-    CdcPipeline.applyBatch(spark, Seq(
-      ChangeEvent("update", "t", 5L, ts(2), 900L, """{"v":"u"}""")).toDF(),
-      stateDir)
-    val live5 = CdcPipeline.currentState(spark, stateDir)
-      .filter(col("key") === 5L).select("payload").collect()
-    assert(live5.map(_.getString(0)).toSeq == Seq("""{"v":"u"}"""))
+    assert(CdcPipeline.currentState(spark, stateDir).count() == 200L)
   }
 
   test("tombstone retention prunes past-watermark tombstones, incrementally") {
@@ -1972,7 +1955,7 @@ class StreamingSpec extends SparkSpec {
     }
     val before = files()
     CdcPipeline.pruneTombstones(spark, stateDir, ts(4))
-    assert(spark.read.parquet(stateDir)
+    assert(BucketStore.readCurrent(spark, stateDir)
       .filter(col("op") === "delete").select("key").collect()
       .map(_.getLong(0)).toSeq == Seq(7L))
     assert(CdcPipeline.currentState(spark, stateDir).count() == 98L)
@@ -2053,7 +2036,7 @@ class StreamingSpec extends SparkSpec {
     // the torn window IS observable (honest contract, not hidden):
     // ta has the transaction, tb has nothing yet
     assert(live(s"$base/a") == live(s"$base/ref_a"))
-    assert(!BucketStore.hasRows(spark, s"$base/b"))
+    assert(!BucketStore.hasRows(BucketStore.current(spark, s"$base/b")))
     // redelivery replays the WHOLE batch: ta's re-apply converges to
     // the identical state (latest-version collapse), tb's apply lands
     applyTable("ta", s"$base/a"); applyTable("tb", s"$base/b")

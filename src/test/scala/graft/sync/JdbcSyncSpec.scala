@@ -734,7 +734,7 @@ class JdbcSyncSpec extends SparkSpec {
       "\"tombstones\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toInt).sum == 1)
     run("state", "--state_dir", stateDir, "--state_op", "prune-tombstones",
       "--watermark", "2024-01-01 03:00:00")
-    assert(spark.read.parquet(stateDir)
+    assert(graft.streaming.BucketStore.readCurrent(spark, stateDir)
       .filter(col("op") === "delete").count() == 0L)
     val reb = run("state", "--state_dir", stateDir,
       "--state_op", "rebucket", "--buckets", "8")
@@ -842,7 +842,7 @@ class JdbcSyncSpec extends SparkSpec {
     CdcQualityKeyed.applyBatch(hist.toDF(), qDir, kSpec, numBuckets = 4)
     val before = CdcQualityKeyed.view(spark, qDir, kSpec)
       .collect().map(_.toSeq).toSeq
-    def uRows() = spark.read.parquet(s"$qDir/u")
+    def uRows() = graft.streaming.BucketStore.readCurrent(spark, s"$qDir/u")
       .filter(col("part") === "s").count()
     assert(uRows() == 9L)
     val pruned = run("monitor", "--state_dir", qDir,
