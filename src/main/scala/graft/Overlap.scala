@@ -33,9 +33,6 @@ object Overlap {
       new ThreadPoolExecutor.CallerRunsPolicy()))
   }
 
-  /** Start `body` on [[pool]]. */
-  def apply[T](body: => T): Future[T] = Future(body)(pool)
-
   /** Wait for EVERY sibling, then rethrow the first failure (in argument
     * order), else return the results in argument order. `Await.result`
     * on each in turn — or on a `zip` or `Future.sequence` — fails fast

@@ -33,7 +33,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *     commit only v, so a writer whose base was superseded — a second
   *     stream, or a CLI split/rebucket racing an apply — fails the
   *     create and refuses loudly, naming the newer version; it can never
-  *     publish rows tagged under a contract that changed under it.
+  *     publish rows tagged under a contract that changed under it. Each
+  *     manifest names its writer and its base's writer, so a create that
+  *     reused a pruned version number is recognised and taken back.
   *   - readers resolve the newest manifest and scan exactly its paths
   *     (`bucket` is the partition column), so no reader ever sees a
   *     half-published mutation and none needs a recover step.
@@ -42,7 +44,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *     `_v<n>_*` dir with n ≤ the committed version that the manifest
   *     does not reference is garbage (its writer lost the create for n,
   *     or was superseded); dirs tagged above it may be in flight and are
-  *     left alone. The newest [[KeepManifests]] manifests are kept.
+  *     left alone. The newest [[KeepManifests]] manifests are kept. A
+  *     dir with no visible entry and no legacy meta (what a failed first
+  *     commit leaves) is no state.
   *   - a LEGACY state (no `_graft_log`: live `bucket=N` dirs plus the
   *     `_graft_buckets.json` / `_graft_ranges.json` metas) reads as
   *     version 0, and its first mutation commits version 1 referencing
@@ -68,12 +72,11 @@ private[graft] object BucketStore {
   /** The version log's dir name inside a state dir. */
   val LogName = "_graft_log"
 
-  /** Manifests kept after a commit, newest first: committing version v
-    * deletes version v − KeepManifests. A committer whose base manifest
-    * was pruned meanwhile refuses (a later version already existed), so
-    * this only has to outlast one mutation's span in commits — a
-    * handful. A crash between a commit and its prune leaves that one
-    * old manifest behind, unread.
+  /** Manifests kept after a commit: committing version v deletes
+    * every listed version ≤ v − KeepManifests, oldest first, so a
+    * manifest a crash left behind goes with the next commit. A committer
+    * whose create reused a pruned version number finds later versions
+    * that do not descend from it and refuses (see [[commit]]).
     */
   val KeepManifests = 4
 
@@ -103,14 +106,17 @@ private[graft] object BucketStore {
     * contract (a pre-contract legacy dir, which adopts the caller's
     * count); `live` maps each live bucket tag to its data dir, relative
     * to the state dir; `schema` is the rows' data schema (`bucket`
-    * excluded), None only for a legacy state.
+    * excluded), None only for a legacy state. `id` is the committing
+    * writer's unique id and `parent` its base's, so a version's successor
+    * names the manifest it was built on ("" for a legacy base).
     */
   final case class Manifest(version: Long, buckets: Int,
                             levels: Map[Int, Int] = Map.empty,
                             layout: Option[Int] = Some(LayoutVersion),
                             ranges: Option[String] = None,
                             schema: Option[StructType] = None,
-                            live: Map[Int, String] = Map.empty) {
+                            live: Map[Int, String] = Map.empty,
+                            id: String = "", parent: String = "") {
 
     /** Readable rows present: a live bucket, or a pre-contract legacy
       * dir (read as before, unpartitioned files included).
@@ -150,7 +156,10 @@ private[graft] object BucketStore {
     val f = fs(spark, stateDir)
     val log = new Path(stateDir, LogName)
     logVersions(f, log).lastOption match {
-      case Some(v) => Some(parse(readText(f, new Path(log, s"$v.json"))))
+      case Some(v) =>
+        // pruned between the listing and the read: newer versions exist
+        try Some(parse(readText(f, new Path(log, s"$v.json"))))
+        catch { case _: java.io.FileNotFoundException => current(spark, stateDir) }
       case None => legacy(f, stateDir)
     }
   }
@@ -164,7 +173,8 @@ private[graft] object BucketStore {
   private def render(m: Manifest): String = {
     def obj(kv: Seq[(Int, String)]) =
       kv.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val fields = Seq(s""""version":${m.version}""", s""""buckets":${m.buckets}""") ++
+    val fields = Seq(s""""version":${m.version}""", s""""id":"${m.id}"""",
+      s""""parent":"${m.parent}"""", s""""buckets":${m.buckets}""") ++
       m.layout.map(l => s""""layout":$l""") ++
       Seq(s""""levels":${obj(m.levels.toSeq.map { case (t, l) => t -> l.toString })}""") ++
       m.ranges.map(r => s""""ranges":$r""") ++
@@ -185,7 +195,8 @@ private[graft] object BucketStore {
       Option(n.get("ranges")).map(_.toString),
       Option(n.get("schema")).map(s =>
         DataType.fromJson(s.toString).asInstanceOf[StructType]),
-      intMap("live").map { case (t, p) => t -> p.asText })
+      intMap("live").map { case (t, p) => t -> p.asText },
+      Option(n.get("id")).fold("")(_.asText), Option(n.get("parent")).fold("")(_.asText))
   }
 
   /** A pre-manifest state read as version 0 — refused when it carries a
@@ -208,6 +219,11 @@ private[graft] object BucketStore {
       n.startsWith(".split") || (st.isDirectory && n.endsWith("__old"))
     }.foreach(st => refuse(st.getPath))
     val names = entries.map(_.getPath.getName).toSet
+    // what a first commit that failed or crashed leaves (an empty dir, its
+    // own `_v1_*` dir, an empty log) holds no state: Spark would read it
+    // as no rows and no `bucket` column
+    if (!names.exists(n => n == MetaName || !(n.startsWith("_") || n.startsWith("."))))
+      return None
     def text(name: String) =
       if (names(name)) Some(readText(f, new Path(dir, name))) else None
     val meta = text(MetaName)
@@ -290,10 +306,11 @@ private[graft] object BucketStore {
       // commit collected it mid-read, and the read must not silently
       // come back short
       val listed = index.allFiles().map(_.getPath.getParent).toSet
-      parts.map(_.path).find(p => !listed(p))
-        .foreach(p => throw new java.io.FileNotFoundException(
-          s"$p of version ${m.version} of $stateDir is gone: a newer " +
-            "commit superseded it during this read; read again"))
+      parts.map(_.path).find(p => !listed(p)).foreach(p =>
+        throw new Superseded(s"state at $stateDir is at version " +
+          s"${logVersions(f, new Path(stateDir, LogName)).lastOption.getOrElse(0L)}: " +
+          s"a newer commit collected $p of version ${m.version} during this " +
+          "read; read again"))
       spark.baseRelationToDataFrame(HadoopFsRelation(index, bucketCol,
         dataSchema, None, new parquet.ParquetFileFormat(), Map.empty)(spark))
     }
@@ -329,11 +346,15 @@ private[graft] object BucketStore {
     * contract, run `beforeCommit`, then create the next manifest
     * exclusively. Returns the committed manifest.
     *
-    * A lost create, or a base manifest pruned by the time the create
-    * lands (a later version already existed), refuses with an
-    * IOException naming the newer version. After the commit the paths
-    * it superseded, and any garbage left by lost or crashed writers,
-    * are deleted before this returns.
+    * A writer whose base was superseded refuses with an IOException
+    * naming the newer version: its create loses, or — when its version
+    * number was pruned, so the create lands beside later versions — the
+    * next version it finds does not name it as parent, and it takes its
+    * manifest back. A failure of a writer whose version was meanwhile
+    * committed by another (e.g. its in-flight dir collected by the
+    * winner's sweep) is reported as that refusal too. After the commit
+    * the paths it superseded, and any garbage left by lost or crashed
+    * writers, are deleted before this returns.
     */
   def commit(spark: SparkSession, stateDir: String, base: Option[Manifest],
              rows: Option[DataFrame], drops: Int => Boolean,
@@ -347,9 +368,12 @@ private[graft] object BucketStore {
           s"engine's $LayoutVersion — writing would strip parts its " +
           "readers trust the stamp for; upgrade the engine"))
     val v = from.version + 1
-    val tag = s"_v${v}_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    val tag = s"_v${v}_$id"
     val out = new Path(stateDir, tag)
     val log = new Path(stateDir, LogName)
+    val manifest = new Path(log, s"$v.json")
+    def newest() = logVersions(f, log).lastOption.getOrElse(from.version)
     val next = try {
       val written = rows.fold(Map.empty[Int, String]) { df =>
         df.write.partitionBy("bucket").parquet(out.toString)
@@ -357,66 +381,95 @@ private[graft] object BucketStore {
           .filter(_.startsWith("bucket="))
           .map(n => n.stripPrefix("bucket=").toInt -> s"$tag/$n").toMap
       }
-      val m = meta(from).copy(version = v,
+      val m = meta(from).copy(version = v, id = id, parent = from.id,
         schema = rows.map(df => StructType(df.schema.fields
           .filterNot(_.name == "bucket").map(_.copy(nullable = true))))
           .orElse(from.schema),
         live = from.live.filter { case (b, _) => !drops(b) } ++ written)
       beforeCommit()
       if (from.version == 0) f.mkdirs(log)
-      if (!createExclusive(f, new Path(log, s"$v.json"), render(m)))
-        throw superseded(stateDir, from.version, logVersions(f, log).last)
+      if (!createExclusive(f, stateDir, manifest, render(m)))
+        throw superseded(stateDir, from.version, newest())
       m
-    } catch { case t: Throwable =>
-      try f.delete(out, true) catch { case _: Throwable => () }
-      throw t
+    } catch {
+      case t: Throwable =>
+        try f.delete(out, true) catch { case _: Throwable => () }
+        val lost = !t.isInstanceOf[Superseded] &&
+          (try newest() >= v catch { case _: Throwable => false })
+        if (lost) throw superseded(stateDir, from.version, newest()).initCause(t)
+        throw t
     }
-    // a state's first commit checks the whole log (it has no base file)
-    val baseGone =
-      if (from.version > 0) !f.exists(new Path(log, s"${from.version}.json"))
-      else logVersions(f, log).exists(_ != v)
-    if (baseGone) throw superseded(stateDir, from.version, logVersions(f, log).last)
+    // Created. The newest version never leaves the log (pruning keeps
+    // the newest KeepManifests), so a later version listed now either
+    // descends from this commit, or existed before it — this writer's
+    // version number had been pruned, and its manifest is not the state
+    val versions = logVersions(f, log)
+    if (versions.lastOption.exists(_ > v)) {
+      val successor = if (versions.contains(v + 1))
+        Some(parse(readText(f, new Path(log, s"${v + 1}.json")))) else None
+      if (successor.exists(_.parent == id)) return next // it collects for us
+      if (successor.isDefined) {
+        f.delete(manifest, false)
+        f.delete(out, true)
+      } // else undecidable: leave both to the next commit's sweep and prune
+      throw superseded(stateDir, from.version, versions.last)
+    }
     collectGarbage(f, stateDir, from, next)
-    if (v > KeepManifests) f.delete(new Path(log, s"${v - KeepManifests}.json"), false)
+    versions.takeWhile(_ <= v - KeepManifests).foreach(o =>
+      f.delete(new Path(log, s"$o.json"), false))
     next
   }
 
+  /** The refusal of a writer whose base version was superseded. */
+  final class Superseded(msg: String) extends java.io.IOException(msg)
+
   private def superseded(stateDir: String, base: Long, newer: Long) =
-    new java.io.IOException(
+    new Superseded(
       s"state at $stateDir is at version $newer, committed by another " +
         s"writer after this mutation read version $base; refusing — its " +
         "rows were computed against a superseded contract (concurrent " +
         "writers on one state dir: quiesce the other, then retry)")
 
   /** Create `p` holding `body` only if it does not exist — the commit
-    * point. `file:` paths go through the kernel: the body is written to
-    * a dot-named temp file in the state dir and hard-linked into place,
-    * and link(2) fails
-    * atomically when the target exists (across processes too — Hadoop's
-    * LocalFileSystem `create(overwrite = false)` is an exists-then-create
-    * race), so no reader ever sees a created but unwritten manifest.
-    * Other schemes use the FS's own `create(p, false)`.
+    * point. The body is first written in full to a dot-named temp file
+    * in the state dir (where the GC sweep finds it if this writer dies),
+    * then moved into place by an op that fails when `p` exists, so no
+    * reader or crash ever leaves a created but unwritten manifest.
+    * `file:` paths go through the kernel's link(2), atomic and exclusive
+    * across processes (Hadoop's LocalFileSystem `create(overwrite =
+    * false)` is an exists-then-create race, and its rename overwrites).
+    * Other schemes use the FS's `rename`, which on HDFS fails atomically
+    * when the destination exists; a store whose rename overwrites cannot
+    * hold a state dir.
     */
-  private def createExclusive(f: FileSystem, p: Path, body: String): Boolean = {
+  private def createExclusive(f: FileSystem, stateDir: String, p: Path,
+                              body: String): Boolean = {
     val bytes = body.getBytes("UTF-8")
+    val tmp = new Path(stateDir, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
     // FileSystem.getScheme's base implementation throws
     val scheme = try f.getScheme catch { case _: Throwable => "" }
     if (scheme == "file") {
-      val target = java.nio.file.Paths.get(p.toUri.getPath)
-      // beside the log, in the state dir, where the GC sweep finds it
-      // if this writer dies before the link
-      val tmp = target.getParent.resolveSibling(
-        s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmp, bytes)
-      try { java.nio.file.Files.createLink(target, tmp); true }
+      def local(x: Path) = java.nio.file.Paths.get(x.toUri.getPath)
+      java.nio.file.Files.write(local(tmp), bytes)
+      try { java.nio.file.Files.createLink(local(p), local(tmp)); true }
       catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      finally java.nio.file.Files.deleteIfExists(tmp)
+      finally try java.nio.file.Files.deleteIfExists(local(tmp))
+              catch { case _: java.io.IOException => () }
     } else {
-      val out =
-        try f.create(p, false)
-        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false }
+      val out = f.create(tmp, true)
       try out.write(bytes) finally out.close()
-      true
+      val moved =
+        try f.rename(tmp, p)
+        catch { case t: Throwable =>
+          try f.delete(tmp, false) catch { case _: Throwable => () }
+          if (t.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException]) false
+          else throw t
+        }
+      if (!moved) {
+        f.delete(tmp, false)
+        if (!f.exists(p)) throw new java.io.IOException(s"could not move $tmp to $p")
+      }
+      moved
     }
   }
 

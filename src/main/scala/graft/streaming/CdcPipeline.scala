@@ -665,7 +665,7 @@ object CdcPipeline {
           .filter(col("evs").isNotNull && size(fresh) > 0)
           .select(col("src"), col("key"), col("doc0").as("before"),
             docFold(fresh, col("doc0")).as("after"))
-        graft.Overlap(hook(pairs))
+        scala.concurrent.Future(hook(pairs))(graft.Overlap.pool)
       }
       val inf = scala.concurrent.duration.Duration.Inf
       try BucketStore.writeBuckets(spark, merged, stateDir, base, touched,

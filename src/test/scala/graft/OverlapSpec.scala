@@ -30,10 +30,11 @@ class OverlapSpec extends AnyFunSuite {
     // inner overlaps: with a queue, the inner tasks would wait behind
     // outer tasks that wait for them
     val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def overlap[T](body: => T) = Future(body)(Overlap.pool)
     val outer = (1 to 2 * Overlap.MaxThreads).map { i =>
-      Overlap {
+      overlap {
         names.add(Thread.currentThread().getName)
-        Overlap.results((1 to 3).map(j => Overlap { Thread.sleep(20); i * j })).sum
+        Overlap.results((1 to 3).map(j => overlap { Thread.sleep(20); i * j })).sum
       }
     }
     val done = Future(Overlap.results(outer))

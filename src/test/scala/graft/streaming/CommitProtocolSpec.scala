@@ -133,9 +133,70 @@ class CommitProtocolSpec extends SparkSpec {
     assert(landedKeys.nonEmpty, "no apply landed")
     assert(landedKeys.subsetOf(keys), s"landed updates lost: ${landedKeys -- keys}")
     assert((lostKeys & keys).isEmpty, s"refused applies landed: ${lostKeys & keys}")
+    lost.forEach { case (k, e) => assert(
+      Option(e.getMessage).exists(_.contains("is at version")),
+      s"apply of $k lost without the named refusal: $e") }
     assert(keys.size == 40 + landedKeys.size)
     // one version per landed apply: every commit was v+1 of its own base
     assert(version(dir) == 1 + landedKeys.size)
+  }
+
+  test("a writer more than KeepManifests commits stale refuses even when " +
+      "its base manifest was left behind, and collects nothing live") {
+    val dir = tmp("commit_far_stale_")
+    def apply(keys: Seq[Long], h: Int, seq0: Long) =
+      CdcPipeline.applyBatch(spark, rows(keys, h, seq0, s"h$h").toDF(), dir,
+        numBuckets = 4)
+    val log = java.nio.file.Paths.get(dir, BucketStore.LogName)
+    def saved() = (BucketStore.current(spark, dir),
+      java.nio.file.Files.readAllBytes(log.resolve(s"${version(dir)}.json")))
+    apply(0L until 40L, 1, 0L)
+    val (stale1, body1) = saved()
+    apply(0L until 40L, 2, 100L)
+    val (stale2, body2) = saved()
+    // v3 rewrites every bucket; v4..v7 rewrite only key 0's, so the
+    // newest version still lists dirs that v3 wrote
+    apply(0L until 40L, 3, 200L)
+    (4 to 7).foreach(h => apply(Seq(0L), h, 100L * h))
+    assert(version(dir) == 7)
+    def logged() = new java.io.File(log.toString).list().toSeq.sorted
+    assert(logged() == (7 - BucketStore.KeepManifests + 1 to 7).map(v => s"$v.json"))
+    val before = CdcPipeline.currentState(spark, dir).collect().toSet
+    def write(base: Option[BucketStore.Manifest]) = {
+      val batch = rows(Seq(999L), 9, 9000L, "z").toDF()
+        .select(CdcPipeline.changeEventSchema.fieldNames.map(col): _*)
+        .withColumn("bucket",
+          BucketStore.bucketTag(xxhash64(col("table"), col("key")), 4, Map.empty))
+      val touched = batch.select("bucket").as[Int].collect()
+      intercept[java.io.IOException](
+        BucketStore.writeBuckets(spark, batch, dir, base, touched, 4))
+    }
+    def restore(v: Int, body: Array[Byte]) =
+      java.nio.file.Files.write(log.resolve(s"$v.json"), body)
+    // what a crash between a commit and its prune leaves: an old manifest.
+    // A writer based on it recreates the pruned 3.json; the 4.json it
+    // finds names another parent, so it takes its manifest and dir back
+    restore(2, body2)
+    val e2 = write(stale2)
+    assert(e2.getMessage.contains("is at version 7"), e2.getMessage)
+    assert(!java.nio.file.Files.exists(log.resolve("3.json")))
+    // one whose successor version is pruned as well cannot tell: it
+    // refuses and leaves its leftovers to the next commit
+    java.nio.file.Files.delete(log.resolve("2.json"))
+    restore(1, body1)
+    val e1 = write(stale1)
+    assert(e1.getMessage.contains("is at version 7"), e1.getMessage)
+    // neither moved the state nor collected a live dir
+    assert(version(dir) == 7)
+    assert(LegacyLayout.liveDirs(spark, dir).values.forall(_.exists))
+    assert(CdcPipeline.currentState(spark, dir).collect().toSet == before)
+    // the next commit prunes the old manifests and sweeps the leftovers
+    apply(Seq(1L), 10, 1000L)
+    assert(logged() == (8 - BucketStore.KeepManifests + 1 to 8).map(v => s"$v.json"))
+    val referenced = BucketStore.current(spark, dir).get.live.values
+      .map(_.takeWhile(_ != '/')).toSet
+    assert(new java.io.File(dir).list().filter(_.startsWith("_v"))
+      .forall(referenced), "a refused writer's data dir was not collected")
   }
 
   test("a writer crashed mid-mutation leaves nothing that blocks the next " +

@@ -35,7 +35,7 @@ class CommitSweepSpec extends SparkSpec {
       s"""{"k":$k,"amt":${k % 13}.5,"cat":"c${k % 5}"}""", null, "s",
       seq0 + k)).toDF()
 
-  private def copyTree(src: JPath, dst: JPath): Unit = {
+  private def copyTree(src: JPath, dst: JPath): Unit = if (Files.exists(src)) {
     val walk = Files.walk(src)
     try walk.forEach(p => Files.copy(p, dst.resolve(src.relativize(p))))
     finally walk.close()
@@ -44,12 +44,12 @@ class CommitSweepSpec extends SparkSpec {
   private def fault(p: JPath) = s"fault://${p.toAbsolutePath}"
 
   /** What a fresh reader sees: the contract plus every row with its tag. */
-  private def snapshot(dir: String): Seq[String] = {
-    val m = BucketStore.current(spark, dir).get
-    s"${m.buckets} ${m.levels.toSeq.sorted} ${m.ranges}" +:
-      BucketStore.read(spark, dir, m).collect().map(_.toSeq.mkString("|"))
-        .toSeq.sorted
-  }
+  private def snapshot(dir: String): Seq[String] =
+    BucketStore.current(spark, dir).fold(Seq("no state")) { m =>
+      s"${m.buckets} ${m.levels.toSeq.sorted} ${m.ranges}" +:
+        BucketStore.read(spark, dir, m).collect().map(_.toSeq.mkString("|"))
+          .toSeq.sorted
+    }
 
   /** Sweep `mutate` over the state `build` leaves; returns the number of
     * crash points visited.
@@ -96,6 +96,17 @@ class CommitSweepSpec extends SparkSpec {
   test("crash sweep: row apply") {
     sweep("apply", rowState, d =>
       CdcPipeline.applyBatch(spark, events(30L until 50L, 3, 200L), d))
+  }
+
+  // a crashed first commit leaves no state, not an unreadable one
+  test("crash sweep: first row apply") {
+    sweep("first_apply", _ => (), d => CdcPipeline.applyBatch(spark,
+      events(0L until 20L, 1, 0L), d, numBuckets = 4))
+  }
+
+  test("crash sweep: ranged first seed") {
+    sweep("ranged_seed", _ => (), d => CdcProfileRanged.applyBatch(
+      profileRows(0L until 20L, 0L), d, rangedSpec, numBuckets = 2))
   }
 
   test("crash sweep: hash profile apply") {

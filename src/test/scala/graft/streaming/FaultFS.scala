@@ -8,13 +8,14 @@ import org.apache.hadoop.util.Progressable
 
 /** Test-only local file system under the `fault:` scheme (register it
   * as `fs.fault.impl`). Once [[FaultFS.arm]]ed on some dirs, it counts
-  * the creates, renames, deletes and mkdirs of those dirs' direct
-  * children and throws [[FaultFS.Crash]] in place of the k-th — a crash
+  * the creates, renames (from or into them), deletes and mkdirs of
+  * those dirs' direct children and throws [[FaultFS.Crash]] in place of the k-th — a crash
   * just before that op. Sweeping k = 1, 2, … until a run completes
   * visits every crash point of a protocol that mutates the dirs'
   * entries. Deeper paths (Spark's `_temporary` committer ops inside a
   * data dir) are not counted: a crash there leaves an unreferenced data
-  * dir, the same case as a crash before the commit.
+  * dir, the same case as a crash before the commit. A rename onto an
+  * existing file fails, as on HDFS.
   */
 class FaultFS extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = FaultFS.Uri
@@ -26,8 +27,12 @@ class FaultFS extends FilterFileSystem(new RawLocalFileSystem {
     FaultFS.tick(p)
     super.create(p, perm, overwrite, bufferSize, replication, blockSize, progress)
   }
+  // a rename onto an existing file fails, as on HDFS (the local FS
+  // overwrites); checked then renamed, so exclusive within one process
   override def rename(src: Path, dst: Path): Boolean = {
-    FaultFS.tick(src); super.rename(src, dst)
+    FaultFS.tick(src, dst)
+    if (exists(dst) && getFileStatus(dst).isFile) false
+    else super.rename(src, dst)
   }
   override def delete(p: Path, recursive: Boolean): Boolean = {
     FaultFS.tick(p); super.delete(p, recursive)
@@ -58,10 +63,11 @@ object FaultFS {
   /** Stop injecting; returns how many ops were counted. */
   def disarm(): Int = synchronized { roots = Set.empty; seen }
 
-  private def tick(p: Path): Unit = synchronized {
-    if (Option(p.getParent).exists(d => roots(d.toUri.getPath))) {
+  /** Count one op touching `ps` (a rename: its source and target). */
+  private def tick(ps: Path*): Unit = synchronized {
+    if (ps.exists(p => Option(p.getParent).exists(d => roots(d.toUri.getPath)))) {
       seen += 1
-      if (seen == k) throw new Crash(seen, p)
+      if (seen == k) throw new Crash(seen, ps.last)
     }
   }
 }
