@@ -4576,12 +4576,11 @@ object Queries {
         // ...and the quality monitor's seed: live rows enter as insert
         // indicators, so stream-time retractions cancel them exactly
         val fSeedQual = Future {
-          CdcQuality.partial(snapC.select(lit("insert").as("op"),
+          graft.streaming.PartialState.land(
+            CdcQuality.partial(snapC.select(lit("insert").as("op"),
                 col("payload"),
                 lit(null).cast("string").as("payload_before")),
-              checks)
-            .withColumn("batch_id", lit(-1L))
-            .write.partitionBy("batch_id").parquet(qDir)
+              checks), qDir, -1L)
         }
         try Overlap.awaitAll(fSeedState, fSeedQual, fCount)
         finally { snapC.unpersist(); () }
@@ -4603,11 +4602,8 @@ object Queries {
                 stateDir)
             }
             val fQual = Future {
-              CdcQuality.partial(ev, checks)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(qDir)
+              graft.streaming.PartialState.land(CdcQuality.partial(ev, checks),
+                qDir, id)
             }
             Overlap.awaitAll(fState, fQual)
           }
@@ -5231,9 +5227,9 @@ object Queries {
 
     // The join-IVM STREAMING path under the oracle gate (completing
     // the production-path trilogy with st_cdc_profile_topk and
-    // st_cdc_quality_keyed_stream): JoinIvm.applyBatch — the
-    // batch-versioned round-dir protocol with RoundState prune +
-    // viewbase compaction — driven over two micro-batches of the raw
+    // st_cdc_quality_keyed_stream): JoinIvm.applyBatch — one
+    // version-log commit per round, carrying the prune and the
+    // view-base fold — driven over two micro-batches of the raw
     // wire log, view checked against the maintain twin's SQL. Splits
     // are arbitrary: the bilinear rule is batching-invariant.
     Q("st_cdc_join_ivm_stream",

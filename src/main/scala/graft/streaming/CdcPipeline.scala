@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -470,9 +470,10 @@ object CdcPipeline {
       col(tsCol).cast("timestamp").as("ts"),
       lit(0L).as("seq"),
       to_json(struct(snapshot.columns.map(col): _*)).as("payload"))
-    // same bucketed layout the streaming apply maintains
-    withBucket(asState, DefaultStateBuckets).write
-      .mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stateDir)
+    // one commit replacing whatever the state held, under the bucketed
+    // layout the streaming apply maintains
+    BucketStore.publishRebucket(spark, withBucket(asState, DefaultStateBuckets),
+      stateDir, BucketStore.current(spark, stateDir), DefaultStateBuckets)
     if (useBinlog) startFromBinlog(spark, changesDir, stateDir, checkpointDir)
     else start(spark, changesDir, stateDir, checkpointDir)
   }
@@ -539,51 +540,9 @@ object CdcPipeline {
           graft.functions.Kernels.applyJsonDiffB64Col(acc, marker))
     })
 
-  private def docRounds(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("docs_"))
-      .flatMap(_.getPath.getName.stripPrefix("docs_").toLongOption)
-      .sorted
-  }
-
-  /** Streaming form of [[applyDeferredJsonDiffs]]: each micro-batch
-    * folds ONLY ITS events against the stored latest documents —
-    * steady-state cost O(batch fold) + O(keys) state write per round.
-    * State is batch-id-versioned (`docs_<id>`, the JoinIvm stance), so
-    * an at-least-once redelivery rebuilds exactly its own round from
-    * the kept pre-state; discovery rides the Hadoop FS API (a cluster
-    * stateDir must not silently read as empty).
-    */
-  def applyDeferredJsonBatch(batch: DataFrame, jsonField: String,
-                             stateDir: String, id: Long): Unit = {
-    val spark = batch.sparkSession
-    val rounds = docRounds(spark, stateDir)
-    val prev = rounds.filter(_ < id).lastOption
-    val pre = prev.map(r => spark.read.parquet(s"$stateDir/docs_$r"))
-      .getOrElse(batch.select(col("src"), col("key"),
-        lit(null).cast("string").as("doc")).limit(0))
-    val folded = foldedDocs(batch, jsonField)
-    folded.join(pre.withColumnRenamed("doc", "doc0"),
-        Seq("src", "key"), "full_outer")
-      .select(col("src"), col("key"),
-        when(col("evs").isNull, col("doc0")) // untouched key: carry over
-          .otherwise(docFold(col("evs"), col("doc0"))).as("doc"))
-      .coalesce(4)
-      .write.mode("overwrite").parquet(s"$stateDir/docs_$id")
-    // keep `prev` whole for a redelivery of THIS batch; drop older
-    rounds.filter(r => prev.exists(r < _)).foreach { r =>
-      val path = new org.apache.hadoop.fs.Path(s"$stateDir/docs_$r")
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
-  }
-
-  /** Bucketed form of the deferred-JSON applier: per-batch cost
-    * O(touched buckets), not the O(all keys) full-state rewrite of
-    * [[applyDeferredJsonBatch]]. The reconstructed documents ride the
+  /** Streaming form of the deferred-JSON applier: per-batch cost
+    * O(touched buckets), never an O(all keys) full-state rewrite. The
+    * reconstructed documents ride the
     * SAME bucketed state machinery as the row apply — one state row
     * per (src, key): `op=insert, table=src, key, ts=epoch,
     * seq=last_applied_seq, payload=doc` — so only the buckets the
@@ -708,21 +667,4 @@ object CdcPipeline {
     currentState(spark, stateDir)
       .select(col("table").as("src"), col("key"),
         col("payload").as("doc"), col("seq").as("last_seq"))
-
-  def startDeferredJsonApply(changes: DataFrame, jsonField: String,
-                             stateDir: String, checkpointDir: String)
-      : StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyDeferredJsonBatch(batch, jsonField, stateDir, id)
-      }
-      .start()
-
-  /** The reconstructed latest documents at the current stream position. */
-  def deferredJsonState(spark: SparkSession, stateDir: String): DataFrame = {
-    val rounds = docRounds(spark, stateDir)
-    require(rounds.nonEmpty, s"no document state under $stateDir")
-    spark.read.parquet(s"$stateDir/docs_${rounds.last}")
-  }
 }

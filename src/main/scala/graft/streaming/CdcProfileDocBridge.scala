@@ -78,9 +78,9 @@ object CdcProfileDocBridge {
                         batchId: Long, numBuckets: Int = 16): Unit = {
     val spark = pairs.sparkSession
     landOnce(pairs, landDir, spec, batchId)
-    val landed = spark.read
-      .schema("src string, seq long, c string, v string, w long")
-      .parquet(PartialState.batchDir(landDir, batchId))
+    val landed = PartialState.readBatch(spark, landDir, batchId,
+      Some(org.apache.spark.sql.types.StructType.fromDDL(
+        "src string, seq long, c string, v string, w long")))
     CdcProfileRanged.applyDeltas(landed, stateDir, spec, numBuckets)
   }
 

@@ -620,7 +620,7 @@ object CdcProfileRanged {
     * the parent's id and upper bound — so every other bucket's rows
     * and the parent's position in range order stay untouched. The
     * children and the successor boundaries commit as one version
-    * ([[BucketStore.commit]]). Refuses the null bucket (nothing to
+    * ([[BucketStore.commitRows]]). Refuses the null bucket (nothing to
     * order) and a single-distinct-value bucket (no boundary separates
     * anything — the hot-single-value case splitting cannot help).
     */
@@ -689,11 +689,11 @@ object CdcProfileRanged {
     val newCols = meta.cols.map(c =>
       if (c.name == colR.name) c.copy(entries = newEntries) else c)
     val next = renderRanges(RangesMeta(meta.nextId + 1, newCols, meta.img))
-    BucketStore.commit(spark, stateDir, base,
-      Some(CdcProfile.keyedRows(sChild)
+    BucketStore.commitRows(spark, stateDir, base,
+      CdcProfile.keyedRows(sChild)
         .unionByName(CdcProfile.summaryRows(sChild, spec))
         .repartition(2, col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("part"))),
+        .sortWithinPartitions(col("bucket"), col("part")),
       _ == tag, _.copy(ranges = Some(next)))
     ()
   }

@@ -34,9 +34,9 @@ object CdcQualityDocBridge {
   /** One micro-batch's net doc pairs through both phases into the
     * keyed monitor state. Safe to call again from any crash point; a
     * gate-eaten replay cannot shrink what applies (the landed file is
-    * what applies). The landed parquet carries its own schema, so the
-    * spec's key shapes (including struct keys) round-trip without a
-    * declared read schema.
+    * what applies). The landing records its own schema, so the spec's
+    * key shapes (including struct keys) round-trip without a declared
+    * read schema.
     */
   def applyDocPairsOnce(pairs: DataFrame, landDir: String,
                         stateDir: String, spec: KeyedSpec,
@@ -46,7 +46,7 @@ object CdcQualityDocBridge {
         CdcProfileDocBridge.pairsToChanges(pairs, spec.factTable, batchId),
         spec), landDir, batchId)
     CdcQualityKeyed.applyDeltas(
-      spark.read.parquet(PartialState.batchDir(landDir, batchId)),
+      PartialState.readBatch(spark, landDir, batchId),
       stateDir, spec, numBuckets)
   }
 

@@ -46,11 +46,10 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructFiel
   * parquet write — view delta + both netted states ride a single
   * part-tagged table — because at sf0.1 the 9.5 s cost of the 4-round
   * replay was per-round FIXED overhead (3 writes + their driver jobs
-  * each round), not data work. All round/state discovery and scratch
-  * I/O goes through the Hadoop FS API: `java.io.File` on an
-  * HDFS/object-store stateDir would silently list "no state" and every
-  * batch would re-apply against empty pre-state (the exact silent
-  * wrong-answer NearDupIngest.scala guards against).
+  * each round), not data work. The streaming forms commit each round
+  * through the state dir's version log ([[BucketStore]]'s contract, all
+  * I/O on the Hadoop FS API): one commit per apply carries the new
+  * round, the pruning of older rounds and the view-base fold.
   */
 object JoinIvm {
 
@@ -136,48 +135,53 @@ object JoinIvm {
 
   private val Money = DecimalType(28, 6)
 
-  /** ±1-weighted dimension rows: (okey, g: struct of dimCols, w). */
-  def dimDeltas(changes: DataFrame, spec: IvmJoinSpec): DataFrame = {
-    val ev = changes.filter(col("table") === spec.dimTable)
-      .select(col("op"),
-        from_json(col("payload"), spec.dimSchema).as("a"),
-        from_json(col("payload_before"), spec.dimSchema).as("b"))
-    def img(side: String, w: Long) = {
-      val p = col(side)
-      struct(spec.dimKey(p).as("okey"),
-        struct(spec.dimCols.map { case (n, f) => f(p).as(n) }: _*).as("g"),
-        lit(w).as("w"))
-    }
-    ev.select(explode(
-        when(col("op") === "insert", array(img("a", 1L)))
-          .when(col("op") === "update", array(img("b", -1L), img("a", 1L)))
-          .otherwise(array(img("b", -1L)))).as("d"))
-      .select(col("d.okey").as("okey"), col("d.g").as("g"),
-        col("d.w").as("w"))
+  /** One ±1-weighted image struct `d` per change of `table` — insert
+    * +after, delete −before, update −before +after — built by
+    * `mk(side, w)` over the parsed payload; `keep` columns ride along.
+    */
+  private def images(changes: DataFrame, table: String, schema: StructType,
+                     keep: Seq[String] = Nil)(
+      mk: (String, Long) => Column): DataFrame =
+    changes.filter(col("table") === table)
+      .select(keep.map(col) ++ Seq(col("op"),
+        from_json(col("payload"), schema).as("a"),
+        from_json(col("payload_before"), schema).as("b")): _*)
+      .select(keep.map(col) :+ explode(
+          when(col("op") === "insert", array(mk("a", 1L)))
+            .when(col("op") === "update", array(mk("b", -1L), mk("a", 1L)))
+            .otherwise(array(mk("b", -1L)))).as("d"): _*)
+
+  /** A dimension image: (okey, g: struct of the group columns, w). */
+  private def dimImage(key: Column => Column,
+                       cols: Seq[(String, Column => Column)])(
+      side: String, w: Long): Column = {
+    val p = col(side)
+    struct(key(p).as("okey"),
+      struct(cols.map { case (n, f) => f(p).as(n) }: _*).as("g"), lit(w).as("w"))
   }
+
+  /** A fact image: (okey, w, p: the signed exact measure). */
+  private def factImage(key: Column => Column, measure: Column => Column)(
+      side: String, w: Long): Column = {
+    val p = col(side)
+    val m = measure(p).cast(Money)
+    struct(key(p).as("okey"), lit(w).as("w"), (if (w < 0) -m else m).as("p"))
+  }
+
+  /** ±1-weighted dimension rows: (okey, g: struct of dimCols, w). */
+  def dimDeltas(changes: DataFrame, spec: IvmJoinSpec): DataFrame =
+    images(changes, spec.dimTable, spec.dimSchema)(
+        dimImage(spec.dimKey, spec.dimCols))
+      .select(col("d.okey").as("okey"), col("d.g").as("g"), col("d.w").as("w"))
 
   /** Per-key weighted fact partials: (okey, dn, ds) — already netted
     * within the batch, so downstream joins see one row per touched key.
     */
-  def factDeltas(changes: DataFrame, spec: IvmJoinSpec): DataFrame = {
-    val ev = changes.filter(col("table") === spec.factTable)
-      .select(col("op"),
-        from_json(col("payload"), spec.factSchema).as("a"),
-        from_json(col("payload_before"), spec.factSchema).as("b"))
-    def img(side: String, w: Long) = {
-      val p = col(side)
-      val m = spec.factMeasure(p).cast(Money)
-      struct(spec.factKey(p).as("okey"), lit(w).as("w"),
-        (if (w < 0) -m else m).as("p"))
-    }
-    ev.select(explode(
-        when(col("op") === "insert", array(img("a", 1L)))
-          .when(col("op") === "update", array(img("b", -1L), img("a", 1L)))
-          .otherwise(array(img("b", -1L)))).as("d"))
+  def factDeltas(changes: DataFrame, spec: IvmJoinSpec): DataFrame =
+    images(changes, spec.factTable, spec.factSchema)(
+        factImage(spec.factKey, spec.factMeasure))
       .groupBy(col("d.okey").as("okey"))
-      .agg(sum(col("d.w")).as("dn"),
-        sum(col("d.p")).cast(Money).as("ds"))
-  }
+      .agg(sum(col("d.w")).as("dn"), sum(col("d.p")).cast(Money).as("ds"))
 
   /** The landed form of the change stream a real pipeline materializes
     * once: one ±1-weighted delta row per image touched, both tables
@@ -189,37 +193,22 @@ object JoinIvm {
     */
   def weightedDeltas(changes: DataFrame,
                      spec: IvmJoinSpec = ordersLineitem): DataFrame = {
-    def exploded(table: String, schema: StructType,
-                 mk: (String, Long) => Column): DataFrame =
-      changes.filter(col("table") === table)
-        .select(col("src"), col("seq"), col("op"),
-          from_json(col("payload"), schema).as("a"),
-          from_json(col("payload_before"), schema).as("b"))
-        .select(col("src"), col("seq"), explode(
-            when(col("op") === "insert", array(mk("a", 1L)))
-              .when(col("op") === "update", array(mk("b", -1L), mk("a", 1L)))
-              .otherwise(array(mk("b", -1L)))).as("d"))
-    val d = exploded(spec.dimTable, spec.dimSchema, (side, w) => {
-      val p = col(side)
-      struct(spec.dimKey(p).as("okey"),
-        struct(spec.dimCols.map { case (n, f) => f(p).as(n) }: _*).as("g"),
-        lit(w).as("w"))
-    }).select(lit("d").as("tab"), col("src"), col("seq"),
-      col("d.okey").as("okey"), col("d.g").as("g"), col("d.w").as("w"),
-      lit(null).cast(Money).as("p"))
+    val keep = Seq("src", "seq")
+    val d = images(changes, spec.dimTable, spec.dimSchema, keep)(
+        dimImage(spec.dimKey, spec.dimCols))
+      .select(lit("d").as("tab"), col("src"), col("seq"),
+        col("d.okey").as("okey"), col("d.g").as("g"), col("d.w").as("w"),
+        lit(null).cast(Money).as("p"))
     // fact rows carry a typed-null group struct and a key cast to the
     // dimension key's type, so the union schema and the state join are
     // exact whatever types the spec derivations produce
     val gType = d.schema("g").dataType
     val kType = d.schema("okey").dataType
-    val f = exploded(spec.factTable, spec.factSchema, (side, w) => {
-      val p = col(side)
-      val m = spec.factMeasure(p).cast(Money)
-      struct(spec.factKey(p).cast(kType).as("okey"), lit(w).as("w"),
-        (if (w < 0) -m else m).as("p"))
-    }).select(lit("f").as("tab"), col("src"), col("seq"),
-      col("d.okey").as("okey"), lit(null).cast(gType).as("g"),
-      col("d.w").as("w"), col("d.p").as("p"))
+    val f = images(changes, spec.factTable, spec.factSchema, keep)(
+        factImage(p => spec.factKey(p).cast(kType), spec.factMeasure))
+      .select(lit("f").as("tab"), col("src"), col("seq"),
+        col("d.okey").as("okey"), lit(null).cast(gType).as("g"),
+        col("d.w").as("w"), col("d.p").as("p"))
     d.unionAll(f)
   }
 
@@ -277,69 +266,116 @@ object JoinIvm {
       .withColumnRenamed("a", "n").withColumnRenamed("b", "s")
   private def emptyLike(df: DataFrame): DataFrame = df.limit(0)
 
-  private def aggView(parts: DataFrame, spec: IvmJoinSpec): DataFrame =
+  /** The view from the 'v' rows of round tables: per group column of
+    * `g`, the live pair count and the measure sum.
+    */
+  private def aggView(parts: DataFrame, groups: Seq[(String, _)],
+                      countName: String, sumName: String): DataFrame =
     parts.filter(col("part") === "v")
-      .groupBy(spec.dimCols.map { case (n, _) => col(s"g.$n").as(n) }: _*)
-      .agg(sum(col("a")).as(spec.countName),
-        sum(col("b")).cast("double").as(spec.sumName))
-      .filter(col(spec.countName) > 0)
+      .groupBy(groups.map { case (n, _) => col(s"g.$n").as(n) }: _*)
+      .agg(sum(col("a")).as(countName), sum(col("b")).cast("double").as(sumName))
+      .filter(col(countName) > 0)
 
-  // ---- round discovery: the shared RoundState protocol ----
+  // ---- round state: entries of the one version log ----
+  //
+  // A join-view state dir is a [[BucketStore]] version log whose entries
+  // are keyed by round id, each a round table: a whole round
+  // (`round_<r>`: view delta + both netted states), a pruned round
+  // (`view_<r>`: view delta only) or a folded view base (`viewbase_<m>`:
+  // every pruned round ≤ m, aggregated). The view is the sum of every
+  // entry's 'v' rows. Why whole rounds and not buckets: a round's OUTPUT
+  // is group-sized (view deltas + netted states whose every key a
+  // bilinear term may touch), so versioning rounds is the cheap shape.
 
-  private def fs(spark: SparkSession, dir: String) = RoundState.fs(spark, dir)
+  private val RoundCol = StructType(Seq(StructField("round", LongType)))
 
-  /** Completed STATE-carrying round ids — [[RoundState.stateRounds]]
-    * (heals interrupted prune swaps first; Hadoop FS throughout).
+  private def kind(p: String): String =
+    p.substring(p.lastIndexOf('/') + 1).takeWhile(_ != '_')
+
+  /** The round entries `keys` of version `m`, as one round table. */
+  private def readRounds(spark: SparkSession, stateDir: String,
+                         m: BucketStore.Manifest, keys: Seq[Long]): DataFrame =
+    BucketStore.scan(spark, stateDir, m, RoundCol, m.schema.orNull,
+      keys.sorted.map(k => Seq(k) -> m.live(k))).drop("round")
+
+  /** Every entry of the newest version (None: no state yet). */
+  private def allRounds(spark: SparkSession,
+                        stateDir: String): Option[DataFrame] =
+    BucketStore.current(spark, stateDir).filter(_.live.nonEmpty)
+      .map(m => readRounds(spark, stateDir, m, m.live.keys.toSeq))
+
+  /** The newest whole round below `id` of `base`: the pre-state of
+    * batch `id`, whole so that a redelivery of `id` rebuilds from it.
     */
-  private def stateRounds(spark: SparkSession, stateDir: String): Seq[Long] =
-    RoundState.stateRounds(spark, stateDir)
+  private def prevRound(base: Option[BucketStore.Manifest],
+                        id: Long): Option[Long] =
+    base.toSeq.flatMap(_.live).collect {
+      case (r, p) if kind(p) == "round" && r < id => r }.maxOption
 
-  private def dirIds(spark: SparkSession, stateDir: String,
-                     prefix: String): Seq[Long] =
-    RoundState.dirIds(spark, stateDir, prefix)
-
-  /** All view-delta-carrying dirs: the newest `viewbase_<m>` (the
-    * compacted aggregate of every pruned round ≤ m), pruned v-only
-    * `view_<r>` dirs with r > m, and every live round — the view is
-    * the sum of their 'v' rows. Dirs a published base SUPERSEDES
-    * (view_ ≤ m, older bases) are never read — a compaction crash
-    * after publish leaves them harmless — and are reaped here,
-    * heal-on-read. A `.compactstage` without its publish is inert
-    * (dot-prefixed, never listed here) and is cleared by the next
-    * compaction itself — readers must NOT touch it, they may be
-    * concurrent with the writer mid-stage.
+  /** Commit round `id` on top of `base` as ONE version: `writeRound`
+    * writes the round table to the path it is handed and returns its
+    * schema; every whole round older than `prev` is rewritten to its 'v'
+    * rows; and once more than `compactEvery` pruned rounds lie past the
+    * view base, they fold with it into one new base. The entries written
+    * replace the ones they cover; `prev` stays whole.
     */
-  private def viewDirs(spark: SparkSession, stateDir: String): Seq[String] = {
-    val rounds = stateRounds(spark, stateDir) // heals prune swaps first
-    val f = fs(spark, stateDir)
-    val base = dirIds(spark, stateDir, "viewbase_").lastOption
-    base.foreach { m =>
-      dirIds(spark, stateDir, "viewbase_").filter(_ < m).foreach(b =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/viewbase_$b"), true))
-      dirIds(spark, stateDir, "view_").filter(_ <= m).foreach(r =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/view_$r"), true))
+  private def commitRound(spark: SparkSession, stateDir: String,
+                          base: Option[BucketStore.Manifest], id: Long,
+                          compactEvery: Int)(
+      writeRound: String => StructType): Unit = {
+    val live = base.fold(Map.empty[Long, String])(_.live)
+    val prev = prevRound(base, id)
+    val pruned = live.collect {
+      case (r, p) if kind(p) == "round" && prev.exists(r < _) => r }.toSeq
+    val views = live.collect { case (r, p) if kind(p) == "view" => r }.toSeq ++
+      pruned
+    val fold = views.size > compactEvery
+    val folded = if (fold) views ++ live.collect {
+      case (m, p) if kind(p) == "viewbase" => m } else Nil
+    var schema: StructType = null
+    BucketStore.commit(spark, stateDir, base,
+      r => r == id || pruned.contains(r) || folded.contains(r),
+      _.copy(schema = Some(schema))) { out =>
+      schema = writeRound(s"$out/round_$id")
+      def vRows(keys: Seq[Long]) = readRounds(spark, stateDir, base.get, keys)
+        .filter(col("part") === "v")
+      if (fold) {
+        val v = vRows(folded)
+        v.groupBy(col("g"))
+          .agg(sum(col("a")).as("a"), sum(col("b")).cast(Money).as("b"))
+          .select(v.schema.map(f => f.name match {
+            case "part" => lit("v").as("part")
+            case "g" | "a" | "b" => col(f.name)
+            case n => lit(null).cast(f.dataType).as(n)
+          }): _*)
+          .coalesce(1).write.parquet(s"$out/viewbase_${views.max}")
+        Map(id -> s"round_$id", views.max -> s"viewbase_${views.max}")
+      } else {
+        pruned.foreach(r =>
+          vRows(Seq(r)).coalesce(1).write.parquet(s"$out/view_$r"))
+        (pruned.map(r => r -> s"view_$r") :+ (id -> s"round_$id")).toMap
+      }
     }
-    (rounds.map(r => s"$stateDir/round_$r")
-      ++ dirIds(spark, stateDir, "view_")
-        .filter(r => base.forall(r > _)).map(r => s"$stateDir/view_$r")
-      ++ base.map(m => s"$stateDir/viewbase_$m"))
+    ()
   }
 
   /** One maintenance round against the PRE-state of micro-batch `id`,
-    * written entirely under `id`-keyed paths: `round_<id>` (tagged
-    * state + view delta) — so an at-least-once redelivery of batch `id`
-    * (foreachBatch's contract after a crash) rebuilds exactly its own
-    * round from the same pre-state, byte-deterministically. That is
-    * the whole exactly-once story: state is VERSIONED by batch, never
-    * mutated in place.
+    * committed as entry `round_<id>` — so an at-least-once redelivery of
+    * batch `id` (foreachBatch's contract after a crash) rebuilds exactly
+    * its own round from the same pre-state, byte-deterministically, and
+    * replaces it. That is the whole exactly-once story: state is
+    * VERSIONED by batch, never mutated in place. The same commit prunes
+    * rounds older than the previous one and, every `compactEvery`
+    * pruned rounds, folds them into the view base — so [[view]] reads
+    * O(`compactEvery`) entries however long the stream runs.
     */
   def applyBatch(batch: DataFrame, stateDir: String, id: Long,
                  spec: IvmJoinSpec = ordersLineitem,
                  compactEvery: Int = 32): Unit = {
     val spark = batch.sparkSession
-    val rounds = stateRounds(spark, stateDir)
-    val prev = rounds.filter(_ < id).lastOption
-    val prevParts = prev.map(p => spark.read.parquet(s"$stateDir/round_$p"))
+    val base = BucketStore.current(spark, stateDir)
+    val prevParts = prevRound(base, id).map(p =>
+      readRounds(spark, stateDir, base.get, Seq(p)))
     val dD = dimDeltas(batch, spec).persist()
     val dF = factDeltas(batch, spec).persist()
     val dPre = prevParts.map(partD)
@@ -348,54 +384,11 @@ object JoinIvm {
       .getOrElse(emptyLike(dF.select(col("okey"), col("dn").as("n"),
         col("ds").as("s"))))
     val (dView, dState, fState) = roundPlans(dD, dF, dPre, fPre)
-    tagParts(dView, dState, fState).coalesce(4)
-      .write.mode("overwrite").parquet(s"$stateDir/round_$id")
-    dD.unpersist(); dF.unpersist()
-    // prune rounds older than the previous round — `prev` must survive
-    // whole so a redelivery of THIS batch can rebuild from it
-    // (RoundState.pruneToViews: staged .prune_<r> swap, healed on read)
-    RoundState.pruneToViews(spark, stateDir, rounds, prev)
-    compactViews(spark, stateDir, compactEvery)
-  }
-
-  /** Cap what [[view]] reads: once more than `threshold` pruned
-    * `view_<r>` dirs have accumulated past the newest base, fold them
-    * (plus that base) into ONE group-aggregated `viewbase_<maxR>` dir.
-    * Crash-safe by a single atomic publish: the staged aggregate
-    * renames into place, at which instant readers switch to it and
-    * every input it covers becomes dead weight that [[viewDirs]] reaps
-    * lazily — a crash anywhere leaves either the old readable set
-    * (stage dropped on next read) or the new one (reap resumes).
-    * Amortized cost: group-sized, every `threshold` batches; without
-    * it a long-running stream's view read is O(#batches ever) dirs.
-    */
-  private def compactViews(spark: SparkSession, stateDir: String,
-                           threshold: Int): Unit = {
-    val f = fs(spark, stateDir)
-    val base = dirIds(spark, stateDir, "viewbase_").lastOption
-    val views = dirIds(spark, stateDir, "view_").filter(r => base.forall(r > _))
-    if (views.size <= threshold) return
-    val inputs = views.map(r => s"$stateDir/view_$r") ++
-      base.map(m => s"$stateDir/viewbase_$m")
-    val stage = s"$stateDir/.compactstage"
-    f.delete(new org.apache.hadoop.fs.Path(stage), true)
-    val in = spark.read.parquet(inputs: _*)
-    val kType = in.schema("okey").dataType
-    in.filter(col("part") === "v")
-      .groupBy(col("g"))
-      .agg(sum(col("a")).as("a"), sum(col("b")).cast(Money).as("b"))
-      .select(lit("v").as("part"), lit(null).cast(kType).as("okey"),
-        col("g"), col("a"), col("b"))
-      .coalesce(1).write.parquet(stage)
-    if (!f.rename(new org.apache.hadoop.fs.Path(stage),
-        new org.apache.hadoop.fs.Path(s"$stateDir/viewbase_${views.max}")))
-      throw new java.io.IOException(s"cannot publish compacted view base")
-    // reap the covered inputs now; a crash mid-reap is healed on read
-    views.foreach(r =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/view_$r"), true))
-    base.foreach(m =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/viewbase_$m"), true))
-    ()
+    try commitRound(spark, stateDir, base, id, compactEvery) { path =>
+      val round = tagParts(dView, dState, fState).coalesce(4)
+      round.write.parquet(path)
+      round.schema
+    } finally { dD.unpersist(); dF.unpersist(); () }
   }
 
   /** Structured Streaming form: maintain the join view continuously
@@ -417,7 +410,9 @@ object JoinIvm {
     */
   def view(spark: SparkSession, stateDir: String,
            spec: IvmJoinSpec = ordersLineitem): DataFrame =
-    aggView(spark.read.parquet(viewDirs(spark, stateDir): _*), spec)
+    aggView(allRounds(spark, stateDir).getOrElse(
+      throw new java.io.FileNotFoundException(s"no join-view state under $stateDir")),
+      spec.dimCols, spec.countName, spec.sumName)
 
   /** Replay the change log through `batches` maintenance rounds and
     * return the maintained view: per dimension group, the live joined
@@ -430,34 +425,9 @@ object JoinIvm {
   def maintain(changes: DataFrame, batches: Int,
                materializeInput: Boolean = true,
                spec: IvmJoinSpec = ordersLineitem,
-               workDir: Option[String] = None): DataFrame = {
-    require(batches >= 1, s"need at least one batch, got $batches")
-    val spark = changes.sparkSession
-    val base = workDir
-      .orElse(spark.sparkContext.getCheckpointDir)
-      .getOrElse {
-        require(spark.sparkContext.isLocal,
-          "JoinIvm.maintain on a cluster needs a shared-FS workDir " +
-            "(or spark.sparkContext.setCheckpointDir) — a driver-local " +
-            "temp dir is invisible to executors")
-        graft.ops.CoreOps.scratchDirUnique("join_ivm")
-      }
-    val scratch =
-      s"$base/join_ivm_${java.util.UUID.randomUUID().toString.take(8)}"
-    // land the weighted deltas ONCE: the rounds are arithmetic over
-    // this table; without it each round would re-run the upstream
-    // source (for a binlog input, a full wire re-decode per round)
-    val deltas =
-      if (!materializeInput) changes
-      else {
-        weightedDeltas(changes, spec)
-          .write.mode("overwrite").parquet(s"$scratch/changes")
-        spark.read.parquet(s"$scratch/changes")
-      }
-    val batched = deltas.withColumn("bk",
-      pmod(xxhash64(col("src"), col("seq")), lit(batches)))
-    (0 until batches).foreach { k =>
-      val delta = batched.filter(col("bk") === k)
+               workDir: Option[String] = None): DataFrame =
+    aggView(replay(changes, batches, materializeInput, workDir, "maintain")(
+        weightedDeltas(_, spec)) { (delta, prevParts, out) =>
       // dD/dF stay lazy: their lineage is a filter over the landed
       // delta table, cheaper to re-run per consumer than to write two
       // more per-round tables
@@ -466,8 +436,6 @@ object JoinIvm {
       val dF = delta.filter(col("tab") === "f")
         .groupBy(col("okey"))
         .agg(sum(col("w")).as("dn"), sum(col("p")).cast(Money).as("ds"))
-      val prevParts =
-        if (k == 0) None else Some(spark.read.parquet(s"$scratch/round_${k - 1}"))
       val dPre = prevParts.map(partD)
         .getOrElse(emptyLike(dD.select(col("okey"), col("g"), col("w"))))
       val fPre = prevParts.map(partF)
@@ -477,12 +445,48 @@ object JoinIvm {
       // per-round outputs are group/state-sized, not data-sized — ONE
       // coalesced write per round carries Δview + both netted states
       tagParts(dView, dState, fState).coalesce(4)
-        .write.mode("overwrite").parquet(s"$scratch/round_$k")
-    }
-    aggView(spark.read.parquet(
-      (0 until batches).map(k => s"$scratch/round_$k"): _*), spec)
-  }
+        .write.mode("overwrite").parquet(out)
+    }, spec.dimCols, spec.countName, spec.sumName)
 
+  /** The batch replay shared by [[maintain]] and [[maintainCascade]],
+    * in a fresh scratch dir: the weighted deltas (`land(changes)`, unless
+    * `changes` already is that table) are written ONCE — the rounds are
+    * arithmetic over them, and without it each round would re-run the
+    * upstream source (for a binlog input, a full wire re-decode per
+    * round) — then `round(delta, prev, out)` writes round k's table to
+    * `out` from its hash-split slice and round k−1's table. Returns
+    * every round's table.
+    */
+  private def replay(changes: DataFrame, batches: Int,
+                     materializeInput: Boolean, workDir: Option[String],
+                     name: String)(land: DataFrame => DataFrame)(
+      round: (DataFrame, Option[DataFrame], String) => Unit): DataFrame = {
+    require(batches >= 1, s"need at least one batch, got $batches")
+    val spark = changes.sparkSession
+    val base = workDir
+      .orElse(spark.sparkContext.getCheckpointDir)
+      .getOrElse {
+        require(spark.sparkContext.isLocal,
+          s"JoinIvm.$name on a cluster needs a shared-FS workDir " +
+            "(or spark.sparkContext.setCheckpointDir) — a driver-local " +
+            "temp dir is invisible to executors")
+        graft.ops.CoreOps.scratchDirUnique("join_ivm")
+      }
+    val scratch =
+      s"$base/join_ivm_${java.util.UUID.randomUUID().toString.take(8)}"
+    val deltas =
+      if (!materializeInput) changes
+      else {
+        land(changes).write.mode("overwrite").parquet(s"$scratch/changes")
+        spark.read.parquet(s"$scratch/changes")
+      }
+    val batched = deltas.withColumn("bk",
+      pmod(xxhash64(col("src"), col("seq")), lit(batches)))
+    (0 until batches).foreach(k => round(batched.filter(col("bk") === k),
+      if (k == 0) None else Some(spark.read.parquet(s"$scratch/round_${k - 1}")),
+      s"$scratch/round_$k"))
+    spark.read.parquet((0 until batches).map(k => s"$scratch/round_$k"): _*)
+  }
 
   // ---- N-table cascade (IvmCascadeSpec) — the chain, generalized ----
 
@@ -537,50 +541,35 @@ object JoinIvm {
     */
   def weightedDeltasCascade(changes: DataFrame, spec: IvmCascadeSpec)
       : DataFrame = {
-    def exploded(table: String, schema: StructType,
-                 mk: (String, Long) => Column): DataFrame =
-      changes.filter(col("table") === table)
-        .select(col("src"), col("seq"), col("op"),
-          from_json(col("payload"), schema).as("a"),
-          from_json(col("payload_before"), schema).as("b"))
-        .select(col("src"), col("seq"), explode(
-            when(col("op") === "insert", array(mk("a", 1L)))
-              .when(col("op") === "update", array(mk("b", -1L), mk("a", 1L)))
-              .otherwise(array(mk("b", -1L)))).as("d"))
+    val keep = Seq("src", "seq")
     val K = spec.mids.size
     val kTypes =
       scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.types.DataType]
     val midFrames = spec.mids.zipWithIndex.map { case (m, idx) =>
       val i = idx + 1
-      val f0 = exploded(m.table, m.schema, (side, w) => {
+      val f0 = images(changes, m.table, m.schema, keep) { (side, w) =>
         val p = col(side)
         // mid i joins at k_i, whose canonical type is mid_{i-1}'s next
         // (kTypes is 0-indexed: kTypes(i-1) = type of k_i)
         val ka = if (i == 1) m.key(p) else m.key(p).cast(kTypes(i - 1))
         struct(ka.as("ka"), m.next(p).as("kb"), lit(w).as("w"))
-      }).select(lit(s"m$i").as("tab"), col("src"), col("seq"),
+      }.select(lit(s"m$i").as("tab"), col("src"), col("seq"),
         col("d.ka").as(s"k$i"), col("d.kb").as(s"k${i + 1}"),
         col("d.w").as("w"))
       if (i == 1) kTypes += f0.schema("k1").dataType
       kTypes += f0.schema(s"k${i + 1}").dataType
       f0
     }
-    val c = exploded(spec.dimTable, spec.dimSchema, (side, w) => {
-      val p = col(side)
-      struct(spec.dimKey(p).cast(kTypes(K)).as("kc"),
-        struct(spec.dimCols.map { case (n, f) => f(p).as(n) }: _*).as("g"),
-        lit(w).as("w"))
-    }).select(lit("c").as("tab"), col("src"), col("seq"),
-      col("d.kc").as(s"k${K + 1}"), col("d.g").as("g"), col("d.w").as("w"))
+    val c = images(changes, spec.dimTable, spec.dimSchema, keep)(
+        dimImage(p => spec.dimKey(p).cast(kTypes(K)), spec.dimCols))
+      .select(lit("c").as("tab"), col("src"), col("seq"),
+        col("d.okey").as(s"k${K + 1}"), col("d.g").as("g"), col("d.w").as("w"))
     val gType = c.schema("g").dataType
-    val f = exploded(spec.factTable, spec.factSchema, (side, w) => {
-      val p = col(side)
-      val m = spec.factMeasure(p).cast(Money)
-      struct(spec.factKey(p).cast(kTypes.head).as("kf"), lit(w).as("w"),
-        (if (w < 0) -m else m).as("p"))
-    }).select(lit("f").as("tab"), col("src"), col("seq"),
-      col("d.kf").as("k1"), col("d.w").as("w"), col("d.p").as("p"))
+    val f = images(changes, spec.factTable, spec.factSchema, keep)(
+        factImage(p => spec.factKey(p).cast(kTypes.head), spec.factMeasure))
+      .select(lit("f").as("tab"), col("src"), col("seq"),
+        col("d.okey").as("k1"), col("d.w").as("w"), col("d.p").as("p"))
     def pad(df: DataFrame): DataFrame = {
       val have = df.columns.toSet
       df.select((Seq(col("tab"), col("src"), col("seq")) ++
@@ -612,15 +601,14 @@ object JoinIvm {
         col("b").as("s"))
 
   /** One cascaded maintenance round over `delta` (a slice of the landed
-    * weighted form) against `prev`'s states, written part-tagged to
-    * `outPath` (parts '<i>d'/'<i>f' per stage, 'cd'/'cf'/'v' for the
+    * weighted form) against `prev`'s states, handed part-tagged to
+    * `sink` (parts '<i>d'/'<i>f' per stage, 'cd'/'cf'/'v' for the
     * outer dim): the fold runs stage 1 up, each stage's netted view
     * deltas feeding the next stage's fact side. Per-round work is
     * O(changes · state-lookup), never a re-join of any base table.
     */
-  private def writeCascadeRound(delta: DataFrame, prev: Option[DataFrame],
-                                spec: IvmCascadeSpec,
-                                outPath: String): Unit = {
+  private def cascadeRound[T](delta: DataFrame, prev: Option[DataFrame],
+                              spec: IvmCascadeSpec)(sink: DataFrame => T): T = {
     val K = spec.mids.size
     val kTypes = (1 to K + 1).map(i => delta.schema(s"k$i").dataType)
     val gType = delta.schema("g").dataType
@@ -672,18 +660,9 @@ object JoinIvm {
       parts += tag("cf", Map(K + 1 -> col("okey")), nullC, col("n"),
         col("s"))(fState)
       parts += tag("v", Map.empty, col("g"), col("dn"), col("ds"))(dView)
-      parts.reduce(_ unionAll _).coalesce(4)
-        .write.mode("overwrite").parquet(outPath)
+      sink(parts.reduce(_ unionAll _).coalesce(4))
     } finally persisted.foreach { df => df.unpersist(); () }
   }
-
-  private def aggCascadeView(parts: DataFrame, spec: IvmCascadeSpec)
-      : DataFrame =
-    parts.filter(col("part") === "v")
-      .groupBy(spec.dimCols.map { case (n, _) => col(s"g.$n").as(n) }: _*)
-      .agg(sum(col("a")).as(spec.countName),
-        sum(col("b")).cast("double").as(spec.sumName))
-      .filter(col(spec.countName) > 0)
 
   /** Replay an N-stream change log through `batches` cascaded
     * maintenance rounds. Batching invariance holds by bilinearity at
@@ -693,54 +672,29 @@ object JoinIvm {
   def maintainCascade(changes: DataFrame, batches: Int,
                       spec: IvmCascadeSpec,
                       materializeInput: Boolean = true,
-                      workDir: Option[String] = None): DataFrame = {
-    require(batches >= 1, s"need at least one batch, got $batches")
-    val spark = changes.sparkSession
-    val base = workDir
-      .orElse(spark.sparkContext.getCheckpointDir)
-      .getOrElse {
-        require(spark.sparkContext.isLocal,
-          "JoinIvm.maintainCascade on a cluster needs a shared-FS workDir " +
-            "— a driver-local temp dir is invisible to executors")
-        graft.ops.CoreOps.scratchDirUnique("join_ivm_cascade")
-      }
-    val scratch =
-      s"$base/casc_${java.util.UUID.randomUUID().toString.take(8)}"
-    val deltas =
-      if (!materializeInput) changes
-      else {
-        weightedDeltasCascade(changes, spec)
-          .write.mode("overwrite").parquet(s"$scratch/changes")
-        spark.read.parquet(s"$scratch/changes")
-      }
-    val batched = deltas.withColumn("bk",
-      pmod(xxhash64(col("src"), col("seq")), lit(batches)))
-    (0 until batches).foreach { k =>
-      val delta = batched.filter(col("bk") === k)
-      val prev =
-        if (k == 0) None
-        else Some(spark.read.parquet(s"$scratch/round_${k - 1}"))
-      writeCascadeRound(delta, prev, spec, s"$scratch/round_$k")
-    }
-    aggCascadeView(spark.read.parquet(
-      (0 until batches).map(k => s"$scratch/round_$k"): _*), spec)
-  }
+                      workDir: Option[String] = None): DataFrame =
+    aggView(replay(changes, batches, materializeInput, workDir,
+        "maintainCascade")(weightedDeltasCascade(_, spec)) { (delta, prev, out) =>
+      cascadeRound(delta, prev, spec)(_.write.mode("overwrite").parquet(out))
+    }, spec.dimCols, spec.countName, spec.sumName)
 
   /** Streaming form of the cascade: one maintenance round per
-    * micro-batch against batch-id-versioned state ([[RoundState]] —
-    * the [[applyBatch]] redelivery contract), older rounds pruned to
-    * their view-delta rows.
+    * micro-batch, committed as in [[applyBatch]] (the same redelivery
+    * contract), older rounds pruned to their view-delta rows.
     */
   def applyCascadeBatch(batch: DataFrame, stateDir: String, id: Long,
                         spec: IvmCascadeSpec): Unit = {
     val spark = batch.sparkSession
-    val rounds = stateRounds(spark, stateDir)
-    val prev = rounds.filter(_ < id).lastOption
-    val prevParts = prev.map(p => spark.read.parquet(s"$stateDir/round_$p"))
+    val base = BucketStore.current(spark, stateDir)
+    val prevParts = prevRound(base, id).map(p =>
+      readRounds(spark, stateDir, base.get, Seq(p)))
     val delta = weightedDeltasCascade(batch, spec).persist()
-    try writeCascadeRound(delta, prevParts, spec, s"$stateDir/round_$id")
-    finally { delta.unpersist(); () }
-    RoundState.pruneToViews(spark, stateDir, rounds, prev)
+    try commitRound(spark, stateDir, base, id, Int.MaxValue) { path =>
+      cascadeRound(delta, prevParts, spec) { round =>
+        round.write.parquet(path)
+        round.schema
+      }
+    } finally { delta.unpersist(); () }
   }
 
   /** Continuous cascade maintenance over a stream of change rows. */
@@ -756,13 +710,10 @@ object JoinIvm {
 
   /** The maintained cascade view at the current stream position. */
   def cascadeView(spark: SparkSession, stateDir: String,
-                  spec: IvmCascadeSpec): DataFrame = {
-    val rounds = stateRounds(spark, stateDir)
-    val dirs = rounds.map(r => s"$stateDir/round_$r") ++
-      dirIds(spark, stateDir, "view_").map(r => s"$stateDir/view_$r")
-    require(dirs.nonEmpty, s"no cascade state under $stateDir")
-    aggCascadeView(spark.read.parquet(dirs: _*), spec)
-  }
+                  spec: IvmCascadeSpec): DataFrame =
+    aggView(allRounds(spark, stateDir).getOrElse(
+      throw new IllegalArgumentException(s"no cascade state under $stateDir")),
+      spec.dimCols, spec.countName, spec.sumName)
 
   // ---- the 3-table chain: K = 1 delegations ----
 

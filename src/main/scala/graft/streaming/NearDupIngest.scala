@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.LongType
 
 import graft.functions.Kernels
 import graft.sim.DedupOps
@@ -23,7 +22,7 @@ import graft.sim.DedupOps
   *
   * Scale shape: state is ONLY signatures+band keys (k longs per doc —
   * never text or shingles), laid out as a bucket-partitioned parquet
-  * table (`batch_id=N/bucket=B/`). A micro-batch prunes its state read
+  * table (each partial's `bucket=B/` sub-dirs). A micro-batch prunes its state read
   * to the buckets its own band keys hash into — apply cost follows the
   * batch's key spread, not corpus size — and candidate joins are band
   * equi-joins, never all-pairs. Both the state and the verdicts land
@@ -114,13 +113,9 @@ object NearDupIngest {
                    stateDir: String): Unit =
     PartialState.compact(spark, stateDir, _.drop("batch_id"), Seq("bucket"))
 
-  /** Finish an interrupted [[compactState]] ([[PartialState.recover]]). */
-  def recoverState(spark: org.apache.spark.sql.SparkSession,
-                   stateDir: String): Unit =
-    PartialState.recover(spark, stateDir)
-
-  /** Start the streaming ingest: verdicts land in `outDir/batch_id=N/`,
-    * signature state in `stateDir/batch_id=N/bucket=B/`.
+  /** Start the streaming ingest: verdicts land as partial N of
+    * `outDir`, signature state as partial N of `stateDir`, in `bucket=B`
+    * sub-dirs ([[PartialState]]).
     */
   def start(docs: DataFrame, stateDir: String, outDir: String,
             checkpointDir: String, textCol: String = "text",
@@ -143,7 +138,7 @@ object NearDupIngest {
           // schema reads a missing state dir, or one of empty partials
           // only, as no rows.
           val prior = PartialState.read(spark, stateDir,
-              Some(newBands.schema.add("batch_id", LongType)))
+              Some(newBands.schema), Seq("bucket"))
             .filter(col("batch_id") < batchId && col("bucket").isin(buckets: _*))
             .select("doc_id", "sig", "band", "bh")
           val localPairs = estPairs(newBands, newBands, ordered = true)

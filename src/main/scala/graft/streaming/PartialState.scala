@@ -1,91 +1,86 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+import BucketStore.Manifest
 
 /** The one partial-state protocol: a state dir holding one partial per
-  * micro-batch under `batch_id=N`, merged at read time. Every
-  * per-batch monitor ([[CmSketchIngest]], [[BloomIngest]],
-  * [[KsDriftIngest]], [[ClusterProfileIngest]], [[IvmIngest]],
-  * [[NearDupIngest]], [[CdcQuality]], [[ReconcileIngest]]) and both
-  * doc bridges' landing dirs use this layout, and only this object
-  * knows it. Exactly-once follows the offset-log argument: the engine
-  * replays at most the newest batch, and every write here is
-  * idempotent or at-most-once per batch id.
+  * micro-batch, merged at read time. Every per-batch monitor
+  * ([[CmSketchIngest]], [[BloomIngest]], [[KsDriftIngest]],
+  * [[ClusterProfileIngest]], [[IvmIngest]], [[NearDupIngest]],
+  * [[CdcQuality]], [[ReconcileIngest]]) and both doc bridges' landing
+  * dirs use it. A partial is one entry of the state's version log
+  * ([[BucketStore]]'s contract), keyed by `batch_id`: its own leaf dir
+  * `_v<v>_<id>/batch_id=N/`, so an empty partial still leaves a
+  * schema-only file, and every operation below is ONE commit. Readers
+  * see `batch_id` as a column. Exactly-once follows the offset-log
+  * argument: the engine replays at most the newest batch, and every
+  * write here is idempotent or at-most-once per batch id.
   *
-  *   - [[land]] overwrites the batch's own dir, so a replay rebuilds
-  *     exactly that dir. The write is not partitioned by `batch_id`
-  *     (partition discovery adds the column), so an empty partial still
-  *     leaves a schema-only file and later reads can infer the schema.
-  *   - [[landOnce]] stages under a dot-prefixed sibling (invisible to
-  *     readers) and commits with ONE rename; a committed dir is never
-  *     rewritten, because a replay may recompute a smaller partial.
-  *   - [[compact]] merges every partial except the newest into the
-  *     second-newest id. Why the second-newest: only the newest dir
-  *     can be replayed (batch N starts only after N−1's checkpoint
-  *     committed), and a replay both reads `batch_id < N` and
-  *     overwrites its own dir, so folding anything into N would hide it
-  *     from the replay and let the replay destroy it. Dirs below N are
-  *     committed, so N−1 is always safe.
-  *   - [[recover]] finishes an interrupted [[compact]]; [[read]] runs it
-  *     first.
+  *   - [[land]] commits entry N, replacing a landed one, so a replay
+  *     rebuilds exactly that partial.
+  *   - [[landOnce]] is a no-op when entry N is listed, else one commit
+  *     adding it; a landed partial is never rewritten, because a replay
+  *     may recompute a smaller one.
+  *   - [[compact]] commits one version in which every entry but the
+  *     newest is replaced by their merge at the second-newest id. Why
+  *     the second-newest: only the newest partial can be replayed (batch
+  *     N starts only after N−1's checkpoint committed), and a replay
+  *     both reads `batch_id < N` and replaces its own entry, so folding
+  *     anything into N would hide it from the replay and let the replay
+  *     destroy it. Entries below N are committed, so N−1 is always safe.
   *
-  * The swap is exactly-once for every merge kind, duplicate-sensitive
-  * sums and duplicate-tolerant OR/DISTINCT alike: (1) write staging,
-  * (2) rename the target to `__old` (the marker), (3) delete the older
-  * dirs, (4) install staging as the target, (5) drop the marker. The
-  * marker appears only after staging is complete and the older dirs
-  * go only while it stands, so at every crash point [[recover]] knows
-  * whether the merged copy or the originals are authoritative.
-  *
-  * Compaction is for a stopped stream (or the stream's own thread, as
-  * [[ReconcileIngest.start]] does): a reader racing the swap may
-  * transiently see neither copy of the target.
+  * Compaction runs on a stopped stream or on the stream's own thread (as
+  * [[ReconcileIngest.start]] does); a compaction racing a landing
+  * refuses with "is at version N", and a reader sees either version.
   */
 object PartialState {
 
-  private val BatchDirRe = "^batch_id=(\\d+)$".r
-  private val OldDirRe = "^batch_id=(\\d+)__old$".r
-  private val Staging = "_compact_tmp"
-
-  /** The dir holding batch `batchId`'s partial. */
-  def batchDir(stateDir: String, batchId: Long): String =
-    s"$stateDir/batch_id=$batchId"
-
-  private def markerOf(stateDir: String, batchId: Long): Path =
-    new Path(s"${batchDir(stateDir, batchId)}__old")
-
-  private def fsOf(spark: SparkSession, root: Path): FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"rename $src -> $dst failed")
+  private val BatchCol = StructField("batch_id", LongType)
 
   /** Land one batch's partial, replay-idempotently. `subDirs` partition
-    * the partial inside its batch dir (NearDup's `bucket=B`).
+    * the partial inside its entry by integer columns (NearDup's
+    * `bucket=B`).
     */
   def land(partial: DataFrame, stateDir: String, batchId: Long,
-           subDirs: Seq[String] = Nil): Unit =
-    partial.write.mode("overwrite").partitionBy(subDirs: _*)
-      .parquet(batchDir(stateDir, batchId))
+           subDirs: Seq[String] = Nil): Unit = {
+    val spark = partial.sparkSession
+    commit(spark, stateDir, BucketStore.current(spark, stateDir), partial,
+      batchId, subDirs, _ == batchId,
+      m => m.copy(schema = m.schema.orElse(Some(partial.schema))))
+  }
 
-  /** Land one batch's partial AT MOST ONCE: if `batch_id=N` exists the
-    * call is a no-op, else the partial stages and commits in one
-    * rename, so the dir either exists complete or not at all. An empty
-    * partial lands too, so a later replay cannot land a subset.
+  /** Land one batch's partial AT MOST ONCE: if entry N is listed the
+    * call is a no-op, else one commit adds it, so the partial is either
+    * landed complete or not at all. A writer that loses the create to
+    * another landing of N returns quietly. An empty partial lands too,
+    * so a later replay cannot land a subset.
     */
   def landOnce(partial: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val target = new Path(batchDir(stateDir, batchId))
-    val fs = fsOf(partial.sparkSession, target)
-    if (fs.exists(target)) return
-    val staging = new Path(stateDir, s".staging_$batchId")
-    fs.delete(staging, true)
-    partial.write.mode("overwrite").parquet(staging.toString)
-    rename(fs, staging, target)
+    val spark = partial.sparkSession
+    def landed(m: Option[Manifest]) = m.exists(_.live.contains(batchId))
+    val base = BucketStore.current(spark, stateDir)
+    if (landed(base)) return
+    try commit(spark, stateDir, base, partial, batchId, Nil, _ => false,
+      m => m.copy(schema = m.schema.orElse(Some(partial.schema))))
+    catch {
+      case _: BucketStore.Superseded
+        if landed(BucketStore.current(spark, stateDir)) => ()
+    }
+  }
+
+  private def commit(spark: SparkSession, stateDir: String,
+                     base: Option[Manifest], partial: DataFrame, batchId: Long,
+                     subDirs: Seq[String], drops: Long => Boolean,
+                     meta: Manifest => Manifest): Unit = {
+    BucketStore.commit(spark, stateDir, base, drops, meta) { out =>
+      partial.write.partitionBy(subDirs: _*).parquet(s"$out/batch_id=$batchId")
+      Map(batchId -> s"batch_id=$batchId")
+    }
+    ()
   }
 
   /** One partial per micro-batch of `input`, landed with [[land]];
@@ -102,84 +97,71 @@ object PartialState {
       }
       .start()
 
-  /** Every landed partial (with its `batch_id`), after [[recover]].
-    * With a `schema` the read needs no file to infer from — a missing
-    * state dir, or one holding only empty sub-partitioned partials,
-    * reads as no rows.
+  /** Every landed partial, with its `batch_id` (and `subDirs`) columns.
+    * With a `schema` the read needs nothing landed — a missing state dir
+    * reads as no rows; without one it uses the recorded schema.
     */
   def read(spark: SparkSession, stateDir: String,
-           schema: Option[StructType] = None): DataFrame = {
-    recover(spark, stateDir)
-    val root = new Path(stateDir)
-    schema match {
-      case Some(s) if !fsOf(spark, root).exists(root) =>
-        spark.createDataFrame(java.util.List.of[Row](), s)
-      case Some(s) => spark.read.schema(s).parquet(stateDir)
-      case None => spark.read.parquet(stateDir)
-    }
+           schema: Option[StructType] = None,
+           subDirs: Seq[String] = Nil): DataFrame =
+    scan(spark, stateDir, BucketStore.current(spark, stateDir), schema,
+      subDirs, None)
+
+  /** Batch `batchId`'s landed partial alone, without `batch_id`. */
+  def readBatch(spark: SparkSession, stateDir: String, batchId: Long,
+                schema: Option[StructType] = None): DataFrame =
+    scan(spark, stateDir, BucketStore.current(spark, stateDir), schema, Nil,
+      Some(batchId)).drop(BatchCol.name)
+
+  /** The entries of version `base` (only `batchId`'s, if given), each
+    * leaf dir a partition: `batch_id`, then the integer `subDirs` values
+    * listed under the entry.
+    */
+  private def scan(spark: SparkSession, stateDir: String,
+                   base: Option[Manifest], schema: Option[StructType],
+                   subDirs: Seq[String], batchId: Option[Long]): DataFrame = {
+    val m = base.getOrElse(Manifest(0, 0))
+    val f = BucketStore.fs(spark, stateDir)
+    def leaves(p: String, names: Seq[String]): Seq[(Seq[Any], String)] =
+      names match {
+        case Seq() => Seq(Nil -> p)
+        case n +: rest =>
+          val children =
+            try f.listStatus(new org.apache.hadoop.fs.Path(stateDir, p)).toSeq
+            catch { case _: java.io.FileNotFoundException =>
+              throw BucketStore.collected(f, stateDir, m,
+                new org.apache.hadoop.fs.Path(stateDir, p)) }
+          children.map(_.getPath.getName).filter(_.startsWith(s"$n=")).sorted
+            .flatMap(c => leaves(s"$p/$c", rest).map { case (vs, leaf) =>
+              (c.stripPrefix(s"$n=").toInt +: vs) -> leaf })
+      }
+    val parts = m.live.toSeq.sortBy(_._1)
+      .filter(e => batchId.forall(_ == e._1))
+      .flatMap { case (id, p) =>
+        leaves(p, subDirs).map { case (vs, leaf) => (id +: vs) -> leaf } }
+    val partCols = BatchCol +: subDirs.map(StructField(_, IntegerType))
+    val data = schema.orElse(m.schema).map(s => StructType(
+      s.filterNot(c => partCols.exists(_.name == c.name))))
+    if (data.isEmpty && parts.isEmpty)
+      throw new java.io.FileNotFoundException(s"no partial state at $stateDir")
+    BucketStore.scan(spark, stateDir, m, StructType(partCols), data.orNull, parts)
   }
 
   /** Merge every partial except the newest into one partial at the
-    * second-newest id and drop the rest. `merge` reduces the state
-    * (all columns incl. `batch_id`) to rows of the landed partial's
-    * schema; `subDirs` are the ones the partials were landed with.
-    * No-op below 3 batch dirs.
+    * second-newest id, in one commit that replaces them. `merge` reduces
+    * the state (all columns incl. `batch_id`) to rows of the landed
+    * partial's columns; `subDirs` are the ones the partials were landed
+    * with. No-op below 3 partials.
     */
   def compact(spark: SparkSession, stateDir: String,
               merge: DataFrame => DataFrame,
               subDirs: Seq[String] = Nil): Unit = {
-    val root = new Path(stateDir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return
-    recover(spark, stateDir)
-    val ids = fs.listStatus(root).map(_.getPath.getName).collect {
-      case BatchDirRe(id) => id.toLong
-    }.sorted
+    val base = BucketStore.current(spark, stateDir)
+    val ids = base.toSeq.flatMap(_.live.keys).sorted
     if (ids.length < 3) return
-    val target = ids(ids.length - 2)
-    val live = new Path(batchDir(stateDir, target))
-    val old = markerOf(stateDir, target)
-    val staging = new Path(root, Staging)
-    fs.delete(staging, true)
-    merge(spark.read.parquet(stateDir).filter(col("batch_id") =!= ids.last))
-      .write.mode("overwrite").partitionBy(subDirs: _*)
-      .parquet(staging.toString)
-    rename(fs, live, old)
-    ids.dropRight(2).foreach(id =>
-      fs.delete(new Path(batchDir(stateDir, id)), true))
-    rename(fs, staging, live)
-    fs.delete(old, true)
-  }
-
-  /** Finish an interrupted [[compact]]. With a `__old` marker the
-    * merged copy is authoritative: delete the older dirs, install
-    * staging if the target is missing, drop the marker. Without one, a
-    * leftover staging dir was never cut over and is dropped. A marker
-    * with neither the target nor staging is refused: no crash of
-    * [[compact]] leaves it, and the older dirs are already gone, so
-    * renaming the marker back would silently drop their rows.
-    */
-  def recover(spark: SparkSession, stateDir: String): Unit = {
-    val root = new Path(stateDir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return
-    val names = fs.listStatus(root).map(_.getPath.getName)
-    val staging = new Path(root, Staging)
-    names.collectFirst { case OldDirRe(t) => t.toLong } match {
-      case Some(target) =>
-        names.collect { case BatchDirRe(id) if id.toLong < target => id.toLong }
-          .foreach(id => fs.delete(new Path(batchDir(stateDir, id)), true))
-        val live = new Path(batchDir(stateDir, target))
-        if (!fs.exists(live)) {
-          if (!fs.exists(staging))
-            throw new java.io.IOException(
-              s"recover: ${markerOf(stateDir, target)} has neither a live " +
-                "nor a staged copy")
-          rename(fs, staging, live)
-        } else fs.delete(staging, true)
-        fs.delete(markerOf(stateDir, target), true)
-      case None =>
-        fs.delete(staging, true)
-    }
+    val merged = merge(scan(spark, stateDir, base, None, subDirs, None)
+      .filter(col(BatchCol.name) =!= ids.last))
+    commit(spark, stateDir, base, merged, ids(ids.length - 2), subDirs,
+      _ < ids.last, _.copy(schema = Some(merged.schema)))
   }
 }

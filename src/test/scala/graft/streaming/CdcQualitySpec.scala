@@ -75,7 +75,7 @@ class CdcQualitySpec extends SparkSpec {
       }.toMap
       assert(twin.map(t => t._1 -> t._2).toMap == direct)
       // state stays checks-sized per batch
-      val state = spark.read.parquet(s"$dir/state")
+      val state = PartialState.read(spark, s"$dir/state")
       assert(state.groupBy("batch_id").count()
         .filter(col("count") > CdcQuality.eventsChecks.size).count() == 0)
     } finally q.stop()

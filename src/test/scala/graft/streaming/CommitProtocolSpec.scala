@@ -45,7 +45,7 @@ class CommitProtocolSpec extends SparkSpec {
     val after = CdcProfileRanged.profileView(spark, dir, spec, Seq(0.5))
       .collect().map(_.toSeq).toSeq
     val live = BucketStore.readCurrent(spark, dir)
-    val tags = BucketStore.current(spark, dir).get.live.keys.toArray.sorted
+    val tags = BucketStore.current(spark, dir).get.live.keys.map(_.toInt).toArray.sorted
     def refused(mutation: => Any): Unit = {
       val e = intercept[java.io.IOException](mutation)
       assert(e.getMessage.contains("is at version 2") &&
@@ -53,7 +53,7 @@ class CommitProtocolSpec extends SparkSpec {
     }
     refused(BucketStore.writeBuckets(spark, live, dir, stale, tags, 4))
     refused(BucketStore.publishRebucket(spark, live, dir, stale, 4))
-    refused(BucketStore.commit(spark, dir, stale, None, _ => true))
+    refused(BucketStore.commit(spark, dir, stale, _ => true)(_ => Map.empty))
     // nothing moved under any refusal, and no refused data dir remains
     assert(version(dir) == 2)
     assert(CdcProfileRanged.profileView(spark, dir, spec, Seq(0.5))
@@ -228,6 +228,36 @@ class CommitProtocolSpec extends SparkSpec {
     assert(CdcPipeline.currentState(spark, dir).count() == 41L)
     assert(!orphan.getParentFile.exists(), "the orphan data dir was not collected")
     assert(!tmpBody.exists(), "the orphan manifest body was not collected")
+  }
+
+  test("a hand-rendered bucketed manifest of the log's first format reads " +
+      "unchanged, and the next apply commits on top of it") {
+    val dir = tmp("commit_format_")
+    val tag = "_v1_0123456789ab"
+    val base = rows(0L until 20L, 1, 0L, "a").toDF()
+      .withColumn("bucket", BucketStore.bucketTag(xxhash64(col("table"),
+        col("key")), 4, Map.empty))
+    base.write.partitionBy("bucket").parquet(s"$dir/$tag")
+    val buckets = new java.io.File(s"$dir/$tag").list().filter(_.startsWith("bucket="))
+      .map(_.stripPrefix("bucket=").toInt).sorted
+    val live = buckets.map(b => s""""$b":"$tag/bucket=$b"""").mkString(",")
+    val body = s"""{"version":1,"id":"0123456789ab","parent":"","buckets":4,""" +
+      s""""layout":3,"levels":{},"schema":${CdcPipeline.changeEventSchema.json},""" +
+      s""""live":{$live}}"""
+    val log = java.nio.file.Paths.get(dir, BucketStore.LogName)
+    java.nio.file.Files.createDirectories(log)
+    java.nio.file.Files.write(log.resolve("1.json"), body.getBytes("UTF-8"))
+    val m = BucketStore.current(spark, dir).get
+    assert((m.version, m.buckets, m.layout, m.id) == (1L, 4, Some(3), "0123456789ab"))
+    assert(m.live.keys.toSeq.sorted == buckets.map(_.toLong).toSeq)
+    def state() = CdcPipeline.currentState(spark, dir)
+      .select("key", "payload").collect().map(r => r.getLong(0) -> r.getString(1)).toSet
+    assert(state() == (0L until 20L).map(k => k -> s"""{"v":"a$k"}""").toSet)
+    CdcPipeline.applyBatch(spark, rows(10L until 30L, 2, 100L, "b").toDF(), dir)
+    val next = BucketStore.current(spark, dir).get
+    assert((next.version, next.parent, next.buckets) == (2L, "0123456789ab", 4))
+    assert(state() == ((0L until 10L).map(k => k -> s"""{"v":"a$k"}""") ++
+      (10L until 30L).map(k => k -> s"""{"v":"b$k"}""")).toSet)
   }
 
   test("a DDL commits exactly one version and leaves no staging behind") {

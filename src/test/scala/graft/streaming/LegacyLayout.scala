@@ -35,8 +35,26 @@ object LegacyLayout {
   /** The live bucket dirs of a state's newest version, as local files. */
   def liveDirs(spark: SparkSession, dir: String): Map[Int, java.io.File] =
     BucketStore.current(spark, dir).toSeq.flatMap(_.live).map { case (b, p) =>
-      b -> new java.io.File(new org.apache.hadoop.fs.Path(dir, p).toUri.getPath)
+      b.toInt -> new java.io.File(new org.apache.hadoop.fs.Path(dir, p).toUri.getPath)
     }.toMap
+
+  /** A copy of the versioned state `dir` at `to`, rewritten in the
+    * pre-manifest layout: each live entry straight under the state dir
+    * by its leaf name (`batch_id=N`, `round_N`, `view_N`, …), with no
+    * version log and no `_v` dirs — what an engine before the version
+    * log left on disk. Returns `to`.
+    */
+  def unversioned(spark: SparkSession, dir: String, to: String): String = {
+    val f = BucketStore.fs(spark, dir)
+    org.apache.hadoop.fs.FileUtil.copy(f, new org.apache.hadoop.fs.Path(dir), f,
+      new org.apache.hadoop.fs.Path(to), false, spark.sparkContext.hadoopConfiguration)
+    BucketStore.current(spark, to).get.live.values.foreach(p =>
+      f.rename(new org.apache.hadoop.fs.Path(to, p),
+        new org.apache.hadoop.fs.Path(to, p.substring(p.lastIndexOf('/') + 1))))
+    f.listStatus(new org.apache.hadoop.fs.Path(to)).map(_.getPath)
+      .filter(_.getName.startsWith("_")).foreach(f.delete(_, true))
+    to
+  }
 
   /** Rewrite the body of a state's newest manifest in place — how a spec
     * simulates a state written by another engine generation.

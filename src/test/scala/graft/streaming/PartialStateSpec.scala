@@ -1,15 +1,15 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The one `batch_id=N` partial-state protocol: empty partials read
-  * back, and compaction is exactly-once at every crash point for a sum,
-  * a distinct and a bucket-sub-partitioned state.
+/** The one partial-state protocol: empty partials read back, and
+  * compaction is exactly-once at every crash point for a sum, a
+  * distinct and a bucket-sub-partitioned state.
   */
 class PartialStateSpec extends SparkSpec {
   import spark.implicits._
@@ -90,78 +90,66 @@ class PartialStateSpec extends SparkSpec {
     def triples(df: DataFrame) = df.select("doc_id", "is_dup", "dup_of")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val twin = triples(NearDupIngest.batchTwin(docs.toDF(), threshold = 0.4))
-    assert(triples(spark.read.parquet(s"$dir/out")) == twin)
+    assert(triples(PartialState.read(spark, s"$dir/out")) == twin)
     assert(twin.contains((3L, 1L, 2L)))
+  }
+
+  // ---- legacy partial states ---------------------------------------
+
+  test("a pre-manifest partial state reads as version 0 and upgrades on " +
+      "its first commit") {
+    val dir = tmp("ps_legacy_")
+    (0 until 3).foreach(i => Seq((0L, 1L, i.toLong + 1)).toDF("j", "b", "cnt")
+      .write.parquet(s"$dir/batch_id=$i"))
+    def sketch() = CmSketchIngest.sketch(spark, dir).collect().map(_.toSeq).toSeq
+    assert(BucketStore.current(spark, dir).get.version == 0)
+    val before = sketch()
+    assert(before == Seq(Seq(0L, 1L, 6L)))
+    CmSketchIngest.compactState(spark, dir)
+    val m = BucketStore.current(spark, dir).get
+    assert(m.version == 1 && m.live.keySet == Set(1L, 2L))
+    // the newest partial stays in place; the merged ones are collected
+    assert(m.live(2L) == "batch_id=2" && m.live(1L).startsWith("_v1_"))
+    assert(!new java.io.File(s"$dir/batch_id=0").exists())
+    assert(sketch() == before)
   }
 
   // ---- crash sweep of compaction ----------------------------------
 
-  private def copyTree(src: JPath, dst: JPath): Unit = {
-    val walk = Files.walk(src)
-    try walk.forEach(p => Files.copy(p, dst.resolve(src.relativize(p))))
-    finally walk.close()
-  }
+  /** The landed batch ids: the newest version's entries. */
+  private def entries(dir: String): Seq[Long] =
+    BucketStore.current(spark, dir).toSeq.flatMap(_.live.keys).sorted
 
-  private def entries(dir: String): Seq[String] =
-    new java.io.File(dir).list().toSeq.filterNot(_.startsWith(".")).sorted
-
-  /** Land `partials` as batches 0..n-1, then crash `compact` at each
-    * mutating op on the state dir in turn. After every crash,
-    * [[PartialState.recover]] + `read` equals the uncrashed state, and
-    * a re-run of `compact` converges to the uncrashed dirs.
+  /** Land `partials` as batches 0..n-1 and sweep `compact` over them
+    * with the shared crash harness ([[CommitSweepSpec.sweep]]): after
+    * every crash a reader sees the partials before or after, and a
+    * re-run converges. The uncrashed compaction keeps two entries, and
+    * `read` and the schema did not move. Returns the compacted dir.
     */
-  private def sweep(partials: Seq[DataFrame], subDirs: Seq[String],
+  private def sweep(name: String, partials: Seq[DataFrame], subDirs: Seq[String],
                     compact: String => Unit, read: String => Seq[_]): String = {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.fault.impl", classOf[FaultFS].getName)
-    val base = Files.createTempDirectory("ps_sweep_")
-    val pristine = base.resolve("pristine")
-    partials.zipWithIndex.foreach { case (p, i) =>
-      PartialState.land(p, pristine.toString, i.toLong, subDirs)
+    def build(dir: String): Unit = partials.zipWithIndex.foreach { case (p, i) =>
+      PartialState.land(p, dir, i.toLong, subDirs)
     }
-    val want = read(pristine.toString)
-    def fault(p: JPath) = s"fault://${p.toAbsolutePath}"
-    val clean = base.resolve("clean")
-    copyTree(pristine, clean)
-    compact(fault(clean))
-    val wantDirs = entries(clean.toString)
-    assert(wantDirs == Seq("batch_id=2", "batch_id=3"), wantDirs)
-    assert(read(clean.toString) == want, "compaction changed the state")
-    def schemaOf(id: Int) = spark.read.parquet(s"$clean/batch_id=$id").schema
-    assert(schemaOf(2) == schemaOf(3), "compaction changed the schema")
-    val MaxK = 12
-    val crashes = (1 to MaxK).takeWhile { k =>
-      val run = base.resolve(s"k$k")
-      copyTree(pristine, run)
-      FaultFS.arm(run.toString, k)
-      val crashed =
-        try { compact(fault(run)); false }
-        catch { case _: FaultFS.Crash => true }
-        finally FaultFS.disarm()
-      if (crashed) {
-        PartialState.recover(spark, fault(run))
-        assert(read(run.toString) == want, s"crash at op $k: recovered state")
-        compact(fault(run))
-      }
-      assert(entries(run.toString) == wantDirs, s"crash at op $k: dirs")
-      assert(read(run.toString) == want, s"crash at op $k: compacted state")
-      crashed
-    }
-    assert(crashes.length >= 5 && crashes.length < MaxK,
-      s"${crashes.length} crash points")
-    clean.toString
+    def rows(dir: String) = PartialState.read(spark, dir, None, subDirs)
+    val (before, after) = CommitSweepSpec.sweep(spark, name, build, compact,
+      d => rows(d).collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+    assert(entries(after) == Seq(2L, 3L), entries(after))
+    assert(read(after) == read(before), "compaction changed the state")
+    assert(rows(after).schema == rows(before).schema, "compaction changed the schema")
+    after
   }
 
   test("compaction crash sweep: sum-merged state (CM sketch cells)") {
     val partials = (0 until 4).map(i =>
       Seq((0L, 1L, 2L + i), (1L, i.toLong, 1L), (2L, 3L, 5L)).toDF("j", "b", "cnt"))
-    sweep(partials, Nil, CmSketchIngest.compactState(spark, _),
+    sweep("cm", partials, Nil, CmSketchIngest.compactState(spark, _),
       dir => CmSketchIngest.sketch(spark, dir).collect().toSeq.map(_.toSeq))
   }
 
   test("compaction crash sweep: distinct-merged state (bloom bits)") {
     val partials = (0 until 4).map(i => Seq(1L, 7L + i, 40L).toDF("bit"))
-    sweep(partials, Nil, BloomIngest.compactState(spark, _),
+    sweep("bloom", partials, Nil, BloomIngest.compactState(spark, _),
       dir => BloomIngest.bloom(spark, dir).collect().toSeq.map(_.getLong(0)))
   }
 
@@ -174,18 +162,21 @@ class PartialStateSpec extends SparkSpec {
       NearDupIngest.bandRows(
         NearDupIngest.sigTable(docs, "text", "doc_id", 3, 16), 16, 8)
     }
-    val clean = sweep(partials, Seq("bucket"),
+    val clean = sweep("neardup", partials, Seq("bucket"),
       NearDupIngest.compactState(spark, _),
-      dir => PartialState.read(spark, dir).select("doc_id", "band", "bucket")
+      dir => PartialState.read(spark, dir, None, Seq("bucket"))
+        .select("doc_id", "band", "bucket")
         .collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
         .sorted)
-    assert(entries(s"$clean/batch_id=2").exists(_.startsWith("bucket=")))
-    assert(entries(s"$clean/batch_id=2").forall(n =>
-      n.startsWith("bucket=") || n.startsWith("_")))
+    val merged = new java.io.File(clean, BucketStore.current(spark, clean).get.live(2L))
+      .list().toSeq
+    assert(merged.exists(_.startsWith("bucket=")), merged)
+    assert(merged.forall(n => n.startsWith("bucket=") || n.startsWith("_") ||
+      n.startsWith(".")), merged)
   }
 
   /** Land `partials` as batches 0..n-1, compact, and check that at most
-    * two batch dirs remain and `view` did not move.
+    * two partials remain and `view` did not move.
     */
   private def compactsToTwo(partials: Seq[DataFrame], compact: String => Unit,
                             view: String => Seq[String]): Unit = {
@@ -194,9 +185,9 @@ class PartialStateSpec extends SparkSpec {
       PartialState.land(p, dir, i.toLong)
     }
     val before = view(dir)
-    assert(entries(dir).count(_.startsWith("batch_id=")) == partials.length)
+    assert(entries(dir).length == partials.length)
     compact(dir)
-    val left = entries(dir).filter(_.startsWith("batch_id="))
+    val left = entries(dir)
     assert(left.length <= 2, left)
     assert(view(dir) == before, "compaction moved the view")
   }

@@ -77,7 +77,7 @@ class ReconcileIngestSpec extends SparkSpec {
     val other = Seq(KeyedChangeRow("elsewhere", "insert",
       f(1, "a", 1.0), null, "s", 1))
     ReconcileIngest.applyBatch(other.toDF(), dir, spec, 0L)
-    assert(new java.io.File(s"$dir/batch_id=0").isDirectory)
+    assert(BucketStore.current(spark, dir).get.live.keySet == Set(0L))
     assert(viewOf(dir).isEmpty)
     ReconcileIngest.applyBatch(history.take(4).toDF(), dir, spec, 1L)
     assert(viewOf(dir).nonEmpty)
@@ -105,14 +105,11 @@ class ReconcileIngestSpec extends SparkSpec {
     }
     val before = viewOf(dir)
     ReconcileIngest.compact(spark, dir)
-    def batchDirs() = new java.io.File(dir).listFiles()
-      .map(_.getName).count(_.startsWith("batch_id="))
-    assert(batchDirs() == 2)
+    assert(BucketStore.current(spark, dir).get.live.size == 2)
     assert(viewOf(dir) == before)
     // the folded partial really merged: one row per chunk outside the
     // newest (replayable) partial
-    val st = spark.read.parquet(dir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    val st = PartialState.read(spark, dir)
     val newest = st.agg(max(col("batch_id"))).collect()(0).getLong(0)
     val perChunk = st.filter(col("batch_id") =!= newest)
       .groupBy("chunk").count().agg(max(col("count"))).collect()(0).getLong(0)
@@ -176,8 +173,7 @@ class ReconcileIngestSpec extends SparkSpec {
         input.addData(c.toIndexedSeq); q.processAllAvailable()
       }
     } finally q.stop()
-    val dirs = new java.io.File(s"$dir/state").listFiles()
-      .map(_.getName).count(_.startsWith("batch_id="))
+    val dirs = BucketStore.current(spark, s"$dir/state").get.live.size
     assert(dirs <= 3, s"expected compacted partials, got $dirs")
     assert(viewOf(s"$dir/state") == directSummary)
   }

@@ -238,7 +238,7 @@ class StreamingSpec extends SparkSpec {
       s"$dir/ckpt", threshold = 0.4)
     try {
       chunks.foreach { c => input.addData(c.toIndexedSeq); q.processAllAvailable() }
-      val streamed = spark.read.parquet(s"$dir/out")
+      val streamed = PartialState.read(spark, s"$dir/out")
         .select("doc_id", "is_dup", "dup_of").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val twin = NearDupIngest.batchTwin(
@@ -248,7 +248,8 @@ class StreamingSpec extends SparkSpec {
       assert(streamed == twin)
       // state is signature-only and bucket-partitioned — the layout the
       // pruned per-batch read depends on
-      val stateCols = spark.read.parquet(s"$dir/state").columns.toSet
+      val stateCols = PartialState.read(spark, s"$dir/state", None, Seq("bucket"))
+        .columns.toSet
       assert(stateCols == Set("doc_id", "sig", "band", "bh", "bucket", "batch_id"))
     } finally q.stop()
   }
@@ -265,7 +266,7 @@ class StreamingSpec extends SparkSpec {
     try {
       chunks.foreach { c => input.addData(c.toIndexedSeq); q.processAllAvailable() }
       // one partial per micro-batch, each <= d*w rows
-      val state = spark.read.parquet(s"$dir/state")
+      val state = PartialState.read(spark, s"$dir/state")
       assert(state.select("batch_id").distinct().count() == chunks.length)
       assert(state.groupBy("batch_id").count()
         .filter(col("count") > CmSketchIngest.D * CmSketchIngest.W)
@@ -308,7 +309,7 @@ class StreamingSpec extends SparkSpec {
       assert(streamed == twin,
         "merged per-batch delta partials must equal the one-pass aggregate")
       // state is group-sized per batch — never data-volume
-      val state = spark.read.parquet(s"$dir/state")
+      val state = PartialState.read(spark, s"$dir/state")
       assert(state.select("batch_id").distinct().count() == chunks.length)
       assert(state.groupBy("batch_id").count()
         .filter(col("count") > 64).count() == 0)
@@ -541,9 +542,7 @@ class StreamingSpec extends SparkSpec {
         "streamed chain view must equal the one-batch replay twin")
       // redelivery: re-applying the LAST batch id rebuilds its own round
       // from the intact previous round — the view must not change
-      val lastId = new java.io.File(s"$dir/state").listFiles()
-        .map(_.getName).filter(_.startsWith("round_"))
-        .map(_.stripPrefix("round_").toLong).max
+      val lastId = BucketStore.current(spark, s"$dir/state").get.live.keys.max
       JoinIvm.applyChainBatch(asRows.grouped(7).toSeq.last
           .toDF().toDF("table", "op", "payload", "payload_before", "src", "seq"),
         s"$dir/state", lastId, spec)
@@ -634,45 +633,31 @@ class StreamingSpec extends SparkSpec {
     assert(got == want,
       "state must survive across batches through the Hadoop FS listing")
     // round 0 is older than batch 2's pre-state (round 1): it is
-    // pruned to a v-only `view_0` dir and leaves the pre-state
-    // candidate set (round_0 gone — the O(1)-candidates-per-batch
-    // invariant), its view-delta rows surviving
-    import org.apache.hadoop.fs.Path
-    val hfs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!hfs.exists(new Path(s"$stateDir/round_0")),
-      "a pruned round must leave the round_* candidate set")
-    val v0 = spark.read.parquet(s"$stateDir/view_0")
+    // pruned to a v-only `view_0` entry and leaves the pre-state
+    // candidate set (the O(1)-candidates-per-batch invariant), its
+    // view-delta rows surviving
+    val m = BucketStore.current(spark, stateDir).get
+    assert(m.live.toSeq.sorted.map(_._2.split('/').last) ==
+      Seq("view_0", "round_1", "round_2"))
+    val v0 = spark.read.parquet(s"$stateDir/${m.live(0L)}")
     assert(v0.filter(col("part") =!= "v").count() == 0,
       "pruned rounds keep only view deltas")
     assert(v0.filter(col("part") === "v").count() > 0)
     // and rounds 1+2 still carry state for a batch-2 redelivery
-    assert(spark.read.parquet(s"$stateDir/round_1")
+    assert(spark.read.parquet(s"$stateDir/${m.live(1L)}")
       .filter(col("part") === "d").count() > 0)
-    // crash-safety: a prune swap interrupted between its delete and
-    // rename strands the round's view rows in .prune_<r> with neither
-    // round_<r> nor view_<r> — the next listing must complete the
-    // swap, not lose the rows
-    hfs.rename(new Path(s"$stateDir/view_0"),
-      new Path(s"$stateDir/.prune_0"))
-    assert(!hfs.exists(new Path(s"$stateDir/view_0")))
-    val healed = JoinIvm.view(spark, stateDir).collect()
+    // the pre-manifest layout of the same rounds reads as version 0...
+    val legacy = LegacyLayout.unversioned(spark, stateDir, s"file:$tmp/legacy")
+    def legacyView() = JoinIvm.view(spark, legacy).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(healed == want, "an interrupted prune swap must heal on read")
-    assert(hfs.exists(new Path(s"$stateDir/view_0")),
-      "the stranded tmp dir must be renamed into the v-only dir")
-    // ...and a staging left BESIDE an intact source round is dropped,
-    // never double-counted
-    hfs.rename(new Path(s"$stateDir/round_1"),
-      new Path(s"$stateDir/.prune_1_copy_src"))
-    hfs.rename(new Path(s"$stateDir/.prune_1_copy_src"),
-      new Path(s"$stateDir/round_1")) // round_1 untouched; now fake a stale staging
-    val stale = new Path(s"$stateDir/.prune_1")
-    hfs.mkdirs(stale)
-    assert(JoinIvm.view(spark, stateDir).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet == want,
-      "a stale staging beside an intact round must be dropped")
-    assert(!hfs.exists(stale))
+    assert(legacyView() == want)
+    // ...but one an interrupted prune swap left (the round's view rows
+    // stranded in `.prune_<r>`) is refused, naming the leftover
+    import org.apache.hadoop.fs.Path
+    val hfs = new Path(legacy).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(hfs.rename(new Path(s"$legacy/view_0"), new Path(s"$legacy/.prune_0")))
+    val e = intercept[java.io.IOException](legacyView())
+    assert(e.getMessage.contains(".prune_0"), e.getMessage)
   }
 
   test("join-view compaction caps what view() reads; a published base supersedes, never double-counts") {
@@ -698,34 +683,35 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     val want = Set(("P0", 5L, 5.0), ("P1", 5L, 5.0))
     assert(viewSet() == want)
-    import org.apache.hadoop.fs.Path
-    val f = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def names() = f.listStatus(new Path(stateDir))
-      .map(_.getPath.getName).toSeq
+    def names() = BucketStore.current(spark, stateDir).get.live.values
+      .map(_.split('/').last).toSeq
     assert(names().count(_.startsWith("round_")) == 2,
       "exactly the previous and current rounds carry state")
     assert(names().count(_.startsWith("viewbase_")) == 1,
-      "pruned view dirs fold into one published base")
+      "pruned rounds fold into one view base")
     assert(names().count(_.startsWith("view_")) <= 2,
-      s"uncompacted leftovers bounded by the threshold: ${names()}")
-    // crash between publish and reap: a covered view_<r> dir (r ≤ the
-    // base id) left behind must be IGNORED by readers — superseded,
-    // not double-counted — and reaped on read
+      s"unfolded pruned rounds bounded by the threshold: ${names()}")
+    // a pre-manifest copy of the state reads the same; one holding a
+    // view dir its base already folded (an interrupted publish-then-reap)
+    // or a compaction's staging is refused, naming the leftover — never
+    // double-counted or silently reaped
+    import org.apache.hadoop.fs.Path
+    val legacy = LegacyLayout.unversioned(spark, stateDir, s"$dir/legacy")
+    def legacyView() = JoinIvm.view(spark, legacy).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(legacyView() == want)
+    val f = new Path(legacy).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = names().find(_.startsWith("viewbase_")).get
-    org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$stateDir/$base"),
-      f, new Path(s"$stateDir/view_0"), false,
+    org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$legacy/$base"),
+      f, new Path(s"$legacy/view_0"), false,
       spark.sparkContext.hadoopConfiguration)
-    assert(viewSet() == want,
-      "a resurrected covered dir must not double-count the view")
-    assert(!f.exists(new Path(s"$stateDir/view_0")),
-      "the superseded dir is reaped on read")
-    // a stale .compactstage is inert to readers (the writer may be
-    // mid-stage concurrently) — view() neither reads nor deletes it
-    f.mkdirs(new Path(s"$stateDir/.compactstage"))
-    assert(viewSet() == want)
-    assert(f.exists(new Path(s"$stateDir/.compactstage")),
-      "readers must not touch the writer's staging")
+    val covered = intercept[java.io.IOException](legacyView())
+    assert(covered.getMessage.contains("view_0"), covered.getMessage)
+    f.delete(new Path(s"$legacy/view_0"), true)
+    assert(legacyView() == want)
+    f.mkdirs(new Path(s"$legacy/.compactstage"))
+    val staged = intercept[java.io.IOException](legacyView())
+    assert(staged.getMessage.contains(".compactstage"), staged.getMessage)
   }
 
   test("generalized IvmJoinSpec drives the streaming form: customer x orders view over batches") {
@@ -782,52 +768,11 @@ class StreamingSpec extends SparkSpec {
     assert(cols == Seq("c_mktsegment", "n_items", "sum_cents"))
   }
 
-  test("streaming deferred-JSON apply equals the batch fold; redelivery is idempotent") {
-    // the MINIMAL × PARTIAL_JSON consumer in its streaming form: each
-    // micro-batch folds only its own events against the stored latest
-    // documents — final state must equal the one-shot batch fold over
-    // the whole log, and re-applying the last batch must not move it
-    implicit val ctx = spark.sqlContext
-    val binDir = MysqlBinlogFixture.encodeEventsPartialMinimal(spark, sf)
-    val raw = spark.read
-      .format(classOf[MysqlBinlogSourceProvider].getName)
-      .option("path", binDir).load()
-      .filter(col("table") === "events")
-    val changes = raw.select("src", "key", "seq", "payload")
-      .orderBy("src", "seq").collect()
-      .map(r => PartialRow(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getString(3)))
-    assert(changes.exists(_.payload.contains("__jsondiff")),
-      "fixture must carry deferred markers")
-    val chunks = changes.grouped((changes.length + 2) / 3).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("deferred_json_").toString
-    val input = MemoryStream[PartialRow]
-    val q = CdcPipeline.startDeferredJsonApply(input.toDF(), "props",
-      s"$dir/state", s"$dir/ckpt")
-    try {
-      chunks.foreach { c => input.addData(c.toIndexedSeq); q.processAllAvailable() }
-    } finally q.stop()
-    def stateSet(): Set[(String, Long, String)] =
-      CdcPipeline.deferredJsonState(spark, s"$dir/state").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    val streamed = stateSet()
-    val twin = CdcPipeline.applyDeferredJsonDiffs(raw, "props").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(twin.nonEmpty && streamed == twin,
-      "per-batch folds against stored docs must equal the one-shot fold")
-    import spark.implicits._
-    CdcPipeline.applyDeferredJsonBatch(chunks.last.toIndexedSeq.toDF(),
-      "props", s"$dir/state", chunks.length.toLong - 1)
-    assert(stateSet() == streamed,
-      "redelivered batch must rebuild its own round, not double-apply")
-  }
-
   test("bucketed deferred-JSON apply equals the full fold at O(touched buckets) per batch") {
-    // the production-shape variant: doc state rides the bucketed
-    // applyBatch machinery (recorded count, touched-buckets-only
-    // rewrite, crash heal) instead of full-state docs_<id> rounds;
-    // redelivery converges through the per-key seq gate + identical
-    // (ts, seq) collapse rather than round versioning
+    // the streaming doc store: doc state rides the bucketed applyBatch
+    // machinery (recorded count, touched-buckets-only rewrite, one
+    // commit per batch); redelivery converges through the per-key seq
+    // gate + identical (ts, seq) collapse
     implicit val ctx = spark.sqlContext
     val binDir = MysqlBinlogFixture.encodeEventsPartialMinimal(spark, sf)
     val raw = spark.read
@@ -977,24 +922,23 @@ class StreamingSpec extends SparkSpec {
     run(chunks.take(3).map(_.toIndexedSeq))
     def cells() = CmSketchIngest.sketch(spark, state).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def dirs() = new java.io.File(state).listFiles()
-      .map(_.getName).filter(_.startsWith("batch_id=")).sorted.toSeq
     val before = cells()
-    assert(dirs().length == 3)
+    assert(batchIds(state) == Seq(0L, 1L, 2L))
     CmSketchIngest.compactState(spark, state)
-    // batches 0..1 summed into batch_id=1; newest untouched (replayable)
-    assert(dirs() == Seq("batch_id=1", "batch_id=2"))
+    // batches 0..1 summed into partial 1; newest untouched (replayable)
+    assert(batchIds(state) == Seq(1L, 2L))
     assert(cells() == before, "compaction must not change any cell sum")
-    // simulate a crash mid-swap: marker on, older dirs still present —
-    // recovery must NOT double-count (staging holds the merged copy)
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(state, "batch_id=1")
-    val staging = new org.apache.hadoop.fs.Path(state, "_compact_tmp")
-    assert(fs.rename(live, staging))
-    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(state, "batch_id=1__old")))
-    assert(cells() == before, "recovery must reinstall the staged merge")
-    assert(dirs() == Seq("batch_id=1", "batch_id=2"))
+    // a pre-manifest state a compaction left mid-swap (the merged copy
+    // in `_compact_tmp`, the target renamed to its `__old` marker) is
+    // refused, naming the leftover — no reader guesses which copy holds
+    val legacy = LegacyLayout.unversioned(spark, state, s"$dir/legacy")
+    assert(CmSketchIngest.sketch(spark, legacy).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == before)
+    assert(new java.io.File(s"$legacy/batch_id=1")
+      .renameTo(new java.io.File(s"$legacy/_compact_tmp")))
+    assert(new java.io.File(s"$legacy/batch_id=1__old").mkdirs())
+    assertLeftoverRefused(CmSketchIngest.sketch(spark, legacy),
+      "_compact_tmp", "batch_id=1__old")
     // the stream resumes against the compacted state
     run(chunks.drop(3).map(_.toIndexedSeq))
     val twin = CmSketchIngest.batchTwin(
@@ -1003,44 +947,16 @@ class StreamingSpec extends SparkSpec {
     assert(cells() == twin)
   }
 
-  /** Copy the partials `ids` of `state` into `to`, for staging a crash
-    * layout after a compaction has consumed them.
-    */
-  private def keepPartials(state: String, to: String, ids: Long*): String = {
-    ids.foreach(id => org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(s"$state/batch_id=$id"),
-      new java.io.File(s"$to/batch_id=$id")))
-    to
-  }
+  /** The landed batch ids of a partial state. */
+  private def batchIds(state: String): Seq[Long] =
+    BucketStore.current(spark, state).toSeq.flatMap(_.live.keys).sorted
 
-  /** Rebuild the layout a compaction leaves when it crashes right after
-    * its marker rename: the merged copy still in staging, the original
-    * target as `__old`, the older partials not yet deleted.
+  /** A read of a legacy state holding a retired protocol's leftover
+    * refuses, naming one of `leftovers`.
     */
-  private def stageMarkerCrash(state: String, pre: String, target: Long,
-                               older: Seq[Long]): Unit = {
-    import org.apache.commons.io.FileUtils.copyDirectory
-    assert(new java.io.File(s"$state/batch_id=$target")
-      .renameTo(new java.io.File(s"$state/_compact_tmp")))
-    copyDirectory(new java.io.File(s"$pre/batch_id=$target"),
-      new java.io.File(s"$state/batch_id=${target}__old"))
-    older.foreach(id => copyDirectory(new java.io.File(s"$pre/batch_id=$id"),
-      new java.io.File(s"$state/batch_id=$id")))
-  }
-
-  /** A marker with neither the live target nor staging is a layout no
-    * compaction crash leaves (the older partials are already gone), so
-    * healing must refuse it loudly instead of renaming the marker back.
-    */
-  private def assertMarkerWithoutCopiesRefused(state: String, target: Long)(
-      heal: => Any): Unit = {
-    val live = new java.io.File(s"$state/batch_id=$target")
-    val marker = new java.io.File(s"$state/batch_id=${target}__old")
-    assert(live.renameTo(marker))
-    val e = intercept[java.io.IOException](heal)
-    assert(e.getMessage.contains("neither a live nor a staged copy"),
-      e.getMessage)
-    assert(marker.renameTo(live))
+  private def assertLeftoverRefused(read: => Any, leftovers: String*): Unit = {
+    val e = intercept[java.io.IOException](read)
+    assert(leftovers.exists(e.getMessage.contains), e.getMessage)
   }
 
   test("streaming bloom state merges to the one-pass corpus bloom; probe has no false negatives") {
@@ -1055,7 +971,7 @@ class StreamingSpec extends SparkSpec {
     val q = BloomIngest.start(input.toDF(), state, s"$dir/ckpt")
     try {
       chunks.foreach { c => input.addData(c.toIndexedSeq); q.processAllAvailable() }
-      val raw = spark.read.parquet(state)
+      val raw = PartialState.read(spark, state)
       assert(raw.select("batch_id").distinct().count() == chunks.length)
       // mergeability: distinct union of partials == one-pass corpus bloom
       def bits() = BloomIngest.bloom(spark, state).collect()
@@ -1076,20 +992,17 @@ class StreamingSpec extends SparkSpec {
           s"doc ${r.get(0)}: ${r.getLong(2)} of ${r.getLong(1)} shingles " +
             "flagged — a bloom may never miss a true member")
       }
-      // compaction: the one exactly-once staged swap, then heal
-      val pre = keepPartials(state, s"$dir/pre", 0, 1)
+      // compaction: one commit replacing partials 0..1 with their merge
       BloomIngest.compactState(spark, state)
-      val dirs = new java.io.File(state).listFiles()
-        .map(_.getName).filter(_.startsWith("batch_id=")).sorted
-      assert(dirs.sameElements(Array("batch_id=1", "batch_id=2")),
-        s"got ${dirs.mkString(",")}")
+      assert(batchIds(state) == Seq(1L, 2L))
       assert(bits() == twin, "compaction must not change the bit set")
-      // crash after the marker, before the older dirs were deleted
-      stageMarkerCrash(state, pre, target = 1, older = Seq(0))
-      assert(bits() == twin, "recovery must install the staged merge")
-      assert(new java.io.File(state).list().sorted
-        .sameElements(Array("batch_id=1", "batch_id=2")))
-      assertMarkerWithoutCopiesRefused(state, 1)(bits())
+      // a pre-manifest state holding the retired compaction's marker is
+      // refused, naming it
+      val legacy = LegacyLayout.unversioned(spark, state, s"$dir/legacy")
+      assert(new java.io.File(s"$legacy/batch_id=1")
+        .renameTo(new java.io.File(s"$legacy/batch_id=1__old")))
+      assertLeftoverRefused(BloomIngest.bloom(spark, legacy).collect(),
+        "batch_id=1__old")
     } finally q.stop()
   }
 
@@ -1109,32 +1022,29 @@ class StreamingSpec extends SparkSpec {
       finally q.stop()
     }
     run(chunks.take(3).map(_.toIndexedSeq))
-    def stateKeys() = spark.read.parquet(state)
+    def stateKeys() = PartialState.read(spark, state, None, Seq("bucket"))
       .select("doc_id", "band").distinct().count()
-    def batchDirs() = new java.io.File(state).listFiles()
-      .map(_.getName).filter(_.startsWith("batch_id=")).sorted
     val before = stateKeys()
-    assert(batchDirs().length == 3)
-    val pre = keepPartials(state, s"$dir/pre", 0, 1)
+    assert(batchIds(state) == Seq(0L, 1L, 2L))
     NearDupIngest.compactState(spark, state)
-    // batches 0..1 merge into batch_id=1 (second-newest); the newest
-    // dir stays untouched because only IT can be replayed (and a replay
-    // overwrites its own dir)
-    assert(batchDirs().sameElements(Array("batch_id=1", "batch_id=2")),
-      s"got ${batchDirs().mkString(",")}")
+    // batches 0..1 merge into partial 1 (second-newest); the newest
+    // stays untouched because only IT can be replayed (and a replay
+    // replaces its own partial)
+    assert(batchIds(state) == Seq(1L, 2L))
     assert(stateKeys() == before, "compaction must not change state content")
-    // crash after the marker, before the older dirs were deleted
-    stageMarkerCrash(state, pre, target = 1, older = Seq(0))
-    NearDupIngest.recoverState(spark, state)
-    assert(batchDirs().sameElements(Array("batch_id=1", "batch_id=2")),
-      "recovery must install the staged merge")
-    assert(stateKeys() == before)
-    assertMarkerWithoutCopiesRefused(state, 1)(
-      NearDupIngest.recoverState(spark, state))
+    // a pre-manifest state the retired compaction left mid-swap is
+    // refused by the stream's own prior-state read, naming the leftover
+    val legacy = LegacyLayout.unversioned(spark, state, s"$dir/legacy")
+    assert(new java.io.File(s"$legacy/batch_id=1")
+      .renameTo(new java.io.File(s"$legacy/_compact_tmp")))
+    assert(new java.io.File(s"$legacy/batch_id=1__old").mkdirs())
+    assertLeftoverRefused(
+      PartialState.read(spark, legacy, None, Seq("bucket")).count(),
+      "_compact_tmp", "batch_id=1__old")
     // the stream picks up after compaction: fourth chunk still matches
     // the batch twin over the whole corpus
     run(chunks.drop(3).map(_.toIndexedSeq))
-    val streamed = spark.read.parquet(s"$dir/out")
+    val streamed = PartialState.read(spark, s"$dir/out")
       .select("doc_id", "is_dup", "dup_of").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val twin = NearDupIngest.batchTwin(
@@ -1503,6 +1413,38 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("snapshot-then-stream over a versioned state commits the snapshot " +
+      "as one version, and the stream applies on top") {
+    val base = java.nio.file.Files.createTempDirectory("graft_snap_over_").toString
+    val changesDir = s"$base/changes"; new java.io.File(changesDir).mkdirs()
+    val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
+    CdcPipeline.applyBatch(spark, Seq(
+        ChangeEvent("insert", "snapshot", 7L, ts(1), 1L, """{"id":7}"""),
+        ChangeEvent("insert", "snapshot", 8L, ts(1), 2L, """{"id":8}"""))
+      .toDF(), stateDir, numBuckets = 4)
+    val prior = BucketStore.current(spark, stateDir).get
+    val snapshot = Seq((1L, "a", ts(2)), (2L, "b", ts(2)))
+      .toDF("id", "name", "updated_at")
+    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "id", "updated_at",
+      changesDir, stateDir, ckpt)
+    def keys() = CdcPipeline.currentState(spark, stateDir).select("key")
+      .collect().map(_.getLong(0)).toSet
+    try {
+      val m = BucketStore.current(spark, stateDir).get
+      assert(m.version == prior.version + 1 && m.parent == prior.id,
+        "the snapshot must commit on top of the version log, not replace it")
+      assert(m.buckets == CdcPipeline.DefaultStateBuckets)
+      assert(BucketStore.read(spark, stateDir, m).select("key").collect()
+        .map(_.getLong(0)).toSet == Set(1L, 2L))
+      q.processAllAvailable()
+      Seq(ChangeEvent("delete", "snapshot", 1L, ts(3), 10L, null))
+        .toDF().coalesce(1).write.mode("append").json(changesDir)
+      q.processAllAvailable()
+      assert(keys() == Set(2L))
+      assert(BucketStore.current(spark, stateDir).get.version > m.version)
+    } finally q.stop()
+  }
+
   test("streaming KS drift state merges to the one-pass corpus statistic") {
     implicit val ctx = spark.sqlContext
     val docs = graft.model.Tables.documents(spark, sf)
@@ -1516,7 +1458,7 @@ class StreamingSpec extends SparkSpec {
       chunks.foreach { c => input.addData(c.toIndexedSeq); q.processAllAvailable() }
       // one histogram partial per micro-batch, each bounded by the
       // corpus cell grid |sources|x|bins| — state is never corpus-scale
-      val state = spark.read.parquet(s"$dir/state")
+      val state = PartialState.read(spark, s"$dir/state")
       assert(state.select("batch_id").distinct().count() == chunks.length)
       val gridCells = KsDriftIngest
         .cellCounts(graft.model.Tables.documents(spark, sf)).count()
@@ -1553,7 +1495,7 @@ class StreamingSpec extends SparkSpec {
       finally q.stop()
     }
     run(chunks.take(3).map(_.toIndexedSeq))
-    val raw = spark.read.parquet(state)
+    val raw = PartialState.read(spark, state)
     assert(raw.select("batch_id").distinct().count() == 3)
     assert(raw.groupBy("batch_id").count()
       .filter(col("count") > 8L * 64L).count() == 0)
@@ -1570,7 +1512,7 @@ class StreamingSpec extends SparkSpec {
     // the resumed run must add exactly one new partial on top of the
     // two compacted dirs (no replay of compacted batches into fresh
     // ids) and every partial must stay <= k*dim rows
-    val after = spark.read.parquet(state)
+    val after = PartialState.read(spark, state)
     assert(after.select("batch_id").distinct().count() == 3)
     assert(after.groupBy("batch_id").count()
       .filter(col("count") > 8L * 64L).count() == 0)

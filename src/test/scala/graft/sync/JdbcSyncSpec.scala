@@ -866,8 +866,7 @@ class JdbcSyncSpec extends SparkSpec {
         s"""{"k":${b * 4},"fk":$b}""", null, "s", b.toLong))
       ReconcileIngest.applyBatch(rows.toDF(), rDir, rSpec, b.toLong)
     }
-    def partials() = new java.io.File(rDir).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    def partials() = graft.streaming.BucketStore.current(spark, rDir).get.live.size
     val sumBefore = ReconcileIngest.view(spark, rDir)
       .orderBy("chunk").collect().map(_.toSeq).toSeq
     assert(partials() == 12)
