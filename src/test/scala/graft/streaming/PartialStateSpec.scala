@@ -153,15 +153,33 @@ class PartialStateSpec extends SparkSpec {
       dir => BloomIngest.bloom(spark, dir).collect().toSeq.map(_.getLong(0)))
   }
 
-  test("compaction crash sweep: NearDup's bucketed state keeps bucket dirs") {
+  /** NearDup's signature partial of batch `i` in `bands` bands, as local
+    * rows (the sweeps land it many times), landed in `bucket=B` sub-dirs.
+    */
+  private def neardupPartial(i: Int, bands: Int = 8): DataFrame = {
     val texts = Seq("the quick brown fox jumps over the lazy dog",
       "a stitch in time saves nine stitches", "the quick brown fox leaps")
-    val partials = (0 until 4).map { i =>
-      val docs = texts.zipWithIndex.map { case (t, j) =>
-        DocRow(i * 10L + j, s"$t $i") }.toDF()
-      NearDupIngest.bandRows(
-        NearDupIngest.sigTable(docs, "text", "doc_id", 3, 16), 16, 8)
-    }
+    val docs = texts.zipWithIndex.map { case (t, j) =>
+      DocRow(i * 10L + j, s"$t $i") }.toDF()
+    val rows = NearDupIngest.bandRows(
+      NearDupIngest.sigTable(docs, "text", "doc_id", 3, 16), 16, bands)
+    spark.createDataFrame(java.util.Arrays.asList(rows.collect(): _*), rows.schema)
+  }
+
+  test("land crash sweep: NearDup's bucketed state, a land and a replayed land") {
+    def landed(n: Int)(dir: String): Unit = (0 until n).foreach(i =>
+      PartialState.land(neardupPartial(i, 2), dir, i.toLong, Seq("bucket")))
+    def rows(dir: String) = PartialState.read(spark, dir, None, Seq("bucket"))
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val (p2, p5) = (neardupPartial(2, 2), neardupPartial(5, 2))
+    CommitSweepSpec.sweep(spark, "neardup_land", landed(2),
+      PartialState.land(p2, _, 2L, Seq("bucket")), rows)
+    CommitSweepSpec.sweep(spark, "neardup_replayed_land", landed(3),
+      PartialState.land(p5, _, 2L, Seq("bucket")), rows)
+  }
+
+  test("compaction crash sweep: NearDup's bucketed state keeps bucket dirs") {
+    val partials = (0 until 4).map(neardupPartial(_))
     val clean = sweep("neardup", partials, Seq("bucket"),
       NearDupIngest.compactState(spark, _),
       dir => PartialState.read(spark, dir, None, Seq("bucket"))
