@@ -4062,12 +4062,11 @@ object Queries {
         val outDir = graft.ops.CoreOps.scratchDirUnique("txn_atomic_out")
         val torn = new java.util.concurrent.atomic.AtomicLong(0L)
         val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-        val q = s.readStream
-          .format(classOf[graft.streaming.MysqlBinlogSourceProvider].getName)
-          .option("path", log)
-          .option("maxBytesPerTrigger", cap.toString)
-          .load()
-          .writeStream
+        val q = graft.streaming.LocalCheckpointFileManager.writeStream(s.readStream
+            .format(classOf[graft.streaming.MysqlBinlogSourceProvider].getName)
+            .option("path", log)
+            .option("maxBytesPerTrigger", cap.toString)
+            .load(), s"$outDir/ckpt")
           .foreachBatch { (b: DataFrame, _: Long) =>
             val counts = b.groupBy("table").count().collect()
               .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -4080,7 +4079,6 @@ object Queries {
             }
             ()
           }
-          .option("checkpointLocation", s"$outDir/ckpt")
           .start()
         try { q.processAllAvailable() } finally q.stop()
         require(batches.get() >= 2,
@@ -4585,11 +4583,11 @@ object Queries {
         try Overlap.awaitAll(fSeedState, fSeedQual, fCount)
         finally { snapC.unpersist(); () }
         val nSuffix = Await.result(fCount, Duration.Inf) // already done
-        val q = graft.streaming.MysqlBinlogSource.unionTails(s, heads, Map(
-            "startGtid" -> executed,
-            "maxEventsPerTrigger" ->
-              math.max(nSuffix / 12, 1L).toString))
-          .writeStream.option("checkpointLocation", s"$scratch/ckpt")
+        val q = graft.streaming.LocalCheckpointFileManager.writeStream(
+            graft.streaming.MysqlBinlogSource.unionTails(s, heads, Map(
+              "startGtid" -> executed,
+              "maxEventsPerTrigger" ->
+                math.max(nSuffix / 12, 1L).toString)), s"$scratch/ckpt")
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
             val ev = b.filter(col("table") === "events")
             // the two per-trigger sinks are independent (separate dirs,

@@ -302,8 +302,7 @@ object CdcPipeline {
   def start(spark: SparkSession, changesDir: String, stateDir: String,
             checkpointDir: String,
             autoSplit: Option[AutoSplit] = None): StreamingQuery =
-    fileCdcSource(spark, changesDir).writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(fileCdcSource(spark, changesDir), checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(spark, batch, stateDir)
         autoSplit.foreach(autoSplitOne(spark, stateDir, _))
@@ -320,13 +319,11 @@ object CdcPipeline {
                       checkpointDir: String,
                       maxLinesPerTrigger: Long = 10000L,
                       autoSplit: Option[AutoSplit] = None): StreamingQuery =
-    spark.readStream
-      .format(classOf[BinlogSourceProvider].getName)
-      .option("path", logPath)
-      .option("maxLinesPerTrigger", maxLinesPerTrigger.toString)
-      .load()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(spark.readStream
+        .format(classOf[BinlogSourceProvider].getName)
+        .option("path", logPath)
+        .option("maxLinesPerTrigger", maxLinesPerTrigger.toString)
+        .load(), checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(spark, batch, stateDir)
         autoSplit.foreach(autoSplitOne(spark, stateDir, _))
@@ -406,13 +403,11 @@ object CdcPipeline {
                           props: java.util.Properties,
                           checkpointDir: String,
                           maxLinesPerTrigger: Long = 10000L): StreamingQuery =
-    spark.readStream
-      .format(classOf[BinlogSourceProvider].getName)
-      .option("path", logPath)
-      .option("maxLinesPerTrigger", maxLinesPerTrigger.toString)
-      .load()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(spark.readStream
+        .format(classOf[BinlogSourceProvider].getName)
+        .option("path", logPath)
+        .option("maxLinesPerTrigger", maxLinesPerTrigger.toString)
+        .load(), checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatchJdbc(batch, url, table, props)
       }
@@ -443,9 +438,7 @@ object CdcPipeline {
       .option("maxEventsPerTrigger", maxEventsPerTrigger.toString)
     startPos.foreach(p => r = r.option("startPos", p.toString))
     startGtid.foreach(g => r = r.option("startGtid", g))
-    r.load()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(r.load(), checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatchJdbc(batch.drop("src"), url, table, props)
       }
@@ -651,8 +644,7 @@ object CdcPipeline {
                                 numBuckets: Int = DefaultStateBuckets,
                                 autoSplit: Option[AutoSplit] = None)
       : StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(changes, checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyDeferredJsonBucketed(batch, jsonField, stateDir, numBuckets)
         autoSplit.foreach(a => autoSplitOne(batch.sparkSession, stateDir, a))

@@ -614,8 +614,7 @@ object CdcProfile {
             spec: ProfileSpec,
             numBuckets: Int = DefaultStateBuckets,
             autoSplit: Option[CdcPipeline.AutoSplit] = None): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(changes, checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(batch, stateDir, spec, numBuckets)
         autoSplit.foreach(a =>

@@ -61,12 +61,14 @@ object CdcProfileDocBridge {
       col("src"), lit(batchId).as("seq"))
 
   /** Phase 1: land the batch's weighted deltas AT MOST ONCE per batch
-    * id ([[PartialState.landOnce]]).
+    * id ([[PartialState.landOnce]]); only this batch's apply reads them,
+    * so the landing drops the older batches' entries.
     */
   private[streaming] def landOnce(pairs: DataFrame, landDir: String,
                        spec: ProfileSpec, batchId: Long): Unit =
     PartialState.landOnce(CdcProfile.weightedDeltas(
-      pairsToChanges(pairs, spec.table, batchId), spec), landDir, batchId)
+      pairsToChanges(pairs, spec.table, batchId), spec), landDir, batchId,
+      dropOlder = true)
 
   /** One micro-batch's net doc pairs through both phases: land once,
     * then apply the LANDED deltas to the range-bucketed profile state

@@ -357,8 +357,7 @@ object CdcProfileRanged {
             autoSplit: Option[CdcPipeline.AutoSplit] = None,
             autoReseed: Option[Double] = None): StreamingQuery = {
     val advisor = autoReseed.map(_ => new ReseedAdvisor)
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(changes, checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(batch, stateDir, spec, numBuckets, advisor)
         autoSplit.foreach { a =>

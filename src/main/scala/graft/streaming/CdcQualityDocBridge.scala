@@ -36,7 +36,8 @@ object CdcQualityDocBridge {
     * gate-eaten replay cannot shrink what applies (the landed file is
     * what applies). The landing records its own schema, so the spec's
     * key shapes (including struct keys) round-trip without a declared
-    * read schema.
+    * read schema, and drops the older batches' entries, which only
+    * their own applies read.
     */
   def applyDocPairsOnce(pairs: DataFrame, landDir: String,
                         stateDir: String, spec: KeyedSpec,
@@ -44,7 +45,7 @@ object CdcQualityDocBridge {
     val spark = pairs.sparkSession
     PartialState.landOnce(CdcQualityKeyed.weightedDeltas(
         CdcProfileDocBridge.pairsToChanges(pairs, spec.factTable, batchId),
-        spec), landDir, batchId)
+        spec), landDir, batchId, dropOlder = true)
     CdcQualityKeyed.applyDeltas(
       PartialState.readBatch(spark, landDir, batchId),
       stateDir, spec, numBuckets)

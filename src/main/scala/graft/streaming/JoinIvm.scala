@@ -398,8 +398,7 @@ object JoinIvm {
             spec: IvmJoinSpec = ordersLineitem,
             compactEvery: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(changes, checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         applyBatch(batch, stateDir, id, spec, compactEvery)
       }
@@ -701,8 +700,7 @@ object JoinIvm {
   def startCascade(changes: DataFrame, stateDir: String,
                    checkpointDir: String, spec: IvmCascadeSpec)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(changes, checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         applyCascadeBatch(batch, stateDir, id, spec)
       }

@@ -121,8 +121,7 @@ object NearDupIngest {
             checkpointDir: String, textCol: String = "text",
             idCol: String = "doc_id", n: Int = 3, k: Int = 16,
             bands: Int = 8, threshold: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(docs, checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val newBands = bandRows(sigTable(batch, textCol, idCol, n, k), k, bands)

@@ -24,7 +24,9 @@ import BucketStore.Manifest
   *     rebuilds exactly that partial.
   *   - [[landOnce]] is a no-op when entry N is listed, else one commit
   *     adding it; a landed partial is never rewritten, because a replay
-  *     may recompute a smaller one.
+  *     may recompute a smaller one. A landing dir whose partial only its
+  *     own batch reads (the doc bridges') drops the older entries in the
+  *     same commit, so its log stays one entry long.
   *   - [[compact]] commits one version in which every entry but the
   *     newest is replaced by their merge at the second-newest id. Why
   *     the second-newest: only the newest partial can be replayed (batch
@@ -57,14 +59,18 @@ object PartialState {
     * call is a no-op, else one commit adds it, so the partial is either
     * landed complete or not at all. A writer that loses the create to
     * another landing of N returns quietly. An empty partial lands too,
-    * so a later replay cannot land a subset.
+    * so a later replay cannot land a subset. With `dropOlder` the commit
+    * also drops every entry below N: only batch N can be replayed, and
+    * its entry stays.
     */
-  def landOnce(partial: DataFrame, stateDir: String, batchId: Long): Unit = {
+  def landOnce(partial: DataFrame, stateDir: String, batchId: Long,
+               dropOlder: Boolean = false): Unit = {
     val spark = partial.sparkSession
     def landed(m: Option[Manifest]) = m.exists(_.live.contains(batchId))
     val base = BucketStore.current(spark, stateDir)
     if (landed(base)) return
-    try commit(spark, stateDir, base, partial, batchId, Nil, _ => false,
+    try commit(spark, stateDir, base, partial, batchId, Nil,
+      id => dropOlder && id < batchId,
       m => m.copy(schema = m.schema.orElse(Some(partial.schema))))
     catch {
       case _: BucketStore.Superseded
@@ -89,8 +95,7 @@ object PartialState {
   def stream(input: DataFrame, stateDir: String, checkpointDir: String,
              after: (SparkSession, Long) => Unit = (_, _) => ())(
       partial: DataFrame => DataFrame): StreamingQuery =
-    input.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(input, checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         land(partial(batch), stateDir, batchId)
         after(batch.sparkSession, batchId)

@@ -41,8 +41,7 @@ object StreamOps {
                          payloadSchema: org.apache.spark.sql.types.StructType,
                          outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
+    LocalCheckpointFileManager.writeStream(events, checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the state table may not exist yet (enrichment started alongside
         // the CDC apply) — events then carry a null dim, same as any

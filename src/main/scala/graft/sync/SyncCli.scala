@@ -316,17 +316,19 @@ object SyncCli {
     * from the SOURCE and written once as the baseline. Then each CDC
     * micro-batch, inside the same foreachBatch that applies the upserts:
     *   - a `(source='stream', bkt, c)` histogram partial of the batch's
-    *     non-delete images lands in its own `batch_id=N` partition
-    *     (dynamic overwrite — an at-least-once replay rebuilds exactly
-    *     its own directory), the [[graft.streaming.KsDriftIngest]]
-    *     mergeable-state shape;
-    *   - a Count-Min partial over the batch's KEYS lands the same way —
-    *     the hot-key write-skew stats a capacity planner reads;
+    *     non-delete images lands as partial N of `drift/hist`
+    *     ([[graft.streaming.PartialState.land]]: one commit replacing
+    *     entry N, so an at-least-once replay rebuilds exactly its own
+    *     entry), the [[graft.streaming.KsDriftIngest]] mergeable-state
+    *     shape;
+    *   - a Count-Min partial over the batch's KEYS lands the same way in
+    *     `drift/sketch` — the hot-key write-skew stats a capacity
+    *     planner reads;
     *   - the two-sample KS statistic between the baseline and the
     *     merged stream histogram (exact integer numerator, as
-    *     everywhere) is appended to `drift/gate` as the batch's gate
-    *     decision row: `(batch_id, n_base, n_stream, ks,
-    *     schema_changed, gated)`;
+    *     everywhere) lands as partial N of `drift/gate`, the batch's
+    *     gate decision row: `(n_base, n_stream, ks, schema_changed,
+    *     gated, batch_id)`;
     *   - the gate ALSO flips on schema-SHAPE change: the sorted
     *     payload-field signature of the watched table's images is
     *     recorded once (first non-empty batch) as the shape baseline,
@@ -335,7 +337,8 @@ object SyncCli {
     *     TABLE_MAP describes, which a KS statistic over one column
     *     cannot see.
     * The gate RECORDS rather than kills: per-batch decisions are
-    * idempotent state a supervising deployment polls to pause apply —
+    * idempotent state a supervising deployment polls
+    * (`PartialState.read` of `drift/gate`) to pause apply —
     * killing the query from inside its own foreachBatch would lose the
     * batch's already-committed upsert. State scale: histograms are
     * ≤ |bins| rows per batch, sketches ≤ 256, gate rows 1 — never
@@ -375,107 +378,105 @@ object SyncCli {
     var reader = spark.readStream.format(fmt).option("path", c.binlog.get)
     c.binlogStartPos.foreach(p => reader = reader.option("startPos", p.toString))
     c.binlogStartGtid.foreach(g => reader = reader.option("startGtid", g))
-    reader
-      .load()
-      .writeStream
-      .option("checkpointLocation", s"${c.checkpointDir}/cdc_checkpoint")
+    graft.streaming.LocalCheckpointFileManager.writeStream(reader.load(),
+        s"${c.checkpointDir}/cdc_checkpoint")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         graft.streaming.CdcPipeline.applyBatchJdbc(
           batch, c.dstUrl, c.cdcTable, c.dstProps)
-        val watched = batch.filter(col("table") === dg.table)
-        watched
-          .filter(col("op") =!= graft.streaming.ChangeEvent.Delete)
-          // via double: JSON renders numerics as "100.0", which the
-          // ANSI string→long cast rejects; double→long truncates to
-          // the same integer bin as the baseline's column cast
-          .select(get_json_object(col("payload"), s"$$.${dg.column}")
-            .cast("double").cast("long").as("bkt"))
-          .filter(col("bkt").isNotNull)
-          .groupBy("bkt").agg(count(lit(1)).as("c"))
-          .select(lit("stream").as("source"), col("bkt"), col("c"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$driftDir/hist")
-        graft.streaming.CmSketchIngest.cellCounts(
-            watched.select(col("key").cast("string").as("w")), "w")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$driftDir/sketch")
-        // schema-shape guard: distinct sorted payload-field signatures
-        // of this batch (bounded by the number of distinct TABLE_MAP
-        // shapes in the batch — 1, or 2 the trigger an ALTER lands).
-        // INSERT images only: an insert's after image carries every
-        // column its statement set under ANY binlog_row_image mode,
-        // while a MINIMAL update's payload is just the changed columns
-        // — judging updates would flip the gate on row-image policy,
-        // not schema shape (and deletes have no payload at all)
-        val sigs = watched
-          .filter(col("op") === graft.streaming.ChangeEvent.Insert)
-          .select(array_join(array_sort(
-            expr("json_object_keys(payload)")), ",").as("sig"))
-          .filter(col("sig").isNotNull)
-          .distinct().collect().map(_.getString(0)).toSet
-        val sigPath = new org.apache.hadoop.fs.Path(
-          s"$driftDir/schema_baseline.txt")
-        val sigFs = sigPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        // write-once, like the histogram baseline: the first observed
-        // shape IS the contract later batches are judged against
-        val baselineSigs: Set[String] =
-          if (sigFs.exists(sigPath)) {
-            val in = sigFs.open(sigPath)
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8)
-              .split("\n").filter(_.nonEmpty).toSet
-            finally in.close()
-          } else if (sigs.nonEmpty) {
-            val out = sigFs.create(sigPath, false)
-            try out.write(sigs.toSeq.sorted.mkString("\n")
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-            sigs
-          } else Set.empty
-        val schemaChanged = sigs.exists(!baselineSigs.contains(_))
-        // explicit schema: a batch with no watched rows writes an
-        // empty partition-less dir, which schema inference would refuse
-        val union = spark.read.parquet(s"$driftDir/baseline")
-          .unionByName(spark.read
-            .schema("source STRING, bkt BIGINT, c BIGINT, batch_id BIGINT")
-            .parquet(s"$driftDir/hist")
-            .select("source", "bkt", "c"))
-        val pairs = graft.streaming.KsDriftIngest.ksPairs(union)
-          .select(lit(batchId).as("batch_id"),
-            col("n_a").as("n_base"), col("n_b").as("n_stream"),
-            (col("ks_num") /
-              (col("n_a").cast("double") * col("n_b"))).as("ks"))
-          .withColumn("schema_changed", lit(schemaChanged))
-          .withColumn("gated",
-            col("ks") > dg.threshold || col("schema_changed"))
-        // every batch writes an immutable decision row, even when the
-        // stream histogram is still empty (quiet stream, no watched
-        // rows yet) and ksPairs therefore has no 'stream' side: a
-        // supervising poller must be able to tell "gate open" from
-        // "not evaluated", so the not-evaluated case is an explicit
-        // (ks=null) row rather than a missing partition — it still
-        // carries the schema verdict (a batch CAN alter the shape while
-        // contributing nothing to the watched histogram)
-        val gate =
-          if (pairs.isEmpty)
-            spark.range(1).select(lit(batchId).as("batch_id"),
-              lit(null).cast("long").as("n_base"),
-              lit(0L).as("n_stream"),
-              lit(null).cast("double").as("ks"),
-              lit(schemaChanged).as("schema_changed"),
-              lit(schemaChanged).as("gated"))
-          else pairs
-        gate.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$driftDir/gate")
-        ()
+        recordDrift(spark, driftDir, dg, batch, batchId)
       }
       .start()
+  }
+
+  /** One micro-batch's drift state ([[runDriftGate]]): its histogram,
+    * key sketch and gate decision, each landed as partial `batchId` of
+    * its dir under `driftDir`.
+    */
+  private[sync] def recordDrift(spark: SparkSession, driftDir: String,
+                                dg: DriftGateConfig,
+                                batch: org.apache.spark.sql.DataFrame,
+                                batchId: Long): Unit = {
+    import org.apache.spark.sql.functions._
+    import graft.streaming.PartialState
+    val watched = batch.filter(col("table") === dg.table)
+    PartialState.land(watched
+      .filter(col("op") =!= graft.streaming.ChangeEvent.Delete)
+      // via double: JSON renders numerics as "100.0", which the
+      // ANSI string→long cast rejects; double→long truncates to
+      // the same integer bin as the baseline's column cast
+      .select(get_json_object(col("payload"), s"$$.${dg.column}")
+        .cast("double").cast("long").as("bkt"))
+      .filter(col("bkt").isNotNull)
+      .groupBy("bkt").agg(count(lit(1)).as("c"))
+      .select(lit("stream").as("source"), col("bkt"), col("c")),
+      s"$driftDir/hist", batchId)
+    PartialState.land(graft.streaming.CmSketchIngest.cellCounts(
+        watched.select(col("key").cast("string").as("w")), "w"),
+      s"$driftDir/sketch", batchId)
+    // schema-shape guard: distinct sorted payload-field signatures
+    // of this batch (bounded by the number of distinct TABLE_MAP
+    // shapes in the batch — 1, or 2 the trigger an ALTER lands).
+    // INSERT images only: an insert's after image carries every
+    // column its statement set under ANY binlog_row_image mode,
+    // while a MINIMAL update's payload is just the changed columns
+    // — judging updates would flip the gate on row-image policy,
+    // not schema shape (and deletes have no payload at all)
+    val sigs = watched
+      .filter(col("op") === graft.streaming.ChangeEvent.Insert)
+      .select(array_join(array_sort(
+        expr("json_object_keys(payload)")), ",").as("sig"))
+      .filter(col("sig").isNotNull)
+      .distinct().collect().map(_.getString(0)).toSet
+    val sigPath = new org.apache.hadoop.fs.Path(
+      s"$driftDir/schema_baseline.txt")
+    val sigFs = sigPath.getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // write-once, like the histogram baseline: the first observed
+    // shape IS the contract later batches are judged against
+    val baselineSigs: Set[String] =
+      if (sigFs.exists(sigPath)) {
+        val in = sigFs.open(sigPath)
+        try new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8)
+          .split("\n").filter(_.nonEmpty).toSet
+        finally in.close()
+      } else if (sigs.nonEmpty) {
+        val out = sigFs.create(sigPath, false)
+        try out.write(sigs.toSeq.sorted.mkString("\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+        sigs
+      } else Set.empty
+    val schemaChanged = sigs.exists(!baselineSigs.contains(_))
+    val union = spark.read.parquet(s"$driftDir/baseline")
+      .unionByName(PartialState.read(spark, s"$driftDir/hist",
+          Some(org.apache.spark.sql.types.StructType.fromDDL(
+            "source STRING, bkt BIGINT, c BIGINT")))
+        .select("source", "bkt", "c"))
+    val pairs = graft.streaming.KsDriftIngest.ksPairs(union)
+      .select(col("n_a").as("n_base"), col("n_b").as("n_stream"),
+        (col("ks_num") /
+          (col("n_a").cast("double") * col("n_b"))).as("ks"))
+      .withColumn("schema_changed", lit(schemaChanged))
+      .withColumn("gated",
+        col("ks") > dg.threshold || col("schema_changed"))
+    // every batch writes an immutable decision row, even when the
+    // stream histogram is still empty (quiet stream, no watched
+    // rows yet) and ksPairs therefore has no 'stream' side: a
+    // supervising poller must be able to tell "gate open" from
+    // "not evaluated", so the not-evaluated case is an explicit
+    // (ks=null) row rather than a missing entry — it still
+    // carries the schema verdict (a batch CAN alter the shape while
+    // contributing nothing to the watched histogram)
+    val gate =
+      if (pairs.isEmpty)
+        spark.range(1).select(lit(null).cast("long").as("n_base"),
+          lit(0L).as("n_stream"),
+          lit(null).cast("double").as("ks"),
+          lit(schemaChanged).as("schema_changed"),
+          lit(schemaChanged).as("gated"))
+      else pairs
+    PartialState.land(gate, s"$driftDir/gate", batchId)
   }
 
   /** The `state` verb's own flag surface — it touches no JDBC endpoint,

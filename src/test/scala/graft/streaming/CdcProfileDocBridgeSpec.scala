@@ -80,6 +80,28 @@ class CdcProfileDocBridgeSpec extends SparkSpec {
     assert(maintained() == want)
   }
 
+  test("the landing dir stays one entry long: ten batches end in the " +
+      "three-batch run's profile") {
+    val rows = partialRows()
+    def run(batches: Int): (String, String) = {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"profbridge_${batches}_").toString
+      (0 until batches).foreach { i =>
+        CdcProfileDocBridge.applyDeferredJsonWithProfile(rows.slice(
+            i * rows.length / batches, (i + 1) * rows.length / batches)
+            .toIndexedSeq.toDF(), "props", s"$dir/docs", s"$dir/land",
+          s"$dir/prof", pSpec, i.toLong, docBuckets = 8, profileBuckets = 8)
+      }
+      (s"$dir/land", s"$dir/prof")
+    }
+    def profile(prof: String) = CdcProfileRanged
+      .profileView(spark, prof, pSpec, qs).collect().map(_.toSeq).toSeq
+    val (land10, prof10) = run(10)
+    val entries = BucketStore.current(spark, land10).get.live.keySet
+    assert(entries.size <= 2 && entries.contains(9L), entries)
+    assert(profile(prof10) == profile(run(3)._2))
+  }
+
   test("crash between land and apply heals: a gate-eaten empty replay " +
       "still applies the landed FULL batch") {
     val rows = partialRows()

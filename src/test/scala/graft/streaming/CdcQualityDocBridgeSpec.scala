@@ -68,6 +68,9 @@ class CdcQualityDocBridgeSpec extends SparkSpec {
         c.toIndexedSeq.toDF(), "props", docs, land, qual, kSpec,
         i.toLong, docBuckets = 8, qualityBuckets = 8)
     }
+    // each landing dropped the batches before it
+    assert(BucketStore.current(spark, land).get.live.keySet ==
+      Set(chunks.size - 1L))
     CdcQualityKeyed.applyBatch(dimChanges(), qual, kSpec, numBuckets = 8)
     val got = report(qual)
     // direct twin: the live documents re-inserted as one fresh stream

@@ -203,6 +203,51 @@ class CommitSweepSpec extends SparkSpec {
     CdcQualityKeyed.applyDeltas(deltas, dir, keyedSpec, 4)
     assert(viewOf(dir) == viewOf(twin))
   }
+
+  // ---- a throw inside the doc apply's net-pairs hook ---------------
+
+  private def docRows(keys: Seq[Long], seq0: Long) = keys.map(k =>
+    PartialRow("s", k, seq0 + k, s"""{"props":{"n":${seq0 + k}}}""")).toDF()
+
+  test("a throw inside the doc apply's net-pairs hook is rethrown after the " +
+      "staged write finished, no version lands after it, and a replay converges") {
+    val root = Files.createTempDirectory("hook_crash_")
+    val (twin, dir) = (root.resolve("twin").toString, root.resolve("crashed").toString)
+    Seq(twin, dir).foreach(CdcPipeline.applyDeferredJsonBucketed(
+      docRows(0L until 20L, 0L), "props", _, numBuckets = 4))
+    val batch = docRows(10L until 30L, 100L)
+    CdcPipeline.applyDeferredJsonBucketed(batch, "props", twin, numBuckets = 4)
+    def docs(d: String) = CdcPipeline.deferredJsonStateBucketed(spark, d)
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    def committed() = (BucketStore.current(spark, dir).map(_.version),
+      Files.list(root.resolve("crashed")).toArray.map(_.toString).sorted.toSeq)
+    val before = committed()
+    // the driver clock's end time of every job the apply ran
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val returned = try {
+      val e = intercept[IllegalStateException](CdcPipeline.applyDeferredJsonBucketed(
+        batch, "props", dir, numBuckets = 4,
+        onNetPairs = Some(_ => throw new IllegalStateException("hook failed"))))
+      assert(e.getMessage == "hook failed")
+      System.currentTimeMillis()
+    } finally {
+      val atReturn = committed()
+      Thread.sleep(1000)
+      spark.sparkContext.removeSparkListener(listener)
+      assert(atReturn == before, "the failed apply left a version or a data dir")
+      assert(committed() == atReturn, "a commit landed after the apply returned")
+    }
+    // the staged write ran, and every job of the apply ended before it returned
+    assert(!ends.isEmpty)
+    assert(ends.toArray.map(_.asInstanceOf[Long]).max <= returned)
+    CdcPipeline.applyDeferredJsonBucketed(batch, "props", dir, numBuckets = 4)
+    assert(docs(dir) == docs(twin))
+  }
 }
 
 object CommitSweepSpec {

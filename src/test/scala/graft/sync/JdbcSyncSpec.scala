@@ -1,6 +1,7 @@
 package graft.sync
 
 import graft.SparkSpec
+import graft.streaming.PartialState
 import org.apache.spark.sql.functions._
 
 import java.sql.DriverManager
@@ -510,9 +511,8 @@ class JdbcSyncSpec extends SparkSpec {
       val baseline = spark.read.parquet(s"$base/ckpt/drift/baseline")
       assert(baseline.agg(sum("c")).head().getLong(0) == 500L)
       q.processAllAvailable()
-      // partition-dir inference types batch_id as int — normalize
       def gate(): Map[Long, (Boolean, Double)] =
-        spark.read.parquet(s"$base/ckpt/drift/gate").collect()
+        PartialState.read(spark, s"$base/ckpt/drift/gate").collect()
           .map(r => r.getAs[Number]("batch_id").longValue() ->
             (r.getAs[Boolean]("gated"), r.getAs[Double]("ks"))).toMap
       val g0 = gate()
@@ -533,11 +533,34 @@ class JdbcSyncSpec extends SparkSpec {
       assert(g1.keys.size >= 2 && !g1(g1.keys.min)._1,
         "earlier batches' decisions are immutable state")
       // hot-key sketch partials: bounded cells per batch, never row-scale
-      val sketch = spark.read.parquet(s"$base/ckpt/drift/sketch")
+      val sketch = PartialState.read(spark, s"$base/ckpt/drift/sketch")
       assert(sketch.groupBy("batch_id").count()
         .filter(col("count") > 256).count() == 0)
       assert(JdbcSource.read(spark, dstUrl, "cdc_state", props).count() == 16L)
     } finally q.stop()
+  }
+
+  test("drift-gate: a replayed batch leaves one entry per drift dir") {
+    import spark.implicits._
+    import graft.streaming.{BucketStore, ChangeEvent}
+    val driftDir = java.nio.file.Files.createTempDirectory("graft_dg_replay_").toString
+    Seq(("baseline", 1L, 5L), ("baseline", 2L, 5L)).toDF("source", "bkt", "c")
+      .write.parquet(s"$driftDir/baseline")
+    val dg = SyncCli.DriftGateConfig("src_orders", "amount", 0.3)
+    val batch = (0 until 6).map(i => ChangeEvent("insert", "src_orders",
+      100L + i, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), i + 1L,
+      s"""{"name":"o$i","amount":${i % 2 + 1}}""")).toDF()
+    def entries() = Seq("hist", "sketch", "gate").map(d =>
+      BucketStore.current(spark, s"$driftDir/$d").get.live.keySet)
+    def rows(d: String) = PartialState.read(spark, s"$driftDir/$d")
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    SyncCli.recordDrift(spark, driftDir, dg, batch, 0L)
+    val first = Seq("hist", "sketch", "gate").map(rows)
+    SyncCli.recordDrift(spark, driftDir, dg, batch, 0L)
+    assert(entries() == Seq.fill(3)(Set(0L)))
+    assert(Seq("hist", "sketch", "gate").map(rows) == first)
+    assert(PartialState.read(spark, s"$driftDir/hist").agg(sum("c"))
+      .head().getLong(0) == 6L)
   }
 
   test("drift-gate over the real wire format gates a skewed change stream") {
@@ -581,7 +604,7 @@ class JdbcSyncSpec extends SparkSpec {
     try {
       q.processAllAvailable()
       def gate(): Map[Long, Boolean] =
-        spark.read.parquet(s"$base/ckpt/drift/gate").collect()
+        PartialState.read(spark, s"$base/ckpt/drift/gate").collect()
           .map(r => r.getAs[Number]("batch_id").longValue() ->
             r.getAs[Boolean]("gated")).toMap
       assert(gate().nonEmpty && !gate().values.exists(identity))
@@ -606,14 +629,14 @@ class JdbcSyncSpec extends SparkSpec {
         java.lang.Double.valueOf(100.0 * (i + 1)), s"r$i": AnyRef)))
       w.xid(3L); w.flush()
       q.processAllAvailable()
-      val last = spark.read.parquet(s"$base/ckpt/drift/gate")
+      val last = PartialState.read(spark, s"$base/ckpt/drift/gate")
         .orderBy(col("batch_id").desc).limit(1).collect().head
       assert(last.getAs[Boolean]("schema_changed"),
         "an ALTERed payload shape must be flagged")
       assert(last.getAs[Boolean]("gated"),
         "schema drift must flip the gate, not just the KS statistic")
       // earlier decisions keep their recorded shape verdict
-      assert(spark.read.parquet(s"$base/ckpt/drift/gate")
+      assert(PartialState.read(spark, s"$base/ckpt/drift/gate")
         .filter(col("schema_changed")).count() >= 1L)
     } finally { q.stop(); w.close() }
   }
