@@ -4584,10 +4584,10 @@ object Queries {
         finally { snapC.unpersist(); () }
         val nSuffix = Await.result(fCount, Duration.Inf) // already done
         val q = graft.streaming.LocalCheckpointFileManager.writeStream(
-            graft.streaming.MysqlBinlogSource.unionTails(s, heads, Map(
-              "startGtid" -> executed,
-              "maxEventsPerTrigger" ->
-                math.max(nSuffix / 12, 1L).toString)), s"$scratch/ckpt")
+            graft.streaming.MysqlBinlogSource.unionTails(s, heads,
+              startGtid = Some(executed),
+              maxEventsPerTrigger = Some(math.max(nSuffix / 12, 1L))),
+            s"$scratch/ckpt")
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
             val ev = b.filter(col("table") === "events")
             // the two per-trigger sinks are independent (separate dirs,

@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
 
 /** Snapshot-then-stream CDC application (St2 — the north star's
   * "Structured Streaming reading the binlog, writing to ClickHouse",
-  * BASELINE.json). The binlog is fronted by a directory of change-event
-  * files (the standard file-fed stand-in when no broker is reachable;
-  * swapping in a Kafka/Debezium source changes ONE readStream line).
+  * BASELINE.json). The starters take the change stream as a DataFrame:
+  * the MySQL binlog tail ([[MysqlBinlogSource.tail]]) or the JSON-file
+  * feed ([[fileCdcSource]]); swapping in a Kafka/Debezium source changes
+  * only that argument.
   *
   * Semantics follow ClickHouse ReplacingMergeTree, which is what the
   * reference targets: the applied table keeps, per key, the row with the
@@ -293,37 +294,18 @@ object CdcPipeline {
       .orderBy("bucket")
   }
 
-  /** Launch the continuous apply: change files → micro-batch upsert into
-    * the parquet state table, offsets tracked in `checkpointDir` (the
-    * Structured-Streaming form of the reference's metadata.txt). An
-    * `autoSplit` policy splits the hottest outgrown bucket between
-    * triggers ([[autoSplitOne]] — FS-metadata advisory, no data scan).
+  /** Launch the continuous apply: a change stream (the wire tail
+    * [[MysqlBinlogSource.tail]], or the JSON-file feed [[fileCdcSource]])
+    * → micro-batch upsert into the parquet state table, offsets tracked
+    * in `checkpointDir` (the Structured-Streaming form of the
+    * reference's metadata.txt). An `autoSplit` policy splits the hottest
+    * outgrown bucket between triggers ([[autoSplitOne]] — FS-metadata
+    * advisory, no data scan).
     */
-  def start(spark: SparkSession, changesDir: String, stateDir: String,
+  def start(spark: SparkSession, changes: DataFrame, stateDir: String,
             checkpointDir: String,
             autoSplit: Option[AutoSplit] = None): StreamingQuery =
-    LocalCheckpointFileManager.writeStream(fileCdcSource(spark, changesDir), checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, batch, stateDir)
-        autoSplit.foreach(autoSplitOne(spark, stateDir, _))
-      }
-      .start()
-
-  /** Launch the continuous apply from the custom binlog-tail source
-    * (graft.streaming.BinlogSource — a DataSourceV2 MicroBatchStream over
-    * an append-only change log, offset = log position) instead of the
-    * file-glob stand-in. Same downstream apply, same optional
-    * between-trigger auto-split.
-    */
-  def startFromBinlog(spark: SparkSession, logPath: String, stateDir: String,
-                      checkpointDir: String,
-                      maxLinesPerTrigger: Long = 10000L,
-                      autoSplit: Option[AutoSplit] = None): StreamingQuery =
-    LocalCheckpointFileManager.writeStream(spark.readStream
-        .format(classOf[BinlogSourceProvider].getName)
-        .option("path", logPath)
-        .option("maxLinesPerTrigger", maxLinesPerTrigger.toString)
-        .load(), checkpointDir)
+    LocalCheckpointFileManager.writeStream(changes, checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(spark, batch, stateDir)
         autoSplit.foreach(autoSplitOne(spark, stateDir, _))
@@ -395,27 +377,10 @@ object CdcPipeline {
     }
   }
 
-  /** [[startFromBinlog]] with a JDBC target instead of the parquet
-    * state table: binlog tail → per-micro-batch transactional upsert.
-    */
-  def startFromBinlogJdbc(spark: SparkSession, logPath: String,
-                          url: String, table: String,
-                          props: java.util.Properties,
-                          checkpointDir: String,
-                          maxLinesPerTrigger: Long = 10000L): StreamingQuery =
-    LocalCheckpointFileManager.writeStream(spark.readStream
-        .format(classOf[BinlogSourceProvider].getName)
-        .option("path", logPath)
-        .option("maxLinesPerTrigger", maxLinesPerTrigger.toString)
-        .load(), checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatchJdbc(batch, url, table, props)
-      }
-      .start()
-
-  /** [[startFromBinlogJdbc]] over the REAL MySQL wire format
-    * ([[MysqlBinlogSourceProvider]]) instead of the TSV stand-in, with
-    * the snapshot-fence start the reference's metadata.txt exists for:
+  /** Launch the continuous apply into a JDBC target: the MySQL binlog
+    * tail ([[MysqlBinlogSource.tail]]) → per-micro-batch transactional
+    * upsert ([[applyBatchJdbc]]), with the snapshot-fence start the
+    * reference's metadata.txt exists for:
     * a fresh stream begins at `startPos` (the recorded SHOW-MASTER-
     * STATUS position — history before it is already in the snapshot) or
     * at the first transaction past `startGtid` (the recorded
@@ -431,34 +396,28 @@ object CdcPipeline {
                                checkpointDir: String,
                                startPos: Option[Long] = None,
                                maxEventsPerTrigger: Long = 10000L,
-                               startGtid: Option[String] = None): StreamingQuery = {
-    var r = spark.readStream
-      .format(classOf[MysqlBinlogSourceProvider].getName)
-      .option("path", logPath)
-      .option("maxEventsPerTrigger", maxEventsPerTrigger.toString)
-    startPos.foreach(p => r = r.option("startPos", p.toString))
-    startGtid.foreach(g => r = r.option("startGtid", g))
-    LocalCheckpointFileManager.writeStream(r.load(), checkpointDir)
+                               startGtid: Option[String] = None): StreamingQuery =
+    LocalCheckpointFileManager.writeStream(MysqlBinlogSource.tail(spark,
+        logPath, startPos, startGtid, Some(maxEventsPerTrigger)), checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatchJdbc(batch.drop("src"), url, table, props)
       }
       .start()
-  }
 
   /** Snapshot-then-stream: batch-copy the current table state (the
-    * reference's whole program), then apply the change stream from the
-    * recorded offset forward. Returns the running query.
-    * `useBinlog=true` tails a single change-log file via the custom
-    * [[BinlogSourceProvider]] instead of a JSON file directory.
+    * reference's whole program), then apply the change stream `changes`
+    * from the recorded offset forward. Returns the running query. The
+    * snapshot rows are keyed under `table`, the source table's name —
+    * the name its change events carry — so a streamed change of key k
+    * collapses with k's snapshot row instead of living beside it.
     */
   def snapshotThenStream(spark: SparkSession, snapshot: DataFrame,
-                         keyCol: String, tsCol: String,
-                         changesDir: String, stateDir: String,
-                         checkpointDir: String,
-                         useBinlog: Boolean = false): StreamingQuery = {
+                         table: String, keyCol: String, tsCol: String,
+                         changes: DataFrame, stateDir: String,
+                         checkpointDir: String): StreamingQuery = {
     val asState = snapshot.select(
       lit(ChangeEvent.Insert).as("op"),
-      lit("snapshot").as("table"),
+      lit(table).as("table"),
       col(keyCol).cast("long").as("key"),
       col(tsCol).cast("timestamp").as("ts"),
       lit(0L).as("seq"),
@@ -467,8 +426,7 @@ object CdcPipeline {
     // layout the streaming apply maintains
     BucketStore.publishRebucket(spark, withBucket(asState, DefaultStateBuckets),
       stateDir, BucketStore.current(spark, stateDir), DefaultStateBuckets)
-    if (useBinlog) startFromBinlog(spark, changesDir, stateDir, checkpointDir)
-    else start(spark, changesDir, stateDir, checkpointDir)
+    start(spark, changes, stateDir, checkpointDir)
   }
 
   /** Stateful applier for `binlog_row_image=MINIMAL` ×

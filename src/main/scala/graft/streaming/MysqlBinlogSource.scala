@@ -44,9 +44,8 @@ import scala.jdk.CollectionConverters._
   * CHAIN id — the configured head path — which stays constant across
   * rotation and distinguishes servers that all name their logs
   * `binlog.00000N` (the physical file is recoverable from seq's epoch
-  * bits). Downstream is [[CdcPipeline]] unchanged — which is the
-  * point: the bespoke TSV stand-in ([[BinlogSource]]) and this
-  * real-format source feed the same apply path.
+  * bits). Downstream is [[CdcPipeline]]: every engine stream reads the
+  * log through this one source ([[MysqlBinlogSource.tail]]).
   */
 class MysqlBinlogSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -73,23 +72,44 @@ object MysqlBinlogSource {
   /** Expand a path/dir/glob into the sorted list of binlog files. */
   def expand(path: String): Seq[String] = {
     val p = Paths.get(path)
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".binlog")).toSeq.sorted
+    // a directory listing holds an open handle until closed
+    def listed(dir: java.nio.file.Path)(keep: java.nio.file.Path => Boolean) = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter(keep).map(_.toString).toVector.sorted
+      finally s.close()
+    }
+    if (Files.isDirectory(p)) listed(p)(_.toString.endsWith(".binlog"))
     else if (path.contains("*")) {
       val dir = p.getParent
       val matcher = java.nio.file.FileSystems.getDefault
         .getPathMatcher("glob:" + p.getFileName.toString)
       if (dir == null || !Files.isDirectory(dir)) Seq.empty
-      else Files.list(dir).iterator().asScala
-        .filter(f => matcher.matches(f.getFileName))
-        .map(_.toString).toSeq.sorted
+      else listed(dir)(f => matcher.matches(f.getFileName))
     } else Seq(path)
   }
 
+  /** The micro-batch tail of one log chain from its `head` file — the
+    * one place a streaming reader over the wire format is built. A fresh
+    * stream starts at `startPos` (a recorded SHOW-MASTER-STATUS
+    * position) or past `startGtid` (a recorded executed-GTID set), else
+    * at the head's first event; `maxEventsPerTrigger` caps the row
+    * events a trigger admits (unbounded when None).
+    */
+  def tail(spark: org.apache.spark.sql.SparkSession, head: String,
+           startPos: Option[Long] = None,
+           startGtid: Option[String] = None,
+           maxEventsPerTrigger: Option[Long] = None): org.apache.spark.sql.DataFrame =
+    spark.readStream
+      .format(classOf[MysqlBinlogSourceProvider].getName)
+      .options(Map("path" -> head) ++
+        startPos.map("startPos" -> _.toString) ++
+        startGtid.map("startGtid" -> _) ++
+        maxEventsPerTrigger.map("maxEventsPerTrigger" -> _.toString))
+      .load()
+
   /** Tail MANY server log chains as one stream — the multi-source
     * deployment shape (a 100 TB estate is N servers × one serial log
-    * chain each). One micro-batch source per head file, unioned:
+    * chain each). One [[tail]] per head file, unioned:
     * Spark checkpoints each source's (file, byte) offset independently,
     * every trigger advances all tails, and rotation/admission behave
     * per chain exactly as for a single tail. Downstream keys on
@@ -97,14 +117,11 @@ object MysqlBinlogSource {
     */
   def unionTails(spark: org.apache.spark.sql.SparkSession,
                  heads: Seq[String],
-                 options: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
+                 startGtid: Option[String] = None,
+                 maxEventsPerTrigger: Option[Long] = None): org.apache.spark.sql.DataFrame = {
     require(heads.nonEmpty, "unionTails needs at least one head file")
-    heads.map { h =>
-      var r = spark.readStream
-        .format(classOf[MysqlBinlogSourceProvider].getName)
-      options.foreach { case (k, v) => r = r.option(k, v) }
-      r.option("path", h).load()
-    }.reduce(_.unionByName(_))
+    heads.map(tail(spark, _, startGtid = startGtid,
+      maxEventsPerTrigger = maxEventsPerTrigger)).reduce(_.unionByName(_))
   }
 
   /** GTID auto-position, BATCH form: read a recorded chain from the
@@ -667,8 +684,32 @@ class MysqlBinlogMicroBatchStream(path: String, maxEventsPerTrigger: Long,
     */
   private var parkProbe: Option[(String, Long, Option[String])] = None
 
+  /** The last file whose 4-byte magic was checked: each file of the
+    * chain is checked once, before its first range is admitted.
+    */
+  private var magicChecked: String = null
+
+  /** Refuse a file that is not a binlog (a text change log, say) with an
+    * error naming it: the header scan alone would read its bytes as a
+    * torn event and park forever. A file shorter than the magic is
+    * still being created and parks until it is not.
+    */
+  private def checkMagic(file: String): Unit = if (file != magicChecked) {
+    val p = Paths.get(file)
+    if (Files.exists(p) && Files.size(p) >= MysqlBinlog.Magic.length) {
+      val in = Files.newInputStream(p)
+      val head = try in.readNBytes(MysqlBinlog.Magic.length) finally in.close()
+      if (!java.util.Arrays.equals(head, MysqlBinlog.Magic))
+        throw new MysqlBinlog.BinlogFormatException(
+          s"$file is not a MySQL binlog: it does not start with the " +
+            "binlog magic 0xFE 'bin'")
+      magicChecked = file
+    }
+  }
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[MysqlBinlogOffset]
+    checkMagic(s.file)
     val a = MysqlBinlogSource.advance(s.file, s.bytes, maxEventsPerTrigger,
       maxBytesPerTrigger, txnAtomic)
     // a scan that covered the file's tail is authoritative at this

@@ -20,11 +20,13 @@ import scala.util.matching.Regex
   *   - `sync` (default): one snapshot copy, the reference's program.
   *   - `snapshot-then-stream`: the full lifecycle the reference only
   *     PREPARES for — fenced snapshot copy + `metadata.txt` binlog
-  *     coordinates, then the CDC stream from `--binlog` applied to the
+  *     coordinates, then the MySQL binlog at `--binlog` applied to the
   *     destination as transactional per-micro-batch upserts
-  *     ([[graft.streaming.CdcPipeline.startFromBinlogJdbc]]), running
-  *     until terminated. Requires `--binlog`; `--cdc_table` names the
-  *     destination change-state table (default `cdc_state`).
+  *     ([[graft.streaming.CdcPipeline.startFromMysqlBinlogJdbc]]),
+  *     running until terminated. Requires `--binlog`; the stream starts
+  *     at `--binlog_start_pos` or past `--binlog_start_gtid` when given;
+  *     `--cdc_table` names the destination change-state table (default
+  *     `cdc_state`).
   *   - `drift-gate`: `snapshot-then-stream` with the statistical guard
   *     composed in ([[runDriftGate]]): per-micro-batch KS drift of
   *     `--drift_table`.`--drift_column` against the snapshot baseline
@@ -44,7 +46,6 @@ object SyncCli {
       binlog: Option[String],
       cdcTable: String,
       drift: Option[DriftGateConfig] = None,
-      binlogFormat: String = "tsv",
       binlogStartPos: Option[Long] = None,
       binlogStartGtid: Option[String] = None,
       state: Option[StateConfig] = None,
@@ -153,7 +154,7 @@ object SyncCli {
     val known = (mysqlKeys ++ chKeys ++ Seq("batch_size", "max_workers",
       "include_tables", "exclude_tables", "src_url", "dst_url",
       "checkpoint_dir", "binlog", "cdc_table",
-      "binlog_format", "binlog_start_pos", "binlog_start_gtid",
+      "binlog_start_pos", "binlog_start_gtid",
       "drift_table", "drift_column", "drift_threshold")).toSet
     val kv = scala.collection.mutable.Map.empty[String, String]
     var i = 0
@@ -202,30 +203,20 @@ object SyncCli {
     }
     if (verb != "sync" && !kv.contains("binlog"))
       return Left(s"$verb requires --binlog PATH")
-    val binlogFormat = kv.getOrElse("binlog_format", "tsv")
-    if (binlogFormat != "tsv" && binlogFormat != "mysql")
-      return Left(s"--binlog_format must be tsv or mysql, got '$binlogFormat'")
     val binlogStartPos = kv.get("binlog_start_pos") match {
       case None => None
-      case Some(_) if binlogFormat != "mysql" =>
-        // refuse rather than silently replay pre-snapshot history: the
-        // TSV stand-in source has no position option to honor
-        return Left(
-          "--binlog_start_pos requires --binlog_format mysql")
       case Some(v) => v.toLongOption.filter(_ >= 4L) match {
         case None => return Left(
           s"--binlog_start_pos must be an integer >= 4, got '$v'")
         case some => some
       }
     }
-    // GTID auto-position: same format-mandate as --binlog_start_pos,
-    // mutually exclusive with it (the GTID set derives file+position
-    // itself), and the set syntax is validated HERE — a mistyped set
-    // must fail the CLI, not skip nothing at stream start
+    // GTID auto-position: mutually exclusive with --binlog_start_pos
+    // (the GTID set derives file+position itself), and the set syntax is
+    // validated HERE — a mistyped set must fail the CLI, not skip
+    // nothing at stream start
     val binlogStartGtid = kv.get("binlog_start_gtid") match {
       case None => None
-      case Some(_) if binlogFormat != "mysql" =>
-        return Left("--binlog_start_gtid requires --binlog_format mysql")
       case Some(_) if binlogStartPos.isDefined =>
         return Left("--binlog_start_gtid and --binlog_start_pos are " +
           "mutually exclusive (auto-position derives the position)")
@@ -261,7 +252,6 @@ object SyncCli {
       kv.get("binlog"),
       kv.getOrElse("cdc_table", "cdc_state"),
       dg,
-      binlogFormat,
       binlogStartPos,
       binlogStartGtid)
   }
@@ -290,20 +280,14 @@ object SyncCli {
   def runSnapshotThenStream(spark: SparkSession,
                             c: CliConfig): org.apache.spark.sql.streaming.StreamingQuery = {
     runWith(spark, c)
-    if (c.binlogFormat == "mysql")
-      // the real wire format, started at the recorded master position
-      // (--binlog_start_pos, metadata.txt's second line) or GTID set
-      // (--binlog_start_gtid, its third line — auto-position) so
-      // pre-snapshot history never replays
-      graft.streaming.CdcPipeline.startFromMysqlBinlogJdbc(spark,
-        c.binlog.get, c.dstUrl, c.cdcTable, c.dstProps,
-        checkpointDir = s"${c.checkpointDir}/cdc_checkpoint",
-        startPos = c.binlogStartPos,
-        startGtid = c.binlogStartGtid)
-    else
-      graft.streaming.CdcPipeline.startFromBinlogJdbc(spark, c.binlog.get,
-        c.dstUrl, c.cdcTable, c.dstProps,
-        checkpointDir = s"${c.checkpointDir}/cdc_checkpoint")
+    // started at the recorded master position (--binlog_start_pos,
+    // metadata.txt's second line) or GTID set (--binlog_start_gtid, its
+    // third line — auto-position) so pre-snapshot history never replays
+    graft.streaming.CdcPipeline.startFromMysqlBinlogJdbc(spark,
+      c.binlog.get, c.dstUrl, c.cdcTable, c.dstProps,
+      checkpointDir = s"${c.checkpointDir}/cdc_checkpoint",
+      startPos = c.binlogStartPos,
+      startGtid = c.binlogStartGtid)
   }
 
   /** The `drift-gate` verb: [[runSnapshotThenStream]]'s lifecycle with a
@@ -369,16 +353,11 @@ object SyncCli {
         .groupBy("bkt").agg(count(lit(1)).as("c"))
         .select(lit("baseline").as("source"), col("bkt"), col("c"))
         .write.mode("overwrite").parquet(s"$driftDir/baseline")
-    // same format/fence switches as the snapshot-then-stream leg: the
-    // gate composes over either the TSV stand-in or the real wire
-    val fmt =
-      if (c.binlogFormat == "mysql")
-        classOf[graft.streaming.MysqlBinlogSourceProvider].getName
-      else classOf[graft.streaming.BinlogSourceProvider].getName
-    var reader = spark.readStream.format(fmt).option("path", c.binlog.get)
-    c.binlogStartPos.foreach(p => reader = reader.option("startPos", p.toString))
-    c.binlogStartGtid.foreach(g => reader = reader.option("startGtid", g))
-    graft.streaming.LocalCheckpointFileManager.writeStream(reader.load(),
+    // the same fenced start as the snapshot-then-stream leg, with no
+    // trigger cap
+    graft.streaming.LocalCheckpointFileManager.writeStream(
+        graft.streaming.MysqlBinlogSource.tail(spark, c.binlog.get,
+          c.binlogStartPos, c.binlogStartGtid),
         s"${c.checkpointDir}/cdc_checkpoint")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         graft.streaming.CdcPipeline.applyBatchJdbc(
@@ -810,7 +789,7 @@ object SyncCli {
         "[--include_tables RE] [--exclude_tables RE] " +
         "[--src_url JDBC] [--dst_url JDBC] [--checkpoint_dir DIR] " +
         "[--binlog PATH] [--cdc_table cdc_state] " +
-        "[--binlog_format tsv|mysql] [--binlog_start_pos N] " +
+        "[--binlog_start_pos N] " +
         "[--binlog_start_gtid SET] " +
         "[--drift_table T --drift_column C [--drift_threshold 0.2]]")
       sys.exit(2)

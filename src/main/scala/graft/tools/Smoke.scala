@@ -27,25 +27,35 @@ object Smoke {
       println(s"[smoke] $name rows=$n")
     }
 
-    // Drive the CDC pipeline end-to-end over the custom binlog-tail
-    // source: snapshot state → appended change-log lines → checkpointed
-    // micro-batch upserts → final state.
-    import graft.streaming.{BinlogSource, CdcPipeline, ChangeEvent}
+    // Drive the CDC pipeline end-to-end over a MySQL binlog: snapshot
+    // state → wire-format change log → checkpointed micro-batch upserts
+    // → final state.
+    import graft.streaming.{CdcPipeline, MysqlBinlogSource}
+    import graft.streaming.MysqlBinlogWriter.{Col, TableDef, Writer}
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_smoke_cdc_").toString
-    val log = s"$base/changes.binlog"
+    val log = s"$base/binlog.000001"
     val snapshot = graft.model.Tables.customer(spark, sfDir)
       .limit(10).withColumn("updated_at",
         org.apache.spark.sql.functions.lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "c_custkey",
-      "updated_at", changesDir = log, stateDir = s"$base/state",
-      checkpointDir = s"$base/ckpt", useBinlog = true)
+    val td = TableDef(1L, "tpch", "customer",
+      Seq(Col.bigint("c_custkey"), Col.varchar("seg", 16)))
+    val w = new Writer(log)
+    w.setClock(1704153600L) // 2024-01-02 00:00:00 UTC, after the snapshot
+    w.begin(); w.flush()
+    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "customer",
+      "c_custkey", "updated_at", MysqlBinlogSource.tail(spark, log),
+      stateDir = s"$base/state", checkpointDir = s"$base/ckpt")
     q.processAllAvailable()
-    BinlogSource.append(log, Seq(
-      ChangeEvent("update", "snapshot", 1L,
-        java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 1L, """{"seg":"X"}"""),
-      ChangeEvent("delete", "snapshot", 2L,
-        java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 2L, null)))
+    def img(k: Long, seg: String) = Array[AnyRef](java.lang.Long.valueOf(k), seg)
+    w.tableMap(td)
+    w.updateRows(td, Seq((img(1L, null), img(1L, "X"))),
+      beforePresent = Some(Set(0)))
+    w.xid(1L)
+    w.tableMap(td)
+    w.deleteRows(td, Seq(img(2L, null)), presentCols = Some(Set(0)))
+    w.xid(2L)
+    w.close()
     q.processAllAvailable()
     q.stop()
     val state = CdcPipeline.currentState(spark, s"$base/state")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
 import graft.SparkSpec
 import org.apache.hadoop.conf.Configuration
@@ -99,36 +98,34 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     assert(Files.exists(dir.resolve("0")))
   }
 
-  private def ts = Timestamp.valueOf("2024-01-01 00:00:00")
-  private def events(seqs: Range) = seqs.map(s =>
-    ChangeEvent("insert", "t", s.toLong, ts, s.toLong, s"""{"v":$s}"""))
+  private def inserts(keys: Range) =
+    keys.map(k => WireLog.Insert(k.toLong, s"v$k"))
 
-  /** Every seq the partials of `stateDir` hold, one entry per landing. */
-  private def landedSeqs(stateDir: String): Seq[Long] =
-    PartialState.read(spark, stateDir).select("seq").collect().map(_.getLong(0))
+  /** Every key the partials of `stateDir` hold, one entry per landing. */
+  private def landedKeys(stateDir: String): Seq[Long] =
+    PartialState.read(spark, stateDir).select("key").collect().map(_.getLong(0))
       .toSeq.sorted
 
   /** One engine starter ([[PartialState.stream]]) over the binlog tail,
     * run until caught up.
     */
   private def runOnce(log: String, state: String, ckpt: String): Unit = {
-    val tail: DataFrame = spark.readStream
-      .format(classOf[BinlogSourceProvider].getName)
-      .option("path", log).option("maxLinesPerTrigger", "4").load()
+    val tail: DataFrame = MysqlBinlogSource.tail(spark, log,
+      maxEventsPerTrigger = Some(4L))
     val q = PartialState.stream(tail, state, ckpt)(_.select("seq", "key"))
     try q.processAllAvailable() finally q.stop()
   }
 
   test("a user-set checkpoint manager survives an engine starter") {
     val base = Files.createTempDirectory("ckpt_user_").toString
-    BinlogSource.append(s"$base/log", events(1 to 3))
+    WireLog.using(s"$base/log")(_.append(1700000000L, inserts(1 to 3): _*))
     CountingCheckpointFileManager.made.set(0)
     withManager(Some(classOf[CountingCheckpointFileManager].getName)) {
       runOnce(s"$base/log", s"$base/state", s"$base/ckpt")
       assert(spark.conf.get(ManagerKey) == classOf[CountingCheckpointFileManager].getName)
     }
     assert(CountingCheckpointFileManager.made.get > 0)
-    assert(landedSeqs(s"$base/state") == (1L to 3L))
+    assert(landedKeys(s"$base/state") == (1L to 3L))
   }
 
   test("a checkpoint resumes across Spark's default and the engine's manager, " +
@@ -136,16 +133,18 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     for ((first, second) <- Seq(Some(SparkDefault) -> None, None -> Some(SparkDefault))) {
       val base = Files.createTempDirectory("ckpt_resume_").toString
       val (log, state, ckpt) = (s"$base/log", s"$base/state", s"$base/ckpt")
-      BinlogSource.append(log, events(1 to 10))
-      withManager(first) { runOnce(log, state, ckpt) }
-      BinlogSource.append(log, events(11 to 20))
-      withManager(second) {
-        runOnce(log, state, ckpt)
-        // unset means the engine starter installed its own
-        assert(spark.conf.get(ManagerKey) ==
-          second.getOrElse(classOf[LocalCheckpointFileManager].getName))
+      WireLog.using(log) { wire =>
+        wire.append(1700000000L, inserts(1 to 10): _*)
+        withManager(first) { runOnce(log, state, ckpt) }
+        wire.append(1700000100L, inserts(11 to 20): _*)
+        withManager(second) {
+          runOnce(log, state, ckpt)
+          // unset means the engine starter installed its own
+          assert(spark.conf.get(ManagerKey) ==
+            second.getOrElse(classOf[LocalCheckpointFileManager].getName))
+        }
       }
-      assert(landedSeqs(state) == (1L to 20L), s"$first then $second")
+      assert(landedKeys(state) == (1L to 20L), s"$first then $second")
       val ids = PartialState.read(spark, state).select("batch_id").distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(ids == ids.indices.map(_.toLong), s"batch ids $ids")

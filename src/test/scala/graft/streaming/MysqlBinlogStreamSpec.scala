@@ -122,6 +122,66 @@ class MysqlBinlogStreamSpec extends SparkSpec {
     assert(MysqlBinlogSource.advance(log, 4L, Long.MaxValue, 1L << 30).safe == size)
   }
 
+  test("a file that is not a binlog fails the tail, naming the file") {
+    val base = Files.createTempDirectory("graft_not_binlog_").toString
+    val log = s"$base/changes.binlog"
+    // a tab-separated change log, not a binlog
+    Files.writeString(java.nio.file.Paths.get(log),
+      "insert\tt\t1\t1700000000000000\t1\t{\"v\":1}\n")
+    val q = MysqlBinlogSource.tail(spark, log)
+      .writeStream.format("parquet").option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt").start()
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      assert(e.getMessage.contains(log), e.getMessage)
+      assert(e.getCause.isInstanceOf[MysqlBinlog.BinlogFormatException], e.getCause)
+    } finally q.stop()
+  }
+
+  test("an empty log file parks, then streams once the server writes it") {
+    val base = Files.createTempDirectory("graft_empty_binlog_").toString
+    val log = s"$base/server_0.binlog"
+    Files.createFile(java.nio.file.Paths.get(log))
+    val q = MysqlBinlogSource.tail(spark, log)
+      .writeStream.format("parquet").option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt").start()
+    try {
+      q.processAllAvailable()
+      assert(q.exception.isEmpty && q.isActive)
+      assert(q.recentProgress.map(_.numInputRows).sum == 0L)
+      val w = new Writer(log, serverId = 1L)
+      try {
+        w.setClock(1700000000L); w.begin()
+        w.tableMap(td); w.writeRows(td, Seq(img(1L, "a"), img(2L, "b")))
+        w.xid(1L); w.flush()
+        q.processAllAvailable()
+      } finally w.close()
+      assert(spark.read.parquet(s"$base/out").select("key").collect()
+        .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    } finally q.stop()
+  }
+
+  test("expand closes its directory listings and keeps its sorted result") {
+    val base = Files.createTempDirectory("graft_expand_")
+    Seq("b.binlog", "a.binlog", "c.txt", "bin.000002", "bin.000001")
+      .foreach(n => Files.createFile(base.resolve(n)))
+    val dir = base.toString
+    val glob = s"$dir/bin.*"
+    assert(MysqlBinlogSource.expand(dir) == Seq(s"$dir/a.binlog", s"$dir/b.binlog"))
+    assert(MysqlBinlogSource.expand(glob) ==
+      Seq(s"$dir/bin.000001", s"$dir/bin.000002"))
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val before = os.getOpenFileDescriptorCount
+    (1 to 500).foreach { _ =>
+      MysqlBinlogSource.expand(dir); MysqlBinlogSource.expand(glob)
+    }
+    val after = os.getOpenFileDescriptorCount
+    // slack for descriptors other threads of the suite open meanwhile
+    assert(after - before < 50, s"open descriptors $before -> $after")
+  }
+
   test("txn-atomic admission never tears a multi-table transaction; event-granular does") {
     // each transaction double-writes t_a and t_b inside one BEGIN…XID
     // fence; the invariant at every transaction-consistent point is
@@ -317,7 +377,7 @@ class MysqlBinlogStreamSpec extends SparkSpec {
     wb.xid(1L); wb.flush()
     def startQuery() = MysqlBinlogSource
       .unionTails(spark, Seq(logA, logB),
-        Map("maxEventsPerTrigger" -> "1"))
+        maxEventsPerTrigger = Some(1L))
       .writeStream.format("parquet").option("path", outDir)
       .option("checkpointLocation", ckpt).start()
     val q = startQuery()

@@ -1188,7 +1188,8 @@ class StreamingSpec extends SparkSpec {
     val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
     Seq(ChangeEvent("insert", "t", 1L, ts(1), 1L, """{"v":1}"""))
       .toDF().coalesce(1).write.mode("append").json(changesDir)
-    val q = CdcPipeline.start(spark, changesDir, stateDir, ckpt)
+    val q = CdcPipeline.start(spark, CdcPipeline.fileCdcSource(spark, changesDir),
+      stateDir, ckpt)
     try {
       q.processAllAvailable()
       assert(CdcPipeline.currentState(spark, stateDir).count() == 1L)
@@ -1204,44 +1205,47 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("custom binlog MicroBatchStream tails the log with checkpointed offsets") {
+    import WireLog._
     val base = java.nio.file.Files.createTempDirectory("graft_binlog_").toString
-    val log = s"$base/changes.binlog"
+    val path = s"$base/binlog.000001"
     val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
-    BinlogSource.append(log, Seq(
-      ChangeEvent("insert", "t", 1L, ts(1), 1L, """{"v":1}"""),
-      ChangeEvent("insert", "t", 2L, ts(1), 2L, """{"v":2}""")))
-    val q = CdcPipeline.startFromBinlog(spark, log, stateDir, ckpt)
-    try {
-      q.processAllAvailable()
-      assert(CdcPipeline.currentState(spark, stateDir).count() == 2L)
-      // append more events — the tail picks up ONLY the new lines
-      BinlogSource.append(log, Seq(
-        ChangeEvent("update", "t", 1L, ts(2), 3L, """{"v":10}"""),
-        ChangeEvent("delete", "t", 2L, ts(2), 4L, null),
-        ChangeEvent("insert", "t", 3L, ts(2), 5L, """{"v":3}""")))
-      q.processAllAvailable()
-      val state = CdcPipeline.currentState(spark, stateDir)
-        .select("key", "payload")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(state == Map(1L -> """{"v":10}""", 3L -> """{"v":3}"""))
-    } finally q.stop()
+    def tail() = MysqlBinlogSource.tail(spark, path,
+      maxEventsPerTrigger = Some(10000L))
+    WireLog.using(path) { log =>
+      log.append(1700000000L, Insert(1L, "a"), Insert(2L, "b"))
+      val q = CdcPipeline.start(spark, tail(), stateDir, ckpt)
+      try {
+        q.processAllAvailable()
+        assert(CdcPipeline.currentState(spark, stateDir).count() == 2L)
+        // append more events — the tail picks up ONLY the new ones
+        log.append(1700000100L, Update(1L, "a2"), Delete(2L), Insert(3L, "c"))
+        q.processAllAvailable()
+        val state = CdcPipeline.currentState(spark, stateDir)
+          .select("key", "payload")
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(state == Map(1L -> """{"k":1,"v":"a2"}""",
+          3L -> """{"k":3,"v":"c"}"""))
+      } finally q.stop()
 
-    // restart from the checkpoint: committed offsets survive, no re-apply
-    val q2 = CdcPipeline.startFromBinlog(spark, log, stateDir, ckpt)
-    try {
-      q2.processAllAvailable()
-      assert(CdcPipeline.currentState(spark, stateDir).count() == 2L)
-      BinlogSource.append(log, Seq(
-        ChangeEvent("insert", "t", 4L, ts(3), 6L, """{"v":4}""")))
-      q2.processAllAvailable()
-      assert(CdcPipeline.currentState(spark, stateDir).count() == 3L)
-    } finally q2.stop()
+      // restart from the checkpoint: committed offsets survive, no re-apply
+      val q2 = CdcPipeline.start(spark, tail(), stateDir, ckpt)
+      try {
+        q2.processAllAvailable()
+        assert(q2.recentProgress.map(_.numInputRows).sum == 0L,
+          "a restart must not re-read committed events")
+        assert(CdcPipeline.currentState(spark, stateDir).count() == 2L)
+        log.append(1700000200L, Insert(4L, "d"))
+        q2.processAllAvailable()
+        assert(CdcPipeline.currentState(spark, stateDir).count() == 3L)
+      } finally q2.stop()
+    }
   }
 
   test("binlog stream upserts into a JDBC target transactionally and idempotently") {
+    import WireLog._
     val base = java.nio.file.Files.createTempDirectory("graft_binlog_jdbc_")
       .toString
-    val log = s"$base/changes.binlog"
+    val path = s"$base/binlog.000001"
     val url = s"jdbc:derby:$base/db;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -1260,94 +1264,73 @@ class StreamingSpec extends SparkSpec {
         b.result()
       } finally c.close()
     }
-    BinlogSource.append(log, Seq(
-      ChangeEvent("insert", "t", 1L, ts(1), 1L, """{"v":1}"""),
-      ChangeEvent("insert", "t", 2L, ts(1), 2L, """{"v":2}""")))
-    val q = CdcPipeline.startFromBinlogJdbc(spark, log, url, "cdc_target",
-      props, s"$base/ckpt")
-    try {
-      q.processAllAvailable()
-      assert(targetRows() == Map(1L -> """{"v":1}""", 2L -> """{"v":2}"""))
-      // in-batch collapse (two versions of key 1 → one upsert), update,
-      // tombstone, and fresh insert in one micro-batch
-      BinlogSource.append(log, Seq(
-        ChangeEvent("update", "t", 1L, ts(2), 3L, """{"v":9}"""),
-        ChangeEvent("update", "t", 1L, ts(2), 4L, """{"v":10}"""),
-        ChangeEvent("delete", "t", 2L, ts(2), 5L, null),
-        ChangeEvent("insert", "t", 3L, ts(2), 6L, """{"v":3}""")))
-      q.processAllAvailable()
-      assert(targetRows() == Map(1L -> """{"v":10}""", 3L -> """{"v":3}"""))
-    } finally q.stop()
-    // restart on the SAME checkpoint: committed offsets are not
-    // re-applied, and new events land exactly once
-    val q2 = CdcPipeline.startFromBinlogJdbc(spark, log, url, "cdc_target",
-      props, s"$base/ckpt")
-    try {
-      q2.processAllAvailable()
-      assert(targetRows() == Map(1L -> """{"v":10}""", 3L -> """{"v":3}"""))
-      BinlogSource.append(log, Seq(
-        ChangeEvent("insert", "t", 4L, ts(3), 7L, """{"v":4}""")))
-      q2.processAllAvailable()
-      assert(targetRows() == Map(1L -> """{"v":10}""", 3L -> """{"v":3}""",
-        4L -> """{"v":4}"""))
-    } finally q2.stop()
+    WireLog.using(path) { log =>
+      log.append(1700000000L, Insert(1L, "a"), Insert(2L, "b"))
+      val q = CdcPipeline.startFromMysqlBinlogJdbc(spark, path, url,
+        "cdc_target", props, s"$base/ckpt")
+      try {
+        q.processAllAvailable()
+        assert(targetRows() == Map(1L -> """{"k":1,"v":"a"}""",
+          2L -> """{"k":2,"v":"b"}"""))
+        // in-batch collapse (two versions of key 1 → one upsert), update,
+        // tombstone, and fresh insert in one micro-batch
+        log.append(1700000100L, Update(1L, "a2"), Update(1L, "a3"), Delete(2L),
+          Insert(3L, "c"))
+        q.processAllAvailable()
+        assert(targetRows() == Map(1L -> """{"k":1,"v":"a3"}""",
+          3L -> """{"k":3,"v":"c"}"""))
+      } finally q.stop()
+      // restart on the SAME checkpoint: committed offsets are not
+      // re-applied, and new events land exactly once
+      val q2 = CdcPipeline.startFromMysqlBinlogJdbc(spark, path, url,
+        "cdc_target", props, s"$base/ckpt")
+      try {
+        q2.processAllAvailable()
+        assert(targetRows() == Map(1L -> """{"k":1,"v":"a3"}""",
+          3L -> """{"k":3,"v":"c"}"""))
+        log.append(1700000200L, Insert(4L, "d"))
+        q2.processAllAvailable()
+        assert(targetRows() == Map(1L -> """{"k":1,"v":"a3"}""",
+          3L -> """{"k":3,"v":"c"}""", 4L -> """{"k":4,"v":"d"}"""))
+      } finally q2.stop()
+    }
   }
 
-  test("byte-offset advance admits only complete lines, forward from start") {
-    val base = java.nio.file.Files.createTempDirectory("graft_adv_").toString
-    val log = s"$base/changes.binlog"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(log),
-      "a\tt\t1\t0\t1\tx\nbb\tt\t2\t0\t2\ty\npartial-no-newline")
-    val firstLine = "a\tt\t1\t0\t1\tx\n".length.toLong
-    val secondLine = firstLine + "bb\tt\t2\t0\t2\ty\n".length
-    // paced: one line per call, positions land exactly on line boundaries
-    assert(BinlogSource.advance(log, 0L, 1L) == firstLine)
-    assert(BinlogSource.advance(log, firstLine, 1L) == secondLine)
-    // unbounded: the trailing partial line is never admitted
-    assert(BinlogSource.advance(log, 0L, Long.MaxValue) == secondLine)
-    // no new complete line -> offset does not move
-    assert(BinlogSource.advance(log, secondLine, Long.MaxValue) == secondLine)
-    // missing file -> stay at start
-    assert(BinlogSource.advance(s"$base/nope", 5L, 1L) == 5L)
-  }
-
-  test("maxLinesPerTrigger paces micro-batches without skipping lines") {
+  test("maxEventsPerTrigger paces micro-batches without skipping events") {
+    import WireLog._
     val base = java.nio.file.Files.createTempDirectory("graft_pace_").toString
-    val log = s"$base/changes.binlog"
-    BinlogSource.append(log, (0 until 50).map(i =>
-      ChangeEvent("insert", "t", i.toLong, ts(1), i.toLong, s"""{"v":$i}""")))
-    val q = CdcPipeline.startFromBinlog(spark, log, s"$base/state",
-      s"$base/ckpt", maxLinesPerTrigger = 7L)
-    try {
-      q.processAllAvailable() // several 7-line batches until caught up
-      // every line applied exactly once — the pre-admission-control bug
-      // permanently skipped lines between the clamp and the observed end
-      assert(CdcPipeline.currentState(spark, s"$base/state").count() == 50L)
-    } finally q.stop()
+    val path = s"$base/binlog.000001"
+    WireLog.using(path) { log =>
+      log.append(1700000000L, (0 until 50).map(i => Insert(i.toLong, s"v$i")): _*)
+      val q = CdcPipeline.start(spark, MysqlBinlogSource.tail(spark, path,
+        maxEventsPerTrigger = Some(7L)), s"$base/state", s"$base/ckpt")
+      try {
+        q.processAllAvailable() // several capped batches until caught up
+        val batches = q.recentProgress.count(_.numInputRows > 0)
+        assert(batches >= 8, s"50 events at a cap of 7 took $batches batches")
+        // every event applied exactly once
+        assert(CdcPipeline.currentState(spark, s"$base/state").count() == 50L)
+      } finally q.stop()
+    }
   }
 
   test("unbounded trigger (default) survives multiple batches without overflow") {
+    import WireLog._
     val base = java.nio.file.Files.createTempDirectory("graft_unb_").toString
-    val log = s"$base/changes.binlog"
-    BinlogSource.append(log, Seq(
-      ChangeEvent("insert", "t", 1L, ts(1), 1L, """{"v":1}""")))
-    // no maxLinesPerTrigger option: the Long.MaxValue default used to
-    // overflow start+max on the second batch and drop everything after
-    val stream = spark.readStream
-      .format(classOf[BinlogSourceProvider].getName)
-      .option("path", log).load()
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        CdcPipeline.applyBatch(spark, b, s"$base/state")
-      }.start()
-    try {
-      q.processAllAvailable()
-      BinlogSource.append(log, Seq(
-        ChangeEvent("insert", "t", 2L, ts(2), 2L, """{"v":2}""")))
-      q.processAllAvailable()
-      assert(CdcPipeline.currentState(spark, s"$base/state").count() == 2L)
-    } finally q.stop()
+    val path = s"$base/binlog.000001"
+    WireLog.using(path) { log =>
+      log.append(1700000000L, Insert(1L, "a"))
+      // no trigger cap: Long.MaxValue admission must not overflow on the
+      // second batch and drop everything after
+      val q = CdcPipeline.start(spark, MysqlBinlogSource.tail(spark, path),
+        s"$base/state", s"$base/ckpt")
+      try {
+        q.processAllAvailable()
+        log.append(1700000100L, Insert(2L, "b"))
+        q.processAllAvailable()
+        assert(CdcPipeline.currentState(spark, s"$base/state").count() == 2L)
+      } finally q.stop()
+    }
   }
 
   test("windowed aggregation resumes from checkpoint without duplicates") {
@@ -1399,8 +1382,8 @@ class StreamingSpec extends SparkSpec {
     val stateDir = s"$base/state"; val ckpt = s"$base/ckpt"
     val snapshot = Seq((1L, "a", ts(1)), (2L, "b", ts(1)))
       .toDF("id", "name", "updated_at")
-    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "id", "updated_at",
-      changesDir, stateDir, ckpt)
+    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "snapshot", "id",
+      "updated_at", CdcPipeline.fileCdcSource(spark, changesDir), stateDir, ckpt)
     try {
       q.processAllAvailable()
       assert(CdcPipeline.currentState(spark, stateDir).count() == 2L)
@@ -1425,8 +1408,8 @@ class StreamingSpec extends SparkSpec {
     val prior = BucketStore.current(spark, stateDir).get
     val snapshot = Seq((1L, "a", ts(2)), (2L, "b", ts(2)))
       .toDF("id", "name", "updated_at")
-    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "id", "updated_at",
-      changesDir, stateDir, ckpt)
+    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "snapshot", "id",
+      "updated_at", CdcPipeline.fileCdcSource(spark, changesDir), stateDir, ckpt)
     def keys() = CdcPipeline.currentState(spark, stateDir).select("key")
       .collect().map(_.getLong(0)).toSet
     try {
@@ -1443,6 +1426,34 @@ class StreamingSpec extends SparkSpec {
       assert(keys() == Set(2L))
       assert(BucketStore.current(spark, stateDir).get.version > m.version)
     } finally q.stop()
+  }
+
+  test("snapshot-then-stream keys the snapshot under its source table, so " +
+      "wire changes collapse with its rows") {
+    import WireLog._
+    val base = java.nio.file.Files.createTempDirectory("graft_snap_wire_").toString
+    val path = s"$base/binlog.000001"
+    val stateDir = s"$base/state"
+    val snapshot = Seq((1L, "a", ts(1)), (2L, "b", ts(1)), (3L, "c", ts(1)))
+      .toDF("k", "v", "updated_at")
+    WireLog.using(path, table = "orders") { log =>
+      val q = CdcPipeline.snapshotThenStream(spark, snapshot, "orders", "k",
+        "updated_at", MysqlBinlogSource.tail(spark, path), stateDir,
+        s"$base/ckpt")
+      try {
+        q.processAllAvailable()
+        // 2024-01-02 00:00:00 UTC: after every snapshot row's version
+        log.append(1704153600L, Update(1L, "a2"), Delete(2L))
+        q.processAllAvailable()
+        val live = CdcPipeline.currentState(spark, stateDir)
+          .select("table", "key", "payload").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+        assert(live.map(_._2).sorted.toSeq == Seq(1L, 3L),
+          s"one live row per key: ${live.toSeq}")
+        assert(live.forall(_._1 == "orders"))
+        assert(live.find(_._2 == 1L).get._3 == """{"k":1,"v":"a2"}""")
+      } finally q.stop()
+    }
   }
 
   test("streaming KS drift state merges to the one-pass corpus statistic") {
@@ -1802,8 +1813,8 @@ class StreamingSpec extends SparkSpec {
     assert(CdcPipeline.readMeta(spark, stateDir).get._2.isEmpty)
     val hot = tag4(601L)
     val hotKeys = (1000L until 20000L).filter(tag4(_) == hot).take(1200)
-    val q = CdcPipeline.start(spark, changesDir, stateDir, ckpt,
-      autoSplit = Some(CdcPipeline.AutoSplit(factor = 2.2, minBytes = 1L)))
+    val q = CdcPipeline.start(spark, CdcPipeline.fileCdcSource(spark, changesDir),
+      stateDir, ckpt, autoSplit = Some(CdcPipeline.AutoSplit(factor = 2.2, minBytes = 1L)))
     try {
       // trigger 1: the hot slice — afterwards the advisory names the
       // hot bucket (≈3× the mean) and the loop splits it ONCE; its

@@ -102,34 +102,34 @@ class JdbcSyncSpec extends SparkSpec {
 
   test("north star: live-DB snapshot then binlog CDC stream") {
     seeded
-    import graft.streaming.{BinlogSource, CdcPipeline, ChangeEvent}
+    import graft.streaming.{CdcPipeline, MysqlBinlogSource, WireLog}
+    import graft.streaming.WireLog.{Delete, Insert}
     import org.apache.spark.sql.functions.lit
     val base = java.nio.file.Files.createTempDirectory("graft_ns_").toString
-    val log = s"$base/changes.binlog"
+    val log = s"$base/binlog.000001"
     // phase 1: snapshot the live table (bounds recorded by the sync job
     // are where the change stream starts)
     val snapshot = JdbcSource.read(spark, url, "src_orders", props)
       .withColumn("updated_at",
         lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-    val q = CdcPipeline.snapshotThenStream(spark, snapshot, "rowid",
-      "updated_at", changesDir = log, stateDir = s"$base/state",
-      checkpointDir = s"$base/ckpt2", useBinlog = true)
-    try {
-      q.processAllAvailable()
-      assert(CdcPipeline.currentState(spark, s"$base/state").count() == 500L)
-      // phase 2: post-snapshot changes arrive on the binlog
-      BinlogSource.append(log, Seq(
-        ChangeEvent("insert", "snapshot", 500L,
-          java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 1L, """{"v":"new"}"""),
-        ChangeEvent("delete", "snapshot", 0L,
-          java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 2L, null)))
-      q.processAllAvailable()
-      val state = CdcPipeline.currentState(spark, s"$base/state")
-      assert(state.count() == 500L) // +1 insert, -1 delete
-      import org.apache.spark.sql.functions.col
-      assert(state.filter(col("key") === 500L).count() == 1L)
-      assert(state.filter(col("key") === 0L).count() == 0L)
-    } finally q.stop()
+    WireLog.using(log, table = "src_orders") { wire =>
+      val q = CdcPipeline.snapshotThenStream(spark, snapshot, "src_orders",
+        "rowid", "updated_at", MysqlBinlogSource.tail(spark, log),
+        stateDir = s"$base/state", checkpointDir = s"$base/ckpt2")
+      try {
+        q.processAllAvailable()
+        assert(CdcPipeline.currentState(spark, s"$base/state").count() == 500L)
+        // phase 2: post-snapshot changes arrive on the binlog
+        // (2024-01-02 00:00:00 UTC, after the snapshot's versions)
+        wire.append(1704153600L, Insert(500L, "new"), Delete(0L))
+        q.processAllAvailable()
+        val state = CdcPipeline.currentState(spark, s"$base/state")
+        assert(state.count() == 500L) // +1 insert, -1 delete
+        import org.apache.spark.sql.functions.col
+        assert(state.filter(col("key") === 500L).count() == 1L)
+        assert(state.filter(col("key") === 0L).count() == 0L)
+      } finally q.stop()
+    }
   }
 
   test("PK introspection from JDBC metadata finds single-column integer PKs only") {
@@ -263,9 +263,10 @@ class JdbcSyncSpec extends SparkSpec {
 
   test("snapshot-then-stream verb: CLI snapshot + binlog CDC upserts into the destination") {
     seeded
-    import graft.streaming.{BinlogSource, ChangeEvent}
+    import graft.streaming.WireLog
+    import graft.streaming.WireLog.{Delete, Insert, Update}
     val base = java.nio.file.Files.createTempDirectory("graft_sts_").toString
-    val log = s"$base/changes.binlog"
+    val log = s"$base/binlog.000001"
     val dstDir = java.nio.file.Files
       .createTempDirectory("graft_derby_sts_dst_").toString + "/db"
     val dstUrl = s"jdbc:derby:$dstDir;create=true"
@@ -278,44 +279,69 @@ class JdbcSyncSpec extends SparkSpec {
           "ts TIMESTAMP, seq BIGINT, payload VARCHAR(1024), PRIMARY KEY (tbl, k))")
       finally conn.close()
     }
-    // pre-snapshot change already in the log: stream start replays it
-    BinlogSource.append(log, Seq(
-      ChangeEvent("insert", "src_orders", 1000L,
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, """{"v":"pre"}""")))
+    WireLog.using(log, table = "src_orders") { wire =>
+      // pre-snapshot change already in the log: with no start flag the
+      // stream starts at the log head and replays it
+      wire.append(1704067200L, Insert(1000L, "pre"))
 
-    // verb parse: --binlog required, defaults applied
-    assert(SyncCli.parse(Array("snapshot-then-stream",
-      "--src_url", url, "--dst_url", dstUrl)).isLeft)
-    assert(SyncCli.parse(Array("bogus-verb", "--src_url", "x")).isLeft)
+      // verb parse: --binlog required, defaults applied
+      assert(SyncCli.parse(Array("snapshot-then-stream",
+        "--src_url", url, "--dst_url", dstUrl)).isLeft)
+      assert(SyncCli.parse(Array("bogus-verb", "--src_url", "x")).isLeft)
+      val Right(cli) = SyncCli.parse(Array("snapshot-then-stream",
+        "--src_url", url, "--dst_url", dstUrl,
+        "--include_tables", "(?i)^src_orders$",
+        "--checkpoint_dir", s"$base/ckpt", "--binlog", log)): @unchecked
+      assert(cli.verb == "snapshot-then-stream" && cli.cdcTable == "cdc_state")
+      cli.srcProps.putAll(props); cli.dstProps.putAll(props)
+
+      val q = SyncCli.runSnapshotThenStream(spark, cli)
+      try {
+        // phase 1 (batch): snapshot copied, lifecycle checkpoint written
+        assert(JdbcSource.read(spark, dstUrl, "SRC_ORDERS", props).count() == 500L)
+        assert(new java.io.File(s"$base/ckpt/_sync_metadata.json").isFile)
+        q.processAllAvailable()
+        def stateRows(): Map[Long, (Long, Option[String])] =
+          JdbcSource.read(spark, dstUrl, "cdc_state", props)
+            .collect().map(r => r.getAs[Long]("K") ->
+              (r.getAs[Long]("SEQ"), Option(r.getAs[String]("PAYLOAD")))).toMap
+        val pre = stateRows()
+        assert(pre.map { case (k, (_, p)) => k -> p } ==
+          Map(1000L -> Some("""{"k":1000,"v":"pre"}""")))
+        // phase 2: post-snapshot changes stream into the same destination
+        wire.append(1704153600L, Update(1000L, "upd"), Insert(1001L, "new"))
+        wire.append(1704240000L, Delete(1001L))
+        q.processAllAvailable()
+        // update applied, insert+delete collapsed to the tombstone
+        val post = stateRows()
+        assert(post.map { case (k, (_, p)) => k -> p } ==
+          Map(1000L -> Some("""{"k":1000,"v":"upd"}""")))
+        assert(post(1000L)._1 > pre(1000L)._1, "the update's log position wins")
+      } finally q.stop()
+    }
+  }
+
+  test("snapshot-then-stream verb over a non-binlog file fails instead of idling") {
+    seeded
+    val base = java.nio.file.Files.createTempDirectory("graft_sts_tsv_").toString
+    val log = s"$base/changes.binlog"
+    // a tab-separated change log, not a binlog
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(log),
+      "insert\tsrc_orders\t1000\t1704067200000000\t1\t{\"v\":\"pre\"}\n")
+    val dstDir = java.nio.file.Files
+      .createTempDirectory("graft_derby_sts_tsv_dst_").toString + "/db"
+    val dstUrl = s"jdbc:derby:$dstDir;create=true"
     val Right(cli) = SyncCli.parse(Array("snapshot-then-stream",
       "--src_url", url, "--dst_url", dstUrl,
       "--include_tables", "(?i)^src_orders$",
       "--checkpoint_dir", s"$base/ckpt", "--binlog", log)): @unchecked
-    assert(cli.verb == "snapshot-then-stream" && cli.cdcTable == "cdc_state")
     cli.srcProps.putAll(props); cli.dstProps.putAll(props)
-
     val q = SyncCli.runSnapshotThenStream(spark, cli)
     try {
-      // phase 1 (batch): snapshot copied, lifecycle checkpoint written
-      assert(JdbcSource.read(spark, dstUrl, "SRC_ORDERS", props).count() == 500L)
-      assert(new java.io.File(s"$base/ckpt/_sync_metadata.json").isFile)
-      q.processAllAvailable()
-      def stateRows(): Map[Long, (Long, Option[String])] =
-        JdbcSource.read(spark, dstUrl, "cdc_state", props)
-          .collect().map(r => r.getAs[Long]("K") ->
-            (r.getAs[Long]("SEQ"), Option(r.getAs[String]("PAYLOAD")))).toMap
-      assert(stateRows() == Map(1000L -> (1L, Some("""{"v":"pre"}"""))))
-      // phase 2: post-snapshot changes stream into the same destination
-      BinlogSource.append(log, Seq(
-        ChangeEvent("update", "src_orders", 1000L,
-          java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 2L, """{"v":"upd"}"""),
-        ChangeEvent("insert", "src_orders", 1001L,
-          java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 3L, """{"v":"new"}"""),
-        ChangeEvent("delete", "src_orders", 1001L,
-          java.sql.Timestamp.valueOf("2024-01-03 00:00:00"), 4L, null)))
-      q.processAllAvailable()
-      // update applied, insert+delete collapsed to the tombstone
-      assert(stateRows() == Map(1000L -> (2L, Some("""{"v":"upd"}"""))))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      assert(e.getMessage.contains(log) && e.getMessage.contains("not a MySQL binlog"),
+        e.getMessage)
     } finally q.stop()
   }
 
@@ -345,32 +371,28 @@ class JdbcSyncSpec extends SparkSpec {
     w.tableMap(td); w.writeRows(td, Seq(img(900L, "pre"))); w.xid(1L); w.flush()
     val fence = java.nio.file.Files.size(java.nio.file.Paths.get(log))
 
+    // the binlog is always the MySQL wire format: a format switch is an
+    // unknown flag, whatever its value
+    Seq("mysql", "tsv", "bogus").foreach { f =>
+      assert(SyncCli.parse(Array("snapshot-then-stream",
+        "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
+        "--binlog_format", f)) == Left("unknown flag --binlog_format"))
+    }
+    // the start flags keep their checks: the position's range, the GTID
+    // set's syntax, and their mutual exclusion
     assert(SyncCli.parse(Array("snapshot-then-stream",
       "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
-      "--binlog_format", "bogus")).isLeft)
-    // a fence position without the mysql format would be silently
-    // un-honored by the TSV stand-in — refused at parse time instead
+      "--binlog_start_pos", "3")).isLeft)
     assert(SyncCli.parse(Array("snapshot-then-stream",
       "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
-      "--binlog_start_pos", "100")).isLeft)
-    // the GTID auto-position flag mirrors the same guards: mysql format
-    // only, valid set syntax, and exclusive with the position flag
-    assert(SyncCli.parse(Array("snapshot-then-stream",
-      "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
-      "--binlog_start_gtid", "3e11fa47-71ca-11e1-9e33-c80aa9429562:1-3"))
-      .isLeft)
-    assert(SyncCli.parse(Array("snapshot-then-stream",
-      "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
-      "--binlog_format", "mysql",
       "--binlog_start_gtid", "not-a-gtid-set")).isLeft)
     assert(SyncCli.parse(Array("snapshot-then-stream",
       "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
-      "--binlog_format", "mysql", "--binlog_start_pos", "100",
+      "--binlog_start_pos", "100",
       "--binlog_start_gtid", "3e11fa47-71ca-11e1-9e33-c80aa9429562:1-3"))
       .isLeft)
     assert(SyncCli.parse(Array("snapshot-then-stream",
       "--src_url", url, "--dst_url", dstUrl, "--binlog", log,
-      "--binlog_format", "mysql",
       "--binlog_start_gtid", "3e11fa47-71ca-11e1-9e33-c80aa9429562:1-3"))
       .exists(_.binlogStartGtid.contains(
         "3e11fa47-71ca-11e1-9e33-c80aa9429562:1-3")))
@@ -378,9 +400,8 @@ class JdbcSyncSpec extends SparkSpec {
       "--src_url", url, "--dst_url", dstUrl,
       "--include_tables", "(?i)^src_orders$",
       "--checkpoint_dir", s"$base/ckpt", "--binlog", log,
-      "--binlog_format", "mysql",
       "--binlog_start_pos", fence.toString)): @unchecked
-    assert(cli.binlogFormat == "mysql" && cli.binlogStartPos.contains(fence))
+    assert(cli.binlogStartPos.contains(fence))
     cli.srcProps.putAll(props); cli.dstProps.putAll(props)
 
     val q = SyncCli.runSnapshotThenStream(spark, cli)
@@ -441,7 +462,6 @@ class JdbcSyncSpec extends SparkSpec {
       "--src_url", url, "--dst_url", dstUrl,
       "--include_tables", "(?i)^src_orders$",
       "--checkpoint_dir", s"$base/ckpt", "--binlog", log,
-      "--binlog_format", "mysql",
       "--binlog_start_gtid", s"$u:1")): @unchecked
     assert(cli.binlogStartGtid.contains(s"$u:1"))
     cli.srcProps.putAll(props); cli.dstProps.putAll(props)
@@ -468,9 +488,9 @@ class JdbcSyncSpec extends SparkSpec {
 
   test("drift-gate verb: snapshot + CDC upserts + per-batch KS gate and key sketch") {
     seeded
-    import graft.streaming.{BinlogSource, ChangeEvent}
+    import graft.streaming.WireLog
     val base = java.nio.file.Files.createTempDirectory("graft_dg_").toString
-    val log = s"$base/changes.binlog"
+    val log = s"$base/binlog.000001"
     val dstDir = java.nio.file.Files
       .createTempDirectory("graft_derby_dg_dst_").toString + "/db"
     val dstUrl = s"jdbc:derby:$dstDir;create=true"
@@ -481,9 +501,10 @@ class JdbcSyncSpec extends SparkSpec {
           "ts TIMESTAMP, seq BIGINT, payload VARCHAR(1024), PRIMARY KEY (tbl, k))")
       finally conn.close()
     }
-    def ev(key: Long, seq: Long, amount: Long) = ChangeEvent("insert",
-      "src_orders", key, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
-      seq, s"""{"name":"o$key","amount":$amount}""")
+    // the watched column rides the log's value column: payloads render
+    // as {"k":2000,"amount":"100"}, binned like the snapshot's amounts
+    val wire = new WireLog(log, table = "src_orders", valueCol = "amount")
+    def ev(key: Long, amount: Long) = WireLog.Insert(key, amount.toString)
 
     // missing drift flags / bad threshold are parse errors
     assert(SyncCli.parse(Array("drift-gate", "--src_url", url,
@@ -502,8 +523,8 @@ class JdbcSyncSpec extends SparkSpec {
 
     // batch 0: amounts spread like the snapshot (i*1.25 over 0..499) —
     // the gate must stay open
-    BinlogSource.append(log, (0 until 6).map(i =>
-      ev(2000L + i, i + 1L, 100L * (i + 1))))
+    wire.append(1704153600L, (0 until 6).map(i =>
+      ev(2000L + i, 100L * (i + 1))): _*)
     val q = SyncCli.runDriftGate(spark, cli)
     try {
       // phase 1: snapshot copied, baseline histogram written once
@@ -523,8 +544,7 @@ class JdbcSyncSpec extends SparkSpec {
 
       // batch 1: every change at one value — merged stream CDF collapses
       // and the KS decision flips for the new batch only
-      BinlogSource.append(log, (0 until 10).map(i =>
-        ev(3000L + i, 100L + i, 5L)))
+      wire.append(1704153700L, (0 until 10).map(i => ev(3000L + i, 5L)): _*)
       q.processAllAvailable()
       val g1 = gate()
       val lastBatch = g1.keys.max
@@ -537,7 +557,7 @@ class JdbcSyncSpec extends SparkSpec {
       assert(sketch.groupBy("batch_id").count()
         .filter(col("count") > 256).count() == 0)
       assert(JdbcSource.read(spark, dstUrl, "cdc_state", props).count() == 16L)
-    } finally q.stop()
+    } finally { q.stop(); wire.close() }
   }
 
   test("drift-gate: a replayed batch leaves one entry per drift dir") {
@@ -596,7 +616,6 @@ class JdbcSyncSpec extends SparkSpec {
       "--src_url", url, "--dst_url", dstUrl,
       "--include_tables", "(?i)^src_orders$",
       "--checkpoint_dir", s"$base/ckpt", "--binlog", log,
-      "--binlog_format", "mysql",
       "--drift_table", "src_orders", "--drift_column", "amount",
       "--drift_threshold", "0.3")): @unchecked
     cli.srcProps.putAll(props); cli.dstProps.putAll(props)
